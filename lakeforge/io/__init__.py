@@ -1,4 +1,4 @@
-from lakeforge.io.sources import read_csv, read_parquet, read_parquet_if_exists, load_tables
+from lakeforge.io.sources import read_csv, read_parquet, read_parquet_if_exists
 from lakeforge.io.sinks import (
     write_partitioned_parquet,
     write_jdbc,
@@ -10,7 +10,6 @@ __all__ = [
     "read_csv",
     "read_parquet",
     "read_parquet_if_exists",
-    "load_tables",
     "write_partitioned_parquet",
     "write_jdbc",
     "export_csv",

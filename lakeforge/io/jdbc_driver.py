@@ -14,9 +14,9 @@ probes, in order:
    silently reach the classpath);
 3. pyspark's bundled ``jars/`` directory (part of the trusted install).
 
-Returns None when no jar is found — callers (the live-Postgres tests,
-tools/pg_smoke.py) must skip, not fail: a missing driver is an
-environment gap, not an engine bug.
+Returns None when no jar is found — callers (the live-Postgres tests)
+must skip, not fail: a missing driver is an environment gap, not an
+engine bug.
 """
 
 from __future__ import annotations

@@ -106,14 +106,18 @@ def base_parquet(spark: SparkSession, path: str) -> DataFrame:
     testdata): a memoized plan pins its file list.  As a stale-plan
     guard the memo key includes the path's stat identity (mtime_ns,
     size) — an in-place rewrite gets a fresh plan, the same fingerprint
-    rule the PQ codebook store uses.  Paths that are rewritten between
-    queries (silver/merge targets) still belong on
-    :func:`read_parquet` / ``spark.read.parquet`` directly.
+    rule the PQ codebook store uses.  A directory's stat does not change
+    when a file below it is rewritten or lands in a subdirectory, so
+    directory datasets are never memoized.  Paths that are rewritten between queries (silver/merge
+    targets) still belong on :func:`read_parquet` /
+    ``spark.read.parquet`` directly.
     """
     app_id = spark.sparkContext.applicationId
     if _BASE_SCANS[0] != app_id:
         _BASE_SCANS[0] = app_id
         _BASE_SCANS[1] = {}
+    if os.path.isdir(path):
+        return spark.read.parquet(path)
     try:
         st = os.stat(path)
         key = (path, st.st_mtime_ns, st.st_size)
@@ -124,6 +128,11 @@ def base_parquet(spark: SparkSession, path: str) -> DataFrame:
         df = spark.read.parquet(path)
         _BASE_SCANS[1][key] = df
     return df
+
+
+def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The testdata table ``{sf_dir}/{name}.parquet`` (memoized scan)."""
+    return base_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def read_parquet_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
@@ -167,7 +176,7 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # every call site passes the immutable testdata dir, so the memoized
     # base scan applies (r13 floor opt)
-    df = base_parquet(spark, f"{sf_dir}/events.parquet")
+    df = table(spark, sf_dir, "events")
     if dict(df.dtypes)["ts"] == "bigint":  # legacy nanos-as-long testdata
         df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     # TIMESTAMP, not TIMESTAMP_NTZ: downstream ops use unix_micros()/window()
@@ -175,13 +184,6 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (session.py), so the NTZ->instant cast is a wall-clock no-op and epoch
     # arithmetic matches DuckDB's naive-timestamp epoch_us exactly.
     return df.withColumn("ts", F.col("ts").cast("timestamp"))
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TESTDATA_TABLES
-) -> dict[str, DataFrame]:
-    """Load driver testdata tables from ``{sf_dir}/{name}.parquet``."""
-    return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names}
 
 
 def read_json(

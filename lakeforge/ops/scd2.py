@@ -98,3 +98,43 @@ def scd2(
         end_name,
         current_name,
     )
+
+
+# ---------------------------------------------------------------------------
+# DuckDB twin of ``scd2`` over the testdata orders table (key o_custkey,
+# tracked o_orderstatus, timeline o_orderdate): the registry's SCD2 oracles
+# build on it.
+# ---------------------------------------------------------------------------
+
+# DuckDB rendering of functions/keys.py::md5_int over (custkey, start_date).
+SCD2_ORDERS_SK_SQL = (
+    "CAST(('0x' || substr(md5(CAST(o_custkey AS VARCHAR) || chr(31) || "
+    "strftime(effective_start_date, '%Y-%m-%d')), 1, 15)) AS UBIGINT)::BIGINT"
+)
+
+# The SCD2-over-orders dimension as the CTE ``dim``.
+SCD2_ORDERS_CTE = f"""
+WITH base AS (
+    SELECT o_custkey, CAST(o_orderdate AS DATE) AS order_date, o_orderstatus,
+           row_number() OVER (PARTITION BY o_custkey, CAST(o_orderdate AS DATE)
+                              ORDER BY o_orderkey DESC) AS rn
+    FROM orders
+), tl AS (
+    SELECT o_custkey, order_date, o_orderstatus FROM base WHERE rn = 1
+), ch AS (
+    SELECT tl.*, lag(o_orderstatus) OVER (PARTITION BY o_custkey ORDER BY order_date) AS prev_status
+    FROM tl
+), keep AS (
+    SELECT * FROM ch WHERE prev_status IS NULL OR o_orderstatus <> prev_status
+), iv AS (
+    SELECT o_custkey, o_orderstatus, order_date AS effective_start_date,
+           lead(order_date) OVER (PARTITION BY o_custkey ORDER BY order_date) AS next_start
+    FROM keep
+), dim AS (
+    SELECT {SCD2_ORDERS_SK_SQL} AS cust_status_sk,
+           o_custkey, o_orderstatus, effective_start_date,
+           COALESCE(next_start - 1, DATE '9999-12-31') AS effective_end_date,
+           next_start IS NULL AS is_current
+    FROM iv
+)
+"""

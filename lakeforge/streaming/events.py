@@ -313,10 +313,13 @@ def sessionize_stateful(
                 if n and new_sess[0]:
                     # carried session closes on the first new event's gap
                     closed.append((user_id, start, last, n, total))
+                # Row 0 always starts a segment: the carried session's
+                # continuation when the first event falls within the gap.
+                carry = n and not new_sess[0]
+                new_sess[0] = True
                 starts_idx = np.flatnonzero(new_sess)
                 ends_idx = np.append(starts_idx[1:], ts.size) - 1
                 seg_total = np.add.reduceat(vals, starts_idx)
-                carry = n and not new_sess[0]
                 for k in range(starts_idx.size):
                     st = start if (k == 0 and carry) else int(ts[starts_idx[k]])
                     nk = int(ends_idx[k] - starts_idx[k] + 1) + (

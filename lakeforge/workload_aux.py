@@ -39,17 +39,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lakeforge.functions.keys import duckdb_md5_int_sql, md5_int
-
-QUERIES: dict = {}
-ORACLE_SQL: dict[str, str] = {}
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # Memoized analyzed base scan of the immutable testdata table (r13
-    # floor opt — see io.sources.base_parquet: plan reuse, not a cache).
-    from lakeforge.io.sources import base_parquet
-
-    return base_parquet(spark, f"{sf_dir}/{name}.parquet")
+from lakeforge.io.sources import table
+from lakeforge.registry import register
 
 
 # ---------------------------------------------------------------------------
@@ -73,8 +64,8 @@ def q_orders_ldiversity_release(spark: SparkSession, sf_dir: str) -> DataFrame:
     5-value domain (Spark expands it to a tiny two-phase agg).  No
     second scan, no window.
     """
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    o = table(spark, sf_dir, "orders")
+    c = table(spark, sf_dir, "customer")
     rows = o.join(
         c.select("c_custkey", "c_mktsegment"),
         o.o_custkey == c.c_custkey,
@@ -113,8 +104,9 @@ SELECT c_mktsegment, order_year,
 FROM rows_ GROUP BY c_mktsegment, order_year
 """
 
-QUERIES["orders_ldiversity_release"] = q_orders_ldiversity_release
-ORACLE_SQL["orders_ldiversity_release"] = SQL_ORDERS_LDIVERSITY
+register(
+    "orders_ldiversity_release", q_orders_ldiversity_release, SQL_ORDERS_LDIVERSITY,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -136,7 +128,7 @@ def q_cms_heavy_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``overcount = cms_n - exact_n >= 0`` is a hard invariant the oracle
     (and tests) check.
     """
-    o = _t(spark, sf_dir, "orders").select("o_orderpriority", "o_orderstatus")
+    o = table(spark, sf_dir, "orders").select("o_orderpriority", "o_orderstatus")
     # d hash rows per fact row, map-side fan-out, 256-cell shuffle.
     cells = [
         F.struct(
@@ -233,8 +225,7 @@ FROM probes p JOIN counters c USING (r, col)
 GROUP BY p.o_orderpriority, p.o_orderstatus, p.exact_n
 """
 
-QUERIES["cms_heavy_status"] = q_cms_heavy_status
-ORACLE_SQL["cms_heavy_status"] = SQL_CMS_HEAVY_STATUS
+register("cms_heavy_status", q_cms_heavy_status, SQL_CMS_HEAVY_STATUS)
 
 
 # ---------------------------------------------------------------------------
@@ -259,8 +250,8 @@ def q_feature_hash_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket table at any corpus size — the encoder never materializes a
     vocabulary, which is exactly its 100 TB selling point.
     """
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    o = table(spark, sf_dir, "orders")
+    c = table(spark, sf_dir, "customer")
     feat = F.concat_ws(
         "&",
         F.concat(F.lit("seg="), F.col("c_mktsegment")),
@@ -301,8 +292,7 @@ SELECT bucket,
 FROM rows_ GROUP BY bucket
 """
 
-QUERIES["feature_hash_segments"] = q_feature_hash_segments
-ORACLE_SQL["feature_hash_segments"] = SQL_FEATURE_HASH_SEGMENTS
+register("feature_hash_segments", q_feature_hash_segments, SQL_FEATURE_HASH_SEGMENTS)
 
 # ---------------------------------------------------------------------------
 # Imputation: LOCF gap-fill over a dense (nation, month) spine.
@@ -323,9 +313,9 @@ def q_nation_spend_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     sized); the fill is ONE window per nation ordered by month
     (F.last ignorenulls) — a single narrow shuffle of the cell table,
     never of the fact."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
+    o = table(spark, sf_dir, "orders")
+    c = table(spark, sf_dir, "customer")
+    n = table(spark, sf_dir, "nation")
     cells = (
         o.join(c.select("c_custkey", "c_nationkey"),
                o.o_custkey == c.c_custkey)
@@ -392,8 +382,7 @@ SELECT s.nationkey, s.n_name, s.month,
 FROM spine s LEFT JOIN cells c USING (nationkey, month)
 """
 
-QUERIES["nation_spend_locf"] = q_nation_spend_locf
-ORACLE_SQL["nation_spend_locf"] = SQL_NATION_SPEND_LOCF
+register("nation_spend_locf", q_nation_spend_locf, SQL_NATION_SPEND_LOCF)
 
 
 # ---------------------------------------------------------------------------
@@ -419,7 +408,7 @@ def q_supplier_transit_occupancy(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the same plan holds because the fan-out bound comes from
     the DURATION CAP, not data volume — the standard trick is capping
     pathological intervals before the explode."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = table(spark, sf_dir, "lineitem").select(
         "l_suppkey",
         F.col("l_shipdate").cast("date").alias("ship"),
         F.date_add(
@@ -478,8 +467,11 @@ SELECT l_suppkey, month,
 FROM ex GROUP BY l_suppkey, month
 """
 
-QUERIES["supplier_transit_occupancy"] = q_supplier_transit_occupancy
-ORACLE_SQL["supplier_transit_occupancy"] = SQL_SUPPLIER_TRANSIT_OCCUPANCY
+register(
+    "supplier_transit_occupancy",
+    q_supplier_transit_occupancy,
+    SQL_SUPPLIER_TRANSIT_OCCUPANCY,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -503,7 +495,7 @@ def q_trade_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-check each other (bfs_depths contract)."""
     from lakeforge.ops.graph import kcore_nodes
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     e0 = li.select("l_partkey", "l_suppkey").distinct()
     # Both orientations from ONE scan of the distinct pipeline (r13 opt,
     # guide §2.4): the unionAll branches differed in projection order, so
@@ -565,8 +557,7 @@ FROM {prev} GROUP BY 1, 2 HAVING count(*) >= {k}
     )
 
 
-QUERIES["trade_kcore"] = q_trade_kcore
-ORACLE_SQL["trade_kcore"] = _sql_kcore(_KCORE_K, _KCORE_ROUNDS)
+register("trade_kcore", q_trade_kcore, _sql_kcore(_KCORE_K, _KCORE_ROUNDS))
 
 
 # ---------------------------------------------------------------------------
@@ -596,7 +587,7 @@ def q_docs_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(tokens) end-to-end — no pairwise doc comparison exists in the
     plan, which is what lets ExactSubstr run corpus-wide at 100 TB."""
     n = _SPAN_N
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
     toks = docs.select(
         "doc_id",
         F.array_remove(F.split(F.lower(F.col("text")), r"\s+"), "").alias("toks"),
@@ -678,8 +669,7 @@ SELECT doc_id,
 FROM spans GROUP BY doc_id
 """
 
-QUERIES["docs_repeated_spans"] = q_docs_repeated_spans
-ORACLE_SQL["docs_repeated_spans"] = SQL_DOCS_REPEATED_SPANS
+register("docs_repeated_spans", q_docs_repeated_spans, SQL_DOCS_REPEATED_SPANS)
 
 
 # ---------------------------------------------------------------------------
@@ -709,8 +699,8 @@ def q_tcloseness_priorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     spine is group-table x 5-row broadcast (documented BNLJ fan-out) so
     ABSENT values contribute their full |0 - n_v*N_g| mass; global counts
     join broadcast.  Nothing wider than the cell table ever shuffles."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    o = table(spark, sf_dir, "orders")
+    c = table(spark, sf_dir, "customer")
     rows = o.join(
         c.select("c_custkey", "c_mktsegment"),
         o.o_custkey == c.c_custkey,
@@ -799,8 +789,7 @@ SELECT c_mktsegment, order_year, n_g AS n,
 FROM agg
 """
 
-QUERIES["tcloseness_priorities"] = q_tcloseness_priorities
-ORACLE_SQL["tcloseness_priorities"] = SQL_TCLOSENESS_PRIORITIES
+register("tcloseness_priorities", q_tcloseness_priorities, SQL_TCLOSENESS_PRIORITIES)
 
 
 # ---------------------------------------------------------------------------
@@ -826,7 +815,7 @@ def q_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cost model MRL exploits at scale."""
     from lakeforge.llm.similarity import l2_topk_prefixes
 
-    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     queries = emb.filter(F.col("vec_id") < _MRL_QUERIES)
     exact = _aux_l2_truth(spark, sf_dir)
     # r12 opt (guide §2.4): both truncation dims previously ran their own
@@ -894,7 +883,7 @@ def _aux_l2_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
            data_version(f"{sf_dir}/embeddings.parquet"),
            _MRL_QUERIES, _MRL_TOPK)
     if key not in _AUX_L2_TRUTH:
-        emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+        emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
         q = emb.filter(F.col("vec_id") < _MRL_QUERIES)
         _AUX_L2_TRUTH[key] = [
             (int(r["query_id"]), int(r["neighbor_id"]))
@@ -977,8 +966,7 @@ FROM grid g LEFT JOIN hits h
 """
 
 
-QUERIES["matryoshka_recall"] = q_matryoshka_recall
-ORACLE_SQL["matryoshka_recall"] = _sql_matryoshka()
+register("matryoshka_recall", q_matryoshka_recall, _sql_matryoshka())
 
 
 # ---------------------------------------------------------------------------
@@ -1008,7 +996,7 @@ def q_zorder_skipping_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB OPTIMIZE ZORDER rewrite."""
     from lakeforge.ops.layout import zorder_key
 
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         (F.col("o_custkey") % 1024).alias("xq"),
         (
             F.datediff(
@@ -1099,8 +1087,7 @@ FROM hits GROUP BY layout
 """
 
 
-QUERIES["zorder_skipping_audit"] = q_zorder_skipping_audit
-ORACLE_SQL["zorder_skipping_audit"] = _sql_zorder_audit()
+register("zorder_skipping_audit", q_zorder_skipping_audit, _sql_zorder_audit())
 
 
 # ---------------------------------------------------------------------------
@@ -1186,8 +1173,7 @@ SELECT purchase_id, view_id, gap_seconds FROM (
   FROM cand) WHERE rn = 1
 """
 
-QUERIES["nearest_view_join"] = q_nearest_view_join
-ORACLE_SQL["nearest_view_join"] = SQL_NEAREST_VIEW_JOIN
+register("nearest_view_join", q_nearest_view_join, SQL_NEAREST_VIEW_JOIN)
 
 
 # ---------------------------------------------------------------------------
@@ -1212,7 +1198,7 @@ def q_docs_strip_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     pos).  Text shuffles ONCE (the rebuild); detection still shuffles
     hashes only."""
     n = _SPAN_N
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
     toks = docs.select(
         "doc_id",
         F.array_remove(F.split(F.lower(F.col("text")), r"\s+"), "").alias("toks"),
@@ -1346,8 +1332,11 @@ SELECT b.doc_id, b.n_tokens_before,
 FROM before b LEFT JOIN rebuilt r USING (doc_id)
 """
 
-QUERIES["docs_strip_repeated_spans"] = q_docs_strip_repeated_spans
-ORACLE_SQL["docs_strip_repeated_spans"] = SQL_DOCS_STRIP_REPEATED_SPANS
+register(
+    "docs_strip_repeated_spans",
+    q_docs_strip_repeated_spans,
+    SQL_DOCS_STRIP_REPEATED_SPANS,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -1372,7 +1361,7 @@ def q_active_years_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     index.  Plan: one distinct + one bit_or aggregate (map-side
     combined) to |years| x |custkeys|/63 rows; the pair join is
     word-index equi, output one row per year pair."""
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     active = o.select(
         F.year("o_orderdate").cast("int").alias("yr"),
         F.col("o_custkey").alias("c"),
@@ -1420,8 +1409,7 @@ WHERE a.yr < b.yr
 GROUP BY 1, 2
 """
 
-QUERIES["active_years_bitmap"] = q_active_years_bitmap
-ORACLE_SQL["active_years_bitmap"] = SQL_ACTIVE_YEARS_BITMAP
+register("active_years_bitmap", q_active_years_bitmap, SQL_ACTIVE_YEARS_BITMAP)
 
 
 # ---------------------------------------------------------------------------
@@ -1454,7 +1442,7 @@ def q_weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical.  All integer cents and quantities."""
     from lakeforge.cache import persist_tracked
 
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = table(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("price_c"),
         F.col("l_quantity").cast("bigint").alias("qty"),
@@ -1529,8 +1517,7 @@ FROM ranked r JOIN totals t USING (l_returnflag)
 GROUP BY r.l_returnflag, t.n_items, t.w_total
 """
 
-QUERIES["weighted_median_price"] = q_weighted_median_price
-ORACLE_SQL["weighted_median_price"] = SQL_WEIGHTED_MEDIAN_PRICE
+register("weighted_median_price", q_weighted_median_price, SQL_WEIGHTED_MEDIAN_PRICE)
 
 
 # ---------------------------------------------------------------------------
@@ -1568,7 +1555,7 @@ def q_capped_running_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_custkey",
         "o_orderkey",
         F.col("o_orderdate").cast("date").alias("od"),
@@ -1669,8 +1656,7 @@ SELECT w.o_custkey,
 FROM walk w JOIN n_per n ON n.o_custkey = w.o_custkey AND w.i = n.n
 """
 
-QUERIES["capped_running_balance"] = q_capped_running_balance
-ORACLE_SQL["capped_running_balance"] = SQL_CAPPED_RUNNING_BALANCE
+register("capped_running_balance", q_capped_running_balance, SQL_CAPPED_RUNNING_BALANCE)
 
 
 # ---------------------------------------------------------------------------
@@ -1762,5 +1748,8 @@ SELECT w.win_end, s.users_1d, w.users_7d
 FROM win w JOIN single s USING (win_end)
 """
 
-QUERIES["rolling_7day_distinct_users"] = q_rolling_7day_distinct_users
-ORACLE_SQL["rolling_7day_distinct_users"] = SQL_ROLLING_7DAY_DISTINCT_USERS
+register(
+    "rolling_7day_distinct_users",
+    q_rolling_7day_distinct_users,
+    SQL_ROLLING_7DAY_DISTINCT_USERS,
+)

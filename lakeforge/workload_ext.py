@@ -33,17 +33,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lakeforge.functions.keys import duckdb_md5_int_sql, md5_int
-
-QUERIES: dict = {}
-ORACLE_SQL: dict[str, str] = {}
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # Memoized analyzed base scan of the immutable testdata table (r13
-    # floor opt — see io.sources.base_parquet: plan reuse, not a cache).
-    from lakeforge.io.sources import base_parquet
-
-    return base_parquet(spark, f"{sf_dir}/{name}.parquet")
+from lakeforge.io.sources import table
+from lakeforge.registry import register
 
 
 # ---------------------------------------------------------------------------
@@ -72,7 +63,7 @@ def q_orc_roundtrip_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stage = tempfile.mkdtemp(prefix="lf_orc_")
     path = f"{stage}/lineitem_1996"
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = table(spark, sf_dir, "lineitem").filter(
         F.year("l_shipdate") == 1996
     ).select(
         "l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice",
@@ -105,8 +96,7 @@ WHERE EXTRACT(year FROM l_shipdate) = 1996
 GROUP BY l_returnflag, l_linestatus
 """
 
-QUERIES["orc_roundtrip_revenue"] = q_orc_roundtrip_revenue
-ORACLE_SQL["orc_roundtrip_revenue"] = SQL_ORC_ROUNDTRIP_REVENUE
+register("orc_roundtrip_revenue", q_orc_roundtrip_revenue, SQL_ORC_ROUNDTRIP_REVENUE)
 
 
 def q_json_roundtrip_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -160,8 +150,7 @@ WHERE event_type = 'purchase'
 GROUP BY CAST(ts AS DATE)
 """
 
-QUERIES["json_roundtrip_events"] = q_json_roundtrip_events
-ORACLE_SQL["json_roundtrip_events"] = SQL_JSON_ROUNDTRIP_EVENTS
+register("json_roundtrip_events", q_json_roundtrip_events, SQL_JSON_ROUNDTRIP_EVENTS)
 
 
 # ---------------------------------------------------------------------------
@@ -187,8 +176,8 @@ def q_late_arriving_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     the dim side broadcast (dimension-sized).  No shuffle of the fact
     table beyond the one aggregate.
     """
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = table(spark, sf_dir, "customer")
+    o = table(spark, sf_dir, "orders")
     present = c.filter(F.col("c_custkey") % 7 != 0).select(
         "c_custkey", F.lit(False).alias("is_inferred")
     )
@@ -233,8 +222,7 @@ FROM orders o JOIN dim d ON o.o_custkey = d.c_custkey
 GROUP BY d.is_inferred
 """
 
-QUERIES["late_arriving_dim"] = q_late_arriving_dim
-ORACLE_SQL["late_arriving_dim"] = SQL_LATE_ARRIVING_DIM
+register("late_arriving_dim", q_late_arriving_dim, SQL_LATE_ARRIVING_DIM)
 
 
 # ---------------------------------------------------------------------------
@@ -258,11 +246,11 @@ def q_periodic_month_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequence() over the global min/max — a one-row broadcast, no
     generate-and-shuffle.
     """
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_orderkey", F.to_date("o_orderdate").alias("od")
     )
     close = (
-        _t(spark, sf_dir, "lineitem")
+        table(spark, sf_dir, "lineitem")
         .groupBy("l_orderkey")
         .agg(F.max(F.to_date("l_shipdate")).alias("close_d"))
     )
@@ -348,8 +336,9 @@ SELECT s.month_end,
 FROM spine s LEFT JOIN deltas d ON s.month_end = d.month_end
 """
 
-QUERIES["periodic_month_snapshot"] = q_periodic_month_snapshot
-ORACLE_SQL["periodic_month_snapshot"] = SQL_PERIODIC_MONTH_SNAPSHOT
+register(
+    "periodic_month_snapshot", q_periodic_month_snapshot, SQL_PERIODIC_MONTH_SNAPSHOT,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -420,7 +409,7 @@ def q_dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one map-side-combined hash aggregate to the tiny group table,
     then pure column arithmetic — the mechanism adds zero shuffles.
     """
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     grp = o.groupBy("o_orderpriority", "o_orderstatus").agg(
         F.count(F.lit(1)).cast("bigint").alias("true_n")
     )
@@ -462,8 +451,7 @@ SELECT o_orderpriority, o_orderstatus, true_n,
 FROM seeded
 """
 
-QUERIES["dp_noisy_counts"] = q_dp_noisy_counts
-ORACLE_SQL["dp_noisy_counts"] = SQL_DP_NOISY_COUNTS
+register("dp_noisy_counts", q_dp_noisy_counts, SQL_DP_NOISY_COUNTS)
 
 
 # ---------------------------------------------------------------------------
@@ -484,8 +472,8 @@ def q_target_encode_oof(spark: SparkSession, sf_dir: str) -> DataFrame:
     segment totals come from a window over that tiny frame, partitioned
     by segment — no second scan and no single-partition funnel.
     """
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    o = table(spark, sf_dir, "orders")
+    c = table(spark, sf_dir, "customer")
     rows = o.join(
         c.select("c_custkey", "c_mktsegment"),
         o.o_custkey == c.c_custkey,
@@ -534,8 +522,7 @@ SELECT c_mktsegment, fold, n,
 FROM cells
 """
 
-QUERIES["target_encode_oof"] = q_target_encode_oof
-ORACLE_SQL["target_encode_oof"] = SQL_TARGET_ENCODE_OOF
+register("target_encode_oof", q_target_encode_oof, SQL_TARGET_ENCODE_OOF)
 
 
 # ---------------------------------------------------------------------------
@@ -588,7 +575,7 @@ def q_embedding_dim_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    emb = _t(spark, sf_dir, "embeddings").select("embedding")
+    emb = table(spark, sf_dir, "embeddings").select("embedding")
     partials = emb.mapInPandas(
         gram,
         schema="dim_i int, dim_j int, pn bigint, psum_i bigint,"
@@ -625,8 +612,7 @@ SELECT CAST(di - 1 AS INT) AS dim_i, CAST(dj - 1 AS INT) AS dim_j,
 FROM m GROUP BY di, dj
 """
 
-QUERIES["embedding_dim_corr"] = q_embedding_dim_corr
-ORACLE_SQL["embedding_dim_corr"] = SQL_EMBEDDING_DIM_CORR
+register("embedding_dim_corr", q_embedding_dim_corr, SQL_EMBEDDING_DIM_CORR)
 
 
 # ---------------------------------------------------------------------------
@@ -658,7 +644,7 @@ def q_bitemporal_orders_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     status groups.
     """
     B, D = "1996-09-01", "1996-09-15"
-    base = _t(spark, sf_dir, "orders").select(
+    base = table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderstatus",
         F.to_date("o_orderdate").alias("od"),
@@ -720,8 +706,7 @@ WHERE tx_from <= DATE '1996-09-15'
 GROUP BY o_orderstatus
 """
 
-QUERIES["bitemporal_orders_asof"] = q_bitemporal_orders_asof
-ORACLE_SQL["bitemporal_orders_asof"] = SQL_BITEMPORAL_ORDERS_ASOF
+register("bitemporal_orders_asof", q_bitemporal_orders_asof, SQL_BITEMPORAL_ORDERS_ASOF)
 
 
 # ---------------------------------------------------------------------------
@@ -746,7 +731,7 @@ def q_scd3_priority_regimes(spark: SparkSession, sf_dir: str) -> DataFrame:
     ROW_NUMBER regime recency) and two hash aggregates; no global sort,
     no single-partition window.
     """
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_custkey", F.to_date("o_orderdate").alias("od"),
         "o_orderkey", "o_orderpriority",
     )
@@ -805,8 +790,7 @@ FROM per_cust
 GROUP BY current_priority, prev_priority
 """
 
-QUERIES["scd3_priority_regimes"] = q_scd3_priority_regimes
-ORACLE_SQL["scd3_priority_regimes"] = SQL_SCD3_PRIORITY_REGIMES
+register("scd3_priority_regimes", q_scd3_priority_regimes, SQL_SCD3_PRIORITY_REGIMES)
 
 
 # ---------------------------------------------------------------------------
@@ -833,11 +817,11 @@ def q_prorata_rebate_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     orderkey-partitioned windows (partition total + remainder rank), and
     two hash aggregates.  pool*w <= ~5e12 keeps every product in BIGINT.
     """
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber",
         F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("w"),
     )
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority",
         F.expr("(cast(round(o_totalprice * 100) as bigint) * 5) div 100")
         .alias("pool"),
@@ -913,8 +897,11 @@ FROM per_order
 GROUP BY o_orderpriority
 """
 
-QUERIES["prorata_rebate_allocation"] = q_prorata_rebate_allocation
-ORACLE_SQL["prorata_rebate_allocation"] = SQL_PRORATA_REBATE_ALLOCATION
+register(
+    "prorata_rebate_allocation",
+    q_prorata_rebate_allocation,
+    SQL_PRORATA_REBATE_ALLOCATION,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -956,7 +943,7 @@ def q_mannwhitney_price_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from lakeforge.ops.analytics import blocked_prefix_sum
 
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = table(spark, sf_dir, "lineitem").filter(
         F.col("l_returnflag").isin("R", "N")
     ).select(
         F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("cents"),
@@ -1018,8 +1005,7 @@ SELECT CAST(n_r AS BIGINT) AS n_r,
 FROM u
 """
 
-QUERIES["mannwhitney_price_rank"] = q_mannwhitney_price_rank
-ORACLE_SQL["mannwhitney_price_rank"] = SQL_MANNWHITNEY_PRICE_RANK
+register("mannwhitney_price_rank", q_mannwhitney_price_rank, SQL_MANNWHITNEY_PRICE_RANK)
 
 
 # ---------------------------------------------------------------------------
@@ -1074,7 +1060,7 @@ def q_consistent_hash_reshard(spark: SparkSession, sf_dir: str) -> DataFrame:
     which can collide).  No shuffle of the customer table beyond that
     equi-join; output is two rows.
     """
-    cust = _t(spark, sf_dir, "customer").select(
+    cust = table(spark, sf_dir, "customer").select(
         "c_custkey",
         F.pmod(md5_int(F.col("c_custkey"), F.lit("chash-v1")), F.lit(_CH_SPACE))
         .alias("h"),
@@ -1176,8 +1162,9 @@ SELECT strategy, n_customers, n_moved,
 FROM (SELECT * FROM ring_stats UNION ALL SELECT * FROM mod_stats)
 """
 
-QUERIES["consistent_hash_reshard"] = q_consistent_hash_reshard
-ORACLE_SQL["consistent_hash_reshard"] = SQL_CONSISTENT_HASH_RESHARD
+register(
+    "consistent_hash_reshard", q_consistent_hash_reshard, SQL_CONSISTENT_HASH_RESHARD,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -1239,7 +1226,7 @@ def q_spatial_nearest_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from lakeforge.ops.spatial import adaptive_cell_size, nearest_in_box
 
-    cust = _t(spark, sf_dir, "customer").select(
+    cust = table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("id"),
         _geo_lat("c", F.col("c_custkey")).alias("plat"),
         _geo_lon("c", F.col("c_custkey")).alias("plon"),
@@ -1262,7 +1249,7 @@ def q_spatial_nearest_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(_GEO_LON_SPACE), (F.col("cell_lon") + 2) * _GEO_CELL
         ).alias("box_lon_hi"),
     )
-    supp = _t(spark, sf_dir, "supplier").select(
+    supp = table(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").cast("bigint").alias("s_suppkey"),
         F.col("s_nationkey").cast("bigint").alias("s_nationkey"),
         _geo_lat("s", F.col("s_suppkey")).alias("blat"),
@@ -1285,7 +1272,7 @@ def q_spatial_nearest_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         # aligned exactly when the adaptive cell divides the coarse cell
         box_aligned=(_GEO_CELL % cell == 0),
     )
-    nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    nation = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     return (
         best.join(
             F.broadcast(nation), best.s_nationkey == nation.n_nationkey
@@ -1344,8 +1331,11 @@ WHERE b.rn = 1
 GROUP BY n.n_name
 """
 
-QUERIES["spatial_nearest_supplier"] = q_spatial_nearest_supplier
-ORACLE_SQL["spatial_nearest_supplier"] = SQL_SPATIAL_NEAREST_SUPPLIER
+register(
+    "spatial_nearest_supplier",
+    q_spatial_nearest_supplier,
+    SQL_SPATIAL_NEAREST_SUPPLIER,
+)
 
 
 def q_spatial_grid_density(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1360,7 +1350,7 @@ def q_spatial_grid_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     the grid (18 x 36), NOT by data volume, so the join cost is constant
     at any SF.
     """
-    cust = _t(spark, sf_dir, "customer").select(
+    cust = table(spark, sf_dir, "customer").select(
         _geo_lat("c", F.col("c_custkey")).alias("lat"),
         _geo_lon("c", F.col("c_custkey")).alias("lon"),
     ).select(
@@ -1369,7 +1359,7 @@ def q_spatial_grid_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).groupBy("cell_lat", "cell_lon").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_cust")
     )
-    supp = _t(spark, sf_dir, "supplier").select(
+    supp = table(spark, sf_dir, "supplier").select(
         _geo_lat("s", F.col("s_suppkey")).alias("lat"),
         _geo_lon("s", F.col("s_suppkey")).alias("lon"),
     ).select(
@@ -1410,5 +1400,4 @@ FROM cust c FULL OUTER JOIN supp s
   ON c.cell_lat = s.cell_lat AND c.cell_lon = s.cell_lon
 """
 
-QUERIES["spatial_grid_density"] = q_spatial_grid_density
-ORACLE_SQL["spatial_grid_density"] = SQL_SPATIAL_GRID_DENSITY
+register("spatial_grid_density", q_spatial_grid_density, SQL_SPATIAL_GRID_DENSITY)

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lakeforge.io.sources import base_parquet
+from lakeforge.io.sources import table
 from lakeforge.llm.dedup import (
     MINHASH_P,
     exact_dedup,
@@ -29,6 +29,7 @@ from lakeforge.ops.sampling import (
     stratified_sample,
     train_test_split_col,
 )
+from lakeforge.registry import register
 
 # --------------------------------------------------------------------------
 # DuckDB SQL fragments
@@ -82,7 +83,7 @@ sh AS (SELECT DISTINCT doc_id, array_to_string(toks[i:i+{n - 1}], ' ') AS shingl
 # --------------------------------------------------------------------------
 
 def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return base_parquet(spark, f"{sf_dir}/documents.parquet")
+    return table(spark, sf_dir, "documents")
 
 
 def _neardup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -103,7 +104,7 @@ def _exactdup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return base_parquet(spark, f"{sf_dir}/embeddings.parquet")
+    return table(spark, sf_dir, "embeddings")
 
 
 # --------------------------------------------------------------------------
@@ -128,6 +129,9 @@ FROM t
 """
 
 
+register("text_stats", q_text_stats, SQL_TEXT_STATS)
+
+
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lang_id(_documents(spark, sf_dir), "text", "doc_id")
 
@@ -143,6 +147,9 @@ SELECT doc_id, CASE WHEN pm >= 30 THEN 'en' ELSE 'unk' END AS lang_pred FROM s
 """
 
 
+register("lang_id", q_lang_id, SQL_LANG_ID)
+
+
 def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return doc_fingerprint(_documents(spark, sf_dir), "text", "doc_id")
 
@@ -151,6 +158,9 @@ SQL_DOC_FINGERPRINT = f"""
 WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents)
 SELECT doc_id, {_md5_60("array_to_string(toks, ' ')")} AS fingerprint FROM t
 """
+
+
+register("doc_fingerprint", q_doc_fingerprint, SQL_DOC_FINGERPRINT)
 
 
 def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -164,6 +174,9 @@ fp AS (SELECT doc_id, {_md5_60("array_to_string(toks, ' ')")} AS fp FROM t)
 SELECT fp, MIN(doc_id) AS canonical_id, CAST(COUNT(*) AS BIGINT) AS n_copies
 FROM fp GROUP BY fp
 """
+
+
+register("docs_exact_dedup", q_exact_dedup, SQL_EXACT_DEDUP)
 
 
 _K, _BANDS, _ROWS, _MIN_MATCH = 32, 8, 4, 16
@@ -217,6 +230,9 @@ SELECT doc_a, doc_b, n_match FROM scored WHERE n_match >= {_MIN_MATCH}
 """
 
 
+register("minhash_lsh_pairs", q_minhash_lsh_pairs, _sql_minhash_lsh_pairs())
+
+
 def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return jaccard_pairs(
         _neardup_corpus(spark, sf_dir), "text", "doc_id",
@@ -248,6 +264,9 @@ FROM out WHERE (n_inter * 1000) // n_union >= 300
 """
 
 
+register("ngram_jaccard_pairs", q_ngram_jaccard_pairs, SQL_NGRAM_JACCARD_PAIRS)
+
+
 def q_simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_fingerprints(_documents(spark, sf_dir), "text", "doc_id")
 
@@ -275,6 +294,9 @@ agg AS (SELECT doc_id,
         FROM h GROUP BY doc_id)
 SELECT doc_id, CAST({fp} AS BIGINT) AS simhash FROM agg
 """
+
+
+register("simhash_fingerprints", q_simhash_fingerprints, _sql_simhash())
 
 
 _N_QUERIES, _TOPK = 20, 10
@@ -314,6 +336,9 @@ FROM ranked WHERE rank <= {_TOPK}
 """
 
 
+register("embedding_cosine_topk", q_embedding_cosine_topk, SQL_EMBEDDING_COSINE_TOPK)
+
+
 _N_PLANES, _DIM = 16, 64
 
 
@@ -350,29 +375,7 @@ SELECT vec_id, CAST({bucket} AS BIGINT) AS bucket FROM e
 """
 
 
-QUERIES = {
-    "text_stats": q_text_stats,
-    "lang_id": q_lang_id,
-    "doc_fingerprint": q_doc_fingerprint,
-    "docs_exact_dedup": q_exact_dedup,
-    "minhash_lsh_pairs": q_minhash_lsh_pairs,
-    "ngram_jaccard_pairs": q_ngram_jaccard_pairs,
-    "simhash_fingerprints": q_simhash_fingerprints,
-    "embedding_cosine_topk": q_embedding_cosine_topk,
-    "rp_lsh_buckets": q_rp_lsh_buckets,
-}
-
-ORACLE_SQL = {
-    "text_stats": SQL_TEXT_STATS,
-    "lang_id": SQL_LANG_ID,
-    "doc_fingerprint": SQL_DOC_FINGERPRINT,
-    "docs_exact_dedup": SQL_EXACT_DEDUP,
-    "minhash_lsh_pairs": _sql_minhash_lsh_pairs(),
-    "ngram_jaccard_pairs": SQL_NGRAM_JACCARD_PAIRS,
-    "simhash_fingerprints": _sql_simhash(),
-    "embedding_cosine_topk": SQL_EMBEDDING_COSINE_TOPK,
-    "rp_lsh_buckets": _sql_rp_lsh_buckets(),
-}
+register("rp_lsh_buckets", q_rp_lsh_buckets, _sql_rp_lsh_buckets())
 
 
 # ---------------------------------------------------------------------------
@@ -506,10 +509,8 @@ SELECT a, b, sim FROM pairs WHERE sim >= {_NEARDUP_T}
 """
 
 
-QUERIES["ivf_topk"] = q_ivf_topk
-ORACLE_SQL["ivf_topk"] = _sql_ivf_topk()
-QUERIES["embedding_neardup"] = q_embedding_neardup
-ORACLE_SQL["embedding_neardup"] = _sql_embedding_neardup()
+register("ivf_topk", q_ivf_topk, _sql_ivf_topk())
+register("embedding_neardup", q_embedding_neardup, _sql_embedding_neardup())
 
 
 # ---------------------------------------------------------------------------
@@ -529,8 +530,7 @@ SELECT doc_id,
 FROM documents
 """
 
-QUERIES["token_counts"] = q_token_counts
-ORACLE_SQL["token_counts"] = SQL_TOKEN_COUNTS
+register("token_counts", q_token_counts, SQL_TOKEN_COUNTS)
 
 
 # ---------------------------------------------------------------------------
@@ -570,8 +570,7 @@ SELECT v AS doc_id, MIN(r) AS cluster_id FROM reach GROUP BY v
 """
 
 
-QUERIES["neardup_clusters"] = q_neardup_clusters
-ORACLE_SQL["neardup_clusters"] = _sql_neardup_clusters()
+register("neardup_clusters", q_neardup_clusters, _sql_neardup_clusters())
 
 
 # ---------------------------------------------------------------------------
@@ -604,8 +603,7 @@ SELECT doc_id, CAST(sent_idx AS BIGINT) AS sent_idx, trim(sentence) AS sentence
 FROM s WHERE length(trim(sentence)) > 0
 """
 
-QUERIES["doc_sentences"] = q_doc_sentences
-ORACLE_SQL["doc_sentences"] = SQL_DOC_SENTENCES
+register("doc_sentences", q_doc_sentences, SQL_DOC_SENTENCES)
 
 
 # ---------------------------------------------------------------------------
@@ -630,8 +628,7 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
 """
 
 
-QUERIES["simhash_neardup"] = q_simhash_neardup
-ORACLE_SQL["simhash_neardup"] = _sql_simhash_neardup()
+register("simhash_neardup", q_simhash_neardup, _sql_simhash_neardup())
 
 
 # ---------------------------------------------------------------------------
@@ -657,6 +654,9 @@ FROM documents WHERE {_bucket_sql('sample', 'doc_id')} < 100
 """
 
 
+register("docs_sample", q_docs_sample, SQL_DOCS_SAMPLE)
+
+
 def q_events_train_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakeforge.io.sources import read_events
 
@@ -674,6 +674,9 @@ SELECT CASE WHEN {_bucket_sql('split', 'user_id')} < 200
        event_type, CAST(COUNT(*) AS BIGINT) AS n_events
 FROM events GROUP BY 1, 2
 """
+
+
+register("events_train_test", q_events_train_test, SQL_EVENTS_TRAIN_TEST)
 
 
 def q_events_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -703,13 +706,7 @@ GROUP BY event_type
 """
 
 
-for _n4, _f4, _s4 in [
-    ("docs_sample", q_docs_sample, SQL_DOCS_SAMPLE),
-    ("events_train_test", q_events_train_test, SQL_EVENTS_TRAIN_TEST),
-    ("events_stratified", q_events_stratified, SQL_EVENTS_STRATIFIED),
-]:
-    QUERIES[_n4] = _f4
-    ORACLE_SQL[_n4] = _s4
+register("events_stratified", q_events_stratified, SQL_EVENTS_STRATIFIED)
 
 
 # ---------------------------------------------------------------------------
@@ -776,8 +773,9 @@ WHERE s.doc_id NOT IN (SELECT doc_id FROM dropped)
 """
 
 
-QUERIES["docs_training_pipeline"] = q_docs_training_pipeline
-ORACLE_SQL["docs_training_pipeline"] = _sql_docs_training_pipeline()
+register(
+    "docs_training_pipeline", q_docs_training_pipeline, _sql_docs_training_pipeline(),
+)
 
 
 # ---------------------------------------------------------------------------
@@ -827,8 +825,7 @@ scrubbed AS (
 SELECT doc_id, n_emails, n_phones, md5(text) AS clean_md5 FROM scrubbed
 """
 
-QUERIES["docs_scrub_pii"] = q_docs_scrub_pii
-ORACLE_SQL["docs_scrub_pii"] = SQL_DOCS_SCRUB_PII
+register("docs_scrub_pii", q_docs_scrub_pii, SQL_DOCS_SCRUB_PII)
 
 
 # ---------------------------------------------------------------------------
@@ -908,8 +905,7 @@ SELECT media_id, kind, CAST(n_bytes AS BIGINT) AS n_bytes,
 FROM d
 """
 
-QUERIES["media_features"] = q_media_features
-ORACLE_SQL["media_features"] = SQL_MEDIA_FEATURES
+register("media_features", q_media_features, SQL_MEDIA_FEATURES)
 
 
 # ---------------------------------------------------------------------------
@@ -979,8 +975,7 @@ SELECT doc_id AS media_id,
 FROM documents
 """
 
-QUERIES["media_decode"] = q_media_decode
-ORACLE_SQL["media_decode"] = SQL_MEDIA_DECODE
+register("media_decode", q_media_decode, SQL_MEDIA_DECODE)
 
 
 # ---------------------------------------------------------------------------
@@ -1084,8 +1079,7 @@ SELECT doc_id AS media_id,
 FROM p
 """
 
-QUERIES["media_pixels"] = q_media_pixels
-ORACLE_SQL["media_pixels"] = SQL_MEDIA_PIXELS
+register("media_pixels", q_media_pixels, SQL_MEDIA_PIXELS)
 
 
 # ---------------------------------------------------------------------------
@@ -1127,8 +1121,7 @@ SELECT doc_id AS media_id,
 FROM ok
 """
 
-QUERIES["media_downsample"] = q_media_downsample
-ORACLE_SQL["media_downsample"] = SQL_MEDIA_DOWNSAMPLE
+register("media_downsample", q_media_downsample, SQL_MEDIA_DOWNSAMPLE)
 
 
 # ---------------------------------------------------------------------------
@@ -1170,8 +1163,7 @@ SELECT doc_id AS media_id,
 FROM s
 """
 
-QUERIES["media_energy"] = q_media_energy
-ORACLE_SQL["media_energy"] = SQL_MEDIA_ENERGY
+register("media_energy", q_media_energy, SQL_MEDIA_ENERGY)
 
 
 # ---------------------------------------------------------------------------
@@ -1206,8 +1198,7 @@ SELECT doc_id,
 FROM marked GROUP BY doc_id
 """
 
-QUERIES["docs_decontaminate"] = q_docs_decontaminate
-ORACLE_SQL["docs_decontaminate"] = SQL_DOCS_DECONTAMINATE
+register("docs_decontaminate", q_docs_decontaminate, SQL_DOCS_DECONTAMINATE)
 
 
 # ---------------------------------------------------------------------------
@@ -1240,8 +1231,7 @@ SELECT doc_id, n_tokens, tok_start,
 FROM c
 """
 
-QUERIES["docs_pack_sequences"] = q_docs_pack_sequences
-ORACLE_SQL["docs_pack_sequences"] = SQL_DOCS_PACK_SEQUENCES
+register("docs_pack_sequences", q_docs_pack_sequences, SQL_DOCS_PACK_SEQUENCES)
 
 
 # ---------------------------------------------------------------------------
@@ -1268,8 +1258,7 @@ SELECT doc_id,
 FROM c GROUP BY doc_id
 """
 
-QUERIES["docs_repetition_score"] = q_docs_repetition_score
-ORACLE_SQL["docs_repetition_score"] = SQL_DOCS_REPETITION_SCORE
+register("docs_repetition_score", q_docs_repetition_score, SQL_DOCS_REPETITION_SCORE)
 
 
 # ---------------------------------------------------------------------------
@@ -1302,8 +1291,7 @@ SELECT doc_id,
 FROM documents
 """
 
-QUERIES["docs_epoch_shuffle"] = q_docs_epoch_shuffle
-ORACLE_SQL["docs_epoch_shuffle"] = SQL_DOCS_EPOCH_SHUFFLE
+register("docs_epoch_shuffle", q_docs_epoch_shuffle, SQL_DOCS_EPOCH_SHUFFLE)
 
 
 def q_docs_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1332,8 +1320,7 @@ WHERE {_bucket_sql('mixture', 'doc_id')} <
 GROUP BY source
 """
 
-QUERIES["docs_mixture_sample"] = q_docs_mixture_sample
-ORACLE_SQL["docs_mixture_sample"] = SQL_DOCS_MIXTURE_SAMPLE
+register("docs_mixture_sample", q_docs_mixture_sample, SQL_DOCS_MIXTURE_SAMPLE)
 
 
 # ---------------------------------------------------------------------------
@@ -1410,10 +1397,8 @@ scored AS (
 SELECT doc_id, bm25 FROM scored ORDER BY bm25 DESC, doc_id LIMIT 20
 """
 
-QUERIES["tfidf_top_terms"] = q_tfidf_top_terms
-ORACLE_SQL["tfidf_top_terms"] = SQL_TFIDF_TOP_TERMS
-QUERIES["bm25_search"] = q_bm25_search
-ORACLE_SQL["bm25_search"] = SQL_BM25_SEARCH
+register("tfidf_top_terms", q_tfidf_top_terms, SQL_TFIDF_TOP_TERMS)
+register("bm25_search", q_bm25_search, SQL_BM25_SEARCH)
 
 
 # ---------------------------------------------------------------------------
@@ -1477,10 +1462,8 @@ SELECT d.doc_id,
 FROM documents d LEFT JOIN per_doc p USING (doc_id)
 """
 
-QUERIES["boilerplate_ngrams"] = q_boilerplate_ngrams
-ORACLE_SQL["boilerplate_ngrams"] = SQL_BOILERPLATE_NGRAMS
-QUERIES["docs_boilerplate"] = q_docs_boilerplate
-ORACLE_SQL["docs_boilerplate"] = SQL_DOCS_BOILERPLATE
+register("boilerplate_ngrams", q_boilerplate_ngrams, SQL_BOILERPLATE_NGRAMS)
+register("docs_boilerplate", q_docs_boilerplate, SQL_DOCS_BOILERPLATE)
 
 
 # ---------------------------------------------------------------------------
@@ -1513,8 +1496,7 @@ SELECT doc_id, chunk_id, CAST(len(ch) AS BIGINT) AS n_chunk_tokens,
 FROM c
 """
 
-QUERIES["docs_chunks"] = q_docs_chunks
-ORACLE_SQL["docs_chunks"] = SQL_DOCS_CHUNKS
+register("docs_chunks", q_docs_chunks, SQL_DOCS_CHUNKS)
 
 
 # ---------------------------------------------------------------------------
@@ -1532,7 +1514,7 @@ _KMEANS_ITERS = 3
 def q_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakeforge.llm.clustering import kmeans_assignments
 
-    emb = base_parquet(spark, f"{sf_dir}/embeddings.parquet")
+    emb = table(spark, sf_dir, "embeddings")
     return kmeans_assignments(emb, k=_KMEANS_K, iters=_KMEANS_ITERS)
 
 
@@ -1586,8 +1568,9 @@ WHERE rn = 1
     )
 
 
-QUERIES["kmeans_embeddings"] = q_kmeans_embeddings
-ORACLE_SQL["kmeans_embeddings"] = _sql_kmeans(_KMEANS_K, _KMEANS_ITERS)
+register(
+    "kmeans_embeddings", q_kmeans_embeddings, _sql_kmeans(_KMEANS_K, _KMEANS_ITERS),
+)
 
 
 # ---------------------------------------------------------------------------
@@ -1619,8 +1602,7 @@ SELECT doc_id, n_chars,
 FROM agg WHERE n_chars > 0
 """
 
-QUERIES["docs_char_entropy"] = q_docs_char_entropy
-ORACLE_SQL["docs_char_entropy"] = SQL_DOCS_CHAR_ENTROPY
+register("docs_char_entropy", q_docs_char_entropy, SQL_DOCS_CHAR_ENTROPY)
 
 
 # ---------------------------------------------------------------------------
@@ -1696,10 +1678,8 @@ SELECT query_id, neighbor_id, sim, CAST(rank AS BIGINT) AS rank
 FROM ranked WHERE rank <= {_HN_K}
 """
 
-QUERIES["docs_kfold"] = q_docs_kfold
-ORACLE_SQL["docs_kfold"] = SQL_DOCS_KFOLD
-QUERIES["hard_negatives"] = q_hard_negatives
-ORACLE_SQL["hard_negatives"] = SQL_HARD_NEGATIVES
+register("docs_kfold", q_docs_kfold, SQL_DOCS_KFOLD)
+register("hard_negatives", q_hard_negatives, SQL_HARD_NEGATIVES)
 
 
 # ---------------------------------------------------------------------------
@@ -1733,8 +1713,7 @@ ranked AS (
 SELECT pair, n, rank FROM ranked WHERE rank <= 50
 """
 
-QUERIES["bpe_pair_counts"] = q_bpe_pair_counts
-ORACLE_SQL["bpe_pair_counts"] = SQL_BPE_PAIR_COUNTS
+register("bpe_pair_counts", q_bpe_pair_counts, SQL_BPE_PAIR_COUNTS)
 
 
 # ---------------------------------------------------------------------------
@@ -1770,8 +1749,7 @@ SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
 FROM sc GROUP BY doc_id
 """
 
-QUERIES["docs_bigram_likelihood"] = q_docs_bigram_likelihood
-ORACLE_SQL["docs_bigram_likelihood"] = SQL_DOCS_BIGRAM_LIKELIHOOD
+register("docs_bigram_likelihood", q_docs_bigram_likelihood, SQL_DOCS_BIGRAM_LIKELIHOOD)
 
 
 # ---------------------------------------------------------------------------
@@ -1801,8 +1779,7 @@ WHERE {duckdb_md5_int_sql(["'wsamp'", "doc_id"])} % 1000000
       < LEAST(length(text) * {_WS_PPM_PER_CHAR}, 1000000)
 """
 
-QUERIES["docs_weighted_sample"] = q_docs_weighted_sample
-ORACLE_SQL["docs_weighted_sample"] = SQL_DOCS_WEIGHTED_SAMPLE
+register("docs_weighted_sample", q_docs_weighted_sample, SQL_DOCS_WEIGHTED_SAMPLE)
 
 
 # ---------------------------------------------------------------------------
@@ -1819,8 +1796,7 @@ def q_token_counts_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     return token_counts_arrow(_documents(spark, sf_dir), "text", "doc_id")
 
 
-QUERIES["token_counts_arrow"] = q_token_counts_arrow
-ORACLE_SQL["token_counts_arrow"] = SQL_TOKEN_COUNTS
+register("token_counts_arrow", q_token_counts_arrow, SQL_TOKEN_COUNTS)
 
 
 # ---------------------------------------------------------------------------
@@ -1853,8 +1829,7 @@ SELECT docs_in_bin, CAST(count(*) AS BIGINT) AS n_bins
 FROM per_bin GROUP BY docs_in_bin
 """
 
-QUERIES["packing_efficiency"] = q_packing_efficiency
-ORACLE_SQL["packing_efficiency"] = SQL_PACKING_EFFICIENCY
+register("packing_efficiency", q_packing_efficiency, SQL_PACKING_EFFICIENCY)
 
 
 # ---------------------------------------------------------------------------
@@ -1890,8 +1865,7 @@ FROM p GROUP BY passage_hash
 HAVING COUNT(DISTINCT doc_id) >= 2
 """
 
-QUERIES["passage_dedup"] = q_passage_dedup
-ORACLE_SQL["passage_dedup"] = SQL_PASSAGE_DEDUP
+register("passage_dedup", q_passage_dedup, SQL_PASSAGE_DEDUP)
 
 
 def q_docs_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1926,8 +1900,7 @@ SELECT doc_id, n_tokens, CAST(stop_pm AS BIGINT) AS stop_pm,
 FROM f
 """
 
-QUERIES["docs_quality_score"] = q_docs_quality_score
-ORACLE_SQL["docs_quality_score"] = SQL_DOCS_QUALITY_SCORE
+register("docs_quality_score", q_docs_quality_score, SQL_DOCS_QUALITY_SCORE)
 
 
 def q_docs_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1952,8 +1925,7 @@ r AS (SELECT source, doc_id,
 SELECT source, doc_id FROM r WHERE rn <= 15
 """
 
-QUERIES["docs_domain_cap"] = q_docs_domain_cap
-ORACLE_SQL["docs_domain_cap"] = SQL_DOCS_DOMAIN_CAP
+register("docs_domain_cap", q_docs_domain_cap, SQL_DOCS_DOMAIN_CAP)
 
 
 def q_synthetic_docs_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2033,8 +2005,7 @@ FROM t GROUP BY source
 """
 
 
-QUERIES["synthetic_docs_stats"] = q_synthetic_docs_stats
-ORACLE_SQL["synthetic_docs_stats"] = _docgen_oracle()
+register("synthetic_docs_stats", q_synthetic_docs_stats, _docgen_oracle())
 
 
 def q_token_runs_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2089,8 +2060,7 @@ SELECT doc_id,
 FROM sized GROUP BY doc_id
 """
 
-QUERIES["token_runs_udtf"] = q_token_runs_udtf
-ORACLE_SQL["token_runs_udtf"] = SQL_TOKEN_RUNS_UDTF
+register("token_runs_udtf", q_token_runs_udtf, SQL_TOKEN_RUNS_UDTF)
 
 
 def q_ivf_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2145,8 +2115,7 @@ FROM hits
 """
 
 
-QUERIES["ivf_recall_at_k"] = q_ivf_recall_at_k
-ORACLE_SQL["ivf_recall_at_k"] = _sql_ivf_recall()
+register("ivf_recall_at_k", q_ivf_recall_at_k, _sql_ivf_recall())
 
 
 def q_sq8_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2238,8 +2207,7 @@ SELECT query_id, n_hits,
 FROM hits
 """
 
-QUERIES["sq8_recall_at_k"] = q_sq8_recall_at_k
-ORACLE_SQL["sq8_recall_at_k"] = SQL_SQ8_RECALL
+register("sq8_recall_at_k", q_sq8_recall_at_k, SQL_SQ8_RECALL)
 
 
 def q_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2316,8 +2284,7 @@ FROM scored
 """
 
 
-QUERIES["minhash_calibration"] = q_minhash_calibration
-ORACLE_SQL["minhash_calibration"] = _sql_minhash_calibration()
+register("minhash_calibration", q_minhash_calibration, _sql_minhash_calibration())
 
 
 def q_vocab_zipf_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2354,8 +2321,7 @@ SELECT rank, tok, n, CAST(rank * n AS BIGINT) AS zipf_product
 FROM r WHERE rank <= 50
 """
 
-QUERIES["vocab_zipf_profile"] = q_vocab_zipf_profile
-ORACLE_SQL["vocab_zipf_profile"] = SQL_VOCAB_ZIPF
+register("vocab_zipf_profile", q_vocab_zipf_profile, SQL_VOCAB_ZIPF)
 
 
 def q_docs_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2435,8 +2401,7 @@ v AS (
 SELECT verdict, CAST(count(*) AS BIGINT) AS n_docs FROM v GROUP BY verdict
 """.replace("{FP}", "CAST(('0x' || substr(md5(COALESCE(CAST(norm AS VARCHAR), chr(30))), 1, 15)) AS UBIGINT)::BIGINT")
 
-QUERIES["docs_incremental_dedup"] = q_docs_incremental_dedup
-ORACLE_SQL["docs_incremental_dedup"] = SQL_DOCS_INCREMENTAL_DEDUP
+register("docs_incremental_dedup", q_docs_incremental_dedup, SQL_DOCS_INCREMENTAL_DEDUP)
 
 
 def q_neardup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2530,8 +2495,7 @@ GROUP BY r.component
 """
 
 
-QUERIES["neardup_survivors"] = q_neardup_survivors
-ORACLE_SQL["neardup_survivors"] = _sql_neardup_survivors()
+register("neardup_survivors", q_neardup_survivors, _sql_neardup_survivors())
 
 
 # ---------------------------------------------------------------------------
@@ -2622,8 +2586,7 @@ WITH t0 AS (
 """
 
 
-QUERIES["bpe_train_merges"] = q_bpe_train_merges
-ORACLE_SQL["bpe_train_merges"] = _sql_bpe_train()
+register("bpe_train_merges", q_bpe_train_merges, _sql_bpe_train())
 
 
 # ---------------------------------------------------------------------------
@@ -2845,8 +2808,7 @@ def _sql_pq_recall() -> str:
     return "WITH " + ",\n".join(ctes) + _RECALL_SELECT
 
 
-QUERIES["pq_recall_at_k"] = q_pq_recall_at_k
-ORACLE_SQL["pq_recall_at_k"] = _sql_pq_recall()
+register("pq_recall_at_k", q_pq_recall_at_k, _sql_pq_recall())
 
 
 def q_ivfpq_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2913,8 +2875,7 @@ def _sql_ivfpq_recall() -> str:
     return "WITH " + ",\n".join(ctes) + _RECALL_SELECT
 
 
-QUERIES["ivfpq_recall_at_k"] = q_ivfpq_recall_at_k
-ORACLE_SQL["ivfpq_recall_at_k"] = _sql_ivfpq_recall()
+register("ivfpq_recall_at_k", q_ivfpq_recall_at_k, _sql_ivfpq_recall())
 
 
 # ---------------------------------------------------------------------------
@@ -2957,8 +2918,7 @@ SELECT doc_a, doc_b, n_inter, n_union,
 FROM out WHERE (n_inter * 1000) // n_union >= 600
 """
 
-QUERIES["jaccard_prefix_pairs"] = q_jaccard_prefix_pairs
-ORACLE_SQL["jaccard_prefix_pairs"] = SQL_JACCARD_PREFIX_PAIRS
+register("jaccard_prefix_pairs", q_jaccard_prefix_pairs, SQL_JACCARD_PREFIX_PAIRS)
 
 
 # ---------------------------------------------------------------------------
@@ -3082,8 +3042,9 @@ FROM per_split, sc, sn
 """
 
 
-QUERIES["docs_leakage_safe_split"] = q_docs_leakage_safe_split
-ORACLE_SQL["docs_leakage_safe_split"] = _sql_leakage_safe_split()
+register(
+    "docs_leakage_safe_split", q_docs_leakage_safe_split, _sql_leakage_safe_split(),
+)
 
 
 # ---------------------------------------------------------------------------
@@ -3137,8 +3098,9 @@ JOIN src sb ON p.doc_b % 1000000 = sb.doc_id
 GROUP BY 1, 2
 """
 
-QUERIES["cross_source_dup_matrix"] = q_cross_source_dup_matrix
-ORACLE_SQL["cross_source_dup_matrix"] = SQL_CROSS_SOURCE_DUP_MATRIX
+register(
+    "cross_source_dup_matrix", q_cross_source_dup_matrix, SQL_CROSS_SOURCE_DUP_MATRIX,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -3231,5 +3193,4 @@ FROM per_doc GROUP BY source
 """
 
 
-QUERIES["effective_token_mass"] = q_effective_token_mass
-ORACLE_SQL["effective_token_mass"] = _sql_effective_token_mass()
+register("effective_token_mass", q_effective_token_mass, _sql_effective_token_mass())

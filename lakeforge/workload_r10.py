@@ -29,16 +29,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-QUERIES: dict = {}
-ORACLE_SQL: dict[str, str] = {}
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # Memoized analyzed base scan of the immutable testdata table (r13
-    # floor opt — see io.sources.base_parquet: plan reuse, not a cache).
-    from lakeforge.io.sources import base_parquet
-
-    return base_parquet(spark, f"{sf_dir}/{name}.parquet")
+from lakeforge.io.sources import table
+from lakeforge.ops.scd2 import SCD2_ORDERS_CTE
+from lakeforge.registry import register
 
 
 # ---------------------------------------------------------------------------
@@ -70,7 +63,7 @@ def q_scd2_incremental_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakeforge.ops.dedup import dedup_keep_first
     from lakeforge.ops.scd2 import scd2
 
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.col("o_orderdate").cast("date").alias("order_date"),
         "o_orderstatus",
@@ -116,16 +109,12 @@ def q_scd2_incremental_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     return untouched.select(*cols).unionByName(rebuilt.select(*cols))
 
 
-def _sql_scd2_incremental() -> str:
-    # The ORACLE is the FULL REBUILD over the complete orders table —
-    # matching it is the incremental-maintenance equivalence proof.
-    from lakeforge.workload import _SCD2_ORDERS_CTE
-
-    return _SCD2_ORDERS_CTE + "SELECT * FROM dim"
-
-
-QUERIES["scd2_incremental_snapshot"] = q_scd2_incremental_snapshot
-# registered late (workload.py imports this module after defining the CTE)
+# The ORACLE is the FULL REBUILD over the complete orders table —
+# matching it is the incremental-maintenance equivalence proof.
+register(
+    "scd2_incremental_snapshot", q_scd2_incremental_snapshot,
+    SCD2_ORDERS_CTE + "SELECT * FROM dim",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -141,7 +130,7 @@ QUERIES["scd2_incremental_snapshot"] = q_scd2_incremental_snapshot
 
 
 def q_merge_manifest_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_orderkey",
         (F.year("o_orderdate") * 100 + F.month("o_orderdate")).alias("p_ym"),
     )
@@ -197,8 +186,7 @@ SELECT CAST(m.p_ym AS INTEGER) AS p_ym, m.n_rows, m.min_orderkey,
 FROM manifest m LEFT JOIN batch b USING (p_ym)
 """
 
-QUERIES["merge_manifest_pruning"] = q_merge_manifest_pruning
-ORACLE_SQL["merge_manifest_pruning"] = SQL_MERGE_MANIFEST_PRUNING
+register("merge_manifest_pruning", q_merge_manifest_pruning, SQL_MERGE_MANIFEST_PRUNING)
 
 
 # ---------------------------------------------------------------------------
@@ -218,7 +206,7 @@ ORACLE_SQL["merge_manifest_pruning"] = SQL_MERGE_MANIFEST_PRUNING
 
 
 def q_open_orders_month_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_orderkey",
         (F.year("o_orderdate") * 100 + F.month("o_orderdate"))
         .cast("int")
@@ -226,7 +214,7 @@ def q_open_orders_month_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
     )
     close = (
-        _t(spark, sf_dir, "lineitem")
+        table(spark, sf_dir, "lineitem")
         .groupBy("l_orderkey")
         .agg(F.max(F.col("l_shipdate").cast("date")).alias("last_ship"))
         .select(
@@ -314,8 +302,7 @@ SELECT ym,
 FROM cells
 """
 
-QUERIES["open_orders_month_grid"] = q_open_orders_month_grid
-ORACLE_SQL["open_orders_month_grid"] = SQL_OPEN_ORDERS_MONTH_GRID
+register("open_orders_month_grid", q_open_orders_month_grid, SQL_OPEN_ORDERS_MONTH_GRID)
 
 
 # ---------------------------------------------------------------------------
@@ -379,8 +366,7 @@ SELECT event_type,
 FROM scored GROUP BY event_type
 """
 
-QUERIES["event_arrival_lateness"] = q_event_arrival_lateness
-ORACLE_SQL["event_arrival_lateness"] = SQL_EVENT_ARRIVAL_LATENESS
+register("event_arrival_lateness", q_event_arrival_lateness, SQL_EVENT_ARRIVAL_LATENESS)
 
 
 # ---------------------------------------------------------------------------
@@ -398,7 +384,7 @@ _FIXED_COLS_BYTES = 8 * 9  # orderkey/partkey/suppkey/linenumber/qty/price/disc/
 
 
 def q_lineitem_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = table(spark, sf_dir, "lineitem").select(
         (F.year("l_shipdate") * 100 + F.month("l_shipdate"))
         .cast("int")
         .alias("p_ym"),
@@ -448,8 +434,11 @@ SELECT p_ym, n_rows, est_bytes,
 FROM cells
 """
 
-QUERIES["lineitem_compaction_plan"] = q_lineitem_compaction_plan
-ORACLE_SQL["lineitem_compaction_plan"] = SQL_LINEITEM_COMPACTION_PLAN
+register(
+    "lineitem_compaction_plan",
+    q_lineitem_compaction_plan,
+    SQL_LINEITEM_COMPACTION_PLAN,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -471,7 +460,7 @@ def q_knn_label_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     topk = q_embedding_cosine_topk(spark, sf_dir).select(
         "query_id", "neighbor_id"
     )
-    lab = _t(spark, sf_dir, "embeddings").select("vec_id", "label")
+    lab = table(spark, sf_dir, "embeddings").select("vec_id", "label")
     j = (
         topk.join(lab.withColumnRenamed("label", "q_label"),
                   topk.query_id == lab.vec_id)
@@ -545,8 +534,10 @@ FROM per_query GROUP BY 1
 """
 
 
-QUERIES["knn_label_consistency"] = q_knn_label_consistency
-# oracle registered by workload.py (reuses workload_llm SQL at import time)
+register(
+    "knn_label_consistency", q_knn_label_consistency,
+    _sql_knn_label_consistency(),
+)
 
 
 # ---------------------------------------------------------------------------
@@ -602,8 +593,7 @@ SELECT event_type,
 FROM ev GROUP BY 1, 2
 """
 
-QUERIES["events_props_variant"] = q_events_props_variant
-ORACLE_SQL["events_props_variant"] = SQL_EVENTS_PROPS_VARIANT
+register("events_props_variant", q_events_props_variant, SQL_EVENTS_PROPS_VARIANT)
 
 
 # ---------------------------------------------------------------------------
@@ -619,7 +609,7 @@ ORACLE_SQL["events_props_variant"] = SQL_EVENTS_PROPS_VARIANT
 def q_token_length_hist_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakeforge.llm.text import tokens_col
 
-    d = _t(spark, sf_dir, "documents").select(
+    d = table(spark, sf_dir, "documents").select(
         "lang", tokens_col("text").alias("__toks")
     )
     toks = d.select("lang", F.explode("__toks").alias("tok"))
@@ -665,5 +655,8 @@ SELECT lang, len_band, n_tokens,
 FROM cells
 """
 
-QUERIES["token_length_hist_by_lang"] = q_token_length_hist_by_lang
-ORACLE_SQL["token_length_hist_by_lang"] = SQL_TOKEN_LENGTH_HIST_BY_LANG
+register(
+    "token_length_hist_by_lang",
+    q_token_length_hist_by_lang,
+    SQL_TOKEN_LENGTH_HIST_BY_LANG,
+)

@@ -24,16 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-QUERIES: dict = {}
-ORACLE_SQL: dict[str, str] = {}
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # Memoized analyzed base scan of the immutable testdata table (r13
-    # floor opt — see io.sources.base_parquet: plan reuse, not a cache).
-    from lakeforge.io.sources import base_parquet
-
-    return base_parquet(spark, f"{sf_dir}/{name}.parquet")
+from lakeforge.io.sources import table
+from lakeforge.registry import register
 
 
 # ---------------------------------------------------------------------------
@@ -106,8 +98,7 @@ JOIN sizes sa ON sa.event_type = i.ta
 JOIN sizes sb ON sb.event_type = i.tb
 """
 
-QUERIES["event_audience_overlap"] = q_event_audience_overlap
-ORACLE_SQL["event_audience_overlap"] = SQL_EVENT_AUDIENCE_OVERLAP
+register("event_audience_overlap", q_event_audience_overlap, SQL_EVENT_AUDIENCE_OVERLAP)
 
 
 # ---------------------------------------------------------------------------
@@ -121,14 +112,14 @@ ORACLE_SQL["event_audience_overlap"] = SQL_EVENT_AUDIENCE_OVERLAP
 
 
 def q_orders_backlog_age_waterfall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.col("o_orderdate").cast("date").alias("od"),
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
     )
     t0 = o.agg(F.max("od").alias("t0"))
     close = (
-        _t(spark, sf_dir, "lineitem")
+        table(spark, sf_dir, "lineitem")
         .groupBy("l_orderkey")
         .agg(F.max(F.col("l_shipdate").cast("date")).alias("last_ship"))
     )
@@ -187,8 +178,11 @@ SELECT CASE WHEN age_days <= 30 THEN 'age_0_30'
 FROM open_orders GROUP BY 1
 """
 
-QUERIES["orders_backlog_age_waterfall"] = q_orders_backlog_age_waterfall
-ORACLE_SQL["orders_backlog_age_waterfall"] = SQL_ORDERS_BACKLOG_AGE_WATERFALL
+register(
+    "orders_backlog_age_waterfall",
+    q_orders_backlog_age_waterfall,
+    SQL_ORDERS_BACKLOG_AGE_WATERFALL,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -203,7 +197,7 @@ ORACLE_SQL["orders_backlog_age_waterfall"] = SQL_ORDERS_BACKLOG_AGE_WATERFALL
 
 
 def q_nation_retention_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_custkey", F.year("o_orderdate").cast("int").alias("yr")
     )
     cy = o.distinct()
@@ -217,8 +211,8 @@ def q_nation_retention_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.lit("reactivated")),
         )
     )
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    n = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     return (
         state.join(c, state.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
@@ -248,8 +242,9 @@ JOIN nation n ON c.c_nationkey = n.n_nationkey
 GROUP BY 1, 2, 3
 """
 
-QUERIES["nation_retention_matrix"] = q_nation_retention_matrix
-ORACLE_SQL["nation_retention_matrix"] = SQL_NATION_RETENTION_MATRIX
+register(
+    "nation_retention_matrix", q_nation_retention_matrix, SQL_NATION_RETENTION_MATRIX,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -265,7 +260,7 @@ ORACLE_SQL["nation_retention_matrix"] = SQL_NATION_RETENTION_MATRIX
 
 
 def q_doc_quotation_density(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents").select("source", "text").filter(
+    d = table(spark, sf_dir, "documents").select("source", "text").filter(
         F.length("text") > 0
     )
     # Pure integer bps on both engines (ADVICE r10 #1): Spark `div`
@@ -320,8 +315,7 @@ SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
 FROM scored GROUP BY source
 """
 
-QUERIES["doc_quotation_density"] = q_doc_quotation_density
-ORACLE_SQL["doc_quotation_density"] = SQL_DOC_QUOTATION_DENSITY
+register("doc_quotation_density", q_doc_quotation_density, SQL_DOC_QUOTATION_DENSITY)
 
 
 # ---------------------------------------------------------------------------
@@ -341,7 +335,7 @@ _XL_TOPV, _XL_MIN_HITS = 50, 3
 def q_doc_crosslang_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakeforge.llm.text import tokens_col
 
-    d = _t(spark, sf_dir, "documents").select(
+    d = table(spark, sf_dir, "documents").select(
         "doc_id", "lang", tokens_col("text").alias("__toks")
     )
     vocab = (
@@ -423,8 +417,7 @@ FROM per_doc GROUP BY lang
 """
 
 
-QUERIES["doc_crosslang_contamination"] = q_doc_crosslang_contamination
-ORACLE_SQL["doc_crosslang_contamination"] = _sql_crosslang()
+register("doc_crosslang_contamination", q_doc_crosslang_contamination, _sql_crosslang())
 
 
 # ---------------------------------------------------------------------------
@@ -445,7 +438,7 @@ def q_pipe_syntax_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
     view = f"__r10b_lineitem_{tag}"
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView(view)
+    table(spark, sf_dir, "lineitem").createOrReplaceTempView(view)
     try:
         return spark.sql(f"""
           FROM {view}
@@ -480,8 +473,7 @@ WHERE l_quantity < 45
 GROUP BY l_returnflag, l_linestatus
 """
 
-QUERIES["pipe_syntax_pricing"] = q_pipe_syntax_pricing
-ORACLE_SQL["pipe_syntax_pricing"] = SQL_PIPE_SYNTAX_PRICING
+register("pipe_syntax_pricing", q_pipe_syntax_pricing, SQL_PIPE_SYNTAX_PRICING)
 
 
 # ---------------------------------------------------------------------------
@@ -502,7 +494,7 @@ def q_param_sql_value_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
     view = f"__r10b_orders_{tag}"
-    _t(spark, sf_dir, "orders").createOrReplaceTempView(view)
+    table(spark, sf_dir, "orders").createOrReplaceTempView(view)
     try:
         return spark.sql(
             f"""
@@ -531,5 +523,4 @@ WHERE o_totalprice > {_PARAM_THRESHOLD}
 GROUP BY o_orderpriority
 """
 
-QUERIES["param_sql_value_bands"] = q_param_sql_value_bands
-ORACLE_SQL["param_sql_value_bands"] = SQL_PARAM_SQL_VALUE_BANDS
+register("param_sql_value_bands", q_param_sql_value_bands, SQL_PARAM_SQL_VALUE_BANDS)

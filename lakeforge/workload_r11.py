@@ -53,10 +53,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lakeforge.io.sources import base_parquet
-
-QUERIES: dict = {}
-ORACLE_SQL: dict[str, str] = {}
+from lakeforge.io.sources import table
+from lakeforge.registry import register
 
 
 # ---------------------------------------------------------------------------
@@ -290,9 +288,10 @@ LEFT JOIN batch_hit b ON b.doc_id = d.doc_id
 """
 
 
-QUERIES["neardup_incremental"] = q_neardup_incremental
-# ORACLE registered by workload.py via _sql_neardup_incremental() (the SQL
-# is generated from the same constants the Spark path uses).
+# The oracle SQL is generated from the same constants the Spark path uses.
+register(
+    "neardup_incremental", q_neardup_incremental, _sql_neardup_incremental()
+)
 
 
 # ---------------------------------------------------------------------------
@@ -456,7 +455,7 @@ def _dhash_media(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pandas as pd
 
-    docs = base_parquet(spark, f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = table(spark, sf_dir, "documents").select("doc_id")
 
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         def bmp(did: int, mutated: bool) -> bytes:
@@ -525,7 +524,7 @@ def _dhash_fps_fused(spark: SparkSession, sf_dir: str, out_col: str) -> DataFram
     # input).  Only the 8-byte ids ride the exchange; count is the
     # cluster's parallelism, not a constant (4.4s -> 1.5s at sf0.1).
     docs = (
-        base_parquet(spark, f"{sf_dir}/documents.parquet")
+        table(spark, sf_dir, "documents")
         .select("doc_id")
         .repartition(spark.sparkContext.defaultParallelism)
     )
@@ -623,8 +622,7 @@ FROM grp WHERE cnt > 1
 """
 
 
-QUERIES["image_dhash_neardup"] = q_image_dhash_neardup
-ORACLE_SQL["image_dhash_neardup"] = _sql_image_dhash_neardup()
+register("image_dhash_neardup", q_image_dhash_neardup, _sql_image_dhash_neardup())
 
 
 # ---------------------------------------------------------------------------
@@ -665,7 +663,7 @@ def _af_media(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from lakeforge.llm.multimodal import encode_wav
 
-    docs = base_parquet(spark, f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = table(spark, sf_dir, "documents").select("doc_id")
 
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         def wav(did: int, mutated: bool) -> bytes:
@@ -698,7 +696,7 @@ def q_audio_fingerprint_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Same id-only pre-decode spread as _dhash_fps_fused (guide §2.5).
     docs = (
-        base_parquet(spark, f"{sf_dir}/documents.parquet")
+        table(spark, sf_dir, "documents")
         .select("doc_id")
         .repartition(spark.sparkContext.defaultParallelism)
     )
@@ -803,8 +801,11 @@ FROM grp WHERE cnt > 1
 """
 
 
-QUERIES["audio_fingerprint_neardup"] = q_audio_fingerprint_neardup
-ORACLE_SQL["audio_fingerprint_neardup"] = _sql_audio_fingerprint_neardup()
+register(
+    "audio_fingerprint_neardup",
+    q_audio_fingerprint_neardup,
+    _sql_audio_fingerprint_neardup(),
+)
 
 
 # ---------------------------------------------------------------------------
@@ -827,7 +828,7 @@ def q_sql_udf_net_charge(spark: SparkSession, sf_dir: str) -> DataFrame:
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
     fn = f"__r11_net_charge_{tag}"
     view = f"__r11_lineitem_{tag}"
-    base_parquet(spark, f"{sf_dir}/lineitem.parquet").createOrReplaceTempView(
+    table(spark, sf_dir, "lineitem").createOrReplaceTempView(
         view
     )
     spark.sql(f"""
@@ -872,8 +873,7 @@ SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n_lines,
 FROM src GROUP BY l_returnflag
 """
 
-QUERIES["sql_udf_net_charge"] = q_sql_udf_net_charge
-ORACLE_SQL["sql_udf_net_charge"] = SQL_SQL_UDF_NET_CHARGE
+register("sql_udf_net_charge", q_sql_udf_net_charge, SQL_SQL_UDF_NET_CHARGE)
 
 
 # ---------------------------------------------------------------------------
@@ -888,7 +888,7 @@ ORACLE_SQL["sql_udf_net_charge"] = SQL_SQL_UDF_NET_CHARGE
 
 
 def q_orders_unpivot_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = base_parquet(spark, f"{sf_dir}/orders.parquet")
+    o = table(spark, sf_dir, "orders")
     wide = o.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_orders"),
         F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
@@ -927,8 +927,7 @@ UNION ALL
 SELECT o_orderpriority, 'n_customers', n_customers FROM wide
 """
 
-QUERIES["orders_unpivot_metrics"] = q_orders_unpivot_metrics
-ORACLE_SQL["orders_unpivot_metrics"] = SQL_ORDERS_UNPIVOT_METRICS
+register("orders_unpivot_metrics", q_orders_unpivot_metrics, SQL_ORDERS_UNPIVOT_METRICS)
 
 
 # ---------------------------------------------------------------------------
@@ -971,7 +970,7 @@ def _vf_media(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pandas as pd
 
-    docs = base_parquet(spark, f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = table(spark, sf_dir, "documents").select("doc_id")
 
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         def frame(seed: int) -> bytes:
@@ -1044,7 +1043,7 @@ def _vf_fps_fused(spark: SparkSession, sf_dir: str, out_col: str) -> DataFrame:
 
     # Same id-only pre-decode spread as _dhash_fps_fused (guide §2.5).
     docs = (
-        base_parquet(spark, f"{sf_dir}/documents.parquet")
+        table(spark, sf_dir, "documents")
         .select("doc_id")
         .repartition(spark.sparkContext.defaultParallelism)
     )
@@ -1172,8 +1171,7 @@ HAVING COUNT(*) >= {_VF_MIN_SHARED}
 """
 
 
-QUERIES["video_frame_neardup"] = q_video_frame_neardup
-ORACLE_SQL["video_frame_neardup"] = _sql_video_frame_neardup()
+register("video_frame_neardup", q_video_frame_neardup, _sql_video_frame_neardup())
 
 
 # ---------------------------------------------------------------------------
@@ -1253,8 +1251,7 @@ SELECT fmt, verdict, CAST(count(*) AS BIGINT) AS n_media,
 FROM v GROUP BY fmt, verdict
 """
 
-QUERIES["media_quality_gate"] = q_media_quality_gate
-ORACLE_SQL["media_quality_gate"] = SQL_MEDIA_QUALITY_GATE
+register("media_quality_gate", q_media_quality_gate, SQL_MEDIA_QUALITY_GATE)
 
 
 # ---------------------------------------------------------------------------
@@ -1277,7 +1274,7 @@ def q_sql_table_udf_value_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
     fn = f"__r11_value_bands_{tag}"
     view = f"__r11_orders_{tag}"
-    base_parquet(spark, f"{sf_dir}/orders.parquet").createOrReplaceTempView(
+    table(spark, sf_dir, "orders").createOrReplaceTempView(
         view
     )
     spark.sql(f"""
@@ -1314,5 +1311,6 @@ FROM orders
 GROUP BY 1, 2
 """
 
-QUERIES["sql_table_udf_value_bands"] = q_sql_table_udf_value_bands
-ORACLE_SQL["sql_table_udf_value_bands"] = SQL_TABLE_UDF_VALUE_BANDS
+register(
+    "sql_table_udf_value_bands", q_sql_table_udf_value_bands, SQL_TABLE_UDF_VALUE_BANDS,
+)

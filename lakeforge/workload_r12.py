@@ -84,10 +84,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lakeforge.functions.keys import duckdb_md5_int_sql, md5_int
-from lakeforge.io.sources import base_parquet
-
-QUERIES: dict = {}
-ORACLE_SQL: dict[str, str] = {}
+from lakeforge.io.sources import table
+from lakeforge.registry import register
 
 
 # ---------------------------------------------------------------------------
@@ -110,7 +108,7 @@ def _shared_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     run_tokens) with doc_a < doc_b, s/e the first/last matched anchor
     position IN doc_a, run_tokens the verbatim run length in tokens."""
     n = _SS_N
-    docs = base_parquet(spark, f"{sf_dir}/documents.parquet").select(
+    docs = table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
     toks = docs.select(
@@ -249,8 +247,9 @@ GROUP BY doc_a, doc_b
 """
 
 
-QUERIES["docs_shared_substrings"] = q_docs_shared_substrings
-ORACLE_SQL["docs_shared_substrings"] = _sql_docs_shared_substrings()
+register(
+    "docs_shared_substrings", q_docs_shared_substrings, _sql_docs_shared_substrings(),
+)
 
 
 # ---------------------------------------------------------------------------
@@ -312,7 +311,7 @@ def q_docs_substring_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Tokenize AFTER the join: only covered docs (a small fraction of the
     # corpus) pay the second tokenization pass — the pre-join variant
     # re-tokenized every document just to count tokens.
-    docs = base_parquet(spark, f"{sf_dir}/documents.parquet").select(
+    docs = table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
     return (
@@ -380,8 +379,11 @@ FROM cov c JOIN nt USING (doc_id)
 """
 
 
-QUERIES["docs_substring_coverage"] = q_docs_substring_coverage
-ORACLE_SQL["docs_substring_coverage"] = _sql_docs_substring_coverage()
+register(
+    "docs_substring_coverage",
+    q_docs_substring_coverage,
+    _sql_docs_substring_coverage(),
+)
 
 # ---------------------------------------------------------------------------
 # crossmodal_image_video_match — image dHash <-> video frame-fp containment
@@ -637,9 +639,10 @@ FROM ifpt i JOIN perv p USING (fp)
 """
 
 
-QUERIES["crossmodal_image_video_match"] = q_crossmodal_image_video_match
-ORACLE_SQL["crossmodal_image_video_match"] = (
-    _sql_crossmodal_image_video_match()
+register(
+    "crossmodal_image_video_match",
+    q_crossmodal_image_video_match,
+    _sql_crossmodal_image_video_match(),
 )
 
 
@@ -842,5 +845,8 @@ GROUP BY c.cluster_id
 """
 
 
-QUERIES["crossmodal_asset_clusters"] = q_crossmodal_asset_clusters
-ORACLE_SQL["crossmodal_asset_clusters"] = _sql_crossmodal_asset_clusters()
+register(
+    "crossmodal_asset_clusters",
+    q_crossmodal_asset_clusters,
+    _sql_crossmodal_asset_clusters(),
+)

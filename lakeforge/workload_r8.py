@@ -28,19 +28,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lakeforge.functions.keys import duckdb_md5_int_sql, md5_int
+from lakeforge.io.sources import table
+from lakeforge.registry import register
 
-QUERIES: dict = {}
-ORACLE_SQL: dict[str, str] = {}
 
 DEC = "decimal(18,2)"
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # Memoized analyzed base scan of the immutable testdata table (r13
-    # floor opt — see io.sources.base_parquet: plan reuse, not a cache).
-    from lakeforge.io.sources import base_parquet
-
-    return base_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 # ---------------------------------------------------------------------------
@@ -61,7 +53,7 @@ def q_receivable_aging(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one scan, row-local bucket CASE, one map-side-combined
     aggregate to five rows.  Value sums in DECIMAL(18,2) (money never
     floats)."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "O")
+    o = table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "O")
     age = F.datediff(
         F.lit(_AR_ANCHOR).cast("date"), F.col("o_orderdate").cast("date")
     )
@@ -95,8 +87,7 @@ SELECT CASE WHEN age <= 30 THEN '0-30'
 FROM o GROUP BY 1
 """
 
-QUERIES["receivable_aging"] = q_receivable_aging
-ORACLE_SQL["receivable_aging"] = SQL_RECEIVABLE_AGING
+register("receivable_aging", q_receivable_aging, SQL_RECEIVABLE_AGING)
 
 
 # ---------------------------------------------------------------------------
@@ -118,10 +109,10 @@ def q_supplier_lead_time_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
     combined aggregate to |suppliers| rows.  Exact integers: floor-div
     mean, bps via bigint (counts * 10000 fits int64 at any TPC-H
     scale)."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", F.col("l_shipdate").cast("date").alias("ship")
     )
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_orderkey", F.col("o_orderdate").cast("date").alias("placed")
     )
     j = li.join(o, li.l_orderkey == o.o_orderkey).select(
@@ -154,8 +145,7 @@ SELECT l_suppkey,
 FROM j GROUP BY l_suppkey
 """
 
-QUERIES["supplier_lead_time_sla"] = q_supplier_lead_time_sla
-ORACLE_SQL["supplier_lead_time_sla"] = SQL_SUPPLIER_LEAD_TIME_SLA
+register("supplier_lead_time_sla", q_supplier_lead_time_sla, SQL_SUPPLIER_LEAD_TIME_SLA)
 
 
 # ---------------------------------------------------------------------------
@@ -176,7 +166,7 @@ def q_customer_order_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     by months-per-customer, a calendar constant, never fact-scale), two
     more keyed aggregates, and a final histogram whose size is bounded
     by the calendar span.  Exact integers throughout."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_custkey",
         (
             F.year(F.col("o_orderdate").cast("date")) * 12
@@ -220,8 +210,7 @@ SELECT best_streak AS streak_months,
 FROM best GROUP BY 1
 """
 
-QUERIES["customer_order_streaks"] = q_customer_order_streaks
-ORACLE_SQL["customer_order_streaks"] = SQL_CUSTOMER_ORDER_STREAKS
+register("customer_order_streaks", q_customer_order_streaks, SQL_CUSTOMER_ORDER_STREAKS)
 
 # ---------------------------------------------------------------------------
 # LLM curation: vocabulary coverage curve (token mass of the top-V words).
@@ -254,7 +243,7 @@ def q_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ADVICE r8 #2 — same single-scan discipline as bigram lift)."""
     from lakeforge.cache import persist_tracked
 
-    d = _t(spark, sf_dir, "documents").select("text")
+    d = table(spark, sf_dir, "documents").select("text")
     words = d.select(
         F.explode(F.split(F.col("text"), " +")).alias("w")
     ).filter(F.col("w") != "")
@@ -310,8 +299,7 @@ FROM ranked, tot
 WHERE rank_v IN ({_VOCAB_CPS_SQL})
 """
 
-QUERIES["vocab_coverage_curve"] = q_vocab_coverage_curve
-ORACLE_SQL["vocab_coverage_curve"] = SQL_VOCAB_COVERAGE_CURVE
+register("vocab_coverage_curve", q_vocab_coverage_curve, SQL_VOCAB_COVERAGE_CURVE)
 
 # ---------------------------------------------------------------------------
 # LLM curation: collocation mining by integer pointwise lift.
@@ -345,7 +333,7 @@ def q_bigram_lift_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE tokenization pass feeds all three aggregates (pair counts,
     # unigram counts, corpus totals) — without the persist the plan
     # re-scans and re-tokenizes documents once per consumer.
-    d = _t(spark, sf_dir, "documents").select("text")
+    d = table(spark, sf_dir, "documents").select("text")
     toks = persist_tracked(
         d.select(F.expr("filter(split(text, ' +'), x -> x <> '')").alias("ws"))
     )
@@ -434,8 +422,7 @@ ORDER BY lift_ppm DESC, p.w1, p.w2
 LIMIT {_LIFT_TOP_K}
 """
 
-QUERIES["bigram_lift_collocations"] = q_bigram_lift_collocations
-ORACLE_SQL["bigram_lift_collocations"] = SQL_BIGRAM_LIFT
+register("bigram_lift_collocations", q_bigram_lift_collocations, SQL_BIGRAM_LIFT)
 
 # ---------------------------------------------------------------------------
 # LLM curation: integer Flesch-style readability per document.
@@ -460,7 +447,7 @@ def q_docs_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic in bigint: per-doc counts are bounded by doc length, and
     the x1000 scaling stays far below int64 for any document that fits
     in a String."""
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    d = table(spark, sf_dir, "documents").select("doc_id", "text")
     return d.select(
         "doc_id",
         F.expr(
@@ -513,8 +500,7 @@ SELECT doc_id, n_words, n_sents, n_syll, n_long,
 FROM base WHERE n_words > 0
 """
 
-QUERIES["docs_readability"] = q_docs_readability
-ORACLE_SQL["docs_readability"] = SQL_DOCS_READABILITY
+register("docs_readability", q_docs_readability, SQL_DOCS_READABILITY)
 
 
 # ---------------------------------------------------------------------------
@@ -545,7 +531,7 @@ def q_shingle_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle set (pre-cap), so the score is conservative-exact for rare
     content.  One aggregate per pair, two slim joins for sizes; all
     integer."""
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    d = table(spark, sf_dir, "documents").select("doc_id", "text")
     toks = d.select(
         "doc_id", F.expr("filter(split(text, ' +'), x -> x <> '')").alias("ws")
     )
@@ -641,8 +627,9 @@ WHERE p.shared * 1000 // sa.n_sh >= {_CONT_MIN_PERMILLE}
    OR p.shared * 1000 // sb.n_sh >= {_CONT_MIN_PERMILLE}
 """
 
-QUERIES["shingle_containment_pairs"] = q_shingle_containment_pairs
-ORACLE_SQL["shingle_containment_pairs"] = SQL_SHINGLE_CONTAINMENT
+register(
+    "shingle_containment_pairs", q_shingle_containment_pairs, SQL_SHINGLE_CONTAINMENT,
+)
 
 # ---------------------------------------------------------------------------
 # Embedding quality: Davies-Bouldin-lite cluster separation audit.
@@ -676,7 +663,7 @@ def q_embedding_cluster_separation(
     zip_with, one aggregate to K rows.  The K x K centroid self-join is
     dimension-sized by construction.  Linear in corpus bytes at any
     scale."""
-    emb = _t(spark, sf_dir, "embeddings").select(
+    emb = table(spark, sf_dir, "embeddings").select(
         "vec_id", "label",
         F.expr(
             "transform(embedding,"
@@ -792,8 +779,11 @@ SELECT i.label, i.n_vecs, i.intra_msd, r.min_inter_d2, r.db_ratio_ppm
 FROM intra i JOIN ratios r ON r.label = i.label
 """
 
-QUERIES["embedding_cluster_separation"] = q_embedding_cluster_separation
-ORACLE_SQL["embedding_cluster_separation"] = SQL_EMBEDDING_CLUSTER_SEPARATION
+register(
+    "embedding_cluster_separation",
+    q_embedding_cluster_separation,
+    SQL_EMBEDDING_CLUSTER_SEPARATION,
+)
 
 # ---------------------------------------------------------------------------
 # Data quality: functional-dependency violation audit.
@@ -828,10 +818,10 @@ def q_fd_violation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_violating"),
         )
 
-    supp = _t(spark, sf_dir, "supplier")
-    part = _t(spark, sf_dir, "part")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
+    supp = table(spark, sf_dir, "supplier")
+    part = table(spark, sf_dir, "part")
+    orders = table(spark, sf_dir, "orders")
+    cust = table(spark, sf_dir, "customer")
     audits = (
         _fd(supp, "s_suppkey", "s_name", "s_suppkey->s_name")
         .unionByName(_fd(part, "p_brand", "p_type", "p_brand->p_type"))
@@ -881,8 +871,7 @@ SELECT fd, n_groups, n_violating,
 FROM a
 """
 
-QUERIES["fd_violation_audit"] = q_fd_violation_audit
-ORACLE_SQL["fd_violation_audit"] = SQL_FD_VIOLATION_AUDIT
+register("fd_violation_audit", q_fd_violation_audit, SQL_FD_VIOLATION_AUDIT)
 
 
 # ---------------------------------------------------------------------------
@@ -910,7 +899,7 @@ def q_trade_edge_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakeforge.cache import persist_tracked
 
     li = persist_tracked(
-        _t(spark, sf_dir, "lineitem").select(
+        table(spark, sf_dir, "lineitem").select(
             F.year(F.col("l_shipdate").cast("date")).cast("bigint").alias("y"),
             "l_partkey", "l_suppkey",
         ).distinct()
@@ -980,8 +969,7 @@ JOIN per_year n ON n.y = c.y + 1
 LEFT JOIN kept k ON k.y = c.y
 """
 
-QUERIES["trade_edge_churn"] = q_trade_edge_churn
-ORACLE_SQL["trade_edge_churn"] = SQL_TRADE_EDGE_CHURN
+register("trade_edge_churn", q_trade_edge_churn, SQL_TRADE_EDGE_CHURN)
 
 # ---------------------------------------------------------------------------
 # Text mining: RAKE-lite keyword/phrase extraction.
@@ -1008,7 +996,7 @@ def q_docs_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     phrase scores come from one join of phrase words to the word-score
     frame (AQE broadcasts the vocab side when it fits).  Integer
     permille throughout; ties break on the phrase text."""
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    d = table(spark, sf_dir, "documents").select("doc_id", "text")
     stop = ", ".join(f"'{s}'" for s in _RAKE_STOPWORDS)
     toks = d.select(
         "doc_id",
@@ -1108,8 +1096,7 @@ ORDER BY score_permille DESC, a.phrase
 LIMIT {_RAKE_TOP_K}
 """
 
-QUERIES["docs_rake_keywords"] = q_docs_rake_keywords
-ORACLE_SQL["docs_rake_keywords"] = SQL_DOCS_RAKE_KEYWORDS
+register("docs_rake_keywords", q_docs_rake_keywords, SQL_DOCS_RAKE_KEYWORDS)
 
 
 # ---------------------------------------------------------------------------
@@ -1138,7 +1125,7 @@ def q_customer_clv_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     ages = range(0, 8)
     num = {a: _CLV_DECAY_NUM ** a for a in ages}
     den = {a: _CLV_DECAY_DEN ** a for a in ages}
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_custkey",
         (
             F.lit(_CLV_ANCHOR_YEAR)
@@ -1160,7 +1147,7 @@ def q_customer_clv_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("wcents").cast("bigint").alias("clv_cents"),
         F.count(F.lit(1)).cast("bigint").alias("n_orders"),
     )
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    c = table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     return (
         per_cust.join(
             c, per_cust.o_custkey == c.c_custkey
@@ -1205,8 +1192,7 @@ GROUP BY c.c_mktsegment
 """
 
 
-QUERIES["customer_clv_decay"] = q_customer_clv_decay
-ORACLE_SQL["customer_clv_decay"] = _sql_clv()
+register("customer_clv_decay", q_customer_clv_decay, _sql_clv())
 
 # ---------------------------------------------------------------------------
 # LLM curation: token-budget-constrained corpus selection.
@@ -1236,7 +1222,7 @@ def q_corpus_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     and one explicit repartition exchange is shared by the summary
     aggregate and the window (ReusedExchange).  No single-partition sort
     at any scale; the final rollup is |sources|-sized."""
-    d = _t(spark, sf_dir, "documents").select("doc_id", "source", "text")
+    d = table(spark, sf_dir, "documents").select("doc_id", "source", "text")
     per_doc = (
         d.select(
             "doc_id",
@@ -1316,5 +1302,6 @@ FROM adm a JOIN documents d ON d.doc_id = a.doc_id
 GROUP BY d.source
 """
 
-QUERIES["corpus_budget_selection"] = q_corpus_budget_selection
-ORACLE_SQL["corpus_budget_selection"] = SQL_CORPUS_BUDGET_SELECTION
+register(
+    "corpus_budget_selection", q_corpus_budget_selection, SQL_CORPUS_BUDGET_SELECTION,
+)

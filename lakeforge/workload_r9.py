@@ -29,16 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-QUERIES: dict = {}
-ORACLE_SQL: dict[str, str] = {}
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # Memoized analyzed base scan of the immutable testdata table (r13
-    # floor opt — see io.sources.base_parquet: plan reuse, not a cache).
-    from lakeforge.io.sources import base_parquet
-
-    return base_parquet(spark, f"{sf_dir}/{name}.parquet")
+from lakeforge.io.sources import table
+from lakeforge.registry import register
 
 
 # ---------------------------------------------------------------------------
@@ -60,7 +52,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def q_revenue_bridge_pvm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = table(spark, sf_dir, "lineitem").filter(
         F.year("l_shipdate").isin(1996, 1997)
     ).select(
         "l_orderkey",
@@ -71,9 +63,9 @@ def q_revenue_bridge_pvm(spark: SparkSession, sf_dir: str) -> DataFrame:
             * (F.lit(100) - F.round(F.col("l_discount") * 100).cast("bigint"))
         ).cast("decimal(38,0)").alias("rev_e4"),
     )
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    n = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     cells = (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -135,8 +127,7 @@ FROM y96 JOIN y97 USING (n_name)
 WHERE q96 > 0
 """
 
-QUERIES["revenue_bridge_pvm"] = q_revenue_bridge_pvm
-ORACLE_SQL["revenue_bridge_pvm"] = SQL_REVENUE_BRIDGE_PVM
+register("revenue_bridge_pvm", q_revenue_bridge_pvm, SQL_REVENUE_BRIDGE_PVM)
 
 
 # ---------------------------------------------------------------------------
@@ -153,12 +144,12 @@ ORACLE_SQL["revenue_bridge_pvm"] = SQL_REVENUE_BRIDGE_PVM
 # ---------------------------------------------------------------------------
 
 def q_bps_largest_remainder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").filter(F.year("o_orderdate") == 1997).select(
+    o = table(spark, sf_dir, "orders").filter(F.year("o_orderdate") == 1997).select(
         "o_custkey",
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
     )
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    n = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     per_nation = (
         o.join(c, o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
@@ -229,8 +220,7 @@ SELECT n_name, rev_cents, floor_bps,
 FROM ranked
 """
 
-QUERIES["bps_largest_remainder"] = q_bps_largest_remainder
-ORACLE_SQL["bps_largest_remainder"] = SQL_BPS_LARGEST_REMAINDER
+register("bps_largest_remainder", q_bps_largest_remainder, SQL_BPS_LARGEST_REMAINDER)
 
 
 # ---------------------------------------------------------------------------
@@ -247,7 +237,7 @@ ORACLE_SQL["bps_largest_remainder"] = SQL_BPS_LARGEST_REMAINDER
 # ---------------------------------------------------------------------------
 
 def q_scd4_order_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_custkey") < 100).select(
+    o = table(spark, sf_dir, "orders").filter(F.col("o_custkey") < 100).select(
         "o_custkey",
         "o_orderkey",
         F.col("o_orderdate").cast("date").alias("order_date"),
@@ -281,8 +271,7 @@ WINDOW w AS (PARTITION BY o_custkey
              ORDER BY CAST(o_orderdate AS DATE), o_orderkey)
 """
 
-QUERIES["scd4_order_versions"] = q_scd4_order_versions
-ORACLE_SQL["scd4_order_versions"] = SQL_SCD4_ORDER_VERSIONS
+register("scd4_order_versions", q_scd4_order_versions, SQL_SCD4_ORDER_VERSIONS)
 
 
 # ---------------------------------------------------------------------------
@@ -302,7 +291,7 @@ _KANON_K = 10
 
 
 def q_kanon_generalization_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_orderpriority",
         "o_orderstatus",
         F.year("o_orderdate").cast("int").alias("order_year"),
@@ -366,8 +355,11 @@ SELECT CAST(level AS BIGINT) AS level, n_groups, min_group_size,
 FROM levels
 """
 
-QUERIES["kanon_generalization_ladder"] = q_kanon_generalization_ladder
-ORACLE_SQL["kanon_generalization_ladder"] = SQL_KANON_GENERALIZATION_LADDER
+register(
+    "kanon_generalization_ladder",
+    q_kanon_generalization_ladder,
+    SQL_KANON_GENERALIZATION_LADDER,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -382,7 +374,7 @@ ORACLE_SQL["kanon_generalization_ladder"] = SQL_KANON_GENERALIZATION_LADDER
 # ---------------------------------------------------------------------------
 
 def q_order_interarrival_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.col("o_orderdate").cast("date").alias("d"),
         "o_orderkey",
@@ -392,7 +384,7 @@ def q_order_interarrival_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey",
         F.datediff(F.col("d"), F.lag("d").over(w)).cast("bigint").alias("gap"),
     ).filter(F.col("gap").isNotNull())
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    c = table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     return (
         gaps.join(c, gaps.o_custkey == c.c_custkey)
         .groupBy("c_mktsegment")
@@ -429,8 +421,11 @@ WHERE gap IS NOT NULL
 GROUP BY c.c_mktsegment
 """
 
-QUERIES["order_interarrival_profile"] = q_order_interarrival_profile
-ORACLE_SQL["order_interarrival_profile"] = SQL_ORDER_INTERARRIVAL_PROFILE
+register(
+    "order_interarrival_profile",
+    q_order_interarrival_profile,
+    SQL_ORDER_INTERARRIVAL_PROFILE,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -446,7 +441,7 @@ ORACLE_SQL["order_interarrival_profile"] = SQL_ORDER_INTERARRIVAL_PROFILE
 # ---------------------------------------------------------------------------
 
 def q_single_source_risk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = table(spark, sf_dir, "lineitem").select(
         "l_partkey",
         "l_suppkey",
         F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("cents"),
@@ -455,7 +450,7 @@ def q_single_source_risk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count_distinct("l_suppkey").cast("bigint").alias("n_supp"),
         F.sum("cents").cast("decimal(38,0)").alias("spend"),
     )
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    p = table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     return (
         per_part.join(p, per_part.l_partkey == p.p_partkey)
         .groupBy("p_brand")
@@ -495,8 +490,7 @@ FROM per_part pp JOIN part p ON pp.l_partkey = p.p_partkey
 GROUP BY p.p_brand
 """
 
-QUERIES["single_source_risk"] = q_single_source_risk
-ORACLE_SQL["single_source_risk"] = SQL_SINGLE_SOURCE_RISK
+register("single_source_risk", q_single_source_risk, SQL_SINGLE_SOURCE_RISK)
 
 
 # ---------------------------------------------------------------------------
@@ -522,7 +516,7 @@ _BURST_V = 50
 def q_word_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakeforge.cache import persist_tracked
 
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    d = table(spark, sf_dir, "documents").select("doc_id", "text")
     words = persist_tracked(
         d.select(
             "doc_id", F.explode(F.split(F.col("text"), " +")).alias("w")
@@ -590,8 +584,7 @@ FROM per_doc, nd
 GROUP BY w, nd.n_docs
 """
 
-QUERIES["word_burstiness"] = q_word_burstiness
-ORACLE_SQL["word_burstiness"] = SQL_WORD_BURSTINESS
+register("word_burstiness", q_word_burstiness, SQL_WORD_BURSTINESS)
 
 
 # ---------------------------------------------------------------------------
@@ -609,7 +602,7 @@ ORACLE_SQL["word_burstiness"] = SQL_WORD_BURSTINESS
 def q_source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakeforge.cache import persist_tracked
 
-    d = _t(spark, sf_dir, "documents").select("source", "text")
+    d = table(spark, sf_dir, "documents").select("source", "text")
     vocab = persist_tracked(
         d.select(
             "source", F.explode(F.split(F.col("text"), " +")).alias("w")
@@ -669,8 +662,7 @@ JOIN sizes sa ON i.source_a = sa.source
 JOIN sizes sb ON i.source_b = sb.source
 """
 
-QUERIES["source_vocab_overlap"] = q_source_vocab_overlap
-ORACLE_SQL["source_vocab_overlap"] = SQL_SOURCE_VOCAB_OVERLAP
+register("source_vocab_overlap", q_source_vocab_overlap, SQL_SOURCE_VOCAB_OVERLAP)
 
 
 # ---------------------------------------------------------------------------
@@ -692,7 +684,7 @@ ORACLE_SQL["source_vocab_overlap"] = SQL_SOURCE_VOCAB_OVERLAP
 # ---------------------------------------------------------------------------
 
 def q_fuzzy_name_ld1_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    names = _t(spark, sf_dir, "part").select("p_name").distinct()
+    names = table(spark, sf_dir, "part").select("p_name").distinct()
     variants = names.select(
         "p_name",
         F.explode(
@@ -728,8 +720,7 @@ FROM names a JOIN names b ON a.p_name < b.p_name
 WHERE levenshtein(a.p_name, b.p_name) <= 1
 """
 
-QUERIES["fuzzy_name_ld1_pairs"] = q_fuzzy_name_ld1_pairs
-ORACLE_SQL["fuzzy_name_ld1_pairs"] = SQL_FUZZY_NAME_LD1_PAIRS
+register("fuzzy_name_ld1_pairs", q_fuzzy_name_ld1_pairs, SQL_FUZZY_NAME_LD1_PAIRS)
 
 
 # ---------------------------------------------------------------------------
@@ -765,7 +756,7 @@ def q_rrf_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("bm25_rank"),
     )
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = table(spark, sf_dir, "embeddings")
     cos = cosine_topk(
         emb.filter(F.col("vec_id") == 0), emb, "embedding", "vec_id", k=_RRF_LIST
     ).select(F.col("neighbor_id").alias("doc_id"), F.col("rank").alias("cos_rank"))
@@ -877,8 +868,7 @@ ORDER BY rrf_micros DESC, doc_id
 LIMIT {_RRF_OUT}
 """
 
-QUERIES["rrf_hybrid_search"] = q_rrf_hybrid_search
-ORACLE_SQL["rrf_hybrid_search"] = SQL_RRF_HYBRID_SEARCH
+register("rrf_hybrid_search", q_rrf_hybrid_search, SQL_RRF_HYBRID_SEARCH)
 
 
 # ---------------------------------------------------------------------------
@@ -919,7 +909,7 @@ def _d2_expr(a: str, b: str) -> str:
 def q_mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakeforge.cache import persist_tracked
 
-    emb = _t(spark, sf_dir, "embeddings").select(
+    emb = table(spark, sf_dir, "embeddings").select(
         "vec_id", F.expr(_MICRO_VEC).alias("mv")
     )
     qrow = emb.filter(F.col("vec_id") == _MMR_QUERY_ID).select("mv").collect()
@@ -1012,8 +1002,7 @@ s{t} AS (
 
 SQL_MMR_DIVERSE_TOPK = _sql_mmr()
 
-QUERIES["mmr_diverse_topk"] = q_mmr_diverse_topk
-ORACLE_SQL["mmr_diverse_topk"] = SQL_MMR_DIVERSE_TOPK
+register("mmr_diverse_topk", q_mmr_diverse_topk, SQL_MMR_DIVERSE_TOPK)
 
 
 # ---------------------------------------------------------------------------
@@ -1034,7 +1023,7 @@ ORACLE_SQL["mmr_diverse_topk"] = SQL_MMR_DIVERSE_TOPK
 def q_lang_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakeforge.llm.text import _STOP_SQL, tokens_col
 
-    d = _t(spark, sf_dir, "documents").select(
+    d = table(spark, sf_dir, "documents").select(
         "lang",
         tokens_col("text").alias("__toks"),
     )
@@ -1094,8 +1083,7 @@ FROM cells
 
 SQL_LANG_CONFUSION_MATRIX = _sql_lang_confusion()
 
-QUERIES["lang_confusion_matrix"] = q_lang_confusion_matrix
-ORACLE_SQL["lang_confusion_matrix"] = SQL_LANG_CONFUSION_MATRIX
+register("lang_confusion_matrix", q_lang_confusion_matrix, SQL_LANG_CONFUSION_MATRIX)
 
 
 # ---------------------------------------------------------------------------
@@ -1119,7 +1107,7 @@ _FUNNEL_GATES = (
 def q_docs_gate_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakeforge.llm.text import quality_score
 
-    q = quality_score(_t(spark, sf_dir, "documents"), "text", "doc_id")
+    q = quality_score(table(spark, sf_dir, "documents"), "text", "doc_id")
     g = [F.expr(cond) for _, cond in _FUNNEL_GATES]
     surv = [g[0]]
     for cond in g[1:]:
@@ -1215,8 +1203,7 @@ c AS (
 
 SQL_DOCS_GATE_FUNNEL = _sql_gate_funnel()
 
-QUERIES["docs_gate_funnel"] = q_docs_gate_funnel
-ORACLE_SQL["docs_gate_funnel"] = SQL_DOCS_GATE_FUNNEL
+register("docs_gate_funnel", q_docs_gate_funnel, SQL_DOCS_GATE_FUNNEL)
 
 
 # ---------------------------------------------------------------------------
@@ -1240,7 +1227,7 @@ _SG_TOP_K = 50
 def q_skipgram_pmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakeforge.cache import persist_tracked
 
-    d = _t(spark, sf_dir, "documents").select("text")
+    d = table(spark, sf_dir, "documents").select("text")
     toks = persist_tracked(
         d.select(F.expr("filter(split(text, ' +'), x -> x <> '')").alias("ws"))
     )
@@ -1335,5 +1322,4 @@ LIMIT {_SG_TOP_K}
 
 SQL_SKIPGRAM_PMI_PAIRS = _sql_skipgram()
 
-QUERIES["skipgram_pmi_pairs"] = q_skipgram_pmi_pairs
-ORACLE_SQL["skipgram_pmi_pairs"] = SQL_SKIPGRAM_PMI_PAIRS
+register("skipgram_pmi_pairs", q_skipgram_pmi_pairs, SQL_SKIPGRAM_PMI_PAIRS)

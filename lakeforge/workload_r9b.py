@@ -67,6 +67,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lakeforge.functions.keys import md5_int
+from lakeforge.io.sources import table
 from lakeforge.llm.dedup import (
     MINHASH_P,
     exact_dedup,
@@ -75,6 +76,7 @@ from lakeforge.llm.dedup import (
     minhash_signatures,
 )
 from lakeforge.llm.text import tokens_col
+from lakeforge.registry import register
 from lakeforge.workload_llm import (
     _EXACTDUP_CORPUS,
     _NEARDUP_CORPUS,
@@ -84,17 +86,6 @@ from lakeforge.workload_llm import (
     _neardup_corpus,
     _shingle_ctes,
 )
-
-QUERIES: dict = {}
-ORACLE_SQL: dict[str, str] = {}
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # Memoized analyzed base scan of the immutable testdata table (r13
-    # floor opt — see io.sources.base_parquet: plan reuse, not a cache).
-    from lakeforge.io.sources import base_parquet
-
-    return base_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 # ---------------------------------------------------------------------------
@@ -112,19 +103,19 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def q_part_profit_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey",
         (
             F.round(F.col("l_extendedprice") * 100).cast("bigint")
             * (F.lit(100) - F.round(F.col("l_discount") * 100).cast("bigint"))
         ).cast("decimal(38,0)").alias("rev_e4"),
     )
-    p = _t(spark, sf_dir, "part").filter(F.col("p_name").like("%red%")).select(
+    p = table(spark, sf_dir, "part").filter(F.col("p_name").like("%red%")).select(
         "p_partkey"
     )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    o = _t(spark, sf_dir, "orders").select(
+    s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    n = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    o = table(spark, sf_dir, "orders").select(
         "o_orderkey", F.year("o_orderdate").cast("int").alias("o_year")
     )
     return (
@@ -156,8 +147,7 @@ WHERE p.p_name LIKE '%red%'
 GROUP BY n.n_name, o_year
 """
 
-QUERIES["part_profit_trend"] = q_part_profit_trend
-ORACLE_SQL["part_profit_trend"] = SQL_PART_PROFIT_TREND
+register("part_profit_trend", q_part_profit_trend, SQL_PART_PROFIT_TREND)
 
 
 # ---------------------------------------------------------------------------
@@ -180,7 +170,7 @@ _MIG_BLOCK = 10_000_000  # $100k in cents
 
 
 def q_customer_decile_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").filter(
+    o = table(spark, sf_dir, "orders").filter(
         F.year("o_orderdate").isin(_MIG_Y0, _MIG_Y1)
     )
     per_cy = o.groupBy(
@@ -259,8 +249,11 @@ WHERE d0.yr = {_MIG_Y0} AND d1.yr = {_MIG_Y1}
 GROUP BY 1, 2
 """
 
-QUERIES["customer_decile_migration"] = q_customer_decile_migration
-ORACLE_SQL["customer_decile_migration"] = SQL_CUSTOMER_DECILE_MIGRATION
+register(
+    "customer_decile_migration",
+    q_customer_decile_migration,
+    SQL_CUSTOMER_DECILE_MIGRATION,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -277,7 +270,7 @@ _BAND_CAP = 4
 
 
 def q_order_value_band_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderdate", "o_orderkey",
         F.least(
             F.expr(
@@ -313,8 +306,11 @@ FROM lagged WHERE band_from IS NOT NULL
 GROUP BY 1, 2
 """
 
-QUERIES["order_value_band_transitions"] = q_order_value_band_transitions
-ORACLE_SQL["order_value_band_transitions"] = SQL_ORDER_VALUE_BAND_TRANSITIONS
+register(
+    "order_value_band_transitions",
+    q_order_value_band_transitions,
+    SQL_ORDER_VALUE_BAND_TRANSITIONS,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -326,7 +322,7 @@ ORACLE_SQL["order_value_band_transitions"] = SQL_ORDER_VALUE_BAND_TRANSITIONS
 # ---------------------------------------------------------------------------
 
 def q_brand_margin_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = table(spark, sf_dir, "lineitem").select(
         "l_partkey",
         F.round("l_quantity").cast("bigint").alias("qty"),
         (
@@ -334,7 +330,7 @@ def q_brand_margin_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
             * (F.lit(100) - F.round(F.col("l_discount") * 100).cast("bigint"))
         ).cast("decimal(38,0)").alias("sell_e4"),
     )
-    p = _t(spark, sf_dir, "part").select(
+    p = table(spark, sf_dir, "part").select(
         "p_partkey", "p_brand",
         F.round(F.col("p_retailprice") * 100).cast("bigint").alias("retail_cents"),
     )
@@ -379,8 +375,7 @@ SELECT p_brand, n_lines,
 FROM cells
 """
 
-QUERIES["brand_margin_depth"] = q_brand_margin_depth
-ORACLE_SQL["brand_margin_depth"] = SQL_BRAND_MARGIN_DEPTH
+register("brand_margin_depth", q_brand_margin_depth, SQL_BRAND_MARGIN_DEPTH)
 
 
 # ---------------------------------------------------------------------------
@@ -400,7 +395,7 @@ ORACLE_SQL["brand_margin_depth"] = SQL_BRAND_MARGIN_DEPTH
 # ---------------------------------------------------------------------------
 
 def q_doc_mean_token_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    d = table(spark, sf_dir, "documents").select("doc_id", "text")
     # NOT persisted: the exploded token frame is corpus-sized (~8x the
     # text bytes) — caching it would spill ~the corpus at 100 TB.  The
     # vocab aggregate and the per-doc join each re-derive it from the
@@ -449,8 +444,7 @@ SELECT doc_id, n_toks,
 FROM per_doc, tot
 """
 
-QUERIES["doc_mean_token_rarity"] = q_doc_mean_token_rarity
-ORACLE_SQL["doc_mean_token_rarity"] = SQL_DOC_MEAN_TOKEN_RARITY
+register("doc_mean_token_rarity", q_doc_mean_token_rarity, SQL_DOC_MEAN_TOKEN_RARITY)
 
 
 # ---------------------------------------------------------------------------
@@ -485,8 +479,7 @@ SELECT n_copies AS group_size,
 FROM g GROUP BY n_copies
 """
 
-QUERIES["dedup_impact_curve"] = q_dedup_impact_curve
-ORACLE_SQL["dedup_impact_curve"] = SQL_DEDUP_IMPACT_CURVE
+register("dedup_impact_curve", q_dedup_impact_curve, SQL_DEDUP_IMPACT_CURVE)
 
 
 # ---------------------------------------------------------------------------
@@ -499,7 +492,7 @@ ORACLE_SQL["dedup_impact_curve"] = SQL_DEDUP_IMPACT_CURVE
 # ---------------------------------------------------------------------------
 
 def q_dedup_survivor_quality_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text", "source")
+    docs = table(spark, sf_dir, "documents").select("doc_id", "text", "source")
     copies = docs.filter(F.col("doc_id") % 7 == 0).select(
         (F.col("doc_id") + 2000000).alias("doc_id"), "text", "source"
     )
@@ -569,8 +562,11 @@ SELECT source,
 FROM flagged GROUP BY source
 """
 
-QUERIES["dedup_survivor_quality_shift"] = q_dedup_survivor_quality_shift
-ORACLE_SQL["dedup_survivor_quality_shift"] = SQL_DEDUP_SURVIVOR_QUALITY_SHIFT
+register(
+    "dedup_survivor_quality_shift",
+    q_dedup_survivor_quality_shift,
+    SQL_DEDUP_SURVIVOR_QUALITY_SHIFT,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -583,7 +579,7 @@ ORACLE_SQL["dedup_survivor_quality_shift"] = SQL_DEDUP_SURVIVOR_QUALITY_SHIFT
 # ---------------------------------------------------------------------------
 
 def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents").select("source", "text")
+    d = table(spark, sf_dir, "documents").select("source", "text")
     w = d.select("source", F.explode(tokens_col("text")).alias("w"))
     return (
         w.groupBy("source")
@@ -619,8 +615,7 @@ SELECT source, n_words, n_subtokens,
 FROM cells
 """
 
-QUERIES["tokenizer_fertility"] = q_tokenizer_fertility
-ORACLE_SQL["tokenizer_fertility"] = SQL_TOKENIZER_FERTILITY
+register("tokenizer_fertility", q_tokenizer_fertility, SQL_TOKENIZER_FERTILITY)
 
 
 # ---------------------------------------------------------------------------
@@ -639,7 +634,7 @@ ORACLE_SQL["tokenizer_fertility"] = SQL_TOKENIZER_FERTILITY
 # ---------------------------------------------------------------------------
 
 def _exploded_micro(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     return e.select(
         "vec_id", F.posexplode("embedding").alias("pos0", "v")
     ).select(
@@ -697,8 +692,11 @@ SELECT CAST(pos AS INTEGER) AS pos,
 FROM err GROUP BY pos
 """
 
-QUERIES["sq8_reconstruction_error"] = q_sq8_reconstruction_error
-ORACLE_SQL["sq8_reconstruction_error"] = SQL_SQ8_RECONSTRUCTION_ERROR
+register(
+    "sq8_reconstruction_error",
+    q_sq8_reconstruction_error,
+    SQL_SQ8_RECONSTRUCTION_ERROR,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -770,8 +768,7 @@ FROM buckets GROUP BY sz
 """
 
 
-QUERIES["lsh_bucket_skew_audit"] = q_lsh_bucket_skew_audit
-ORACLE_SQL["lsh_bucket_skew_audit"] = _sql_lsh_bucket_skew_audit()
+register("lsh_bucket_skew_audit", q_lsh_bucket_skew_audit, _sql_lsh_bucket_skew_audit())
 
 
 # ===========================================================================
@@ -790,14 +787,14 @@ ORACLE_SQL["lsh_bucket_skew_audit"] = _sql_lsh_bucket_skew_audit()
 # ---------------------------------------------------------------------------
 
 def q_share_of_wallet_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey",
         (
             F.round(F.col("l_extendedprice") * 100).cast("bigint")
             * (F.lit(100) - F.round(F.col("l_discount") * 100).cast("bigint"))
         ).cast("decimal(38,0)").alias("rev_e4"),
     )
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     cells = (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .groupBy("o_custkey", "l_suppkey")
@@ -833,8 +830,11 @@ SELECT CAST((top_rev * 10000 // tot_rev) // 1000 AS BIGINT) AS share_band,
 FROM per_cust GROUP BY 1
 """
 
-QUERIES["share_of_wallet_concentration"] = q_share_of_wallet_concentration
-ORACLE_SQL["share_of_wallet_concentration"] = SQL_SHARE_OF_WALLET
+register(
+    "share_of_wallet_concentration",
+    q_share_of_wallet_concentration,
+    SQL_SHARE_OF_WALLET,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -850,13 +850,13 @@ def q_nation_trade_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("l_extendedprice") * 100).cast("bigint")
         * (F.lit(100) - F.round(F.col("l_discount") * 100).cast("bigint"))
     ).cast("decimal(38,0)")
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", rev.alias("rev_e4")
     )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    n = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     exp = (
         li.join(s, li.l_suppkey == s.s_suppkey)
         .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
@@ -912,8 +912,7 @@ SELECT COALESCE(e.n_name, i.n_name) AS n_name,
 FROM exp e FULL OUTER JOIN imp i ON e.n_name = i.n_name
 """
 
-QUERIES["nation_trade_balance"] = q_nation_trade_balance
-ORACLE_SQL["nation_trade_balance"] = SQL_NATION_TRADE_BALANCE
+register("nation_trade_balance", q_nation_trade_balance, SQL_NATION_TRADE_BALANCE)
 
 
 # ---------------------------------------------------------------------------
@@ -928,7 +927,7 @@ _PREFIX_K = 8
 
 
 def q_doc_prefix_redundancy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    d = table(spark, sf_dir, "documents").select("doc_id", "text")
     fp = d.select(
         md5_int(
             F.concat_ws(" ", F.slice(tokens_col("text"), 1, _PREFIX_K))
@@ -959,8 +958,7 @@ SELECT sz AS group_size,
 FROM g GROUP BY sz
 """
 
-QUERIES["doc_prefix_redundancy"] = q_doc_prefix_redundancy
-ORACLE_SQL["doc_prefix_redundancy"] = SQL_DOC_PREFIX_REDUNDANCY
+register("doc_prefix_redundancy", q_doc_prefix_redundancy, SQL_DOC_PREFIX_REDUNDANCY)
 
 
 # ---------------------------------------------------------------------------
@@ -971,7 +969,7 @@ ORACLE_SQL["doc_prefix_redundancy"] = SQL_DOC_PREFIX_REDUNDANCY
 # ---------------------------------------------------------------------------
 
 def q_hapax_share_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents").select("source", "text")
+    d = table(spark, sf_dir, "documents").select("source", "text")
     w = d.select("source", F.explode(tokens_col("text")).alias("w"))
     sv = w.groupBy("source", "w").agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
@@ -1000,8 +998,7 @@ SELECT source,
 FROM sv GROUP BY source
 """
 
-QUERIES["hapax_share_by_source"] = q_hapax_share_by_source
-ORACLE_SQL["hapax_share_by_source"] = SQL_HAPAX_SHARE_BY_SOURCE
+register("hapax_share_by_source", q_hapax_share_by_source, SQL_HAPAX_SHARE_BY_SOURCE)
 
 
 # ---------------------------------------------------------------------------
@@ -1016,7 +1013,7 @@ ORACLE_SQL["hapax_share_by_source"] = SQL_HAPAX_SHARE_BY_SOURCE
 # ---------------------------------------------------------------------------
 
 def q_token_branching_factor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents").select(
+    d = table(spark, sf_dir, "documents").select(
         tokens_col("text").alias("toks")
     )
     pairs = d.select(
@@ -1070,8 +1067,7 @@ SELECT freq_band,
 FROM joined GROUP BY freq_band
 """
 
-QUERIES["token_branching_factor"] = q_token_branching_factor
-ORACLE_SQL["token_branching_factor"] = SQL_TOKEN_BRANCHING_FACTOR
+register("token_branching_factor", q_token_branching_factor, SQL_TOKEN_BRANCHING_FACTOR)
 
 
 # ---------------------------------------------------------------------------
@@ -1082,7 +1078,7 @@ ORACLE_SQL["token_branching_factor"] = SQL_TOKEN_BRANCHING_FACTOR
 # ---------------------------------------------------------------------------
 
 def q_embedding_norm_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
+    e = table(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
     per_vec = e.select(
         "label",
         F.aggregate(
@@ -1121,8 +1117,7 @@ SELECT label,
 FROM per_vec GROUP BY label
 """
 
-QUERIES["embedding_norm_profile"] = q_embedding_norm_profile
-ORACLE_SQL["embedding_norm_profile"] = SQL_EMBEDDING_NORM_PROFILE
+register("embedding_norm_profile", q_embedding_norm_profile, SQL_EMBEDDING_NORM_PROFILE)
 
 
 # ---------------------------------------------------------------------------
@@ -1201,8 +1196,7 @@ JOIN per_type tb ON tb.event_type = type_b
 CROSS JOIN n_users
 """
 
-QUERIES["event_type_user_lift"] = q_event_type_user_lift
-ORACLE_SQL["event_type_user_lift"] = SQL_EVENT_TYPE_USER_LIFT
+register("event_type_user_lift", q_event_type_user_lift, SQL_EVENT_TYPE_USER_LIFT)
 
 
 # ---------------------------------------------------------------------------
@@ -1217,7 +1211,7 @@ _DRIFT_BASE_YEAR = 1995
 
 
 def q_order_priority_share_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         F.year("o_orderdate").cast("int").alias("o_year"), "o_orderpriority"
     )
     cells = o.groupBy("o_year", "o_orderpriority").agg(
@@ -1256,8 +1250,11 @@ SELECT s.o_year, s.o_orderpriority, s.share_bps,
 FROM shares s JOIN base b USING (o_orderpriority)
 """
 
-QUERIES["order_priority_share_drift"] = q_order_priority_share_drift
-ORACLE_SQL["order_priority_share_drift"] = SQL_ORDER_PRIORITY_SHARE_DRIFT
+register(
+    "order_priority_share_drift",
+    q_order_priority_share_drift,
+    SQL_ORDER_PRIORITY_SHARE_DRIFT,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -1272,7 +1269,7 @@ _REACT_GAP_DAYS = 180
 
 
 def q_customer_reactivation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderkey",
         F.col("o_orderdate").cast("date").alias("od"),
     )
@@ -1303,8 +1300,7 @@ WHERE prev_od IS NOT NULL AND date_diff('day', prev_od, od) > {_REACT_GAP_DAYS}
 GROUP BY 1
 """
 
-QUERIES["customer_reactivation"] = q_customer_reactivation
-ORACLE_SQL["customer_reactivation"] = SQL_CUSTOMER_REACTIVATION
+register("customer_reactivation", q_customer_reactivation, SQL_CUSTOMER_REACTIVATION)
 
 
 # ---------------------------------------------------------------------------
@@ -1317,7 +1313,7 @@ ORACLE_SQL["customer_reactivation"] = SQL_CUSTOMER_REACTIVATION
 # ---------------------------------------------------------------------------
 
 def q_embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
+    e = table(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
     ex = e.select(
         "label",
         (F.col("vec_id") % 2).cast("int").alias("half"),
@@ -1371,8 +1367,11 @@ WHERE c0.half = 0 AND c1.half = 1
 GROUP BY c0.label
 """
 
-QUERIES["embedding_centroid_drift"] = q_embedding_centroid_drift
-ORACLE_SQL["embedding_centroid_drift"] = SQL_EMBEDDING_CENTROID_DRIFT
+register(
+    "embedding_centroid_drift",
+    q_embedding_centroid_drift,
+    SQL_EMBEDDING_CENTROID_DRIFT,
+)
 
 
 # ===========================================================================
@@ -1392,8 +1391,8 @@ ORACLE_SQL["embedding_centroid_drift"] = SQL_EMBEDDING_CENTROID_DRIFT
 def q_ship_lag_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakeforge.ops.percentile import bounded_domain_percentiles
 
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
-    o = _t(spark, sf_dir, "orders").select(
+    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
+    o = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_orderdate"
     )
     lag = li.join(o, li.l_orderkey == o.o_orderkey).select(
@@ -1423,8 +1422,7 @@ def _sql_ship_lag_percentiles() -> str:
     )
 
 
-QUERIES["ship_lag_percentiles"] = q_ship_lag_percentiles
-ORACLE_SQL["ship_lag_percentiles"] = _sql_ship_lag_percentiles()
+register("ship_lag_percentiles", q_ship_lag_percentiles, _sql_ship_lag_percentiles())
 
 
 # ---------------------------------------------------------------------------
@@ -1438,7 +1436,7 @@ ORACLE_SQL["ship_lag_percentiles"] = _sql_ship_lag_percentiles()
 def q_order_gap_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakeforge.ops.percentile import bounded_domain_percentiles
 
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderkey", F.col("o_orderdate").cast("date").alias("od")
     )
     w = Window.partitionBy("o_custkey").orderBy("od", "o_orderkey")
@@ -1450,7 +1448,7 @@ def q_order_gap_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.datediff("od", "prev_od").cast("bigint").alias("gap_days"),
         )
     )
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    c = table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     seg_gaps = gaps.join(c, gaps.o_custkey == c.c_custkey).select(
         "c_mktsegment", "gap_days"
     )
@@ -1481,8 +1479,7 @@ def _sql_order_gap_percentiles() -> str:
     )
 
 
-QUERIES["order_gap_percentiles"] = q_order_gap_percentiles
-ORACLE_SQL["order_gap_percentiles"] = _sql_order_gap_percentiles()
+register("order_gap_percentiles", q_order_gap_percentiles, _sql_order_gap_percentiles())
 
 
 # ---------------------------------------------------------------------------
@@ -1494,7 +1491,7 @@ ORACLE_SQL["order_gap_percentiles"] = _sql_order_gap_percentiles()
 # ---------------------------------------------------------------------------
 
 def q_discount_depth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = table(spark, sf_dir, "lineitem").select(
         F.expr("(CAST(round(l_quantity) AS BIGINT) - 1) div 10").alias("qty_band"),
         F.round(F.col("l_discount") * 10000).cast("bigint").alias("disc_bps"),
         (
@@ -1534,8 +1531,7 @@ SELECT qty_band, n_lines,
 FROM cells
 """
 
-QUERIES["discount_depth_curve"] = q_discount_depth_curve
-ORACLE_SQL["discount_depth_curve"] = SQL_DISCOUNT_DEPTH_CURVE
+register("discount_depth_curve", q_discount_depth_curve, SQL_DISCOUNT_DEPTH_CURVE)
 
 
 # ---------------------------------------------------------------------------
@@ -1546,7 +1542,7 @@ ORACLE_SQL["discount_depth_curve"] = SQL_DISCOUNT_DEPTH_CURVE
 # ---------------------------------------------------------------------------
 
 def q_length_quality_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents").select("n_chars", "text")
+    d = table(spark, sf_dir, "documents").select("n_chars", "text")
     scored = d.select(
         F.least(F.expr("n_chars div 100"), F.lit(9).cast("bigint")).alias("len_band"),
         tokens_col("text").alias("toks"),
@@ -1582,8 +1578,11 @@ SELECT len_band, LEAST(ttr_ppm // 100000, 9) AS ttr_band,
 FROM scored GROUP BY 1, 2
 """
 
-QUERIES["length_quality_histogram"] = q_length_quality_histogram
-ORACLE_SQL["length_quality_histogram"] = SQL_LENGTH_QUALITY_HISTOGRAM
+register(
+    "length_quality_histogram",
+    q_length_quality_histogram,
+    SQL_LENGTH_QUALITY_HISTOGRAM,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -1628,7 +1627,7 @@ def q_simhash_hamming_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakeforge.cache import persist_tracked
     from lakeforge.llm.dedup import simhash_fingerprints
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
     # Collapse to (fingerprint, multiplicity) BEFORE any pair machinery.
     grp = persist_tracked(
         simhash_fingerprints(docs, "text", "doc_id", bits=_SH_BITS)
@@ -1737,8 +1736,11 @@ FROM pairs GROUP BY hamming
 """
 
 
-QUERIES["simhash_hamming_histogram"] = q_simhash_hamming_histogram
-ORACLE_SQL["simhash_hamming_histogram"] = _sql_simhash_hamming_histogram()
+register(
+    "simhash_hamming_histogram",
+    q_simhash_hamming_histogram,
+    _sql_simhash_hamming_histogram(),
+)
 
 
 # ---------------------------------------------------------------------------
@@ -1754,7 +1756,7 @@ def q_ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakeforge.llm.clustering import kmeans_assignments
     from lakeforge.workload_llm import _KMEANS_ITERS, _KMEANS_K
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = table(spark, sf_dir, "embeddings")
     asg = kmeans_assignments(emb, k=_KMEANS_K, iters=_KMEANS_ITERS)
     cells = asg.groupBy("cluster").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_vectors")
@@ -1783,8 +1785,7 @@ FROM cells
 """
 
 
-QUERIES["ivf_cell_balance"] = q_ivf_cell_balance
-ORACLE_SQL["ivf_cell_balance"] = _sql_ivf_cell_balance()
+register("ivf_cell_balance", q_ivf_cell_balance, _sql_ivf_cell_balance())
 
 
 # ===========================================================================
@@ -1800,7 +1801,7 @@ ORACLE_SQL["ivf_cell_balance"] = _sql_ivf_cell_balance()
 # ---------------------------------------------------------------------------
 
 def q_cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.year("o_orderdate").cast("int").alias("o_year"),
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
@@ -1845,8 +1846,7 @@ SELECT cohort_year, CAST(age AS INTEGER) AS age, n_orders,
 FROM cells
 """
 
-QUERIES["cohort_ltv_curve"] = q_cohort_ltv_curve
-ORACLE_SQL["cohort_ltv_curve"] = SQL_COHORT_LTV_CURVE
+register("cohort_ltv_curve", q_cohort_ltv_curve, SQL_COHORT_LTV_CURVE)
 
 
 # ---------------------------------------------------------------------------
@@ -1884,7 +1884,7 @@ def q_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # runs it ONCE and derives every curve point by probe_rank filter +
     # top-k window (provably identical per point; see similarity.py).
     curve = ivf_topk_curve(
-        _t(spark, sf_dir, "embeddings"), "embedding", "vec_id",
+        table(spark, sf_dir, "embeddings"), "embedding", "vec_id",
         nprobes=_CURVE_NPROBES,
         n_cells=_IVF_CELLS, n_queries=_N_QUERIES, k=_TOPK,
     )
@@ -1939,8 +1939,7 @@ LEFT JOIN (SELECT query_id, neighbor_id
     )
 
 
-QUERIES["ivf_recall_curve"] = q_ivf_recall_curve
-ORACLE_SQL["ivf_recall_curve"] = _sql_ivf_recall_curve()
+register("ivf_recall_curve", q_ivf_recall_curve, _sql_ivf_recall_curve())
 
 
 # ---------------------------------------------------------------------------
@@ -1980,8 +1979,7 @@ FROM sizes GROUP BY sz
 """
 
 
-QUERIES["neardup_cluster_sizes"] = q_neardup_cluster_sizes
-ORACLE_SQL["neardup_cluster_sizes"] = _sql_neardup_cluster_sizes()
+register("neardup_cluster_sizes", q_neardup_cluster_sizes, _sql_neardup_cluster_sizes())
 
 
 # ---------------------------------------------------------------------------
@@ -1994,7 +1992,7 @@ ORACLE_SQL["neardup_cluster_sizes"] = _sql_neardup_cluster_sizes()
 def q_time_to_second_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakeforge.ops.percentile import bounded_domain_percentiles
 
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderkey", F.col("o_orderdate").cast("date").alias("od")
     )
     w = Window.partitionBy("o_custkey").orderBy("od", "o_orderkey")
@@ -2008,7 +2006,7 @@ def q_time_to_second_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     gaps = first.join(second, "o_custkey").select(
         "o_custkey", F.datediff("d2", "d1").cast("bigint").alias("gap_days")
     )
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    c = table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     seg = gaps.join(c, gaps.o_custkey == c.c_custkey).select(
         "c_mktsegment", "gap_days"
     )
@@ -2042,8 +2040,7 @@ def _sql_time_to_second_order() -> str:
     )
 
 
-QUERIES["time_to_second_order"] = q_time_to_second_order
-ORACLE_SQL["time_to_second_order"] = _sql_time_to_second_order()
+register("time_to_second_order", q_time_to_second_order, _sql_time_to_second_order())
 
 
 # ---------------------------------------------------------------------------
@@ -2082,8 +2079,11 @@ def _sql_event_value_percentiles() -> str:
     )
 
 
-QUERIES["event_value_percentiles"] = q_event_value_percentiles
-ORACLE_SQL["event_value_percentiles"] = _sql_event_value_percentiles()
+register(
+    "event_value_percentiles",
+    q_event_value_percentiles,
+    _sql_event_value_percentiles(),
+)
 
 
 # ===========================================================================
@@ -2109,8 +2109,8 @@ def q_lateral_topk_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
     nview, cview = f"__r9b_nation_{tag}", f"__r9b_customer_{tag}"
-    _t(spark, sf_dir, "nation").createOrReplaceTempView(nview)
-    _t(spark, sf_dir, "customer").createOrReplaceTempView(cview)
+    table(spark, sf_dir, "nation").createOrReplaceTempView(nview)
+    table(spark, sf_dir, "customer").createOrReplaceTempView(cview)
     try:
         return spark.sql(f"""
           SELECT n.n_name, t.c_name, t.acctbal_cents
@@ -2138,8 +2138,7 @@ FROM nation n, LATERAL (
 ) t
 """
 
-QUERIES["lateral_topk_customers"] = q_lateral_topk_customers
-ORACLE_SQL["lateral_topk_customers"] = SQL_LATERAL_TOPK_CUSTOMERS
+register("lateral_topk_customers", q_lateral_topk_customers, SQL_LATERAL_TOPK_CUSTOMERS)
 
 
 # ---------------------------------------------------------------------------
@@ -2150,17 +2149,17 @@ ORACLE_SQL["lateral_topk_customers"] = SQL_LATERAL_TOPK_CUSTOMERS
 # ---------------------------------------------------------------------------
 
 def q_region_nation_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         (
             F.round(F.col("l_extendedprice") * 100).cast("bigint")
             * (F.lit(100) - F.round(F.col("l_discount") * 100).cast("bigint"))
         ).cast("decimal(38,0)").alias("rev_e4"),
     )
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
+    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    n = table(spark, sf_dir, "nation")
+    r = table(spark, sf_dir, "region")
     cells = (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -2213,8 +2212,7 @@ SELECT r_name, n_name,
 FROM cells
 """
 
-QUERIES["region_nation_share"] = q_region_nation_share
-ORACLE_SQL["region_nation_share"] = SQL_REGION_NATION_SHARE
+register("region_nation_share", q_region_nation_share, SQL_REGION_NATION_SHARE)
 
 
 # ---------------------------------------------------------------------------
@@ -2303,8 +2301,11 @@ SELECT CAST(hour(view_ts) AS INTEGER) AS view_hour,
 FROM credited GROUP BY 1
 """
 
-QUERIES["events_position_attribution"] = q_events_position_attribution
-ORACLE_SQL["events_position_attribution"] = SQL_EVENTS_POSITION_ATTRIBUTION
+register(
+    "events_position_attribution",
+    q_events_position_attribution,
+    SQL_EVENTS_POSITION_ATTRIBUTION,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -2377,8 +2378,11 @@ from lakeforge.workload_llm import SQL_NGRAM_JACCARD_PAIRS as _SQL_NJP  # noqa: 
 
 SQL_NGRAM_JACCARD_PAIRS_300 = _SQL_NJP
 
-QUERIES["jaccard_threshold_sweep"] = q_jaccard_threshold_sweep
-ORACLE_SQL["jaccard_threshold_sweep"] = _sql_jaccard_threshold_sweep()
+register(
+    "jaccard_threshold_sweep",
+    q_jaccard_threshold_sweep,
+    _sql_jaccard_threshold_sweep(),
+)
 
 
 # ===========================================================================
@@ -2396,7 +2400,7 @@ ORACLE_SQL["jaccard_threshold_sweep"] = _sql_jaccard_threshold_sweep()
 # ---------------------------------------------------------------------------
 
 def q_order_total_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         (
             F.col("l_extendedprice").cast("decimal(18,2)")
@@ -2407,7 +2411,7 @@ def q_order_total_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_order = li.groupBy("l_orderkey").agg(
         F.sum("line_val").cast("decimal(38,6)").alias("lines_total")
     )
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.year("o_orderdate").cast("int").alias("o_year"),
         F.col("o_totalprice").cast("decimal(18,2)").cast("decimal(38,6)")
@@ -2471,8 +2475,11 @@ SELECT o_year,
 FROM j GROUP BY o_year
 """
 
-QUERIES["order_total_reconciliation"] = q_order_total_reconciliation
-ORACLE_SQL["order_total_reconciliation"] = SQL_ORDER_TOTAL_RECONCILIATION
+register(
+    "order_total_reconciliation",
+    q_order_total_reconciliation,
+    SQL_ORDER_TOTAL_RECONCILIATION,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -2494,7 +2501,7 @@ _DUP_WINDOW_DAYS = 7
 
 
 def _dup_orders_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderkey",
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
         F.col("o_orderdate").cast("date").alias("od"),
@@ -2550,8 +2557,7 @@ WHERE prev_od IS NOT NULL AND date_diff('day', prev_od, od) <= {_DUP_WINDOW_DAYS
 GROUP BY 1
 """
 
-QUERIES["duplicate_order_audit"] = q_duplicate_order_audit
-ORACLE_SQL["duplicate_order_audit"] = SQL_DUPLICATE_ORDER_AUDIT
+register("duplicate_order_audit", q_duplicate_order_audit, SQL_DUPLICATE_ORDER_AUDIT)
 
 
 # ---------------------------------------------------------------------------
@@ -2562,12 +2568,12 @@ ORACLE_SQL["duplicate_order_audit"] = SQL_DUPLICATE_ORDER_AUDIT
 # ---------------------------------------------------------------------------
 
 def q_basket_size_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey")
+    li = table(spark, sf_dir, "lineitem").select("l_orderkey")
     per_order = li.groupBy("l_orderkey").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_lines")
     )
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    c = table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     return (
         o.join(per_order, o.o_orderkey == per_order.l_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -2588,8 +2594,7 @@ JOIN customer c ON o.o_custkey = c.c_custkey
 GROUP BY c.c_mktsegment, p.n_lines
 """
 
-QUERIES["basket_size_by_segment"] = q_basket_size_by_segment
-ORACLE_SQL["basket_size_by_segment"] = SQL_BASKET_SIZE_BY_SEGMENT
+register("basket_size_by_segment", q_basket_size_by_segment, SQL_BASKET_SIZE_BY_SEGMENT)
 
 
 # ---------------------------------------------------------------------------
@@ -2601,12 +2606,12 @@ ORACLE_SQL["basket_size_by_segment"] = SQL_BASKET_SIZE_BY_SEGMENT
 # ---------------------------------------------------------------------------
 
 def q_seasonal_index_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.month("o_orderdate").cast("int").alias("mon"),
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
     )
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    c = table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     cells = (
         o.join(c, o.o_custkey == c.c_custkey)
         .groupBy("c_mktsegment", "mon")
@@ -2636,5 +2641,8 @@ SELECT c_mktsegment, mon,
 FROM cells
 """
 
-QUERIES["seasonal_index_by_segment"] = q_seasonal_index_by_segment
-ORACLE_SQL["seasonal_index_by_segment"] = SQL_SEASONAL_INDEX_BY_SEGMENT
+register(
+    "seasonal_index_by_segment",
+    q_seasonal_index_by_segment,
+    SQL_SEASONAL_INDEX_BY_SEGMENT,
+)

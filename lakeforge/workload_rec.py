@@ -37,13 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # Memoized analyzed base scan of the immutable testdata table (r13
-    # floor opt — see io.sources.base_parquet: plan reuse, not a cache).
-    from lakeforge.io.sources import base_parquet
-
-    return base_parquet(spark, f"{sf_dir}/{name}.parquet")
+from lakeforge.io.sources import table
+from lakeforge.registry import register
 
 
 def _with_recursion_limit(spark: SparkSession, limit: int, build) -> DataFrame:
@@ -87,10 +82,6 @@ def _with_recursion_limit(spark: SparkSession, limit: int, build) -> DataFrame:
             spark.conf.set(key, prior)
 
 
-QUERIES: dict = {}
-ORACLE_SQL: dict[str, str] = {}
-
-
 # ---------------------------------------------------------------------------
 # Native recursive CTE #1: calendar month spine + gap-fill.
 # ---------------------------------------------------------------------------
@@ -114,7 +105,7 @@ def q_recursive_month_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     The DuckDB oracle keeps the pure-SQL bounds CTE (it materializes CTEs),
     so the two formulations also cross-check each other.
     """
-    orders = _t(spark, sf_dir, "orders")
+    orders = table(spark, sf_dir, "orders")
     orders.createOrReplaceTempView("ord_spine")
     lo, hi = orders.agg(
         F.date_trunc("month", F.min("o_orderdate")).cast("date"),
@@ -164,8 +155,7 @@ SELECT s.month_start,
 FROM spine s LEFT JOIN rev r ON r.month_start = s.month_start
 """
 
-QUERIES["recursive_month_spine"] = q_recursive_month_spine
-ORACLE_SQL["recursive_month_spine"] = SQL_RECURSIVE_MONTH_SPINE
+register("recursive_month_spine", q_recursive_month_spine, SQL_RECURSIVE_MONTH_SPINE)
 
 
 # ---------------------------------------------------------------------------
@@ -187,7 +177,7 @@ def q_recursive_balance_depletion(spark: SparkSession, sf_dir: str) -> DataFrame
     balances, so termination is guaranteed; depth is O(log balance)
     (~30 levels for 6-digit balances), far under the raised level limit.
     """
-    _t(spark, sf_dir, "supplier").createOrReplaceTempView("supp_dep")
+    table(spark, sf_dir, "supplier").createOrReplaceTempView("supp_dep")
     return _with_recursion_limit(spark, 1200, lambda: spark.sql("""
 WITH RECURSIVE dep(s_suppkey, balance_cents, r) AS (
   SELECT s_suppkey, CAST(ROUND(s_acctbal * 100) AS BIGINT), 0
@@ -225,8 +215,11 @@ SELECT CAST(rounds_to_deplete AS INT) AS rounds_to_deplete,
 FROM fin GROUP BY 1
 """
 
-QUERIES["recursive_balance_depletion"] = q_recursive_balance_depletion
-ORACLE_SQL["recursive_balance_depletion"] = SQL_RECURSIVE_BALANCE_DEPLETION
+register(
+    "recursive_balance_depletion",
+    q_recursive_balance_depletion,
+    SQL_RECURSIVE_BALANCE_DEPLETION,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -247,7 +240,7 @@ def q_copurchase_item_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     to a shuffle join at catalog scale.  Top-30 by (sim, co, a, b) is a
     total order, so the LIMIT is deterministic on both engines.
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     # r12 note: persisting items was tried and REVERTED (ABBA A/B ratio
     # 1.17x WORSE) — AQE's runtime exchange reuse already dedupes the
     # symmetric distinct subtree; the persist only adds a materialization.
@@ -301,8 +294,7 @@ ORDER BY cos2_bps DESC, co_cnt DESC, part_a ASC, part_b ASC
 LIMIT 30
 """
 
-QUERIES["copurchase_item_sim"] = q_copurchase_item_sim
-ORACLE_SQL["copurchase_item_sim"] = SQL_COPURCHASE_ITEM_SIM
+register("copurchase_item_sim", q_copurchase_item_sim, SQL_COPURCHASE_ITEM_SIM)
 
 
 # ---------------------------------------------------------------------------
@@ -328,7 +320,7 @@ def q_trade_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # no .distinct() here — hits_ppm dedups the edge list itself (a second
     # distinct would just be a second full shuffle of the same pairs)
-    edges = _t(spark, sf_dir, "lineitem").select(
+    edges = table(spark, sf_dir, "lineitem").select(
         F.col("l_partkey").alias("hub"), F.col("l_suppkey").alias("auth")
     )
     _hubs, auths = hits_ppm(edges, "hub", "auth", rounds=2, broadcast_scores=True)
@@ -357,8 +349,7 @@ SELECT CAST(s AS BIGINT) AS s_suppkey, CAST(auth_ppm AS BIGINT) AS auth_ppm
 FROM a2n ORDER BY auth_ppm DESC, s_suppkey ASC LIMIT 15
 """
 
-QUERIES["trade_hits_scores"] = q_trade_hits_scores
-ORACLE_SQL["trade_hits_scores"] = SQL_TRADE_HITS_SCORES
+register("trade_hits_scores", q_trade_hits_scores, SQL_TRADE_HITS_SCORES)
 
 
 # ---------------------------------------------------------------------------
@@ -385,7 +376,7 @@ def q_snapshot_merkle_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from lakeforge.ops.merge import merkle_bucket_diff
 
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
 
     def canon(df: DataFrame) -> DataFrame:
         return df.select(
@@ -473,5 +464,4 @@ FROM j GROUP BY status
 """
 
 
-QUERIES["snapshot_merkle_diff"] = q_snapshot_merkle_diff
-ORACLE_SQL["snapshot_merkle_diff"] = _sql_merkle_diff()
+register("snapshot_merkle_diff", q_snapshot_merkle_diff, _sql_merkle_diff())

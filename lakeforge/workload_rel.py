@@ -13,18 +13,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from lakeforge.io.sources import read_events
+from lakeforge.io.sources import read_events, table
 from lakeforge.ops.joins import asof_join, salted_join
+from lakeforge.registry import register
 
 DEC = "decimal(18,2)"
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # Memoized analyzed base scan of the immutable testdata table (r13
-    # floor opt — see io.sources.base_parquet: plan reuse, not a cache).
-    from lakeforge.io.sources import base_parquet
-
-    return base_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def _revenue() -> F.Column:
@@ -47,8 +40,8 @@ _REV_SQL = (
 # ---------------------------------------------------------------------------
 
 def q_semi_high_value_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    big = _t(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 400000.0)
+    cust = table(spark, sf_dir, "customer")
+    big = table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 400000.0)
     return (
         cust.join(big, cust.c_custkey == big.o_custkey, "left_semi")
         .select("c_custkey", "c_name", "c_mktsegment")
@@ -62,9 +55,12 @@ WHERE EXISTS (SELECT 1 FROM orders o
 """
 
 
+register("semi_high_value_customers", q_semi_high_value_customers, SQL_SEMI_HIGH_VALUE)
+
+
 def q_anti_customers_no_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    cust = table(spark, sf_dir, "customer")
+    orders = table(spark, sf_dir, "orders")
     return (
         cust.join(orders, cust.c_custkey == orders.o_custkey, "left_anti")
         .groupBy("c_mktsegment")
@@ -79,6 +75,9 @@ GROUP BY c_mktsegment
 """
 
 
+register("anti_customers_no_orders", q_anti_customers_no_orders, SQL_ANTI_NO_ORDERS)
+
+
 # ---------------------------------------------------------------------------
 # Multi-dimensional aggregation: ROLLUP / CUBE with grouping_id.  Spark
 # plans these as a single Expand + hash-aggregate — one shuffle regardless
@@ -91,7 +90,7 @@ def q_rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of tripling every input row — at 100 TB that removes 2/3 of the
     # map-side aggregation work.  cube_order_stats keeps the direct
     # single-phase shape for comparison.
-    li = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     pre = li.groupBy("l_returnflag", "l_linestatus").agg(
         F.sum(F.col("l_quantity").cast(DEC)).alias("_qty"),
         F.sum(_revenue()).alias("_rev"),
@@ -118,8 +117,11 @@ FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
 """
 
 
+register("rollup_revenue", q_rollup_revenue, SQL_ROLLUP_REVENUE)
+
+
 def q_cube_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     return (
         o.cube("o_orderstatus", "o_orderpriority")
         .agg(
@@ -139,12 +141,15 @@ FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
 """
 
 
+register("cube_order_stats", q_cube_order_stats, SQL_CUBE_ORDER_STATS)
+
+
 # ---------------------------------------------------------------------------
 # Distinct aggregates (partial-agg + distinct-expand in one pass).
 # ---------------------------------------------------------------------------
 
 def q_distinct_agg_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     return o.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_orders"),
         F.countDistinct("o_custkey").cast("bigint").alias("n_customers"),
@@ -163,13 +168,16 @@ FROM orders GROUP BY o_orderpriority
 """
 
 
+register("distinct_agg_priority", q_distinct_agg_priority, SQL_DISTINCT_AGG_PRIORITY)
+
+
 # ---------------------------------------------------------------------------
 # Ranking windows: rank / dense_rank / ntile / row_number in one window
 # (one shuffle+sort by o_custkey).
 # ---------------------------------------------------------------------------
 
 def q_rank_orders_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey").asc()
     )
@@ -202,12 +210,15 @@ SELECT * FROM r WHERE rn <= 3
 """
 
 
+register("rank_orders_top3", q_rank_orders_top3, SQL_RANK_ORDERS_TOP3)
+
+
 # ---------------------------------------------------------------------------
 # Running-frame window: cumulative + sliding sums with explicit rowsBetween.
 # ---------------------------------------------------------------------------
 
 def q_running_order_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     order = [F.col("order_date").asc(), F.col("o_orderkey").asc()]
     cum = (
         Window.partitionBy("o_custkey")
@@ -240,6 +251,9 @@ FROM orders
 """
 
 
+register("running_order_totals", q_running_order_totals, SQL_RUNNING_ORDER_TOTALS)
+
+
 # ---------------------------------------------------------------------------
 # Set operations: INTERSECT / EXCEPT (both distinct-semantics).
 # ---------------------------------------------------------------------------
@@ -249,7 +263,7 @@ def _custkeys_in_year(df: DataFrame, year: int) -> DataFrame:
 
 
 def q_active_both_years(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     return _custkeys_in_year(o, 1996).intersect(_custkeys_in_year(o, 1997))
 
 
@@ -260,8 +274,11 @@ SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1997
 """
 
 
+register("active_both_years", q_active_both_years, SQL_ACTIVE_BOTH_YEARS)
+
+
 def q_churned_custkeys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     # subtract == EXCEPT DISTINCT (exceptAll would keep surplus multiplicity).
     return _custkeys_in_year(o, 1996).subtract(_custkeys_in_year(o, 1997))
 
@@ -273,6 +290,9 @@ SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1997
 """
 
 
+register("churned_custkeys", q_churned_custkeys, SQL_CHURNED_CUSTKEYS)
+
+
 # ---------------------------------------------------------------------------
 # Pivot (explicit value list -> no extra distinct job at plan time).
 # ---------------------------------------------------------------------------
@@ -281,7 +301,7 @@ _STATUSES = ["F", "O", "P"]
 
 
 def q_pivot_priority_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     piv = (
         o.groupBy("o_orderpriority")
         .pivot("o_orderstatus", _STATUSES)
@@ -300,6 +320,9 @@ SELECT o_orderpriority,
        CAST(COUNT(*) FILTER (o_orderstatus = 'P') AS BIGINT) AS "P"
 FROM orders GROUP BY o_orderpriority
 """
+
+
+register("pivot_priority_status", q_pivot_priority_status, SQL_PIVOT_PRIORITY_STATUS)
 
 
 # ---------------------------------------------------------------------------
@@ -356,14 +379,17 @@ FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.ts >= v.ts
 """
 
 
+register("asof_purchase_view", q_asof_purchase_view, SQL_ASOF_PURCHASE_VIEW)
+
+
 # ---------------------------------------------------------------------------
 # Salted skew join: semantically a plain inner join (the oracle IS the plain
 # join) — the salt only changes the physical shuffle distribution.
 # ---------------------------------------------------------------------------
 
 def q_salted_skew_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").select("l_suppkey", _revenue().alias("rev"))
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    li = table(spark, sf_dir, "lineitem").select("l_suppkey", _revenue().alias("rev"))
+    supp = table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     joined = salted_join(
         li.withColumnRenamed("l_suppkey", "s_suppkey"), supp, on=["s_suppkey"], salt=8
     )
@@ -377,6 +403,9 @@ GROUP BY s_name
 """
 
 
+register("salted_skew_revenue", q_salted_skew_revenue, SQL_SALTED_SKEW_REVENUE)
+
+
 # ---------------------------------------------------------------------------
 # TPC-H-shaped multi-join analytics (Q3 / Q5 / Q10 adapted to the driver's
 # schema).  Plan shape at scale: dims (customer/supplier/nation/region)
@@ -387,13 +416,13 @@ GROUP BY s_name
 def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: unshipped-revenue per order for one segment."""
     cutoff = F.lit("1998-07-01").cast("date")
-    cust = _t(spark, sf_dir, "customer").filter(
+    cust = table(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
     ).select("c_custkey")
-    orders = _t(spark, sf_dir, "orders").filter(
+    orders = table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate").cast("date") < cutoff
     ).select("o_orderkey", "o_custkey", F.col("o_orderdate").cast("date").alias("order_date"))
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate").cast("date") > cutoff
     ).select("l_orderkey", _revenue().alias("rev"))
     return (
@@ -419,17 +448,20 @@ ORDER BY revenue DESC, o_orderkey ASC LIMIT 10
 """
 
 
+register("shipping_priority", q_shipping_priority, SQL_SHIPPING_PRIORITY)
+
+
 def q_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: revenue by nation where customer and supplier share
     the nation, one region, one year."""
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    nation = _t(spark, sf_dir, "nation")
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    orders = _t(spark, sf_dir, "orders").filter(
+    region = table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    nation = table(spark, sf_dir, "nation")
+    cust = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    supp = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    orders = table(spark, sf_dir, "orders").filter(
         F.year("o_orderdate") == 1997
     ).select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", _revenue().alias("rev")
     )
     nations_in_region = nation.join(
@@ -458,17 +490,20 @@ GROUP BY n_name ORDER BY revenue DESC, n_name ASC
 """
 
 
+register("region_revenue", q_region_revenue, SQL_REGION_REVENUE)
+
+
 def q_returned_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 shape: top-20 customers by returned-item revenue in a
     quarter."""
     lo = F.lit("1997-01-01").cast("date")
     hi = F.lit("1997-04-01").cast("date")
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_mktsegment")
-    orders = _t(spark, sf_dir, "orders").filter(
+    cust = table(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_mktsegment")
+    orders = table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate").cast("date") >= lo)
         & (F.col("o_orderdate").cast("date") < hi)
     ).select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = table(spark, sf_dir, "lineitem").filter(
         F.col("l_returnflag") == "R"
     ).select("l_orderkey", _revenue().alias("rev"))
     return (
@@ -494,6 +529,9 @@ ORDER BY revenue DESC, c_custkey ASC LIMIT 20
 """
 
 
+register("returned_top_customers", q_returned_top_customers, SQL_RETURNED_TOP_CUSTOMERS)
+
+
 # ---------------------------------------------------------------------------
 # Approximate sketches (no exact oracle possible — different HLL/KLL
 # implementations give different estimates; the driver records a rows-only
@@ -515,7 +553,7 @@ def q_sketch_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     The rank check is scale-stable: the bounds hold at any SF because they
     are guarantees of the sketch, not properties of this dataset.
     """
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_orderpriority", "o_custkey", "o_totalprice"
     )
     agg = o.groupBy("o_orderpriority").agg(
@@ -570,43 +608,7 @@ FROM orders GROUP BY o_orderpriority
 """
 
 
-QUERIES = {
-    "semi_high_value_customers": q_semi_high_value_customers,
-    "anti_customers_no_orders": q_anti_customers_no_orders,
-    "rollup_revenue": q_rollup_revenue,
-    "cube_order_stats": q_cube_order_stats,
-    "distinct_agg_priority": q_distinct_agg_priority,
-    "rank_orders_top3": q_rank_orders_top3,
-    "running_order_totals": q_running_order_totals,
-    "active_both_years": q_active_both_years,
-    "churned_custkeys": q_churned_custkeys,
-    "pivot_priority_status": q_pivot_priority_status,
-    "asof_purchase_view": q_asof_purchase_view,
-    "salted_skew_revenue": q_salted_skew_revenue,
-    "shipping_priority": q_shipping_priority,
-    "region_revenue": q_region_revenue,
-    "returned_top_customers": q_returned_top_customers,
-    "sketch_profile": q_sketch_profile,
-}
-
-ORACLE_SQL = {
-    "semi_high_value_customers": SQL_SEMI_HIGH_VALUE,
-    "anti_customers_no_orders": SQL_ANTI_NO_ORDERS,
-    "rollup_revenue": SQL_ROLLUP_REVENUE,
-    "cube_order_stats": SQL_CUBE_ORDER_STATS,
-    "distinct_agg_priority": SQL_DISTINCT_AGG_PRIORITY,
-    "rank_orders_top3": SQL_RANK_ORDERS_TOP3,
-    "running_order_totals": SQL_RUNNING_ORDER_TOTALS,
-    "active_both_years": SQL_ACTIVE_BOTH_YEARS,
-    "churned_custkeys": SQL_CHURNED_CUSTKEYS,
-    "pivot_priority_status": SQL_PIVOT_PRIORITY_STATUS,
-    "asof_purchase_view": SQL_ASOF_PURCHASE_VIEW,
-    "salted_skew_revenue": SQL_SALTED_SKEW_REVENUE,
-    "shipping_priority": SQL_SHIPPING_PRIORITY,
-    "region_revenue": SQL_REGION_REVENUE,
-    "returned_top_customers": SQL_RETURNED_TOP_CUSTOMERS,
-    "sketch_profile": SQL_SKETCH_PROFILE,
-}
+register("sketch_profile", q_sketch_profile, SQL_SKETCH_PROFILE)
 
 
 # ---------------------------------------------------------------------------
@@ -615,7 +617,7 @@ ORACLE_SQL = {
 # ---------------------------------------------------------------------------
 
 def q_grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("li_gs")
+    table(spark, sf_dir, "lineitem").createOrReplaceTempView("li_gs")
     # Same two-phase rewrite as q_rollup_revenue: Expand runs over the
     # pre-aggregate, not over every lineitem row.
     return spark.sql(
@@ -646,6 +648,9 @@ GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
 """
 
 
+register("grouping_sets_revenue", q_grouping_sets_revenue, SQL_GROUPING_SETS_REVENUE)
+
+
 # ---------------------------------------------------------------------------
 # String scalar-function profile (split/extract/pad/replace/concat — the
 # string surface the reference never needed but an engine must have; all
@@ -653,7 +658,7 @@ GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
 # ---------------------------------------------------------------------------
 
 def q_string_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part")
+    p = table(spark, sf_dir, "part")
     words = F.split(F.col("p_name"), " ")
     return p.select(
         "p_partkey",
@@ -682,12 +687,15 @@ FROM part
 """
 
 
+register("string_profile", q_string_profile, SQL_STRING_PROFILE)
+
+
 # ---------------------------------------------------------------------------
 # first_value / last_value / nth_value over an unbounded frame.
 # ---------------------------------------------------------------------------
 
 def q_first_last_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderkey", F.col("o_orderdate").cast("date").alias("d")
     )
     w = (
@@ -715,13 +723,16 @@ WINDOW w AS (PARTITION BY o_custkey
 """
 
 
+register("first_last_orders", q_first_last_orders, SQL_FIRST_LAST_ORDERS)
+
+
 # ---------------------------------------------------------------------------
 # Exact interpolated percentiles (percentile_cont semantics — distinct from
 # the approximate sketch in q_sketch_profile).
 # ---------------------------------------------------------------------------
 
 def q_exact_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     return o.groupBy("o_orderpriority").agg(
         F.round(F.percentile("o_totalprice", F.lit(0.25)), 4).alias("p25"),
         F.round(F.percentile("o_totalprice", F.lit(0.5)), 4).alias("p50"),
@@ -738,14 +749,7 @@ FROM orders GROUP BY o_orderpriority
 """
 
 
-for _n, _f, _s in [
-    ("grouping_sets_revenue", q_grouping_sets_revenue, SQL_GROUPING_SETS_REVENUE),
-    ("string_profile", q_string_profile, SQL_STRING_PROFILE),
-    ("first_last_orders", q_first_last_orders, SQL_FIRST_LAST_ORDERS),
-    ("exact_percentiles", q_exact_percentiles, SQL_EXACT_PERCENTILES),
-]:
-    QUERIES[_n] = _f
-    ORACLE_SQL[_n] = _s
+register("exact_percentiles", q_exact_percentiles, SQL_EXACT_PERCENTILES)
 
 
 # ---------------------------------------------------------------------------
@@ -755,7 +759,7 @@ for _n, _f, _s in [
 # ---------------------------------------------------------------------------
 
 def q_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     return li.filter(
         (F.col("l_shipdate").cast("date") >= F.lit("1997-01-01").cast("date"))
         & (F.col("l_shipdate").cast("date") < F.lit("1998-01-01").cast("date"))
@@ -787,8 +791,8 @@ WHERE CAST(l_shipdate AS DATE) >= DATE '1997-01-01'
 # ---------------------------------------------------------------------------
 
 def q_customer_order_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer").select("c_custkey")
-    orders = _t(spark, sf_dir, "orders").select("o_custkey", "o_orderkey")
+    cust = table(spark, sf_dir, "customer").select("c_custkey")
+    orders = table(spark, sf_dir, "orders").select("o_custkey", "o_orderkey")
     per_cust = (
         cust.join(orders, cust.c_custkey == orders.o_custkey, "left")
         .groupBy("c_custkey")
@@ -811,10 +815,12 @@ GROUP BY c_count
 """
 
 
-QUERIES["revenue_forecast"] = q_revenue_forecast
-ORACLE_SQL["revenue_forecast"] = SQL_REVENUE_FORECAST
-QUERIES["customer_order_histogram"] = q_customer_order_histogram
-ORACLE_SQL["customer_order_histogram"] = SQL_CUSTOMER_ORDER_HISTOGRAM
+register("revenue_forecast", q_revenue_forecast, SQL_REVENUE_FORECAST)
+register(
+    "customer_order_histogram",
+    q_customer_order_histogram,
+    SQL_CUSTOMER_ORDER_HISTOGRAM,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -823,7 +829,7 @@ ORACLE_SQL["customer_order_histogram"] = SQL_CUSTOMER_ORDER_HISTOGRAM
 # ---------------------------------------------------------------------------
 
 def q_orders_above_cust_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("ord_corr")
+    table(spark, sf_dir, "orders").createOrReplaceTempView("ord_corr")
     return spark.sql(
         """
         SELECT o_orderkey, o_custkey,
@@ -854,7 +860,7 @@ WHERE o_totalprice > 2 * (
 # ---------------------------------------------------------------------------
 
 def q_rolling_7day_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_custkey",
         "o_orderkey",
         F.datediff(F.col("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date"))
@@ -893,10 +899,8 @@ WINDOW w AS (PARTITION BY o_custkey ORDER BY epoch_day
 """
 
 
-QUERIES["orders_above_cust_avg"] = q_orders_above_cust_avg
-ORACLE_SQL["orders_above_cust_avg"] = SQL_ORDERS_ABOVE_CUST_AVG
-QUERIES["rolling_7day_spend"] = q_rolling_7day_spend
-ORACLE_SQL["rolling_7day_spend"] = SQL_ROLLING_7DAY_SPEND
+register("orders_above_cust_avg", q_orders_above_cust_avg, SQL_ORDERS_ABOVE_CUST_AVG)
+register("rolling_7day_spend", q_rolling_7day_spend, SQL_ROLLING_7DAY_SPEND)
 
 
 # ---------------------------------------------------------------------------
@@ -909,7 +913,7 @@ def q_resample_daily_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakeforge.ops.timeseries import resample_daily_ffill
 
     obs = (
-        _t(spark, sf_dir, "orders")
+        table(spark, sf_dir, "orders")
         .filter(F.col("o_custkey") < 50)
         .groupBy("o_custkey", F.col("o_orderdate").cast("date").alias("day"))
         .agg(F.sum(F.col("o_totalprice").cast(DEC)).alias("day_spend"))
@@ -940,8 +944,7 @@ SELECT o_custkey, day,
 FROM j
 """
 
-QUERIES["resample_daily_spend"] = q_resample_daily_spend
-ORACLE_SQL["resample_daily_spend"] = SQL_RESAMPLE_DAILY_SPEND
+register("resample_daily_spend", q_resample_daily_spend, SQL_RESAMPLE_DAILY_SPEND)
 
 
 # ---------------------------------------------------------------------------
@@ -950,7 +953,7 @@ ORACLE_SQL["resample_daily_spend"] = SQL_RESAMPLE_DAILY_SPEND
 # ---------------------------------------------------------------------------
 
 def q_percentile_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_orderpriority").orderBy(
         F.col("o_totalprice").asc(), F.col("o_orderkey").asc()
     )
@@ -984,7 +987,7 @@ def q_geo_mean_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole-stage codegen with map-side partial aggregation — no Python in
     the hot path (VERDICT r1 item 8).  round(4) absorbs the sub-1e-9
     float-summation-order jitter of avg() across partitionings."""
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     return o.groupBy("o_orderpriority").agg(
         F.round(F.exp(F.avg(F.log("o_totalprice"))), 4).alias("geo_mean_price")
     )
@@ -1006,7 +1009,7 @@ def q_geo_mean_price_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stringifies type hints, which breaks pandas_udf signature inference.
     geo_mean = F.pandas_udf(_geo, "double", PandasUDFType.GROUPED_AGG)
 
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     return o.groupBy("o_orderpriority").agg(
         F.round(geo_mean("o_totalprice"), 4).alias("geo_mean_price")
     )
@@ -1018,12 +1021,9 @@ FROM orders GROUP BY o_orderpriority
 """
 
 
-QUERIES["percentile_ranks"] = q_percentile_ranks
-ORACLE_SQL["percentile_ranks"] = SQL_PERCENTILE_RANKS
-QUERIES["geo_mean_price"] = q_geo_mean_price
-ORACLE_SQL["geo_mean_price"] = SQL_GEO_MEAN_PRICE
-QUERIES["geo_mean_price_udaf"] = q_geo_mean_price_udaf
-ORACLE_SQL["geo_mean_price_udaf"] = SQL_GEO_MEAN_PRICE
+register("percentile_ranks", q_percentile_ranks, SQL_PERCENTILE_RANKS)
+register("geo_mean_price", q_geo_mean_price, SQL_GEO_MEAN_PRICE)
+register("geo_mean_price_udaf", q_geo_mean_price_udaf, SQL_GEO_MEAN_PRICE)
 
 
 # ---------------------------------------------------------------------------
@@ -1038,7 +1038,7 @@ _Z_BITS = 10
 def q_zorder_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakeforge.ops.layout import zorder_key
 
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_orderkey",
         (F.col("o_custkey") % 1024).alias("xq"),
         (
@@ -1070,8 +1070,7 @@ SELECT o_orderkey, xq, yq, CAST({zexpr} AS BIGINT) AS zval FROM o
 """
 
 
-QUERIES["zorder_keys"] = q_zorder_keys
-ORACLE_SQL["zorder_keys"] = _sql_zorder_keys()
+register("zorder_keys", q_zorder_keys, _sql_zorder_keys())
 
 
 # ---------------------------------------------------------------------------
@@ -1080,7 +1079,7 @@ ORACLE_SQL["zorder_keys"] = _sql_zorder_keys()
 # ---------------------------------------------------------------------------
 
 def q_stats_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_orderpriority",
         "o_totalprice",
         F.datediff(F.col("o_orderdate").cast("date"), F.lit("1995-01-01").cast("date"))
@@ -1110,6 +1109,9 @@ FROM o GROUP BY o_orderpriority
 """
 
 
+register("stats_profile", q_stats_profile, SQL_STATS_PROFILE)
+
+
 # ---------------------------------------------------------------------------
 # Deterministic array collection: sort_array(collect_list) per group,
 # serialized to a comma-joined string so the result is hashable by any
@@ -1119,7 +1121,7 @@ FROM o GROUP BY o_orderpriority
 # ---------------------------------------------------------------------------
 
 def q_order_ids_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_custkey") < 100)
+    o = table(spark, sf_dir, "orders").filter(F.col("o_custkey") < 100)
     return o.groupBy("o_custkey").agg(
         F.array_join(
             F.sort_array(F.collect_list(F.col("o_orderkey").cast("string"))), ","
@@ -1136,6 +1138,9 @@ FROM orders WHERE o_custkey < 100 GROUP BY o_custkey
 """
 
 
+register("order_ids_per_customer", q_order_ids_per_customer, SQL_ORDER_IDS_PER_CUSTOMER)
+
+
 # ---------------------------------------------------------------------------
 # Equi-width histogram via width_bucket (dataviz/profiling prep).
 # ---------------------------------------------------------------------------
@@ -1143,7 +1148,7 @@ FROM orders WHERE o_custkey < 100 GROUP BY o_custkey
 def q_price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # width_bucket semantics spelled as explicit floor arithmetic so the
     # oracle (DuckDB has no width_bucket) uses bit-identical math.
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     bucket = (
         F.when(F.col("o_totalprice") < 0.0, F.lit(0))
         .when(F.col("o_totalprice") >= 600000.0, F.lit(21))
@@ -1165,13 +1170,7 @@ FROM orders GROUP BY 1
 """
 
 
-for _n2, _f2, _s2 in [
-    ("stats_profile", q_stats_profile, SQL_STATS_PROFILE),
-    ("order_ids_per_customer", q_order_ids_per_customer, SQL_ORDER_IDS_PER_CUSTOMER),
-    ("price_histogram", q_price_histogram, SQL_PRICE_HISTOGRAM),
-]:
-    QUERIES[_n2] = _f2
-    ORACLE_SQL[_n2] = _s2
+register("price_histogram", q_price_histogram, SQL_PRICE_HISTOGRAM)
 
 
 # ---------------------------------------------------------------------------
@@ -1182,11 +1181,11 @@ for _n2, _f2, _s2 in [
 # ---------------------------------------------------------------------------
 
 def q_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate").cast("date") >= F.lit("1997-01-01").cast("date"))
         & (F.col("l_shipdate").cast("date") < F.lit("1998-01-01").cast("date"))
     )
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_type")
+    part = table(spark, sf_dir, "part").select("p_partkey", "p_type")
     joined = li.join(part, li.l_partkey == part.p_partkey)
     promo = F.sum(
         F.when(F.col("p_type") == "PROMO", _revenue()).otherwise(
@@ -1232,6 +1231,9 @@ FROM j GROUP BY ship_month
 """
 
 
+register("promo_revenue", q_promo_revenue, SQL_PROMO_REVENUE)
+
+
 # ---------------------------------------------------------------------------
 # Group-HAVING then join back (TPC-H Q18 shape): orders whose total ordered
 # quantity clears a threshold, re-joined to their order/customer detail.
@@ -1241,19 +1243,19 @@ FROM j GROUP BY ship_month
 # ---------------------------------------------------------------------------
 
 def q_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     big = (
         li.groupBy("l_orderkey")
         .agg(F.sum(F.col("l_quantity").cast(DEC)).alias("tot_qty"))
         .filter(F.col("tot_qty") > 300)
     )
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_custkey",
         F.col("o_orderdate").cast("date").alias("order_date"),
         F.col("o_totalprice").cast(DEC).alias("total_price"),
     )
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
+    cust = table(spark, sf_dir, "customer").select("c_custkey", "c_name")
     return (
         orders.join(big, orders.o_orderkey == big.l_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
@@ -1281,6 +1283,9 @@ ORDER BY total_price DESC, o_orderkey ASC LIMIT 50
 """
 
 
+register("large_orders", q_large_orders, SQL_LARGE_ORDERS)
+
+
 # ---------------------------------------------------------------------------
 # Global-scalar-aggregate comparison + anti join (TPC-H Q22 shape):
 # above-average-balance customers with no recent orders.  The scalar
@@ -1291,14 +1296,14 @@ ORDER BY total_price DESC, o_orderkey ASC LIMIT 50
 # ---------------------------------------------------------------------------
 
 def q_rich_inactive_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
+    cust = table(spark, sf_dir, "customer")
     pos = cust.filter(F.col("c_acctbal") > 0.0)
     scalar = pos.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_pos"),
         F.sum(F.col("c_acctbal").cast(DEC)).alias("total_bal"),
     )
     orders = (
-        _t(spark, sf_dir, "orders")
+        table(spark, sf_dir, "orders")
         .filter(
             F.col("o_orderdate").cast("date") >= F.lit("1999-01-01").cast("date")
         )
@@ -1334,13 +1339,7 @@ GROUP BY c_mktsegment
 """
 
 
-for _n3, _f3, _s3 in [
-    ("promo_revenue", q_promo_revenue, SQL_PROMO_REVENUE),
-    ("large_orders", q_large_orders, SQL_LARGE_ORDERS),
-    ("rich_inactive_customers", q_rich_inactive_customers, SQL_RICH_INACTIVE),
-]:
-    QUERIES[_n3] = _f3
-    ORACLE_SQL[_n3] = _s3
+register("rich_inactive_customers", q_rich_inactive_customers, SQL_RICH_INACTIVE)
 
 
 # ---------------------------------------------------------------------------
@@ -1355,14 +1354,14 @@ for _n3, _f3, _s3 in [
 def q_nation_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     na, nb = "NATION_1", "NATION_2"
     nations = (
-        _t(spark, sf_dir, "nation")
+        table(spark, sf_dir, "nation")
         .filter(F.col("n_name").isin(na, nb))
         .select("n_nationkey", "n_name")
     )
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").select(
+    cust = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    supp = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", F.year("l_shipdate").cast("int").alias("ship_year"),
         _revenue().alias("rev"),
     )
@@ -1406,8 +1405,7 @@ WHERE (n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
 GROUP BY 1, 2, 3
 """
 
-QUERIES["nation_trade_volume"] = q_nation_trade_volume
-ORACLE_SQL["nation_trade_volume"] = SQL_NATION_TRADE_VOLUME
+register("nation_trade_volume", q_nation_trade_volume, SQL_NATION_TRADE_VOLUME)
 
 
 # ---------------------------------------------------------------------------
@@ -1424,10 +1422,10 @@ ORACLE_SQL["nation_trade_volume"] = SQL_NATION_TRADE_VOLUME
 # ---------------------------------------------------------------------------
 
 def q_extreme_order_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderkey", "o_totalprice"
     )
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    cust = table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
     up = F.struct(cents.alias("p"), F.col("o_orderkey").alias("k"))
     down = F.struct(cents.alias("p"), (-F.col("o_orderkey")).alias("k"))
@@ -1453,8 +1451,11 @@ FROM orders JOIN customer ON o_custkey = c_custkey
 GROUP BY c_mktsegment
 """
 
-QUERIES["extreme_order_by_segment"] = q_extreme_order_by_segment
-ORACLE_SQL["extreme_order_by_segment"] = SQL_EXTREME_ORDER_BY_SEGMENT
+register(
+    "extreme_order_by_segment",
+    q_extreme_order_by_segment,
+    SQL_EXTREME_ORDER_BY_SEGMENT,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -1465,7 +1466,7 @@ ORACLE_SQL["extreme_order_by_segment"] = SQL_EXTREME_ORDER_BY_SEGMENT
 # ---------------------------------------------------------------------------
 
 def q_mode_status_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     counts = li.groupBy("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).alias("cnt")
     )
@@ -1487,8 +1488,7 @@ SELECT l_returnflag,
 FROM c GROUP BY l_returnflag
 """
 
-QUERIES["mode_status_by_flag"] = q_mode_status_by_flag
-ORACLE_SQL["mode_status_by_flag"] = SQL_MODE_STATUS_BY_FLAG
+register("mode_status_by_flag", q_mode_status_by_flag, SQL_MODE_STATUS_BY_FLAG)
 
 
 # ---------------------------------------------------------------------------
@@ -1502,7 +1502,7 @@ ORACLE_SQL["mode_status_by_flag"] = SQL_MODE_STATUS_BY_FLAG
 def q_key_skew_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakeforge.ops.quality import key_skew_profile
 
-    return key_skew_profile(_t(spark, sf_dir, "orders"), ["o_custkey"], k=20)
+    return key_skew_profile(table(spark, sf_dir, "orders"), ["o_custkey"], k=20)
 
 
 SQL_KEY_SKEW_ORDERS = """
@@ -1518,8 +1518,7 @@ ORDER BY n_rows DESC, o_custkey
 LIMIT 20
 """
 
-QUERIES["key_skew_orders"] = q_key_skew_orders
-ORACLE_SQL["key_skew_orders"] = SQL_KEY_SKEW_ORDERS
+register("key_skew_orders", q_key_skew_orders, SQL_KEY_SKEW_ORDERS)
 
 
 # ---------------------------------------------------------------------------
@@ -1536,7 +1535,7 @@ _PR_DAMP = 850
 def q_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakeforge.ops.graph import pagerank_nano
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     e0 = li.select("l_partkey", "l_suppkey").distinct()
     # Both edge directions from ONE scan of the distinct (r12 opt, guide
     # §2.4 — the unionAll form ran the 600k-row distinct twice).
@@ -1599,8 +1598,7 @@ FROM r{iters}
     )
 
 
-QUERIES["pagerank_trade"] = q_pagerank_trade
-ORACLE_SQL["pagerank_trade"] = _sql_pagerank(_PR_ITERS, _PR_DAMP)
+register("pagerank_trade", q_pagerank_trade, _sql_pagerank(_PR_ITERS, _PR_DAMP))
 
 
 # ---------------------------------------------------------------------------
@@ -1613,9 +1611,9 @@ ORACLE_SQL["pagerank_trade"] = _sql_pagerank(_PR_ITERS, _PR_DAMP)
 
 
 def q_spend_trend_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
+    o = table(spark, sf_dir, "orders")
+    c = table(spark, sf_dir, "customer")
+    n = table(spark, sf_dir, "nation")
     j = o.join(c, o.o_custkey == c.c_custkey).join(
         F.broadcast(n), c.c_nationkey == n.n_nationkey
     )
@@ -1647,8 +1645,7 @@ JOIN nation ON c_nationkey = n_nationkey
 GROUP BY n_name
 """
 
-QUERIES["spend_trend_by_nation"] = q_spend_trend_by_nation
-ORACLE_SQL["spend_trend_by_nation"] = SQL_SPEND_TREND_BY_NATION
+register("spend_trend_by_nation", q_spend_trend_by_nation, SQL_SPEND_TREND_BY_NATION)
 
 
 # ---------------------------------------------------------------------------
@@ -1660,7 +1657,7 @@ ORACLE_SQL["spend_trend_by_nation"] = SQL_SPEND_TREND_BY_NATION
 
 
 def q_customer_spend_z(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_custkey") < 100)
+    o = table(spark, sf_dir, "orders").filter(F.col("o_custkey") < 100)
     w = Window.partitionBy("o_custkey")
     mu = F.avg(F.col("o_totalprice").cast("double")).over(w)
     sd = F.stddev_samp(F.col("o_totalprice").cast("double")).over(w)
@@ -1695,8 +1692,7 @@ SELECT o_orderkey, o_custkey, totalprice,
 FROM s WHERE n >= 2 AND sd > 0
 """
 
-QUERIES["customer_spend_z"] = q_customer_spend_z
-ORACLE_SQL["customer_spend_z"] = SQL_CUSTOMER_SPEND_Z
+register("customer_spend_z", q_customer_spend_z, SQL_CUSTOMER_SPEND_Z)
 
 
 # ---------------------------------------------------------------------------
@@ -1830,8 +1826,7 @@ SELECT strftime(day, '%Y-%m-%d') AS day,
 FROM running GROUP BY day
 """
 
-QUERIES["peak_concurrency"] = q_peak_concurrency
-ORACLE_SQL["peak_concurrency"] = SQL_PEAK_CONCURRENCY
+register("peak_concurrency", q_peak_concurrency, SQL_PEAK_CONCURRENCY)
 
 
 # ---------------------------------------------------------------------------
@@ -1846,7 +1841,7 @@ def q_revenue_mom_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Integer cents end-to-end: Spark truncates decimal->bigint casts while
     # DuckDB rounds them, so growth is computed with bigint `div` (identical
     # truncate-toward-zero semantics in both engines) on exact cent sums.
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     monthly = (
         o.groupBy(
             F.date_format(F.col("o_orderdate").cast("date"), "yyyy-MM").alias("ym")
@@ -1882,12 +1877,11 @@ SELECT ym, CAST(cents AS DOUBLE) / 100.0 AS revenue,
 FROM m
 """
 
-QUERIES["revenue_mom_growth"] = q_revenue_mom_growth
-ORACLE_SQL["revenue_mom_growth"] = SQL_REVENUE_MOM_GROWTH
+register("revenue_mom_growth", q_revenue_mom_growth, SQL_REVENUE_MOM_GROWTH)
 
 
 def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.date_format(F.col("o_orderdate").cast("date"), "yyyy-MM").alias("ym"),
         (
@@ -1926,8 +1920,7 @@ FROM act a JOIN first f USING (o_custkey)
 GROUP BY f.cohort, a.mnum - f.cohort_m
 """
 
-QUERIES["cohort_retention"] = q_cohort_retention
-ORACLE_SQL["cohort_retention"] = SQL_COHORT_RETENTION
+register("cohort_retention", q_cohort_retention, SQL_COHORT_RETENTION)
 
 
 # ---------------------------------------------------------------------------
@@ -1964,8 +1957,7 @@ UNION ALL
 SELECT o_orderpriority, 'P', p FROM wide
 """
 
-QUERIES["unpivot_status_counts"] = q_unpivot_status_counts
-ORACLE_SQL["unpivot_status_counts"] = SQL_UNPIVOT_STATUS_COUNTS
+register("unpivot_status_counts", q_unpivot_status_counts, SQL_UNPIVOT_STATUS_COUNTS)
 
 
 # ---------------------------------------------------------------------------
@@ -2002,8 +1994,7 @@ SELECT event_type,
 FROM events GROUP BY event_type
 """
 
-QUERIES["events_variant_stats"] = q_events_variant_stats
-ORACLE_SQL["events_variant_stats"] = SQL_EVENTS_VARIANT_STATS
+register("events_variant_stats", q_events_variant_stats, SQL_EVENTS_VARIANT_STATS)
 
 
 # ---------------------------------------------------------------------------
@@ -2024,7 +2015,7 @@ def q_sql_udf_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CREATE OR REPLACE TEMPORARY FUNCTION net_rev(p DECIMAL(18,2), d DECIMAL(18,2)) "
         "RETURNS DECIMAL(38,4) RETURN p * (CAST(1 AS DECIMAL(18,2)) - d)"
     )
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("li_udf")
+    table(spark, sf_dir, "lineitem").createOrReplaceTempView("li_udf")
     return spark.sql(
         """
         SELECT l_returnflag,
@@ -2045,8 +2036,7 @@ SELECT l_returnflag,
 FROM lineitem GROUP BY l_returnflag
 """
 
-QUERIES["sql_udf_revenue"] = q_sql_udf_revenue
-ORACLE_SQL["sql_udf_revenue"] = SQL_SQL_UDF_REVENUE
+register("sql_udf_revenue", q_sql_udf_revenue, SQL_SQL_UDF_REVENUE)
 
 
 # ---------------------------------------------------------------------------
@@ -2063,9 +2053,9 @@ ORACLE_SQL["sql_udf_revenue"] = SQL_SQL_UDF_REVENUE
 
 
 def q_hll_union_regions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
+    c = table(spark, sf_dir, "customer")
+    n = table(spark, sf_dir, "nation")
+    r = table(spark, sf_dir, "region")
     per_nation = c.groupBy("c_nationkey").agg(
         F.expr("hll_sketch_agg(c_custkey)").alias("sk"),
         F.countDistinct("c_custkey").cast("bigint").alias("exact_n"),
@@ -2101,8 +2091,7 @@ JOIN region ON n_regionkey = r_regionkey
 GROUP BY r_name
 """
 
-QUERIES["hll_union_regions"] = q_hll_union_regions
-ORACLE_SQL["hll_union_regions"] = SQL_HLL_UNION_REGIONS
+register("hll_union_regions", q_hll_union_regions, SQL_HLL_UNION_REGIONS)
 
 
 # ---------------------------------------------------------------------------
@@ -2117,7 +2106,7 @@ ORACLE_SQL["hll_union_regions"] = SQL_HLL_UNION_REGIONS
 def q_orders_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakeforge.ops.merge import table_diff
 
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     v2 = (
         o.filter(F.col("o_custkey") % 101 != 0)  # removals
         .withColumn(
@@ -2167,8 +2156,7 @@ j AS (
 SELECT o_orderkey, change_type FROM j WHERE change_type IS NOT NULL
 """
 
-QUERIES["orders_snapshot_diff"] = q_orders_snapshot_diff
-ORACLE_SQL["orders_snapshot_diff"] = SQL_ORDERS_SNAPSHOT_DIFF
+register("orders_snapshot_diff", q_orders_snapshot_diff, SQL_ORDERS_SNAPSHOT_DIFF)
 
 
 # ---------------------------------------------------------------------------
@@ -2180,7 +2168,7 @@ ORACLE_SQL["orders_snapshot_diff"] = SQL_ORDERS_SNAPSHOT_DIFF
 
 
 def q_mad_order_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select("o_orderpriority", "o_totalprice")
+    o = table(spark, sf_dir, "orders").select("o_orderpriority", "o_totalprice")
     med = o.groupBy("o_orderpriority").agg(
         F.percentile("o_totalprice", F.lit(0.5)).alias("med")
     )
@@ -2212,8 +2200,7 @@ SELECT o_orderpriority,
 FROM dev GROUP BY o_orderpriority
 """
 
-QUERIES["mad_order_price"] = q_mad_order_price
-ORACLE_SQL["mad_order_price"] = SQL_MAD_ORDER_PRICE
+register("mad_order_price", q_mad_order_price, SQL_MAD_ORDER_PRICE)
 
 
 # ---------------------------------------------------------------------------
@@ -2232,7 +2219,7 @@ def q_orderkey_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (vacuously-green) check — knock out two residue classes so real
     # gaps of both widths exist and the op is actually exercised.
     o = (
-        _t(spark, sf_dir, "orders")
+        table(spark, sf_dir, "orders")
         .select("o_orderkey")
         .where((F.col("o_orderkey") % 97 != 0) & (F.col("o_orderkey") % 89 != 0))
         .distinct()
@@ -2275,8 +2262,7 @@ SELECT gap_after, CAST(n_missing AS BIGINT) AS n_missing
 FROM g WHERE n_missing > 0
 """
 
-QUERIES["orderkey_gaps"] = q_orderkey_gaps
-ORACLE_SQL["orderkey_gaps"] = SQL_ORDERKEY_GAPS
+register("orderkey_gaps", q_orderkey_gaps, SQL_ORDERKEY_GAPS)
 
 
 # ---------------------------------------------------------------------------
@@ -2288,9 +2274,9 @@ ORACLE_SQL["orderkey_gaps"] = SQL_ORDERKEY_GAPS
 
 
 def q_revenue_share_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
+    o = table(spark, sf_dir, "orders")
+    c = table(spark, sf_dir, "customer")
+    n = table(spark, sf_dir, "nation")
     cents = (
         o.join(c, o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
@@ -2326,12 +2312,13 @@ SELECT n_name, CAST(cents AS DOUBLE) / 100.0 AS revenue,
 FROM cents
 """
 
-QUERIES["revenue_share_by_nation"] = q_revenue_share_by_nation
-ORACLE_SQL["revenue_share_by_nation"] = SQL_REVENUE_SHARE_BY_NATION
+register(
+    "revenue_share_by_nation", q_revenue_share_by_nation, SQL_REVENUE_SHARE_BY_NATION,
+)
 
 
 def q_qty_price_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.round(F.corr(F.col("l_quantity").cast("double"),
@@ -2351,8 +2338,7 @@ SELECT l_returnflag,
 FROM lineitem GROUP BY l_returnflag
 """
 
-QUERIES["qty_price_corr"] = q_qty_price_corr
-ORACLE_SQL["qty_price_corr"] = SQL_QTY_PRICE_CORR
+register("qty_price_corr", q_qty_price_corr, SQL_QTY_PRICE_CORR)
 
 
 def q_priority_status_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2360,7 +2346,7 @@ def q_priority_status_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     contingency table: observed integer counts, expected from exact
     integer marginals, one scalar per cell summed.  Margins are tiny
     (broadcast); the fact table is scanned once."""
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     cells = o.groupBy("o_orderpriority", "o_orderstatus").agg(
         F.count(F.lit(1)).cast("bigint").alias("obs")
     )
@@ -2402,8 +2388,7 @@ SELECT CAST(SUM(obs) AS BIGINT) AS n,
 FROM j
 """
 
-QUERIES["priority_status_chi2"] = q_priority_status_chi2
-ORACLE_SQL["priority_status_chi2"] = SQL_PRIORITY_STATUS_CHI2
+register("priority_status_chi2", q_priority_status_chi2, SQL_PRIORITY_STATUS_CHI2)
 
 
 def q_rolling_median_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2411,7 +2396,7 @@ def q_rolling_median_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     rolling stats via an aggregate-as-window (sorted small frame per row;
     the frame is ROWS-bounded so per-row cost is O(5 log 5), state never
     exceeds the frame)."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_custkey") < 300)
+    o = table(spark, sf_dir, "orders").filter(F.col("o_custkey") < 300)
     w = (
         Window.partitionBy("o_custkey")
         .orderBy("o_orderdate", "o_orderkey")
@@ -2436,8 +2421,7 @@ SELECT o_orderkey, o_custkey,
 FROM orders WHERE o_custkey < 300
 """
 
-QUERIES["rolling_median_spend"] = q_rolling_median_spend
-ORACLE_SQL["rolling_median_spend"] = SQL_ROLLING_MEDIAN_SPEND
+register("rolling_median_spend", q_rolling_median_spend, SQL_ROLLING_MEDIAN_SPEND)
 
 
 # ---------------------------------------------------------------------------
@@ -2461,7 +2445,7 @@ def q_cogroup_activity_recon(spark: SparkSession, sf_dir: str) -> DataFrame:
     # throughput, and the measured per-key cost is exactly the
     # documented reason to prefer joins whenever the per-key logic IS
     # SQL-expressible.
-    o = _t(spark, sf_dir, "orders").where(F.col("o_custkey") < 100).select(
+    o = table(spark, sf_dir, "orders").where(F.col("o_custkey") < 100).select(
         F.col("o_custkey").alias("key"),
         F.col("o_totalprice").cast("double").alias("amount"),
     )
@@ -2510,8 +2494,7 @@ SELECT COALESCE(o.key, e.key) AS key,
 FROM o FULL OUTER JOIN e ON o.key = e.key
 """
 
-QUERIES["cogroup_activity_recon"] = q_cogroup_activity_recon
-ORACLE_SQL["cogroup_activity_recon"] = SQL_COGROUP_ACTIVITY_RECON
+register("cogroup_activity_recon", q_cogroup_activity_recon, SQL_COGROUP_ACTIVITY_RECON)
 
 
 # ---------------------------------------------------------------------------
@@ -2527,7 +2510,7 @@ ORACLE_SQL["cogroup_activity_recon"] = SQL_COGROUP_ACTIVITY_RECON
 def q_customer_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakeforge.ops.dedup import golden_record
 
-    c = _t(spark, sf_dir, "customer").select(
+    c = table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_mktsegment", "c_acctbal"
     )
     corrupted = c.select(
@@ -2584,8 +2567,7 @@ SELECT c_custkey,
 FROM best WHERE rn = 1 GROUP BY c_custkey
 """
 
-QUERIES["customer_golden_record"] = q_customer_golden_record
-ORACLE_SQL["customer_golden_record"] = SQL_CUSTOMER_GOLDEN_RECORD
+register("customer_golden_record", q_customer_golden_record, SQL_CUSTOMER_GOLDEN_RECORD)
 
 
 # ---------------------------------------------------------------------------
@@ -2598,7 +2580,7 @@ ORACLE_SQL["customer_golden_record"] = SQL_CUSTOMER_GOLDEN_RECORD
 
 
 def q_monthly_from_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     daily = o.groupBy(F.col("o_orderdate").cast("date").alias("day")).agg(
         F.sum((F.col("o_totalprice").cast(DEC) * 100).cast("bigint"))
         .cast("bigint")
@@ -2627,8 +2609,7 @@ SELECT strftime(CAST(o_orderdate AS DATE), '%Y-%m') AS ym,
 FROM orders GROUP BY 1
 """
 
-QUERIES["monthly_from_daily"] = q_monthly_from_daily
-ORACLE_SQL["monthly_from_daily"] = SQL_MONTHLY_FROM_DAILY
+register("monthly_from_daily", q_monthly_from_daily, SQL_MONTHLY_FROM_DAILY)
 
 
 # ---------------------------------------------------------------------------
@@ -2640,7 +2621,7 @@ ORACLE_SQL["monthly_from_daily"] = SQL_MONTHLY_FROM_DAILY
 
 def q_order_day_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = (
-        _t(spark, sf_dir, "orders")
+        table(spark, sf_dir, "orders")
         .select("o_custkey", F.col("o_orderdate").cast("date").alias("day"))
         .distinct()
     )
@@ -2689,8 +2670,7 @@ ranked AS (
 SELECT o_custkey, streak_days, streak_start FROM ranked WHERE rn = 1
 """
 
-QUERIES["order_day_streaks"] = q_order_day_streaks
-ORACLE_SQL["order_day_streaks"] = SQL_ORDER_DAY_STREAKS
+register("order_day_streaks", q_order_day_streaks, SQL_ORDER_DAY_STREAKS)
 
 
 # ---------------------------------------------------------------------------
@@ -2716,7 +2696,7 @@ def q_price_band_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("id") * _BAND_STRIDE).cast("double").alias("lo"),
         (F.col("id") * _BAND_STRIDE + _BAND_WIDTH).cast("double").alias("hi"),
     )
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
+    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     matched = range_bucket_join(
         o, bands, "o_totalprice", "lo", "hi", bucket_width=_BAND_STRIDE
     )
@@ -2743,8 +2723,7 @@ FROM orders JOIN bands ON o_totalprice BETWEEN lo AND hi
 GROUP BY band_id
 """
 
-QUERIES["price_band_lookup"] = q_price_band_lookup
-ORACLE_SQL["price_band_lookup"] = SQL_PRICE_BAND_LOOKUP
+register("price_band_lookup", q_price_band_lookup, SQL_PRICE_BAND_LOOKUP)
 
 
 # ---------------------------------------------------------------------------
@@ -2760,10 +2739,10 @@ ORACLE_SQL["price_band_lookup"] = SQL_PRICE_BAND_LOOKUP
 def q_trade_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakeforge.ops.graph import triangle_count
 
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     pairs = (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -2806,8 +2785,7 @@ SELECT vertex, CAST(count(*) AS BIGINT) AS n_triangles
 FROM corners GROUP BY vertex ORDER BY vertex
 """
 
-QUERIES["trade_triangles"] = q_trade_triangles
-ORACLE_SQL["trade_triangles"] = SQL_TRADE_TRIANGLES
+register("trade_triangles", q_trade_triangles, SQL_TRADE_TRIANGLES)
 
 
 # ---------------------------------------------------------------------------
@@ -2828,7 +2806,7 @@ _LINK_MAX_BLOCK = 2000
 def q_part_name_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakeforge.ops.linkage import blocked_levenshtein_pairs
 
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_name")
+    p = table(spark, sf_dir, "part").select("p_partkey", "p_name")
     corpus = p.unionByName(
         p.filter(F.col("p_partkey") % 10 == 0).select(
             (F.col("p_partkey") + 5_000_000).alias("p_partkey"),
@@ -2871,8 +2849,7 @@ WHERE abs(a.len - c.len) <= {_LINK_MAX_DIST}
   AND levenshtein(a.txt, c.txt) <= {_LINK_MAX_DIST}
 """
 
-QUERIES["part_name_linkage"] = q_part_name_linkage
-ORACLE_SQL["part_name_linkage"] = SQL_PART_NAME_LINKAGE
+register("part_name_linkage", q_part_name_linkage, SQL_PART_NAME_LINKAGE)
 
 
 # ---------------------------------------------------------------------------
@@ -2923,8 +2900,7 @@ SELECT strftime(ws, '%Y-%m-%d %H:%M:%S') AS w_start, event_type, n_events,
 FROM r WHERE rank <= 3
 """
 
-QUERIES["events_trending"] = q_events_trending
-ORACLE_SQL["events_trending"] = SQL_EVENTS_TRENDING
+register("events_trending", q_events_trending, SQL_EVENTS_TRENDING)
 
 
 # ---------------------------------------------------------------------------
@@ -2978,8 +2954,7 @@ SELECT strftime(d.day, '%Y-%m-%d') AS day, d.dow, d.n_events,
 FROM dowd d JOIN base b USING (dow)
 """
 
-QUERIES["events_dow_anomaly"] = q_events_dow_anomaly
-ORACLE_SQL["events_dow_anomaly"] = SQL_EVENTS_DOW_ANOMALY
+register("events_dow_anomaly", q_events_dow_anomaly, SQL_EVENTS_DOW_ANOMALY)
 
 
 # ---------------------------------------------------------------------------
@@ -2995,7 +2970,7 @@ ORACLE_SQL["events_dow_anomaly"] = SQL_EVENTS_DOW_ANOMALY
 def q_orders_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakeforge.ops.expectations import Rule, check_expectations
 
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     rules = [
         Rule(name="orderkey_not_null", kind="not_null", col="o_orderkey"),
         Rule(name="orderkey_unique", kind="unique_key", cols=("o_orderkey",)),
@@ -3055,8 +3030,7 @@ WITH rows_rules AS (
 SELECT rule, evaluated, violations, violations = 0 AS passed FROM rows_rules
 """
 
-QUERIES["orders_expectations"] = q_orders_expectations
-ORACLE_SQL["orders_expectations"] = SQL_ORDERS_EXPECTATIONS
+register("orders_expectations", q_orders_expectations, SQL_ORDERS_EXPECTATIONS)
 
 
 # ---------------------------------------------------------------------------
@@ -3072,8 +3046,6 @@ ORACLE_SQL["orders_expectations"] = SQL_ORDERS_EXPECTATIONS
 # day; cross-midnight residue is credited to the day it occurs in, which
 # both engines compute identically).
 # ---------------------------------------------------------------------------
-
-
 
 
 _DAY_US = 86_400 * 1_000_000
@@ -3208,8 +3180,7 @@ SELECT strftime(DATE '1970-01-01' + CAST(dayn AS INT), '%Y-%m-%d') AS day,
 FROM area
 """
 
-QUERIES["concurrency_seconds"] = q_concurrency_seconds
-ORACLE_SQL["concurrency_seconds"] = SQL_CONCURRENCY_SECONDS
+register("concurrency_seconds", q_concurrency_seconds, SQL_CONCURRENCY_SECONDS)
 
 
 # ---------------------------------------------------------------------------
@@ -3225,11 +3196,11 @@ ORACLE_SQL["concurrency_seconds"] = SQL_CONCURRENCY_SECONDS
 
 
 def q_sole_late_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_shipdate"
     )
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
+    s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     late = (
         F.col("l_shipdate").cast("date")
         > F.date_add(F.col("o_orderdate").cast("date"), 60)
@@ -3289,8 +3260,7 @@ WHERE l1.supp_late
 GROUP BY s.s_name
 """
 
-QUERIES["sole_late_supplier"] = q_sole_late_supplier
-ORACLE_SQL["sole_late_supplier"] = SQL_SOLE_LATE_SUPPLIER
+register("sole_late_supplier", q_sole_late_supplier, SQL_SOLE_LATE_SUPPLIER)
 
 
 # ---------------------------------------------------------------------------
@@ -3313,26 +3283,26 @@ def q_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums) for cross-engine exactness."""
     target_nation = "NATION_3"
     target_region = "ASIA"
-    nat = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
-    reg = _t(spark, sf_dir, "region").filter(F.col("r_name") == target_region)
+    nat = table(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
+    reg = table(spark, sf_dir, "region").filter(F.col("r_name") == target_region)
     cust = (
-        _t(spark, sf_dir, "customer")
+        table(spark, sf_dir, "customer")
         .join(F.broadcast(nat), F.col("c_nationkey") == F.col("n_nationkey"))
         .join(F.broadcast(reg), F.col("n_regionkey") == F.col("r_regionkey"))
         .select("c_custkey")
     )
     supp = (
-        _t(spark, sf_dir, "supplier")
+        table(spark, sf_dir, "supplier")
         .join(
             F.broadcast(nat.filter(F.col("n_name") == target_nation)),
             F.col("s_nationkey") == F.col("n_nationkey"),
         )
         .select("s_suppkey")
     )
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", F.year("o_orderdate").cast("int").alias("o_year")
     )
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", _revenue().alias("rev")
     )
     # Customer semi-filter, then mark target-supplier lines with a LEFT
@@ -3396,8 +3366,7 @@ WHERE o.o_custkey IN (SELECT c_custkey FROM cust)
 GROUP BY year(o.o_orderdate)
 """.replace("{REV}", _REV_SQL)
 
-QUERIES["market_share"] = q_market_share
-ORACLE_SQL["market_share"] = SQL_MARKET_SHARE
+register("market_share", q_market_share, SQL_MARKET_SHARE)
 
 
 def q_top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3410,14 +3379,14 @@ def q_top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     first), then a broadcast-sized window over ~|suppliers| rows with a
     single global partition — bounded because the agg output is
     |suppliers|, not |lineitem|."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1995-01-01"))
         & (F.col("l_shipdate") < F.lit("1995-04-01"))
     )
     per_supp = li.groupBy("l_suppkey").agg(F.sum(_revenue()).alias("total_rev"))
     w = Window.orderBy(F.col("total_rev").desc())
     top = per_supp.withColumn("rk", F.rank().over(w)).filter(F.col("rk") == 1)
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name", "s_acctbal")
+    s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_name", "s_acctbal")
     # Broadcast the WINNERS (>=1 row, tiny by construction) into the
     # supplier dim — not the other way around: supplier count grows with
     # SF, the rank-1 set does not.
@@ -3439,8 +3408,7 @@ FROM per_supp p JOIN supplier s ON p.l_suppkey = s.s_suppkey
 WHERE p.total_rev = (SELECT MAX(total_rev) FROM per_supp)
 """.replace("{REV}", _REV_SQL)
 
-QUERIES["top_supplier_revenue"] = q_top_supplier_revenue
-ORACLE_SQL["top_supplier_revenue"] = SQL_TOP_SUPPLIER_REVENUE
+register("top_supplier_revenue", q_top_supplier_revenue, SQL_TOP_SUPPLIER_REVENUE)
 
 
 def q_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3458,8 +3426,8 @@ def q_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast hints — one brand is a constant FRACTION of part (grows
     with SF); AQE broadcasts both small sides at test scale and falls
     back to shuffle joins at 100TB."""
-    part = _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#5")
-    li = _t(spark, sf_dir, "lineitem").select(
+    part = table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#5")
+    li = table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_quantity", "l_extendedprice", "l_discount"
     )
     # No broadcast hint: one brand is a constant FRACTION of part (grows
@@ -3500,8 +3468,7 @@ FROM brand_lines b JOIN per_part a ON b.l_partkey = a.agg_partkey
 WHERE CAST(b.l_quantity AS BIGINT) * 5 * a.n_lines < a.sum_qty
 """.replace("{REV}", _REV_SQL)
 
-QUERIES["small_qty_revenue"] = q_small_qty_revenue
-ORACLE_SQL["small_qty_revenue"] = SQL_SMALL_QTY_REVENUE
+register("small_qty_revenue", q_small_qty_revenue, SQL_SMALL_QTY_REVENUE)
 
 
 def q_disjunctive_brackets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3513,8 +3480,8 @@ def q_disjunctive_brackets(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one part join; the OR predicate rides it and is evaluated in
     whole-stage codegen.  Common conjuncts (p_size >= 1)
     are factored so the scan-level pushdown still prunes."""
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
-    li = _t(spark, sf_dir, "lineitem").select(
+    part = table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
+    li = table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_quantity", "l_extendedprice", "l_discount"
     )
     qty = F.col("l_quantity").cast("bigint")
@@ -3546,8 +3513,7 @@ WHERE (p.p_brand = 'Brand#12' AND p.p_size BETWEEN 1 AND 5
        AND CAST(l.l_quantity AS BIGINT) BETWEEN 20 AND 30)
 """.replace("{REV}", _REV_SQL)
 
-QUERIES["disjunctive_brackets"] = q_disjunctive_brackets
-ORACLE_SQL["disjunctive_brackets"] = SQL_DISJUNCTIVE_BRACKETS
+register("disjunctive_brackets", q_disjunctive_brackets, SQL_DISJUNCTIVE_BRACKETS)
 
 
 def q_priority_late_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3559,10 +3525,10 @@ def q_priority_late_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: the EXISTS compiles to a LEFT SEMI join on o_orderkey — only
     order keys + dates shuffle, lineitem payload columns are pruned, and
     the final agg is over |orders| rows with map-side combine."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_orderdate"
     )
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
+    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     late_orders = o.join(
         li.withColumnRenamed("l_orderkey", "lk"),
         (o.o_orderkey == F.col("lk"))
@@ -3588,8 +3554,7 @@ WHERE EXISTS (SELECT 1 FROM lineitem l
 GROUP BY o_orderpriority
 """
 
-QUERIES["priority_late_orders"] = q_priority_late_orders
-ORACLE_SQL["priority_late_orders"] = SQL_PRIORITY_LATE_ORDERS
+register("priority_late_orders", q_priority_late_orders, SQL_PRIORITY_LATE_ORDERS)
 
 
 def q_spend_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3599,7 +3564,7 @@ def q_spend_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakeforge.ops.timeseries import with_ewma
 
     o = (
-        _t(spark, sf_dir, "orders")
+        table(spark, sf_dir, "orders")
         .filter(F.col("o_custkey") < 300)
         .select(
             "o_orderkey",
@@ -3632,8 +3597,7 @@ SELECT o_orderkey, o_custkey, cents,
 FROM v
 """
 
-QUERIES["spend_ewma"] = q_spend_ewma
-ORACLE_SQL["spend_ewma"] = SQL_SPEND_EWMA
+register("spend_ewma", q_spend_ewma, SQL_SPEND_EWMA)
 
 
 def q_heavy_hitter_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3642,7 +3606,7 @@ def q_heavy_hitter_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ops/sketches.py — fixed 4x1024 grid, mergeable, broadcastable)."""
     from lakeforge.ops.sketches import count_min_heavy_hitters
 
-    o = _t(spark, sf_dir, "orders").select("o_custkey")
+    o = table(spark, sf_dir, "orders").select("o_custkey")
     out = count_min_heavy_hitters(o, "o_custkey", threshold=25)
     return out.select(
         F.col("k").alias("o_custkey"), "est_n", "exact_n"
@@ -3685,8 +3649,7 @@ SELECT k AS o_custkey, est_n, exact_n FROM est WHERE est_n >= 25
 """
 
 
-QUERIES["heavy_hitter_customers"] = q_heavy_hitter_customers
-ORACLE_SQL["heavy_hitter_customers"] = _cms_oracle()
+register("heavy_hitter_customers", q_heavy_hitter_customers, _cms_oracle())
 
 
 def q_customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3713,7 +3676,7 @@ def q_customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     ntile.  Descending orders negate the value (trunc-division block
     ids remain non-decreasing in the value, which is all the blocked
     rank needs)."""
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     anchor = F.lit("1998-12-31").cast("date")
     per_cust = o.groupBy("o_custkey").agg(
         F.min(F.datediff(anchor, F.col("o_orderdate").cast("date")))
@@ -3821,8 +3784,7 @@ SELECT CASE WHEN r_score = 1 AND f_score = 1 THEN 'champion'
 FROM scored GROUP BY 1
 """
 
-QUERIES["customer_rfm_segments"] = q_customer_rfm_segments
-ORACLE_SQL["customer_rfm_segments"] = SQL_CUSTOMER_RFM
+register("customer_rfm_segments", q_customer_rfm_segments, SQL_CUSTOMER_RFM)
 
 
 def q_bloom_semi_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3833,10 +3795,10 @@ def q_bloom_semi_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     positives die in the exact join; false negatives are impossible)."""
     from lakeforge.ops.joins import bloom_prefiltered_semi_join
 
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount"
     )
-    hi = _t(spark, sf_dir, "orders").filter(
+    hi = table(spark, sf_dir, "orders").filter(
         F.col("o_totalprice") > 350000.0
     ).select("o_orderkey")
     kept = bloom_prefiltered_semi_join(li, hi, "l_orderkey", "o_orderkey")
@@ -3854,8 +3816,7 @@ WHERE EXISTS (SELECT 1 FROM orders o
                 AND o.o_totalprice > 350000.0)
 """.replace("{REV}", _REV_SQL)
 
-QUERIES["bloom_semi_revenue"] = q_bloom_semi_revenue
-ORACLE_SQL["bloom_semi_revenue"] = SQL_BLOOM_SEMI_REVENUE
+register("bloom_semi_revenue", q_bloom_semi_revenue, SQL_BLOOM_SEMI_REVENUE)
 
 
 def q_customer_abc_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3878,7 +3839,7 @@ def q_customer_abc_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL(38,0) so cum_cents*10000 can't overflow int64 at a 100 TB
     fact.  The DuckDB oracle keeps the plain cumulative window — the
     two formulations cross-check each other."""
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     per_cust = (
         o.groupBy("o_custkey")
         .agg(F.sum(F.col("o_totalprice").cast(DEC)).alias("rev"))
@@ -3957,8 +3918,7 @@ SELECT CASE WHEN cum_bps <= 7000 THEN 'A'
 FROM b GROUP BY 1
 """
 
-QUERIES["customer_abc_classes"] = q_customer_abc_classes
-ORACLE_SQL["customer_abc_classes"] = SQL_CUSTOMER_ABC
+register("customer_abc_classes", q_customer_abc_classes, SQL_CUSTOMER_ABC)
 
 
 def q_trade_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3972,7 +3932,7 @@ def q_trade_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     pagerank_trade (part=2*key, supplier=2*key+1) — an additive offset
     would silently merge part/supplier degrees once partkeys pass it at
     larger scale factors."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     e0 = li.select("l_partkey", "l_suppkey").distinct()
     # Both endpoint node ids from ONE scan of the distinct pipeline (r13
     # opt, guide §2.4): the unionAll branches differ in projection, which
@@ -4010,8 +3970,7 @@ SELECT CAST(floor(log2(deg)) AS BIGINT) AS log2_degree,
 FROM deg GROUP BY 1
 """
 
-QUERIES["trade_degree_histogram"] = q_trade_degree_histogram
-ORACLE_SQL["trade_degree_histogram"] = SQL_TRADE_DEGREE_HISTOGRAM
+register("trade_degree_histogram", q_trade_degree_histogram, SQL_TRADE_DEGREE_HISTOGRAM)
 
 
 def q_trade_bfs_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4031,7 +3990,7 @@ def q_trade_bfs_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     pagerank_trade / trade_degree_histogram."""
     from lakeforge.ops.graph import bfs_depths
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     e0 = li.select("l_partkey", "l_suppkey").distinct()
     edges = e0.select(
         (F.col("l_partkey") * 2).alias("a"),
@@ -4066,8 +4025,7 @@ SELECT CAST(depth AS BIGINT) AS depth,
 FROM mind GROUP BY depth
 """
 
-QUERIES["trade_bfs_reach"] = q_trade_bfs_reach
-ORACLE_SQL["trade_bfs_reach"] = SQL_TRADE_BFS_REACH
+register("trade_bfs_reach", q_trade_bfs_reach, SQL_TRADE_BFS_REACH)
 
 
 def q_orders_kanon_release(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4078,7 +4036,7 @@ def q_orders_kanon_release(spark: SparkSession, sf_dir: str) -> DataFrame:
     suppressed mass (the audit view a privacy officer signs off on)."""
     from lakeforge.ops.privacy import kanon_release
 
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_orderpriority",
         F.year(F.col("o_orderdate").cast("date")).cast("bigint").alias("o_year"),
         "o_orderstatus",
@@ -4101,8 +4059,7 @@ FROM orders
 GROUP BY 1, 2
 """
 
-QUERIES["orders_kanon_release"] = q_orders_kanon_release
-ORACLE_SQL["orders_kanon_release"] = SQL_ORDERS_KANON
+register("orders_kanon_release", q_orders_kanon_release, SQL_ORDERS_KANON)
 
 
 def q_orders_ivm_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4114,7 +4071,7 @@ def q_orders_ivm_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the nightly full scan it replaces."""
     from lakeforge.ops.merge import merge_aggregates
 
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus",
         F.col("o_totalprice").cast(DEC).alias("price"),
     )
@@ -4145,8 +4102,7 @@ SELECT o_orderstatus,
 FROM orders GROUP BY o_orderstatus
 """
 
-QUERIES["orders_ivm_revenue"] = q_orders_ivm_revenue
-ORACLE_SQL["orders_ivm_revenue"] = SQL_ORDERS_IVM
+register("orders_ivm_revenue", q_orders_ivm_revenue, SQL_ORDERS_IVM)
 
 
 def q_customers_pseudonymized(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4158,12 +4114,12 @@ def q_customers_pseudonymized(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same join."""
     from lakeforge.ops.privacy import pseudonymize
 
-    cust = _t(spark, sf_dir, "customer").select(
+    cust = table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_mktsegment"
     )
     p = pseudonymize(cust, ["c_custkey", "c_name"], salt="s5")
     orders = pseudonymize(
-        _t(spark, sf_dir, "orders").select("o_custkey", "o_orderkey"),
+        table(spark, sf_dir, "orders").select("o_custkey", "o_orderkey"),
         ["o_custkey"],
         salt="s5",
     )
@@ -4195,8 +4151,7 @@ GROUP BY c_mktsegment
 """
 
 
-QUERIES["customers_pseudonymized"] = q_customers_pseudonymized
-ORACLE_SQL["customers_pseudonymized"] = _sql_pseudonymized()
+register("customers_pseudonymized", q_customers_pseudonymized, _sql_pseudonymized())
 
 
 def q_ivm_distinct_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4214,7 +4169,7 @@ def q_ivm_distinct_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         merge_distinct_bitmaps,
     )
 
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority", "o_custkey")
+    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority", "o_custkey")
     old = distinct_bitmaps(
         o.filter(F.col("o_orderkey") % 10 != 0), ["o_orderpriority"], "o_custkey"
     )
@@ -4231,8 +4186,7 @@ SELECT o_orderpriority,
 FROM orders GROUP BY o_orderpriority
 """
 
-QUERIES["ivm_distinct_customers"] = q_ivm_distinct_customers
-ORACLE_SQL["ivm_distinct_customers"] = SQL_IVM_DISTINCT
+register("ivm_distinct_customers", q_ivm_distinct_customers, SQL_IVM_DISTINCT)
 
 
 def q_events_exact_k_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4268,8 +4222,7 @@ FROM ranked WHERE rn <= 50 GROUP BY event_type
 """
 
 
-QUERIES["events_exact_k_sample"] = q_events_exact_k_sample
-ORACLE_SQL["events_exact_k_sample"] = _sql_events_exact_k()
+register("events_exact_k_sample", q_events_exact_k_sample, _sql_events_exact_k())
 
 
 def q_events_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4331,8 +4284,7 @@ SELECT event_type, next_type, n_transitions,
 FROM c
 """
 
-QUERIES["events_transition_matrix"] = q_events_transition_matrix
-ORACLE_SQL["events_transition_matrix"] = SQL_EVENTS_TRANSITION
+register("events_transition_matrix", q_events_transition_matrix, SQL_EVENTS_TRANSITION)
 
 
 def q_trade_sssp_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4345,7 +4297,7 @@ def q_trade_sssp_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     structure rather than restating the problem)."""
     from lakeforge.ops.graph import sssp_hops
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     e0 = li.select("l_partkey", "l_suppkey").distinct().select(
         (F.col("l_partkey") * 2).alias("p"),
         (F.col("l_suppkey") * 2 + 1).alias("s"),
@@ -4408,8 +4360,7 @@ FROM {prev} GROUP BY dist
     )
 
 
-QUERIES["trade_sssp_hops"] = q_trade_sssp_hops
-ORACLE_SQL["trade_sssp_hops"] = _sql_trade_sssp()
+register("trade_sssp_hops", q_trade_sssp_hops, _sql_trade_sssp())
 
 
 def q_multiset_status_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4426,7 +4377,7 @@ def q_multiset_status_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     hood — no join of the two sides materializes); the grouped counts
     after are map-side combined.
     """
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     a = o.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderstatus", "o_orderpriority"
     )
@@ -4458,8 +4409,7 @@ SELECT 'intersect_all' AS setop, o_orderstatus, o_orderpriority,
 FROM inter GROUP BY o_orderstatus, o_orderpriority
 """
 
-QUERIES["multiset_status_diff"] = q_multiset_status_diff
-ORACLE_SQL["multiset_status_diff"] = SQL_MULTISET_STATUS_DIFF
+register("multiset_status_diff", q_multiset_status_diff, SQL_MULTISET_STATUS_DIFF)
 
 
 def q_manifest_skipping_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4486,7 +4436,7 @@ def q_manifest_skipping_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stage = tempfile.mkdtemp(prefix="lf_skip_")
     path = f"{stage}/orders_rs"
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
     range_sorted_write(o, path, ["o_totalprice"], num_files=16)
@@ -4513,5 +4463,4 @@ WHERE o_totalprice BETWEEN 100000.0 AND 200000.0
 GROUP BY o_orderpriority
 """
 
-QUERIES["manifest_skipping_scan"] = q_manifest_skipping_scan
-ORACLE_SQL["manifest_skipping_scan"] = SQL_MANIFEST_SKIPPING_SCAN
+register("manifest_skipping_scan", q_manifest_skipping_scan, SQL_MANIFEST_SKIPPING_SCAN)

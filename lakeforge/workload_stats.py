@@ -28,19 +28,10 @@ from pyspark.sql import functions as F
 
 from lakeforge.cache import persist_tracked
 from lakeforge.functions.keys import duckdb_md5_int_sql, md5_int
+from lakeforge.io.sources import table
+from lakeforge.registry import register
 
 DEC = "decimal(18,2)"
-
-QUERIES: dict = {}
-ORACLE_SQL: dict[str, str] = {}
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # Memoized analyzed base scan of the immutable testdata table (r13
-    # floor opt — see io.sources.base_parquet: plan reuse, not a cache).
-    from lakeforge.io.sources import base_parquet
-
-    return base_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 # ---------------------------------------------------------------------------
@@ -63,8 +54,8 @@ def q_basket_brand_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     (shared by the dedup and the self-join via the same partitioning), one
     tiny by brand pair.
     """
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    p = table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     # baskets feeds the scalar total, the marginals, and BOTH self-join
     # sides: persist so the lineitem><part dedup pipeline runs once.
     baskets = persist_tracked(
@@ -141,8 +132,7 @@ JOIN sup sb ON sb.p_brand = pairs.brand_b
 CROSS JOIN tot
 """
 
-QUERIES["basket_brand_rules"] = q_basket_brand_rules
-ORACLE_SQL["basket_brand_rules"] = SQL_BASKET_BRAND_RULES
+register("basket_brand_rules", q_basket_brand_rules, SQL_BASKET_BRAND_RULES)
 
 
 # ---------------------------------------------------------------------------
@@ -160,8 +150,8 @@ def q_segment_priority_mi(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders↔customer join is an unhinted equi-join: AQE broadcasts the
     customer side while it fits and shuffle-joins at 100 TB.
     """
-    o = _t(spark, sf_dir, "orders").select("o_custkey", "o_orderpriority")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    o = table(spark, sf_dir, "orders").select("o_custkey", "o_orderpriority")
+    c = table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     # cells (<=25 rows) feeds marginals, total, and the MI join — persist
     # so the fact join underneath runs ONCE, not once per DAG branch.
     cells = persist_tracked(
@@ -235,8 +225,7 @@ hp AS (
 SELECT n, mi_nats, h_segment, h_priority FROM mi CROSS JOIN hs CROSS JOIN hp
 """
 
-QUERIES["segment_priority_mi"] = q_segment_priority_mi
-ORACLE_SQL["segment_priority_mi"] = SQL_SEGMENT_PRIORITY_MI
+register("segment_priority_mi", q_segment_priority_mi, SQL_SEGMENT_PRIORITY_MI)
 
 
 # ---------------------------------------------------------------------------
@@ -251,7 +240,7 @@ def q_price_qty_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     Python, no iteration: OLS in closed form from the co-moment sketch,
     which is exactly how a 100 TB regression should run.
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     y = F.col("l_extendedprice").cast("double")
     x = F.col("l_quantity").cast("double")
     return li.groupBy("l_returnflag").agg(
@@ -271,8 +260,7 @@ SELECT l_returnflag,
 FROM lineitem GROUP BY l_returnflag
 """
 
-QUERIES["price_qty_ols"] = q_price_qty_ols
-ORACLE_SQL["price_qty_ols"] = SQL_PRICE_QTY_OLS
+register("price_qty_ols", q_price_qty_ols, SQL_PRICE_QTY_OLS)
 
 
 # ---------------------------------------------------------------------------
@@ -290,7 +278,7 @@ def q_revenue_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue_mom_growth.  ``corr`` skips the NULL lag rows identically on
     both engines.
     """
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     daily = o.groupBy(F.to_date("o_orderdate").alias("day")).agg(
         F.sum(F.col("o_totalprice").cast(DEC)).alias("rev_dec")
     )
@@ -327,8 +315,7 @@ SELECT CAST(count(*) AS BIGINT) AS n_days,
 FROM series
 """
 
-QUERIES["revenue_autocorr"] = q_revenue_autocorr
-ORACLE_SQL["revenue_autocorr"] = SQL_REVENUE_AUTOCORR
+register("revenue_autocorr", q_revenue_autocorr, SQL_REVENUE_AUTOCORR)
 
 
 # ---------------------------------------------------------------------------
@@ -345,7 +332,7 @@ def q_woe_quantity_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic.  IV contributions per band sum to the feature's information
     value downstream.
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     band = F.least(
         F.lit(4), F.floor((F.col("l_quantity") - 1) / 10)
     ).cast("int")
@@ -401,8 +388,7 @@ SELECT qty_band, n, returned, kept,
 FROM c2 CROSS JOIN tot
 """
 
-QUERIES["woe_quantity_returns"] = q_woe_quantity_returns
-ORACLE_SQL["woe_quantity_returns"] = SQL_WOE_QUANTITY_RETURNS
+register("woe_quantity_returns", q_woe_quantity_returns, SQL_WOE_QUANTITY_RETURNS)
 
 
 # ---------------------------------------------------------------------------
@@ -427,8 +413,8 @@ def q_kmv_distinct_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same sketch is mergeable map-side: each partition keeps its local
     min-k, the shuffle carries O(k) values per (segment, block).
     """
-    o = _t(spark, sf_dir, "orders").select("o_custkey")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    o = table(spark, sf_dir, "orders").select("o_custkey")
+    c = table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     # pairs feeds the exact count AND the sketch selection: persist the
     # distinct (segment, hash) set so the fact join runs once.
     pairs = persist_tracked(
@@ -517,8 +503,7 @@ SELECT e.c_mktsegment, exact_distinct, kmv_estimate,
 FROM est e JOIN exact USING (c_mktsegment)
 """
 
-QUERIES["kmv_distinct_segments"] = q_kmv_distinct_segments
-ORACLE_SQL["kmv_distinct_segments"] = SQL_KMV_DISTINCT_SEGMENTS
+register("kmv_distinct_segments", q_kmv_distinct_segments, SQL_KMV_DISTINCT_SEGMENTS)
 
 
 # ---------------------------------------------------------------------------
@@ -540,7 +525,7 @@ def q_part_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle states the definition directly (NOT EXISTS dominance).
     Frontier is tiny by nature → broadcast back onto part for n_parts.
     """
-    p = _t(spark, sf_dir, "part").select("p_retailprice", "p_size")
+    p = table(spark, sf_dir, "part").select("p_retailprice", "p_size")
     from lakeforge.ops.analytics import pareto_frontier_2d
 
     frontier = pareto_frontier_2d(p, "p_retailprice", "p_size", block_width=100.0)
@@ -568,8 +553,7 @@ FROM part p JOIN frontier f
 GROUP BY f.p_retailprice, f.p_size
 """
 
-QUERIES["part_skyline"] = q_part_skyline
-ORACLE_SQL["part_skyline"] = SQL_PART_SKYLINE
+register("part_skyline", q_part_skyline, SQL_PART_SKYLINE)
 
 
 # ---------------------------------------------------------------------------
@@ -587,7 +571,7 @@ def q_customer_activity_intervals(spark: SparkSession, sf_dir: str) -> DataFrame
     parallel across customers, bounded rows within — then one aggregate
     per island and one per customer.
     """
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_custkey", F.to_date("o_orderdate").alias("s")
     )
     from lakeforge.ops.analytics import coalesce_intervals
@@ -638,8 +622,11 @@ SELECT o_custkey,
 FROM agg GROUP BY o_custkey
 """
 
-QUERIES["customer_activity_intervals"] = q_customer_activity_intervals
-ORACLE_SQL["customer_activity_intervals"] = SQL_CUSTOMER_ACTIVITY_INTERVALS
+register(
+    "customer_activity_intervals",
+    q_customer_activity_intervals,
+    SQL_CUSTOMER_ACTIVITY_INTERVALS,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -659,7 +646,7 @@ def q_kmv_year_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     64-row frames — the per-set sketches are the only thing that ever
     leaves a 100 TB scan.
     """
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_custkey", F.year("o_orderdate").alias("yr")
     )
     sets = persist_tracked(
@@ -774,8 +761,7 @@ SELECT exact_union, union_est, exact_inter,
 FROM est
 """
 
-QUERIES["kmv_year_overlap"] = q_kmv_year_overlap
-ORACLE_SQL["kmv_year_overlap"] = SQL_KMV_YEAR_OVERLAP
+register("kmv_year_overlap", q_kmv_year_overlap, SQL_KMV_YEAR_OVERLAP)
 
 
 # ---------------------------------------------------------------------------
@@ -795,7 +781,7 @@ def q_spend_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     row_number; only the final closed form G = 2Σr·x/(nΣx) − (n+1)/n
     drops to double.
     """
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     spend = o.groupBy("o_custkey").agg(
         F.sum(F.col("o_totalprice").cast(DEC)).alias("sp")
     )
@@ -853,8 +839,7 @@ SELECT n,
 FROM agg
 """
 
-QUERIES["spend_gini"] = q_spend_gini
-ORACLE_SQL["spend_gini"] = SQL_SPEND_GINI
+register("spend_gini", q_spend_gini, SQL_SPEND_GINI)
 
 
 # ---------------------------------------------------------------------------
@@ -872,8 +857,8 @@ def q_price_ks_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-partition window over the value domain.  Counts stay integer
     until the final ratio, so the block decomposition is exact.
     """
-    o = _t(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    o = table(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
+    c = table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     x = (
         o.join(c, o.o_custkey == c.c_custkey)
         .filter(F.col("c_mktsegment").isin("BUILDING", "AUTOMOBILE"))
@@ -963,8 +948,7 @@ FROM ecdf CROSS JOIN tot
 GROUP BY n_a, n_b
 """
 
-QUERIES["price_ks_segments"] = q_price_ks_segments
-ORACLE_SQL["price_ks_segments"] = SQL_PRICE_KS_SEGMENTS
+register("price_ks_segments", q_price_ks_segments, SQL_PRICE_KS_SEGMENTS)
 
 
 # ---------------------------------------------------------------------------
@@ -983,7 +967,7 @@ def q_revenue_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean-adjusted deviation drops to double, identically on both engines.
     Ties on the max break to the earliest day (deterministic).
     """
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     # daily (date-dimension rows) feeds the scalar stats AND the cumsum
     daily = persist_tracked(
         o.groupBy(F.to_date("o_orderdate").alias("day")).agg(
@@ -1046,8 +1030,7 @@ SELECT MIN(day) AS changepoint_day,
 FROM dev CROSS JOIN mx WHERE ad = m
 """
 
-QUERIES["revenue_changepoint"] = q_revenue_changepoint
-ORACLE_SQL["revenue_changepoint"] = SQL_REVENUE_CHANGEPOINT
+register("revenue_changepoint", q_revenue_changepoint, SQL_REVENUE_CHANGEPOINT)
 
 
 # ---------------------------------------------------------------------------
@@ -1070,10 +1053,10 @@ def q_ivm_join_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from lakeforge.ops.merge import join_delta, merge_aggregates
 
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderkey", F.col("o_totalprice").cast(DEC).alias("price")
     )
-    c = _t(spark, sf_dir, "customer").select(
+    c = table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("o_custkey"), "c_nationkey"
     )
     o_old = o.filter(F.col("o_orderkey") % 10 != 0)
@@ -1103,8 +1086,9 @@ FROM orders JOIN customer ON o_custkey = c_custkey
 GROUP BY c_nationkey
 """
 
-QUERIES["ivm_join_nation_revenue"] = q_ivm_join_nation_revenue
-ORACLE_SQL["ivm_join_nation_revenue"] = SQL_IVM_JOIN_NATION_REVENUE
+register(
+    "ivm_join_nation_revenue", q_ivm_join_nation_revenue, SQL_IVM_JOIN_NATION_REVENUE,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -1126,7 +1110,7 @@ def q_reorder_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides.  Emitted: one row per distinct EVENT duration with at-risk,
     events, censored-at-t, and S(t) in round-6 double.
     """
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_custkey", F.to_date("o_orderdate").alias("d")
     )
     horizon = o.agg(F.max("d").alias("mx"))
@@ -1230,8 +1214,7 @@ FROM factors
 QUALIFY d_t > 0
 """
 
-QUERIES["reorder_survival"] = q_reorder_survival
-ORACLE_SQL["reorder_survival"] = SQL_REORDER_SURVIVAL
+register("reorder_survival", q_reorder_survival, SQL_REORDER_SURVIVAL)
 
 
 # ---------------------------------------------------------------------------
@@ -1331,8 +1314,7 @@ SELECT seg, n_viewers, n_buyers,
 FROM cells
 """
 
-QUERIES["funnel_wilson_ci"] = q_funnel_wilson_ci
-ORACLE_SQL["funnel_wilson_ci"] = SQL_FUNNEL_WILSON_CI
+register("funnel_wilson_ci", q_funnel_wilson_ci, SQL_FUNNEL_WILSON_CI)
 
 
 # ---------------------------------------------------------------------------
@@ -1378,7 +1360,7 @@ def q_bootstrap_price_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     # first.  At 100 TB the scan has ample natural splits and this
     # round-robin exchange is noise next to the projection it feeds.
     o = (
-        _t(spark, sf_dir, "orders")
+        table(spark, sf_dir, "orders")
         .select("o_orderkey", "o_totalprice")
         .repartition(spark.sparkContext.defaultParallelism)
     )
@@ -1503,8 +1485,7 @@ SELECT n_orders, n_replicates,
 FROM agg
 """
 
-QUERIES["bootstrap_price_ci"] = q_bootstrap_price_ci
-ORACLE_SQL["bootstrap_price_ci"] = SQL_BOOTSTRAP_PRICE_CI
+register("bootstrap_price_ci", q_bootstrap_price_ci, SQL_BOOTSTRAP_PRICE_CI)
 
 
 # ---------------------------------------------------------------------------
@@ -1556,8 +1537,7 @@ GROUP BY step1, step2, step3
 HAVING count(*) >= {_PATH_MIN_SUPPORT}
 """
 
-QUERIES["user_path_3grams"] = q_user_path_3grams
-ORACLE_SQL["user_path_3grams"] = SQL_USER_PATH_3GRAMS
+register("user_path_3grams", q_user_path_3grams, SQL_USER_PATH_3GRAMS)
 
 
 # ---------------------------------------------------------------------------
@@ -1574,8 +1554,8 @@ def q_did_segment_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts); the estimator is column arithmetic on four numbers.  The
     orders↔customer join stays unhinted for AQE.
     """
-    o = _t(spark, sf_dir, "orders").select("o_custkey", "o_orderdate", "o_totalprice")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    o = table(spark, sf_dir, "orders").select("o_custkey", "o_orderdate", "o_totalprice")
+    c = table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     cells = (
         o.join(c, o.o_custkey == c.c_custkey)
         .select(
@@ -1636,8 +1616,7 @@ SELECT CAST(SUM(n) AS BIGINT) AS n_orders,
 FROM m
 """
 
-QUERIES["did_segment_effect"] = q_did_segment_effect
-ORACLE_SQL["did_segment_effect"] = SQL_DID_SEGMENT_EFFECT
+register("did_segment_effect", q_did_segment_effect, SQL_DID_SEGMENT_EFFECT)
 
 
 # ---------------------------------------------------------------------------
@@ -1651,7 +1630,7 @@ def q_benford_price_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
     nine cells; expected shares are log10(1+1/d) computed identically on
     both engines; chi-square contributions per digit.
     """
-    o = _t(spark, sf_dir, "orders").select("o_totalprice")
+    o = table(spark, sf_dir, "orders").select("o_totalprice")
     digit = F.floor(
         F.col("o_totalprice") / F.pow(F.lit(10.0), F.floor(F.log10("o_totalprice")))
     ).cast("int")
@@ -1698,8 +1677,7 @@ SELECT digit, n,
 FROM cells CROSS JOIN tot
 """
 
-QUERIES["benford_price_digits"] = q_benford_price_digits
-ORACLE_SQL["benford_price_digits"] = SQL_BENFORD_PRICE_DIGITS
+register("benford_price_digits", q_benford_price_digits, SQL_BENFORD_PRICE_DIGITS)
 
 
 # ---------------------------------------------------------------------------
@@ -1718,7 +1696,7 @@ def q_revenue_stl_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final z-scores drop to double.  Everything happens on the date
     dimension (fact collapses first, same posture as revenue_autocorr).
     """
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     daily = persist_tracked(
         o.groupBy(F.to_date("o_orderdate").alias("day")).agg(
             (F.sum(F.col("o_totalprice").cast(DEC)) * 100)
@@ -1787,8 +1765,7 @@ FROM resid CROSS JOIN sd
 WHERE abs(CAST(resid_u AS DOUBLE)) > 2.5 * sd_u
 """
 
-QUERIES["revenue_stl_outliers"] = q_revenue_stl_outliers
-ORACLE_SQL["revenue_stl_outliers"] = SQL_REVENUE_STL_OUTLIERS
+register("revenue_stl_outliers", q_revenue_stl_outliers, SQL_REVENUE_STL_OUTLIERS)
 
 
 # ---------------------------------------------------------------------------
@@ -1810,7 +1787,7 @@ def q_price_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from lakeforge.ops.analytics import psi_between
 
-    o = _t(spark, sf_dir, "orders").select("o_orderdate", "o_totalprice")
+    o = table(spark, sf_dir, "orders").select("o_orderdate", "o_totalprice")
     band = F.least(F.lit(9), F.floor(F.col("o_totalprice") / 50000)).cast("int")
     # one scan builds BOTH periods' band counts; the tiny cell frame is
     # persisted and split, so psi_between's full-outer align runs on two
@@ -1860,8 +1837,7 @@ SELECT price_band,
 FROM cells CROSS JOIN tot
 """
 
-QUERIES["price_psi_drift"] = q_price_psi_drift
-ORACLE_SQL["price_psi_drift"] = SQL_PRICE_PSI_DRIFT
+register("price_psi_drift", q_price_psi_drift, SQL_PRICE_PSI_DRIFT)
 
 
 def q_source_lang_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1876,7 +1852,7 @@ def q_source_lang_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     side is zero contribute only the present side's ½·p·ln(p/m) term —
     handled by the full outer join of per-source against corpus cells.
     """
-    docs = _t(spark, sf_dir, "documents").select("source", "lang")
+    docs = table(spark, sf_dir, "documents").select("source", "lang")
     cells = persist_tracked(
         docs.groupBy("source", "lang").agg(
             F.count(F.lit(1)).cast("bigint").alias("n")
@@ -1949,8 +1925,7 @@ SELECT p.source,
 FROM present p JOIN src_tot s USING (source)
 """
 
-QUERIES["source_lang_js_divergence"] = q_source_lang_js_divergence
-ORACLE_SQL["source_lang_js_divergence"] = SQL_SOURCE_LANG_JS
+register("source_lang_js_divergence", q_source_lang_js_divergence, SQL_SOURCE_LANG_JS)
 
 
 # ---------------------------------------------------------------------------
@@ -1970,7 +1945,7 @@ def q_suppkey_joinsize_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from lakeforge.ops.sketches import count_min_counters, count_min_join_size
 
-    li = _t(spark, sf_dir, "lineitem").select("l_suppkey", "l_shipdate")
+    li = table(spark, sf_dir, "lineitem").select("l_suppkey", "l_shipdate")
     a = li.where(F.col("l_shipdate") < "1997-01-01").select("l_suppkey")
     b = li.where(F.col("l_shipdate") >= "1997-01-01").select("l_suppkey")
     est = count_min_join_size(
@@ -2035,8 +2010,11 @@ FROM exact CROSS JOIN est
 
 SQL_SUPPKEY_JOINSIZE_ESTIMATE = _cms_join_sql()
 
-QUERIES["suppkey_joinsize_estimate"] = q_suppkey_joinsize_estimate
-ORACLE_SQL["suppkey_joinsize_estimate"] = SQL_SUPPKEY_JOINSIZE_ESTIMATE
+register(
+    "suppkey_joinsize_estimate",
+    q_suppkey_joinsize_estimate,
+    SQL_SUPPKEY_JOINSIZE_ESTIMATE,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -2061,8 +2039,8 @@ def q_lang_embedding_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     negative sums.  One row per (lang, pos): scalar columns only, no
     array comparison at the driver boundary.
     """
-    emb = _t(spark, sf_dir, "embeddings")
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
+    emb = table(spark, sf_dir, "embeddings")
+    docs = table(spark, sf_dir, "documents").select("doc_id", "lang")
     j = emb.join(docs, emb.vec_id == docs.doc_id)
     comp = j.select(
         "lang", F.posexplode("embedding").alias("pos", "v")
@@ -2103,8 +2081,9 @@ SELECT lang, pos, n_vectors,
 FROM g
 """
 
-QUERIES["lang_embedding_centroid"] = q_lang_embedding_centroid
-ORACLE_SQL["lang_embedding_centroid"] = SQL_LANG_EMBEDDING_CENTROID
+register(
+    "lang_embedding_centroid", q_lang_embedding_centroid, SQL_LANG_EMBEDDING_CENTROID,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -2131,7 +2110,7 @@ def q_winsorized_price_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     block-decomposition posture) or approx_percentile bounds; the
     join/clamp/mean stages are scale-clean as-is.
     """
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("pr"),
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("c"),
     )
@@ -2178,8 +2157,7 @@ FROM base JOIN b ON base.pr = b.pr
 GROUP BY base.pr, lo, hi
 """
 
-QUERIES["winsorized_price_stats"] = q_winsorized_price_stats
-ORACLE_SQL["winsorized_price_stats"] = SQL_WINSORIZED_PRICE_STATS
+register("winsorized_price_stats", q_winsorized_price_stats, SQL_WINSORIZED_PRICE_STATS)
 
 
 def q_theilsen_nation_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2198,13 +2176,13 @@ def q_theilsen_nation_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     on |nations| * |years| rows — bounded by the time dimension, never by
     fact size.  Same posture as revenue_autocorr's daily-series collapse.
     """
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.year("o_orderdate").cast("int").alias("yr"),
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("c"),
     )
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    cust = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    nation = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     yearly = (
         o.join(cust, o.o_custkey == cust.c_custkey)
         .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
@@ -2246,8 +2224,7 @@ SELECT n_name, CAST(count(*) AS BIGINT) AS n_pairs,
 FROM slopes GROUP BY n_name
 """
 
-QUERIES["theilsen_nation_trend"] = q_theilsen_nation_trend
-ORACLE_SQL["theilsen_nation_trend"] = SQL_THEILSEN_NATION_TREND
+register("theilsen_nation_trend", q_theilsen_nation_trend, SQL_THEILSEN_NATION_TREND)
 
 
 # ---------------------------------------------------------------------------
@@ -2275,7 +2252,7 @@ def q_embedding_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from lakeforge.ops.evaluation import roc_auc
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = table(spark, sf_dir, "embeddings")
     scored = emb.select(
         F.col("embedding")[0].cast("double").alias("score"),
         F.when(F.col("label") < 5, 1).otherwise(0).alias("pos"),
@@ -2314,8 +2291,7 @@ SELECT CAST(SUM(pos_n) AS BIGINT) AS n_pos,
 FROM c
 """
 
-QUERIES["embedding_auc"] = q_embedding_auc
-ORACLE_SQL["embedding_auc"] = SQL_EMBEDDING_AUC
+register("embedding_auc", q_embedding_auc, SQL_EMBEDDING_AUC)
 
 
 def q_score_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2333,7 +2309,7 @@ def q_score_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from lakeforge.ops.evaluation import calibration_table
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = table(spark, sf_dir, "embeddings")
     scored = emb.select(
         F.col("embedding")[0].cast("double").alias("score"),
         F.when(F.col("label") < 5, 1).otherwise(0).alias("pos"),
@@ -2356,8 +2332,7 @@ SELECT bin, CAST(COUNT(*) AS BIGINT) AS n,
 FROM s GROUP BY bin ORDER BY bin
 """
 
-QUERIES["score_calibration"] = q_score_calibration
-ORACLE_SQL["score_calibration"] = SQL_SCORE_CALIBRATION
+register("score_calibration", q_score_calibration, SQL_SCORE_CALIBRATION)
 
 
 def q_spearman_qty_price(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2376,7 +2351,7 @@ def q_spearman_qty_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     IEEE inputs on both engines).  Moment sums fit BIGINT through
     ~sf1; promote to decimal(38,0) sums beyond that.
     """
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = table(spark, sf_dir, "lineitem").select(
         F.col("l_quantity").cast("bigint").alias("x"),
         F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("y"),
     )
@@ -2473,8 +2448,7 @@ SELECT CAST(n AS BIGINT) AS n,
 FROM m
 """
 
-QUERIES["spearman_qty_price"] = q_spearman_qty_price
-ORACLE_SQL["spearman_qty_price"] = SQL_SPEARMAN_QTY_PRICE
+register("spearman_qty_price", q_spearman_qty_price, SQL_SPEARMAN_QTY_PRICE)
 
 
 def q_embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2490,7 +2464,7 @@ def q_embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning; second-moment sums fit BIGINT through ~1e9 rows at
     |v| <= 1 and promote to decimal(38,0) beyond.
     """
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = table(spark, sf_dir, "embeddings")
     d = emb.select(F.posexplode("embedding").alias("dim", "v")).select(
         F.col("dim").cast("int").alias("dim"),
         F.floor(F.col("v").cast("double") * 1000000).cast("bigint").alias("m"),
@@ -2523,8 +2497,7 @@ SELECT dim, CAST(COUNT(*) AS BIGINT) AS n,
 FROM d GROUP BY dim
 """
 
-QUERIES["embedding_dim_stats"] = q_embedding_dim_stats
-ORACLE_SQL["embedding_dim_stats"] = SQL_EMBEDDING_DIM_STATS
+register("embedding_dim_stats", q_embedding_dim_stats, SQL_EMBEDDING_DIM_STATS)
 
 
 def q_threshold_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2541,7 +2514,7 @@ def q_threshold_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from lakeforge.ops.evaluation import confusion_grid
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = table(spark, sf_dir, "embeddings")
     base = emb.select(
         F.floor(F.col("embedding")[0].cast("double") * 1000000)
         .cast("bigint")
@@ -2587,8 +2560,7 @@ SELECT CAST(t AS BIGINT) AS threshold_micros, tp, fp, fn, tn,
 FROM cells
 """
 
-QUERIES["threshold_confusion"] = q_threshold_confusion
-ORACLE_SQL["threshold_confusion"] = SQL_THRESHOLD_CONFUSION
+register("threshold_confusion", q_threshold_confusion, SQL_THRESHOLD_CONFUSION)
 
 
 def q_return_risk_auc_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2605,16 +2577,16 @@ def q_return_risk_auc_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     (all returned / none returned) emit NULL AUC rather than dividing
     by zero.
     """
-    li = _t(spark, sf_dir, "lineitem").groupBy("l_orderkey").agg(
+    li = table(spark, sf_dir, "lineitem").groupBy("l_orderkey").agg(
         F.max((F.col("l_returnflag") == "R").cast("int")).alias("pos")
     )
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_custkey",
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("score"),
     )
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    n = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     base = (
         o.join(li, o["o_orderkey"] == li["l_orderkey"])
         .join(c, o["o_custkey"] == c["c_custkey"])
@@ -2670,8 +2642,11 @@ SELECT n_name, n_pos, n_neg,
 FROM agg
 """
 
-QUERIES["return_risk_auc_by_nation"] = q_return_risk_auc_by_nation
-ORACLE_SQL["return_risk_auc_by_nation"] = SQL_RETURN_RISK_AUC_BY_NATION
+register(
+    "return_risk_auc_by_nation",
+    q_return_risk_auc_by_nation,
+    SQL_RETURN_RISK_AUC_BY_NATION,
+)
 
 
 def q_embedding_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2685,7 +2660,7 @@ def q_embedding_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from lakeforge.ops.evaluation import pr_curve
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = table(spark, sf_dir, "embeddings")
     scored = emb.select(
         F.col("embedding")[0].cast("double").alias("score"),
         F.when(F.col("label") < 5, 1).otherwise(0).alias("pos"),
@@ -2730,8 +2705,7 @@ SELECT score AS score_cut,
 FROM cum CROSS JOIN tot
 """
 
-QUERIES["embedding_pr_curve"] = q_embedding_pr_curve
-ORACLE_SQL["embedding_pr_curve"] = SQL_EMBEDDING_PR_CURVE
+register("embedding_pr_curve", q_embedding_pr_curve, SQL_EMBEDDING_PR_CURVE)
 
 
 def q_quantile_sketch_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2753,7 +2727,7 @@ def q_quantile_sketch_calibration(spark: SparkSession, sf_dir: str) -> DataFrame
     """
     from lakeforge.ops.analytics import blocked_prefix_sum
 
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("c")
     )
     o = persist_tracked(o)
@@ -2890,8 +2864,11 @@ SELECT CAST(est.q_permille AS BIGINT) AS q_permille,
 FROM est JOIN exact USING (q_permille)
 """
 
-QUERIES["quantile_sketch_calibration"] = q_quantile_sketch_calibration
-ORACLE_SQL["quantile_sketch_calibration"] = SQL_QUANTILE_SKETCH_CALIBRATION
+register(
+    "quantile_sketch_calibration",
+    q_quantile_sketch_calibration,
+    SQL_QUANTILE_SKETCH_CALIBRATION,
+)
 
 
 def q_join_skew_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2909,7 +2886,7 @@ def q_join_skew_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan-out that levels the hottest key to a median key's cost.
     """
     per_key = (
-        _t(spark, sf_dir, "orders")
+        table(spark, sf_dir, "orders")
         .groupBy("o_custkey")
         .agg(F.count(F.lit(1)).cast("bigint").alias("f"))
     )
@@ -3000,8 +2977,7 @@ SELECT n_rows, n_keys, max_freq, p50_freq, p99_freq,
 FROM tot CROSS JOIN p50 CROSS JOIN p99
 """
 
-QUERIES["join_skew_advisor"] = q_join_skew_advisor
-ORACLE_SQL["join_skew_advisor"] = SQL_JOIN_SKEW_ADVISOR
+register("join_skew_advisor", q_join_skew_advisor, SQL_JOIN_SKEW_ADVISOR)
 
 
 def q_multitouch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3091,8 +3067,7 @@ SELECT CAST(hour(view_ts) AS INT) AS view_hour,
 FROM credited GROUP BY 1
 """
 
-QUERIES["multitouch_attribution"] = q_multitouch_attribution
-ORACLE_SQL["multitouch_attribution"] = SQL_MULTITOUCH_ATTRIBUTION
+register("multitouch_attribution", q_multitouch_attribution, SQL_MULTITOUCH_ATTRIBUTION)
 
 
 def q_fk_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3112,7 +3087,7 @@ def q_fk_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     relationship of that child.  Three scans, three aggregates, five
     audit rows."""
 
-    def parent_keys(table: str, pk: str, marker: str) -> DataFrame:
+    def parent_keys(name: str, pk: str, marker: str) -> DataFrame:
         # DISTINCT before the marked LEFT join: the parent side is its
         # PRIMARY key, but an integrity audit must stay correct on the
         # corrupted data it exists to catch — a duplicated parent PK
@@ -3120,7 +3095,7 @@ def q_fk_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # for that child.  The slim key-only distinct shuffles no wider
         # than the countDistinct aggregates below already do.
         return (
-            _t(spark, sf_dir, table)
+            table(spark, sf_dir, name)
             .select(F.col(pk).alias(f"__{marker}_k"))
             .distinct()
             .withColumn(f"__{marker}", F.lit(1))
@@ -3162,7 +3137,7 @@ def q_fk_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         return res
 
     li_audit = audit(
-        _t(spark, sf_dir, "lineitem").select(
+        table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_partkey", "l_suppkey"
         ),
         [
@@ -3175,12 +3150,12 @@ def q_fk_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
     )
     o_audit = audit(
-        _t(spark, sf_dir, "orders").select("o_custkey"),
+        table(spark, sf_dir, "orders").select("o_custkey"),
         [("orders.o_custkey->customer", "o_custkey", "customer",
           "c_custkey", "c")],
     )
     c_audit = audit(
-        _t(spark, sf_dir, "customer").select("c_nationkey"),
+        table(spark, sf_dir, "customer").select("c_nationkey"),
         [("customer.c_nationkey->nation", "c_nationkey", "nation",
           "n_nationkey", "n")],
     )
@@ -3220,8 +3195,7 @@ FROM customer WHERE NOT EXISTS
   (SELECT 1 FROM nation WHERE n_nationkey = c_nationkey)
 """
 
-QUERIES["fk_integrity_audit"] = q_fk_integrity_audit
-ORACLE_SQL["fk_integrity_audit"] = SQL_FK_INTEGRITY_AUDIT
+register("fk_integrity_audit", q_fk_integrity_audit, SQL_FK_INTEGRITY_AUDIT)
 
 
 def q_orders_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3237,7 +3211,7 @@ def q_orders_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     timestamps to dates) so the profile hashes identically on both
     engines; all outputs are exact BIGINTs.
     """
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     pairs = o.select(
         F.expr(
             "stack(6,"
@@ -3298,8 +3272,7 @@ SELECT col,
 FROM hist GROUP BY col
 """
 
-QUERIES["orders_column_profile"] = q_orders_column_profile
-ORACLE_SQL["orders_column_profile"] = SQL_ORDERS_COLUMN_PROFILE
+register("orders_column_profile", q_orders_column_profile, SQL_ORDERS_COLUMN_PROFILE)
 
 
 def q_segmented_revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3315,7 +3288,7 @@ def q_segmented_revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     (round 6, identical IEEE on both engines).  Ties in the CUSUM max
     break to the earliest day, so the segmentation is deterministic.
     """
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     daily = persist_tracked(
         o.groupBy(F.to_date("o_orderdate").alias("day")).agg(
             F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
@@ -3425,8 +3398,9 @@ SELECT side,
 FROM m
 """
 
-QUERIES["segmented_revenue_trend"] = q_segmented_revenue_trend
-ORACLE_SQL["segmented_revenue_trend"] = SQL_SEGMENTED_REVENUE_TREND
+register(
+    "segmented_revenue_trend", q_segmented_revenue_trend, SQL_SEGMENTED_REVENUE_TREND,
+)
 
 
 def q_cuped_adjusted_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3566,5 +3540,4 @@ FROM g CROSS JOIN pooled
 ORDER BY variant
 """
 
-QUERIES["cuped_adjusted_lift"] = q_cuped_adjusted_lift
-ORACLE_SQL["cuped_adjusted_lift"] = SQL_CUPED_ADJUSTED_LIFT
+register("cuped_adjusted_lift", q_cuped_adjusted_lift, SQL_CUPED_ADJUSTED_LIFT)

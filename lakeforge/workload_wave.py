@@ -22,17 +22,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lakeforge.functions.keys import duckdb_md5_int_sql, md5_int
-
-QUERIES: dict = {}
-ORACLE_SQL: dict[str, str] = {}
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # Memoized analyzed base scan of the immutable testdata table (r13
-    # floor opt — see io.sources.base_parquet: plan reuse, not a cache).
-    from lakeforge.io.sources import base_parquet
-
-    return base_parquet(spark, f"{sf_dir}/{name}.parquet")
+from lakeforge.io.sources import table
+from lakeforge.registry import register
 
 
 # ---------------------------------------------------------------------------
@@ -51,7 +42,7 @@ def q_docs_type_token_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one row-local explode of whitespace tokens, one aggregate to
     (doc, word) counts, one aggregate to docs.  Shuffle key is doc_id —
     fan-out is token count, linear in corpus bytes."""
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    d = table(spark, sf_dir, "documents").select("doc_id", "text")
     words = d.select(
         "doc_id",
         F.explode(F.split(F.col("text"), " +")).alias("w"),
@@ -90,8 +81,7 @@ SELECT doc_id,
 FROM pw GROUP BY doc_id
 """
 
-QUERIES["docs_type_token_ratio"] = q_docs_type_token_ratio
-ORACLE_SQL["docs_type_token_ratio"] = SQL_DOCS_TTR
+register("docs_type_token_ratio", q_docs_type_token_ratio, SQL_DOCS_TTR)
 
 
 # ---------------------------------------------------------------------------
@@ -110,7 +100,7 @@ def q_source_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one map-side-combined aggregate to ~|sources| rows, then two
     broadcast 1-row scalars for the normalizers — nothing wider than the
     source table ever shuffles; at 100 TB this is the same plan."""
-    d = _t(spark, sf_dir, "documents").groupBy("source").agg(
+    d = table(spark, sf_dir, "documents").groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum("n_chars").cast("bigint").alias("n_chars"),
     )
@@ -159,8 +149,7 @@ SELECT source, n_docs, n_chars,
 FROM s, tot
 """
 
-QUERIES["source_temperature_mix"] = q_source_temperature_mix
-ORACLE_SQL["source_temperature_mix"] = SQL_SOURCE_TEMPERATURE_MIX
+register("source_temperature_mix", q_source_temperature_mix, SQL_SOURCE_TEMPERATURE_MIX)
 
 
 # ---------------------------------------------------------------------------
@@ -232,8 +221,11 @@ SELECT CASE WHEN late_us = 0 THEN CAST(-1 AS BIGINT)
 FROM late GROUP BY 1
 """
 
-QUERIES["events_watermark_lateness"] = q_events_watermark_lateness
-ORACLE_SQL["events_watermark_lateness"] = SQL_EVENTS_WATERMARK_LATENESS
+register(
+    "events_watermark_lateness",
+    q_events_watermark_lateness,
+    SQL_EVENTS_WATERMARK_LATENESS,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -254,7 +246,7 @@ def q_supplier_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter, then two bounded joins against the distinct (part, supplier)
     edge list (per-part supplier degree is schema-bounded).  At 100 TB
     candidates grow with ORDERS, not with degree²."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     # r12 note: persisting lp/edges here was tried and REVERTED (ABBA
     # A/B ratio 1.42x WORSE) — AQE's runtime exchange reuse already
     # dedupes these symmetric distinct subtrees at execution, so the
@@ -335,8 +327,11 @@ JOIN deg da ON da.l_partkey = c.pa
 JOIN deg db ON db.l_partkey = c.pb
 """
 
-QUERIES["supplier_link_prediction"] = q_supplier_link_prediction
-ORACLE_SQL["supplier_link_prediction"] = SQL_SUPPLIER_LINK_PREDICTION
+register(
+    "supplier_link_prediction",
+    q_supplier_link_prediction,
+    SQL_SUPPLIER_LINK_PREDICTION,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -360,7 +355,7 @@ def q_fifo_lot_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
     each part, pruned by the overlap predicate; reported per part.  At
     100 TB the per-part basket stays bounded, so candidates grow with
     parts — linear."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = table(spark, sf_dir, "lineitem").select(
         "l_partkey",
         "l_orderkey",
         "l_linenumber",
@@ -430,8 +425,7 @@ FROM lots l JOIN dem d
 GROUP BY 1
 """
 
-QUERIES["fifo_lot_matching"] = q_fifo_lot_matching
-ORACLE_SQL["fifo_lot_matching"] = SQL_FIFO_LOT_MATCHING
+register("fifo_lot_matching", q_fifo_lot_matching, SQL_FIFO_LOT_MATCHING)
 
 
 # ---------------------------------------------------------------------------
@@ -486,7 +480,7 @@ def q_embedding_signlsh_neardup(
 
     _ = md5_int  # SQL twin derives the same signs via md5_int's contract
 
-    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     xi = "transform(embedding, v -> CAST(round(CAST(v AS DOUBLE) * 1000000) AS BIGINT))"
     base = emb.select(
         "vec_id",
@@ -652,8 +646,7 @@ WHERE d.dot > 0
 """
 
 
-QUERIES["embedding_signlsh_neardup"] = q_embedding_signlsh_neardup
-ORACLE_SQL["embedding_signlsh_neardup"] = _sql_signlsh()
+register("embedding_signlsh_neardup", q_embedding_signlsh_neardup, _sql_signlsh())
 
 
 # ---------------------------------------------------------------------------
@@ -674,9 +667,9 @@ def q_nation_spend_lerp(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells, dimension-sized spine, then TWO windows per nation (carry last
     observation forward / first backward); one narrow shuffle of the cell
     table, never of the fact."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
+    o = table(spark, sf_dir, "orders")
+    c = table(spark, sf_dir, "customer")
+    n = table(spark, sf_dir, "nation")
     cells = (
         o.join(c.select("c_custkey", "c_nationkey"),
                o.o_custkey == c.c_custkey)
@@ -777,8 +770,7 @@ SELECT nationkey, n_name, month,
 FROM anch
 """
 
-QUERIES["nation_spend_lerp"] = q_nation_spend_lerp
-ORACLE_SQL["nation_spend_lerp"] = SQL_NATION_SPEND_LERP
+register("nation_spend_lerp", q_nation_spend_lerp, SQL_NATION_SPEND_LERP)
 
 
 # ---------------------------------------------------------------------------
@@ -802,7 +794,7 @@ def q_orders_temporal_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one map-side-combined date histogram, one bounded driver
     cumulate for two cut dates, one scan with a CASE — two scans total,
     zero wide shuffles beyond the histogram's."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         F.col("o_orderdate").cast("date").alias("d"),
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
     )
@@ -868,8 +860,7 @@ FROM o, cuts
 GROUP BY 1
 """
 
-QUERIES["orders_temporal_split"] = q_orders_temporal_split
-ORACLE_SQL["orders_temporal_split"] = SQL_ORDERS_TEMPORAL_SPLIT
+register("orders_temporal_split", q_orders_temporal_split, SQL_ORDERS_TEMPORAL_SPLIT)
 
 
 # ---------------------------------------------------------------------------
@@ -1035,8 +1026,11 @@ SELECT w.user_id,
 FROM walk w JOIN n_per n ON n.user_id = w.user_id AND w.i = n.n
 """
 
-QUERIES["events_rate_limit_replay"] = q_events_rate_limit_replay
-ORACLE_SQL["events_rate_limit_replay"] = SQL_EVENTS_RATE_LIMIT_REPLAY
+register(
+    "events_rate_limit_replay",
+    q_events_rate_limit_replay,
+    SQL_EVENTS_RATE_LIMIT_REPLAY,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -1070,11 +1064,11 @@ def q_erasure_impact_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     to a key list is only semi-join-equivalent when the keys are
     unique, and an audit must stay correct on exactly the corrupted
     (duplicate-key) data it exists to measure."""
-    cust = _t(spark, sf_dir, "customer").select("c_custkey")
+    cust = table(spark, sf_dir, "customer").select("c_custkey")
     in_cohort = md5_int(F.lit("erase"), F.col("c_custkey")) % 199 == 0
     cohort = cust.filter(in_cohort).distinct()
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey")
+    orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    li = table(spark, sf_dir, "lineitem").select("l_orderkey")
 
     def _audit(marked: DataFrame, flag: str, name: str) -> DataFrame:
         return marked.agg(
@@ -1142,8 +1136,7 @@ FROM t
 """
 
 
-QUERIES["erasure_impact_audit"] = q_erasure_impact_audit
-ORACLE_SQL["erasure_impact_audit"] = _sql_erasure()
+register("erasure_impact_audit", q_erasure_impact_audit, _sql_erasure())
 
 
 # ---------------------------------------------------------------------------
@@ -1163,7 +1156,7 @@ def q_customer_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     back (shuffle on custkey — or zero-shuffle when both are bucketed),
     one aggregate to the matrix, whose size is months² — bounded by the
     calendar, not data.  Exact integer permille."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.date_trunc("month", "o_orderdate").cast("date").alias("m"),
     )
@@ -1220,8 +1213,11 @@ SELECT c.cohort, c.months_since, c.active_n, s.cohort_n,
 FROM cells c JOIN sizes s USING (cohort)
 """
 
-QUERIES["customer_cohort_retention"] = q_customer_cohort_retention
-ORACLE_SQL["customer_cohort_retention"] = SQL_CUSTOMER_COHORT_RETENTION
+register(
+    "customer_cohort_retention",
+    q_customer_cohort_retention,
+    SQL_CUSTOMER_COHORT_RETENTION,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -1244,7 +1240,7 @@ def q_docs_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc, one join back on the gram hash (64-bit fingerprints shuffle,
     never the gram strings), two counts per doc.  Linear in corpus
     tokens at any scale."""
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    d = table(spark, sf_dir, "documents").select("doc_id", "text")
     toks = d.select(
         "doc_id", F.split(F.col("text"), " +").alias("ws")
     ).select(
@@ -1318,8 +1314,7 @@ GROUP BY g.doc_id
 """
 
 
-QUERIES["docs_ngram_novelty"] = q_docs_ngram_novelty
-ORACLE_SQL["docs_ngram_novelty"] = _sql_novelty()
+register("docs_ngram_novelty", q_docs_ngram_novelty, _sql_novelty())
 
 
 # ---------------------------------------------------------------------------
@@ -1342,7 +1337,7 @@ def q_part_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     of nothing — the per-part total rides a second grouped aggregate
     via a window-free two-pass (groupBy twice); all map-side
     combinable, only keys and two bigints shuffle."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey",
         F.col("l_quantity").cast("bigint").alias("q"),
     )
@@ -1384,5 +1379,4 @@ SELECT l_partkey, n_suppliers, total_qty,
 FROM shares GROUP BY 1, 2, 3
 """
 
-QUERIES["part_supplier_hhi"] = q_part_supplier_hhi
-ORACLE_SQL["part_supplier_hhi"] = SQL_PART_SUPPLIER_HHI
+register("part_supplier_hhi", q_part_supplier_hhi, SQL_PART_SUPPLIER_HHI)

@@ -2,6 +2,9 @@ from __future__ import annotations
 
 import pytest
 
+# The registry's order is import order: load the workload before any test
+# module imports a workload_* family module directly.
+import lakeforge.workload  # noqa: F401
 from lakeforge.session import get_spark
 
 

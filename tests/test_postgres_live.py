@@ -1,9 +1,7 @@
 """LIVE PostgreSQL round-trip for the gold JDBC sink (reference S5:
-gold_sql_to_postgres.py:31-44) — the one surface every prior round could
-only attest via embedded Derby + the DuckDB DDL contract because the
-sandbox shipped no server.  This round it does (PostgreSQL 15 binaries);
-tools/pg_smoke.py boots a throwaway cluster and these tests attest, on a
-REAL Postgres:
+gold_sql_to_postgres.py:31-44).  A module-scoped fixture boots a
+throwaway PostgreSQL server with the benchmark's launcher
+(``perfbench/pg.py``) and these tests attest, on a REAL Postgres:
 
 - the generated 01_ddl.sql (io/ddl.py) executes verbatim;
 - write_jdbc with mode=overwrite + truncate=true loads every gold table
@@ -14,50 +12,36 @@ REAL Postgres:
 - read-back through spark.read.jdbc is row-exact against the frames the
   medallion pipeline produced.
 
-Skips (not fails) without a reachable server or a driver jar: that is an
-environment gap, not an engine bug.  Boot a server with:
-    python tools/pg_smoke.py --start
+Skips (not fails) when the PostgreSQL binaries (initdb, postgres, psql),
+``unshare`` or the JDBC driver jar are missing: that is an environment
+gap, not an engine bug.
 """
 
 from __future__ import annotations
 
-import os
-import subprocess
+import shutil
 
 import pytest
 
 from lakeforge.io.jdbc_driver import find_postgres_jar
-
-PG_HOST = os.environ.get("LAKEFORGE_PG_HOST", "127.0.0.1")
-PG_PORT = os.environ.get("LAKEFORGE_PG_PORT", "5445")
-PG_USER = os.environ.get("LAKEFORGE_PG_USER", "pguser")
-PG_DB = os.environ.get("LAKEFORGE_PG_DB", "dwh")
-PG_URL = f"jdbc:postgresql://{PG_HOST}:{PG_PORT}/{PG_DB}"
-
-
-def _psql(sql: str) -> str:
-    out = subprocess.run(
-        ["psql", "-h", PG_HOST, "-p", PG_PORT, "-U", PG_USER, "-d", PG_DB,
-         "-v", "ON_ERROR_STOP=1", "-tA", "-c", sql],
-        capture_output=True, text=True, timeout=60,
-    )
-    if out.returncode != 0:
-        raise RuntimeError(out.stderr.strip())
-    return out.stdout.strip()
-
-
-def _pg_alive() -> bool:
-    try:
-        return _psql("SELECT 1") == "1"
-    except Exception:
-        return False
-
+from perfbench.pg import USER as PG_USER
+from perfbench.pg import Postgres
 
 pytestmark = pytest.mark.skipif(
-    not (_pg_alive() and find_postgres_jar()),
-    reason="no live PostgreSQL at "
-    f"{PG_HOST}:{PG_PORT} or no JDBC driver jar (run tools/pg_smoke.py --start)",
+    not find_postgres_jar()
+    or any(shutil.which(t) is None for t in ("initdb", "postgres", "psql", "unshare")),
+    reason="PostgreSQL binaries, unshare or the JDBC driver jar missing",
 )
+
+
+@pytest.fixture(scope="module")
+def pg(tmp_path_factory):
+    server = Postgres(str(tmp_path_factory.mktemp("pg") / "cluster"))
+    try:
+        server.start()
+        yield server
+    finally:
+        server.stop()
 
 
 @pytest.fixture(scope="module")
@@ -77,7 +61,7 @@ def gold(spark, tmp_path_factory):
 
 
 @pytest.fixture(scope="module")
-def ddl_applied(gold):
+def ddl_applied(pg, gold):
     """Apply the GENERATED DDL verbatim on the live server, once per
     module — so every test below stands alone (selectable with -k)
     instead of depending on the readback test having run first."""
@@ -86,23 +70,23 @@ def ddl_applied(gold):
     from lakeforge.io.ddl import star_schema_ddl
 
     for name in gold:
-        _psql(f"DROP TABLE IF EXISTS {name} CASCADE")
+        pg.psql(f"DROP TABLE IF EXISTS {name} CASCADE")
     for stmt in star_schema_ddl(gold, STAR_DDL_KEYS).split("\n\n"):
-        _psql(stmt)
+        pg.psql(stmt)
     return STAR_DDL_KEYS
 
 
-def test_gold_load_and_readback_row_exact(spark, gold, ddl_applied):
+def test_gold_load_and_readback_row_exact(spark, pg, gold, ddl_applied):
     from lakeforge.io.sinks import write_jdbc
 
     for name, df in gold.items():
         write_jdbc(
-            df, PG_URL, name, user=PG_USER, password="",
+            df, pg.url, name, user=PG_USER, password="",
             num_partitions=4, mode="overwrite", truncate=True,
         )
         back = (
             spark.read.format("jdbc")
-            .option("url", PG_URL)
+            .option("url", pg.url)
             .option("dbtable", name)
             .option("user", PG_USER)
             .option("password", "")
@@ -112,25 +96,25 @@ def test_gold_load_and_readback_row_exact(spark, gold, ddl_applied):
         want = {tuple(r) for r in df.collect()}
         got = {tuple(r) for r in back.select(*df.columns).collect()}
         assert got == want, name
-        assert int(_psql(f"SELECT count(*) FROM {name}")) == len(want)
+        assert int(pg.psql(f"SELECT count(*) FROM {name}")) == len(want)
 
 
-def test_overwrite_truncates_and_preserves_primary_keys(spark, gold, ddl_applied):
+def test_overwrite_truncates_and_preserves_primary_keys(spark, pg, gold, ddl_applied):
     """The reference's truncate=true knob exists precisely so reloads keep
     the DDL; assert the PKs are still there AFTER a second overwrite."""
     from lakeforge.io.sinks import write_jdbc
 
     for name, keys in ddl_applied.items():
         write_jdbc(
-            gold[name], PG_URL, name, user=PG_USER, password="",
+            gold[name], pg.url, name, user=PG_USER, password="",
             num_partitions=2, mode="overwrite", truncate=True,
         )
-        n_pk = _psql(
+        n_pk = pg.psql(
             "SELECT count(*) FROM information_schema.table_constraints "
             f"WHERE table_name = '{name}' AND constraint_type = 'PRIMARY KEY'"
         )
         assert n_pk == "1", f"{name}: primary key lost on overwrite"
-        cols = _psql(
+        cols = pg.psql(
             "SELECT kcu.column_name FROM information_schema.key_column_usage kcu "
             "JOIN information_schema.table_constraints tc "
             "  ON tc.constraint_name = kcu.constraint_name "
@@ -140,7 +124,7 @@ def test_overwrite_truncates_and_preserves_primary_keys(spark, gold, ddl_applied
         assert cols == keys, name
 
 
-def test_month_scoped_reload_matches_reference_knobs(spark, gold, ddl_applied):
+def test_month_scoped_reload_matches_reference_knobs(spark, pg, gold, ddl_applied):
     """The reference loads per-month slices (PROCESS_YM) with the same
     sink knobs; a scoped fact reload through the identical path must
     leave only that slice (full-table truncate semantics: the scope is
@@ -160,15 +144,15 @@ def test_month_scoped_reload_matches_reference_knobs(spark, gold, ddl_applied):
     scoped = fact.filter(F.date_format("snapshot_date", "yyyyMM") == one)
     try:
         write_jdbc(
-            scoped, PG_URL, "fact_account_snapshot", user=PG_USER, password="",
+            scoped, pg.url, "fact_account_snapshot", user=PG_USER, password="",
             num_partitions=2, mode="overwrite", truncate=True,
         )
-        n = int(_psql("SELECT count(*) FROM fact_account_snapshot"))
+        n = int(pg.psql("SELECT count(*) FROM fact_account_snapshot"))
         assert n == scoped.count()
     finally:
         # restore the full fact even when the assertion fails, so a later
         # run (or test) never sees a truncated table
         write_jdbc(
-            fact, PG_URL, "fact_account_snapshot", user=PG_USER, password="",
+            fact, pg.url, "fact_account_snapshot", user=PG_USER, password="",
             num_partitions=2, mode="overwrite", truncate=True,
         )

@@ -139,3 +139,22 @@ def test_base_parquet_refreshes_on_rewrite(spark, tmp_path):
     b = base_parquet(spark, p)
     assert b is not a
     assert b.count() == 1 and n1 > 1
+
+
+def test_base_parquet_sees_rewrite_inside_directory(spark, tmp_path):
+    """A directory's stat does not change when the files below it change
+    (here: a part file lands in an existing partition directory), so a
+    directory dataset is never served from the memo: the second read
+    sees the new rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from lakeforge.io.sources import base_parquet
+
+    d = tmp_path / "ds"
+    (d / "p=1").mkdir(parents=True)
+    pq.write_table(pa.table({"k": [1, 2, 3]}), d / "p=1" / "part-0.parquet")
+    assert sorted(r.k for r in base_parquet(spark, str(d)).collect()) == [1, 2, 3]
+    pq.write_table(pa.table({"k": [7, 8]}), d / "p=1" / "part-1.parquet")
+    got = sorted(r.k for r in base_parquet(spark, str(d)).collect())
+    assert got == [1, 2, 3, 7, 8]

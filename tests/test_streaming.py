@@ -165,6 +165,60 @@ def test_sessionize_stateful_matches_batch_sessions(spark, tmp_path):
     assert expected_nonfinal <= got, "missed an in-stream-closed session"
 
 
+def test_sessionize_stateful_same_sessions_for_any_file_split(spark, tmp_path):
+    """A session carried across micro-batches continues into the next
+    batch's first events: two files read one per trigger emit the same
+    (user, start, end, n) set as one batch over both files."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from lakeforge.streaming.events import sessionize_stateful
+
+    t0 = dt.datetime(2024, 1, 1)
+    files = {
+        # user 1 continues its carried session with several events, user 2
+        # closes its carried session, user 4 continues with one event.
+        "a.parquet": [(1, 0), (1, 600), (1, 1200), (2, 100), (4, 300)],
+        "b.parquet": [(1, 1500), (1, 2000), (1, 10000), (1, 10100),
+                      (2, 5000), (2, 5100), (4, 900), (3, 50), (3, 20000)],
+    }
+    src = tmp_path / "events_split"
+    src.mkdir()
+    event_id = 0
+    for i, (name, rows) in enumerate(files.items()):
+        n = len(rows)
+        pq.write_table(
+            pa.table({
+                "event_id": pa.array(range(event_id, event_id + n), pa.int64()),
+                "ts": pa.array([t0 + dt.timedelta(seconds=s) for _, s in rows],
+                               pa.timestamp("us", tz="UTC")),
+                "user_id": pa.array([u for u, _ in rows], pa.int64()),
+                "event_type": ["view"] * n,
+                "value": [1.0] * n,
+                "props": ["{}"] * n,
+            }),
+            src / name,
+        )
+        os.utime(src / name, (1_700_000_000 + i, 1_700_000_000 + i))
+        event_id += n
+
+    def sessions(max_files, query_name):
+        stream = read_events_stream(spark, str(src), max_files_per_trigger=max_files)
+        out = run_available_now(
+            sessionize_stateful(stream, gap_seconds=1800), query_name, "append"
+        )
+        return {
+            (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
+            for r in out.collect()
+        }
+
+    split = sessions(1, "sessionize_split_test")
+    assert split == sessions(None, "sessionize_single_test")
+    assert (1, t0, t0 + dt.timedelta(seconds=2000), 5) in split
+
+
 @pytest.mark.skipif(not os.path.exists(SF_DIR), reason="driver testdata absent")
 def test_stream_checkpoint_exactly_once_across_restarts(spark, tmp_path):
     """Checkpointed file-source -> parquet-sink stream, run twice: files
