@@ -12,15 +12,15 @@ lifetime — steady cache pressure that degrades every later query.
 The fix is a registry with query-boundary scope:
 
 - operators call :func:`persist_tracked` (persist + register) or
-  :func:`track` (register an already-materialized frame, e.g. a
-  ``localCheckpoint``);
+  :func:`track_rdds` (register the blocks of an already-materialized
+  ``localCheckpoint``, taken with :func:`checkpoint_eager`);
 - the caller invokes :func:`release_all` after materializing each query's
   result (bench.py between queries, tools/check_oracle.py per query,
   tests via fixture).
 
 Correctness is unaffected by an early release of a *persisted* frame —
 lineage is intact, a re-materialization just recomputes.  Frames registered
-via :func:`track` (localCheckpoints, lineage truncated) must not be re-read
+via :func:`track_rdds` (localCheckpoints, lineage truncated) must not be re-read
 after release; ``release_all`` is strictly a query-boundary operation.
 
 At 100 TB the same discipline matters more, not less: executor storage
@@ -50,10 +50,12 @@ def persist_tracked(
     return df
 
 
-def track_releaser(fn: Callable[[bool], None]) -> None:
-    """Register a release callback (e.g. RDD-id unpersist for a
-    localCheckpoint) to run at the next :func:`release_all`."""
-    _TRACKED.append(("fn", fn))
+def track_rdds(spark, ids: set[int]) -> None:
+    """Register the cached blocks of RDD ids (e.g. a ``localCheckpoint``
+    an operator returns) for release at the next :func:`release_all`."""
+    _TRACKED.append(
+        ("fn", lambda blocking: unpersist_rdd_ids(spark, ids, blocking))
+    )
 
 
 def release_all(blocking: bool = False) -> int:
@@ -93,17 +95,22 @@ def unpersist_rdd_ids(spark, ids: set[int], blocking: bool = False) -> None:
             jmap.get(k).unpersist(blocking)
 
 
-def checkpoint_eager(df: DataFrame) -> tuple[DataFrame, set[int]]:
-    """Eager ``localCheckpoint`` returning ``(checkpointed_df, new_rdd_ids)``.
+def checkpoint_eager(
+    df: DataFrame, eager: bool = True
+) -> tuple[DataFrame, set[int]]:
+    """``localCheckpoint`` returning ``(checkpointed_df, new_rdd_ids)``.
 
-    For TERMINAL checkpoints — a frame checkpointed only to break a
-    read->overwrite lineage and consumed by exactly one following write
-    action — the caller unpersists the returned ids immediately after the
-    write (``unpersist_rdd_ids``), so the blocks never outlive the query
-    (VERDICT r06 #1: three such sites leaked for the session lifetime)."""
+    The ids are the handle the caller releases the blocks by
+    (``unpersist_rdd_ids`` or :func:`track_rdds`).  A TERMINAL checkpoint
+    — one that only breaks a read->overwrite lineage before exactly one
+    write — is released right after that write, so the blocks never
+    outlive the query (VERDICT r06 #1: three such sites leaked for the
+    session lifetime).  ``eager=False`` marks the RDD persistent at call
+    time (so its id is already known) and lets the caller's next action
+    materialize the blocks: a checkpoint fused with a count is one job."""
     spark = df.sparkSession
     before = rdd_ids(spark)
-    out = df.localCheckpoint(eager=True)
+    out = df.localCheckpoint(eager=eager)
     return out, rdd_ids(spark) - before
 
 

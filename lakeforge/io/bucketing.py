@@ -39,10 +39,6 @@ def write_bucketed(
     w.format("parquet").saveAsTable(table)
 
 
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
-
-
 def bucketed_join(
     spark: SparkSession, left_table: str, right_table: str, on: list[str], how: str = "inner"
 ) -> DataFrame:

@@ -5,8 +5,7 @@ Scale notes:
 - ``write_partitioned_parquet`` repartitions by the partition columns first so
   each Hive partition gets one writer task (no small-file explosion: without
   it, every task writes a sliver into every partition — tasks x partitions
-  files).  For very hot partitions pass ``files_per_partition > 1`` to shard
-  writers by a salt.
+  files).
 - Dynamic partition overwrite (session default, session.py) means an
   incremental merge rewrites only the partitions present in the frame — the
   behavior the reference README claims (README.md:213) but its code does not
@@ -18,42 +17,32 @@ Scale notes:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def write_partitioned_parquet(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str] | None = None,
-    mode: str = "overwrite",
-    files_per_partition: int = 1,
-    compression: str = "snappy",
-    partition_overwrite: str = "dynamic",
+    df: DataFrame, path: str, partition_cols: list[str] | None = None
 ) -> None:
     """Partitioned Snappy-Parquet sink (reference S4: bronze_to_silver.py:70-78).
 
-    ``partition_overwrite`` is set PER-WRITER (not session config): the
-    partition-scoped merge is only correct under dynamic overwrite, and a
-    caller may hand us a SparkSession that wasn't built by ``get_spark`` —
-    with the session-level default static, an overwrite would silently
-    truncate every untouched partition.  Pass "static" explicitly to
-    replace the whole table.
+    Overwrites: the whole table when unpartitioned, otherwise only the
+    partitions present in ``df``.
     """
-    if partition_cols:
-        if files_per_partition > 1:
-            salt = (F.xxhash64(*[F.col(c) for c in df.columns]) % files_per_partition)
-            df = df.repartition(*[F.col(c) for c in partition_cols], salt)
-        else:
-            df = df.repartition(*partition_cols)
-        (
-            df.write.mode(mode)
-            .option("compression", compression)
-            .option("partitionOverwriteMode", partition_overwrite)
-            .partitionBy(*partition_cols)
-            .parquet(path)
-        )
-    else:
-        df.write.mode(mode).option("compression", compression).parquet(path)
+    if not partition_cols:
+        df.write.mode("overwrite").option("compression", "snappy").parquet(path)
+        return
+    (
+        df.repartition(*partition_cols)
+        .write.mode("overwrite")
+        .option("compression", "snappy")
+        # Dynamic overwrite is pinned PER-WRITER (not session config): the
+        # partition-scoped merge is only correct under it, and a caller may
+        # hand us a SparkSession that wasn't built by ``get_spark`` — with
+        # the session-level default static, an overwrite would silently
+        # truncate every untouched partition.
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_cols)
+        .parquet(path)
+    )
 
 
 def write_jdbc(

@@ -3,9 +3,9 @@ gold_sql_to_postgres.py:46-50; SURVEY.md §2.1).
 
 Scale notes:
 - Schemas are always enforced (no inference scan).
-- The existence probe is catalog-level (``try``/``AnalysisException``), not
-  ``os.path.exists`` — the reference's driver-side filesystem check
-  (bronze_to_silver.py:97) breaks on object stores (s3a/abfss).
+- The existence probe asks Hadoop ``FileSystem``, not ``os.path.exists`` —
+  the reference's driver-side filesystem check (bronze_to_silver.py:97)
+  breaks on object stores (s3a/abfss).
 - Filters and projections applied on top of these scans push down to the
   parquet/CSV reader via Catalyst (verify with
   ``df.explain('formatted')`` → ``PushedFilters`` / ``ReadSchema``).
@@ -15,7 +15,6 @@ from __future__ import annotations
 
 import os
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -62,17 +61,12 @@ def data_version(path: str) -> tuple[int, int]:
     return total, newest
 
 
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: StructType,
-    header: bool = True,
-    mode: str = "PERMISSIVE",
-) -> DataFrame:
-    """Schema-enforced CSV scan (reference S1: bronze_to_silver.py:57-64)."""
+def read_csv(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
+    """Schema-enforced CSV scan with a header row, PERMISSIVE on malformed
+    rows (reference S1: bronze_to_silver.py:57-64)."""
     return (
-        spark.read.option("header", header)
-        .option("mode", mode)
+        spark.read.option("header", True)
+        .option("mode", "PERMISSIVE")
         .schema(schema)
         .csv(path)
     )
@@ -135,20 +129,36 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return base_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
+def _has_data_file(fs, path) -> bool:
+    """True when ``path`` holds a file Spark would read as data: names that
+    start with ``.``, or with ``_`` and are no ``k=v`` partition directory
+    (``_SUCCESS``, ``.spark-staging-*``, ``_temporary``), are skipped, as
+    in Spark's file index.  Stops at the first data file."""
+    for st in fs.listStatus(path):
+        name = st.getPath().getName()
+        if name.startswith(".") or (name.startswith("_") and "=" not in name):
+            continue
+        if not st.isDirectory() or _has_data_file(fs, st.getPath()):
+            return True
+    return False
+
+
 def read_parquet_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
-    """Object-store-safe existence probe (reference S3, fixed).
+    """Parquet scan of ``path``, or None while it holds no data files
+    (reference S3, fixed).
 
     The reference branches initial-vs-incremental on ``os.path.exists``
-    (bronze_to_silver.py:97-100); that only works on local disk.  Attempting
-    the read and catching ``AnalysisException`` (PATH_NOT_FOUND /
-    UNABLE_TO_INFER_SCHEMA for an empty dir) works everywhere.
+    (bronze_to_silver.py:97-100); that only works on local disk.  Hadoop
+    ``FileSystem`` answers for any scheme (hdfs, s3a, abfss) without a
+    failed read.  A directory with no data files — empty, or left holding
+    only ``_SUCCESS``/``.spark-staging-*`` by a failed first load — counts
+    as missing, so that load can be replayed.
     """
-    try:
-        df = spark.read.parquet(path)
-        df.schema  # force analysis
-        return df
-    except AnalysisException:
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    if not fs.exists(jpath) or not _has_data_file(fs, jpath):
         return None
+    return spark.read.parquet(path)
 
 
 def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:

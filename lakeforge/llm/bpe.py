@@ -58,9 +58,7 @@ def bpe_train_merges(
 
     def _cut(frame: DataFrame, prev: set[int]) -> tuple[DataFrame, set[int]]:
         """Materialize once; release the previous round's blocks."""
-        seen = cache.rdd_ids(spark)
-        frame = frame.localCheckpoint()
-        new_ids = cache.rdd_ids(spark) - seen
+        frame, new_ids = cache.checkpoint_eager(frame)
         cache.unpersist_rdd_ids(spark, prev)
         return frame, new_ids
 

@@ -113,14 +113,8 @@ def kmeans_fit_grouped(
     from lakeforge import cache
 
     spark = base.sparkSession
-    seen = cache.rdd_ids(spark)
-    base = base.localCheckpoint(eager=True)
-    base_ids = cache.rdd_ids(spark) - seen
-    cache.track_releaser(
-        lambda blocking, ids=base_ids: cache.unpersist_rdd_ids(
-            spark, ids, blocking
-        )
-    )
+    base, base_ids = cache.checkpoint_eager(base)
+    cache.track_rdds(spark, base_ids)
     centroids = base.filter(F.col(id_col) < k).select(
         grp_col,
         F.col(id_col).cast("bigint").alias("cluster"),
@@ -154,16 +148,10 @@ def kmeans_fit_grouped(
         # executes without a per-iteration checkpoint; chunking only
         # bounds plan depth while halving the trainer's driver actions.
         if i % 2 == 1 or i == iters - 1:
-            seen = cache.rdd_ids(spark)
-            centroids = centroids.localCheckpoint(eager=True)
-            new_ids = cache.rdd_ids(spark) - seen
+            centroids, new_ids = cache.checkpoint_eager(centroids)
             cache.unpersist_rdd_ids(spark, prev_ids)
             prev_ids = new_ids
-    cache.track_releaser(
-        lambda blocking, ids=prev_ids: cache.unpersist_rdd_ids(
-            spark, ids, blocking
-        )
-    )
+    cache.track_rdds(spark, prev_ids)
     return centroids
 
 
@@ -231,14 +219,8 @@ def kmeans_fit(
     # update) and the final pass: without it the whole upstream plan re-runs
     # 2*iters+1 times inside one deep DAG.  Blocks release at the caller's
     # query boundary (cache.release_all), same discipline as ops/graph.py.
-    seen = cache.rdd_ids(spark)
-    base = base.localCheckpoint(eager=True)
-    base_ids = cache.rdd_ids(spark) - seen
-    cache.track_releaser(
-        lambda blocking, ids=base_ids: cache.unpersist_rdd_ids(
-            spark, ids, blocking
-        )
-    )
+    base, base_ids = cache.checkpoint_eager(base)
+    cache.track_rdds(spark, base_ids)
     centroids = base.filter(F.col(id_col) < k).select(
         F.col(id_col).cast("bigint").alias("cluster"), F.col("vec").alias("cvec")
     )
@@ -273,14 +255,8 @@ def kmeans_fit(
         # centroids TWICE (the returned frame + the final assign below).
         # The PREVIOUS chunk's blocks are dead once this one materializes.
         if i % 2 == 1 or i == iters - 1:
-            seen = cache.rdd_ids(spark)
-            centroids = centroids.localCheckpoint(eager=True)
-            new_ids = cache.rdd_ids(spark) - seen
+            centroids, new_ids = cache.checkpoint_eager(centroids)
             cache.unpersist_rdd_ids(spark, prev_ids)
             prev_ids = new_ids
-    cache.track_releaser(
-        lambda blocking, ids=prev_ids: cache.unpersist_rdd_ids(
-            spark, ids, blocking
-        )
-    )
+    cache.track_rdds(spark, prev_ids)
     return kmeans_assign(base, centroids, id_col), centroids

@@ -62,12 +62,10 @@ def connected_components(
 
     spark = edges.sparkSession
     # localCheckpoint blocks are RDD-level caches the SQL CacheManager
-    # never sees (DataFrame.unpersist is a no-op on them) — track the RDD
-    # ids each eager checkpoint creates and release by id.  Round-2
-    # review: every iteration's blocks lived for the whole session.
-    seen = cache.rdd_ids(spark)
-    und = und.localCheckpoint()
-    und_ids = cache.rdd_ids(spark) - seen
+    # never sees (DataFrame.unpersist is a no-op on them) — keep the RDD
+    # ids each checkpoint creates and release by id.  Round-2 review:
+    # every iteration's blocks lived for the whole session.
+    und, und_ids = cache.checkpoint_eager(und)
     labels = und.select("a").distinct().select(
         F.col("a").alias("v"), F.col("a").alias("lbl")
     )
@@ -92,15 +90,13 @@ def connected_components(
         )
         # Checkpoint and convergence count FUSED into one action (r13 opt,
         # guide §2 driver round-trips): localCheckpoint(eager=False) marks
-        # the RDD persistent at call time (so the id diff below still
-        # captures it), and the convergence count's scan is what
+        # the RDD persistent at call time (so its id is known at once),
+        # and the convergence count's scan is what
         # materializes the blocks — one job per iteration instead of a
         # materialization job plus a count job over the same blocks.
         # (r12 shape: checkpoint eagerly, then count the blocks; the count
         # job re-scanned every cached partition each iteration.)
-        seen = cache.rdd_ids(spark)
-        mat = new_labels.localCheckpoint(eager=False)
-        new_ids = cache.rdd_ids(spark) - seen
+        mat, new_ids = cache.checkpoint_eager(new_labels, eager=False)
         changed = mat.filter(F.col("new_lbl") != F.col("lbl")).count()
         labels = mat.select("v", F.col("new_lbl").alias("lbl"))
         # The new checkpoint is materialized — the previous iteration's
@@ -113,10 +109,7 @@ def connected_components(
     # frame is self-contained (checkpointed).  Its own blocks release at
     # the caller's query boundary via the registered callback.
     cache.unpersist_rdd_ids(spark, und_ids)
-    final_ids = prev_ids
-    cache.track_releaser(
-        lambda blocking=False: cache.unpersist_rdd_ids(spark, final_ids, blocking)
-    )
+    cache.track_rdds(spark, prev_ids)
     return labels.select(F.col("v").alias("vertex"), F.col("lbl").alias("component"))
 
 
@@ -149,9 +142,7 @@ def connected_components_jump(
     from lakeforge import cache
 
     spark = edges.sparkSession
-    seen = cache.rdd_ids(spark)
-    und = und.localCheckpoint()
-    und_ids = cache.rdd_ids(spark) - seen
+    und, und_ids = cache.checkpoint_eager(und)
     labels = und.select("a").distinct().select(
         F.col("a").alias("v"), F.col("a").alias("lbl")
     )
@@ -198,9 +189,7 @@ def connected_components_jump(
             )
         )
         # Same one-action checkpoint+count fusion as connected_components.
-        seen = cache.rdd_ids(spark)
-        mat = new_labels.localCheckpoint(eager=False)
-        new_ids = cache.rdd_ids(spark) - seen
+        mat, new_ids = cache.checkpoint_eager(new_labels, eager=False)
         changed = mat.filter(F.col("new_lbl") != F.col("lbl")).count()
         labels = mat.select("v", F.col("new_lbl").alias("lbl"))
         cache.unpersist_rdd_ids(spark, prev_ids)
@@ -214,10 +203,7 @@ def connected_components_jump(
             f"connected_components_jump did not converge in {max_iter} "
             f"iterations ({changed} labels still changing)"
         )
-    final_ids = prev_ids
-    cache.track_releaser(
-        lambda blocking=False: cache.unpersist_rdd_ids(spark, final_ids, blocking)
-    )
+    cache.track_rdds(spark, prev_ids)
     return labels.select(F.col("v").alias("vertex"), F.col("lbl").alias("component"))
 
 
@@ -483,9 +469,7 @@ def bfs_depths(
 
     spark = edges.sparkSession
     und = _undirected_edges(edges, src, dst)
-    seen = cache.rdd_ids(spark)
-    und = und.localCheckpoint()
-    und_ids = cache.rdd_ids(spark) - seen
+    und, und_ids = cache.checkpoint_eager(und)
 
     visited = spark.createDataFrame(
         [(int(s), 0) for s in sources], "node bigint, depth bigint"
@@ -503,9 +487,9 @@ def bfs_depths(
         # Lazy checkpoint + frontier count fused into one action (r13 opt,
         # same pattern as connected_components): the count's scan
         # materializes the checkpoint blocks, so each level pays one job.
-        seen = cache.rdd_ids(spark)
-        mat = visited.unionByName(nxt).localCheckpoint(eager=False)
-        new_ids = cache.rdd_ids(spark) - seen
+        mat, new_ids = cache.checkpoint_eager(
+            visited.unionByName(nxt), eager=False
+        )
         frontier = mat.filter(F.col("depth") == d).select("node")
         n_new = frontier.count()
         cache.unpersist_rdd_ids(spark, prev_ids)
@@ -514,10 +498,7 @@ def bfs_depths(
         if n_new == 0:
             break
     cache.unpersist_rdd_ids(spark, und_ids)
-    final_ids = prev_ids
-    cache.track_releaser(
-        lambda blocking=False: cache.unpersist_rdd_ids(spark, final_ids, blocking)
-    )
+    cache.track_rdds(spark, prev_ids)
     return visited
 
 
@@ -548,9 +529,7 @@ def sssp_hops(
         F.col(src).alias("e_src"), F.col(dst).alias("e_dst"),
         F.col(weight).cast("bigint").alias("w"),
     )
-    seen = cache.rdd_ids(spark)
-    e = e.localCheckpoint()
-    e_ids = cache.rdd_ids(spark) - seen
+    e, e_ids = cache.checkpoint_eager(e)
 
     dist = spark.createDataFrame(
         [(int(s), 0) for s in sources], "node bigint, dist bigint"
@@ -569,17 +548,12 @@ def sssp_hops(
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
         )
-        seen = cache.rdd_ids(spark)
-        new_dist = new_dist.localCheckpoint()
-        new_ids = cache.rdd_ids(spark) - seen
+        new_dist, new_ids = cache.checkpoint_eager(new_dist)
         cache.unpersist_rdd_ids(spark, prev_ids)
         prev_ids = new_ids
         dist = new_dist
     cache.unpersist_rdd_ids(spark, e_ids)
-    final_ids = prev_ids
-    cache.track_releaser(
-        lambda blocking=False: cache.unpersist_rdd_ids(spark, final_ids, blocking)
-    )
+    cache.track_rdds(spark, prev_ids)
     return dist
 
 
@@ -617,9 +591,7 @@ def kcore_nodes(
     cur = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     # The initial edge count is the materializing action for the lazy
     # checkpoint (one job; the count is the only consumer before the loop).
-    seen = cache.rdd_ids(spark)
-    cur = cur.localCheckpoint(eager=False)
-    prev_ids = cache.rdd_ids(spark) - seen
+    cur, prev_ids = cache.checkpoint_eager(cur, eager=False)
     n_edges = cur.count()
     for _ in range(rounds):
         deg = cur.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
@@ -630,9 +602,7 @@ def kcore_nodes(
             .select("a", "b")
         )
         # Lazy checkpoint + convergence count in one action (r13 opt).
-        seen = cache.rdd_ids(spark)
-        nxt = nxt.localCheckpoint(eager=False)
-        new_ids = cache.rdd_ids(spark) - seen
+        nxt, new_ids = cache.checkpoint_eager(nxt, eager=False)
         n_next = nxt.count()
         cache.unpersist_rdd_ids(spark, prev_ids)
         prev_ids = new_ids
@@ -640,10 +610,7 @@ def kcore_nodes(
         n_edges = n_next
         if converged:
             break
-    final_ids = prev_ids
-    cache.track_releaser(
-        lambda blocking=False: cache.unpersist_rdd_ids(spark, final_ids, blocking)
-    )
+    cache.track_rdds(spark, prev_ids)
     return (
         cur.groupBy(F.col("a").alias("node"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("core_deg"))

@@ -14,18 +14,26 @@ Differences from the reference, all scale-motivated:
    handful of touched ``p_ym`` months is O(batch).
 2. **Deterministic survivor**: ``dedup_keep_first`` under an explicit order
    instead of ``dropDuplicates`` (D1 nondeterminism).
-3. **Object-store-safe probe**: try-read instead of ``os.path.exists``.
+3. **Object-store-safe probe**: Hadoop ``FileSystem`` instead of
+   ``os.path.exists`` (``io.sources.read_parquet_if_exists``).
 4. **Read-overwrite cycle broken by localCheckpoint**: Spark refuses to
    overwrite a path it is reading; the merged frame is eagerly materialized
    to executor-local storage first.  Only the touched partitions
    materialize, so the checkpoint is O(batch) too.
+
+Both copy-on-write merges (``merge_full_history``, ``merge_upsert``) run
+that protocol through one body, ``_copy_on_write``; they differ only in
+how a key group resolves to its survivors.
 """
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lakeforge import cache
 from lakeforge.io.sinks import write_partitioned_parquet
 from lakeforge.io.sources import read_parquet_if_exists
 from lakeforge.ops.dedup import dedup_exact, dedup_keep_first
@@ -56,6 +64,32 @@ def _prune_to_touched(
     return existing.filter(pred) if pred is not None else existing
 
 
+def _copy_on_write(
+    spark: SparkSession,
+    new_df: DataFrame,
+    path: str,
+    partition_cols: list[str] | None,
+    resolve: Callable[[DataFrame | None], DataFrame],
+) -> None:
+    """Rewrite the partitions of ``path`` that ``new_df`` touches with
+    ``resolve(existing)``: the batch merged with the table's rows in those
+    partitions, or with nothing (``existing`` is None) on the initial load,
+    which is then a plain write."""
+    existing = read_parquet_if_exists(spark, path)
+    if existing is not None and partition_cols:
+        existing = _prune_to_touched(existing, new_df, partition_cols)
+    merged = resolve(existing)
+    ck_ids: set[int] = set()
+    if existing is not None:
+        # Break the read->overwrite lineage; eager, executor-local,
+        # O(batch).  Terminal checkpoint: its blocks are released right
+        # after the write — the frame is never re-read (VERDICT r06 #1
+        # leak class).
+        merged, ck_ids = cache.checkpoint_eager(merged)
+    write_partitioned_parquet(merged, path, partition_cols)
+    cache.unpersist_rdd_ids(spark, ck_ids)
+
+
 def merge_full_history(
     spark: SparkSession,
     new_df: DataFrame,
@@ -68,36 +102,24 @@ def merge_full_history(
 
     order_by: explicit survivor order within each key group; None falls back
     to reference-compatible ``dropDuplicates`` (fine when keys cover all
-    columns).
+    columns).  On the initial load the batch still deduplicates (a merge
+    with an empty table — the reference collapses in-batch dupes the same
+    way, bronze_to_silver.py:106,146).
     """
-    def dedup(df: DataFrame) -> DataFrame:
+
+    def dedup(existing: DataFrame | None) -> DataFrame:
+        df = (
+            new_df
+            if existing is None
+            else existing.select(*new_df.columns).unionByName(new_df)
+        )
         return (
             dedup_keep_first(df, keys, order_by)
             if order_by
             else dedup_exact(df, keys)
         )
 
-    existing = read_parquet_if_exists(spark, path)
-
-    if existing is None:
-        # Initial load: the batch itself still deduplicates (merge with an
-        # empty table — reference collapses in-batch dupes the same way,
-        # bronze_to_silver.py:106,146).
-        write_partitioned_parquet(dedup(new_df), path, partition_cols, mode="overwrite")
-        return
-
-    if partition_cols:
-        existing = _prune_to_touched(existing, new_df, partition_cols)
-
-    merged = dedup(existing.select(*new_df.columns).unionByName(new_df))
-    # Break the read->overwrite lineage; eager, executor-local, O(batch).
-    # Terminal checkpoint: release the blocks right after the write — the
-    # frame is never re-read (VERDICT r06 #1 leak class).
-    from lakeforge import cache
-
-    merged, ck_ids = cache.checkpoint_eager(merged)
-    write_partitioned_parquet(merged, path, partition_cols, mode="overwrite")
-    cache.unpersist_rdd_ids(spark, ck_ids)
+    _copy_on_write(spark, new_df, path, partition_cols, dedup)
 
 
 def merge_upsert(
@@ -131,43 +153,27 @@ def merge_upsert(
     (both directions), so a batch with added or dropped columns widens the
     table instead of failing — parquet-native schema evolution.
     """
-    existing = read_parquet_if_exists(spark, path)
 
-    if existing is None:
-        tiebreak = F.xxhash64(*[F.col(c) for c in new_df.columns])
-        order: list[Column | str] = [
-            F.col("__src").desc(), *(order_by or []), tiebreak
-        ]
-        merged = dedup_keep_first(
-            new_df.withColumn("__src", F.lit(1)), keys, order
-        ).drop("__src")
-        write_partitioned_parquet(merged, path, partition_cols, mode="overwrite")
-        return
+    def latest_wins(existing: DataFrame | None) -> DataFrame:
+        unioned = new_df.withColumn("__src", F.lit(1))
+        if existing is not None:
+            ex = existing.withColumn("__src", F.lit(0))
+            unioned = (
+                ex.unionByName(unioned, allowMissingColumns=True)
+                if evolve_schema
+                else ex.select(*unioned.columns).unionByName(unioned)
+            )
+        # Tiebreak over the UNION's full column set: under evolve_schema
+        # two existing same-key rows can differ only in a column absent
+        # from the batch — hashing just new_df's columns would leave their
+        # rank tied and the survivor partitioning-dependent (round-2
+        # ADVICE, low).
+        payload = [c for c in unioned.columns if c != "__src"]
+        tiebreak = F.xxhash64(*[F.col(c) for c in payload])
+        order = [F.col("__src").desc(), *(order_by or []), tiebreak]
+        return dedup_keep_first(unioned, keys, order).drop("__src")
 
-    if partition_cols:
-        existing = _prune_to_touched(existing, new_df, partition_cols)
-
-    ex = existing.withColumn("__src", F.lit(0))
-    nw = new_df.withColumn("__src", F.lit(1))
-    if evolve_schema:
-        unioned = ex.unionByName(nw, allowMissingColumns=True)
-    else:
-        unioned = ex.select(*nw.columns).unionByName(nw)
-    # Tiebreak over the UNION's full column set: under evolve_schema two
-    # existing same-key rows can differ only in a column absent from the
-    # batch — hashing just new_df's columns would leave their rank tied
-    # and the survivor partitioning-dependent (round-2 ADVICE, low).
-    payload = [c for c in unioned.columns if c != "__src"]
-    tiebreak = F.xxhash64(*[F.col(c) for c in payload])
-    order = [F.col("__src").desc(), *(order_by or []), tiebreak]
-    merged = dedup_keep_first(unioned, keys, order).drop("__src")
-    # Terminal checkpoint: blocks released right after the write (see
-    # merge_full_history).
-    from lakeforge import cache
-
-    merged, ck_ids = cache.checkpoint_eager(merged)
-    write_partitioned_parquet(merged, path, partition_cols, mode="overwrite")
-    cache.unpersist_rdd_ids(spark, ck_ids)
+    _copy_on_write(spark, new_df, path, partition_cols, latest_wins)
 
 
 def table_diff(

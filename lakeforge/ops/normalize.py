@@ -5,16 +5,21 @@ One declarative op replaces the reference's five hand-written
 rename/cast/filter chains.  Everything stays in whole-stage codegen; the
 not-null key filter sits directly above the scan so Catalyst pushes it into
 the reader.
+
+``EntitySpec`` is the one description of an entity: the bronze schema,
+the silver schema, the merge keys and the silver layout all derive from
+it, so no second table lists an entity's columns.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DateType, StringType, StructField, StructType
 
-from lakeforge.functions.dates import DEFAULT_DATE_FORMATS, month_key, parse_date_multi
+from lakeforge.functions.dates import month_key, parse_date_multi
 
 
 @dataclass(frozen=True)
@@ -24,16 +29,39 @@ class EntitySpec:
     rename: raw column -> canonical column (reference P1)
     date_cols: canonical columns to run the multi-format parser on (P3)
     key_cols: canonical columns required non-null (P2) — unparseable dates
-        in key positions drop the row, matching the reference
+        in key positions drop the row, matching the reference.  They are
+        also the silver merge keys.
     partition_from: if set, (source_date_col, partition_col) derives the
         ``yyyyMM`` partition key (P4)
+    partition_by: silver's Hive partition columns (bronze_to_silver.py:
+        178-207)
     """
 
     rename: dict[str, str]
     date_cols: tuple[str, ...] = ()
     key_cols: tuple[str, ...] = ()
     partition_from: tuple[str, str] | None = None
-    date_formats: tuple[str, ...] = field(default=DEFAULT_DATE_FORMATS)
+    partition_by: tuple[str, ...] = ()
+
+    @property
+    def bronze_schema(self) -> StructType:
+        """Enforced bronze schema (reference S1 — bronze_to_silver.py:28-55):
+        all-nullable strings over the raw headers, so no inference scan."""
+        return StructType([StructField(c, StringType(), True) for c in self.rename])
+
+    @property
+    def silver_schema(self) -> StructType:
+        """The schema a parquet read of the silver table infers, field order
+        included: data columns, then the partition columns (strings, since
+        the session turns off partition type inference)."""
+        cols = [*self.rename.values()]
+        if self.partition_from is not None:
+            cols.append(self.partition_from[1])
+        data_cols = [c for c in cols if c not in self.partition_by]
+        return StructType([
+            StructField(c, DateType() if c in self.date_cols else StringType(), True)
+            for c in [*data_cols, *self.partition_by]
+        ])
 
 
 def require_keys(df: DataFrame, cols: tuple[str, ...] | list[str]) -> DataFrame:
@@ -51,7 +79,7 @@ def normalize_entity(df: DataFrame, spec: EntitySpec) -> DataFrame:
         *[F.col(raw).alias(canon) for raw, canon in spec.rename.items()]
     )
     for c in spec.date_cols:
-        out = out.withColumn(c, parse_date_multi(F.col(c), spec.date_formats))
+        out = out.withColumn(c, parse_date_multi(F.col(c)))
     out = require_keys(out, spec.key_cols)
     if spec.partition_from is not None:
         src, part = spec.partition_from
@@ -66,27 +94,32 @@ REFERENCE_ENTITIES: dict[str, EntitySpec] = {
         date_cols=("date",),
         key_cols=("acc_no", "date", "status"),
         partition_from=("date", "p_ym"),
+        partition_by=("p_ym",),
     ),
     "account_details": EntitySpec(
         rename={"Acc no": "acc_no", "Date": "date", "type": "type"},
         date_cols=("date",),
         key_cols=("acc_no", "date", "type"),
         partition_from=("date", "p_ym"),
+        partition_by=("p_ym",),
     ),
     "person": EntitySpec(
         rename={"Acc no": "acc_no", "Person": "person"},
         key_cols=("acc_no", "person"),
+        partition_by=("acc_no",),
     ),
     "person_profile": EntitySpec(
         rename={"Person": "person", "Name": "name", "Date": "date"},
         date_cols=("date",),
         key_cols=("person", "name", "date"),
         partition_from=("date", "p_ym"),
+        partition_by=("p_ym",),
     ),
     "person_iden": EntitySpec(
         rename={"Person": "person", "Id": "id", "Date": "date"},
         date_cols=("date",),
         key_cols=("person", "id", "date"),
         partition_from=("date", "p_ym"),
+        partition_by=("p_ym",),
     ),
 }

@@ -17,18 +17,10 @@ from pyspark.sql import functions as F
 
 
 def table_summary(
-    df: DataFrame,
-    key_cols: list[str],
-    date_col: str | None = None,
-    exact_distinct: bool = True,
+    df: DataFrame, key_cols: list[str], date_col: str | None = None
 ) -> DataFrame:
     """One-row profile: n_rows, n_distinct_keys, n_dup_keys, n_dup_rows,
-    min/max date.
-
-    exact_distinct=False switches to ``approx_count_distinct`` (HLL) — at
-    100 TB the exact distinct is a full shuffle of the key set; the sketch
-    is one pass, mergeable, ~2% error.
-    """
+    min/max date."""
     date_aggs = (
         [
             F.min(date_col).cast("date").alias("__mind"),
@@ -37,43 +29,30 @@ def table_summary(
         if date_col is not None
         else []
     )
-    if not exact_distinct:
-        # HLL path: no key-group shuffle at all — one partial+final agg.
-        summary = df.agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            F.approx_count_distinct(F.concat_ws("\x1f", *key_cols))
-            .cast("bigint")
-            .alias("n_distinct_keys"),
-            F.lit(None).cast("bigint").alias("n_dup_keys"),
-            F.lit(None).cast("bigint").alias("n_dup_rows"),
-            *date_aggs,
-        )
-    else:
-        key_group = df.groupBy(*key_cols).agg(
-            F.count(F.lit(1)).alias("__n"), *date_aggs
-        )
-        summary = key_group.agg(
-            F.sum("__n").cast("bigint").alias("n_rows"),
-            F.count(F.lit(1)).cast("bigint").alias("n_distinct_keys"),
-            F.sum(F.when(F.col("__n") > 1, 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_dup_keys"),
-            F.sum(F.when(F.col("__n") > 1, F.col("__n")).otherwise(0))
-            .cast("bigint")
-            .alias("n_dup_rows"),
-            *(
-                [
-                    F.min("__mind").alias("__mind2"),
-                    F.max("__maxd").alias("__maxd2"),
-                ]
-                if date_col is not None
-                else []
-            ),
-        )
+    key_group = df.groupBy(*key_cols).agg(
+        F.count(F.lit(1)).alias("__n"), *date_aggs
+    )
+    summary = key_group.agg(
+        F.sum("__n").cast("bigint").alias("n_rows"),
+        F.count(F.lit(1)).cast("bigint").alias("n_distinct_keys"),
+        F.sum(F.when(F.col("__n") > 1, 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_dup_keys"),
+        F.sum(F.when(F.col("__n") > 1, F.col("__n")).otherwise(0))
+        .cast("bigint")
+        .alias("n_dup_rows"),
+        *(
+            [
+                F.min("__mind").alias("__mind2"),
+                F.max("__maxd").alias("__maxd2"),
+            ]
+            if date_col is not None
+            else []
+        ),
+    )
     if date_col is not None:
         summary = summary.withColumnsRenamed(
-            {"__mind": "min_date", "__maxd": "max_date",
-             "__mind2": "min_date", "__maxd2": "max_date"}
+            {"__mind2": "min_date", "__maxd2": "max_date"}
         )
     return summary
 
@@ -150,10 +129,3 @@ def observe_metrics(
     obs = Observation(name)
     exprs = [c.alias(n) for n, c in metrics.items()]
     return df.observe(obs, *exprs), obs
-
-
-def observed_write_profile(df, metric_exprs: dict):
-    """Thin alias over :func:`observe_metrics` kept for the write-profile
-    call sites: profile the very action that lands the table, then
-    gate/alert on the observation without re-reading what you wrote."""
-    return observe_metrics(df, "write_profile", metric_exprs)

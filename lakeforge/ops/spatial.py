@@ -197,9 +197,7 @@ def nearest_in_box(
             *[F.col(f"ring_best.{c}").alias(c) for c in payload_cols],
         )
 
-    seen = cache.rdd_ids(spark)
-    unresolved = unresolved.localCheckpoint()
-    prev_ids = cache.rdd_ids(spark) - seen
+    unresolved, prev_ids = cache.checkpoint_eager(unresolved)
     done_parts: list[DataFrame] = []
     done_ids: set[int] = set()
     # Round 0 probes Chebyshev <= 1 (the 3x3 fine neighborhood): with
@@ -214,9 +212,7 @@ def nearest_in_box(
             F.col("best").isNotNull()
             & (F.col("best.d2") <= F.lit(int(h * cell) ** 2).cast("bigint"))
         ) | (F.lit(h) >= F.col("r_box"))
-        seen = cache.rdd_ids(spark)
-        mat = merged.localCheckpoint()
-        new_ids = cache.rdd_ids(spark) - seen
+        mat, new_ids = cache.checkpoint_eager(merged)
         done = mat.filter(resolved_cond).filter(F.col("best").isNotNull())
         done_parts.append(done)
         done_ids |= new_ids
@@ -230,12 +226,7 @@ def nearest_in_box(
     else:
         raise RuntimeError("nearest_in_box: max_rounds exhausted")
 
-    final_ids = done_ids
-    cache.track_releaser(
-        lambda blocking=False: cache.unpersist_rdd_ids(
-            spark, final_ids, blocking
-        )
-    )
+    cache.track_rdds(spark, done_ids)
     out = done_parts[0]
     for p in done_parts[1:]:
         out = out.unionByName(p)

@@ -17,33 +17,25 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from lakeforge.io.sinks import write_partitioned_parquet
-from lakeforge.io.sources import read_csv, read_parquet
+from lakeforge.io.sources import read_csv
 from lakeforge.ops.joins import broadcast_left_join, full_outer_coalesce
 from lakeforge.ops.merge import merge_full_history
 from lakeforge.ops.normalize import REFERENCE_ENTITIES, normalize_entity
 from lakeforge.ops.scd2 import scd2
 from lakeforge.ops.star import build_bridge, build_dim_date, build_snapshot_fact
-from lakeforge.schemas import BRONZE_SCHEMAS
 
 # (merge keys, partition cols) per entity — bronze_to_silver.py:178-207.
 ENTITY_LAYOUT: dict[str, tuple[list[str], list[str]]] = {
-    "accounts": (["acc_no", "date", "status"], ["p_ym"]),
-    "account_details": (["acc_no", "date", "type"], ["p_ym"]),
-    "person": (["acc_no", "person"], ["acc_no"]),
-    "person_profile": (["person", "date", "name"], ["p_ym"]),
-    "person_iden": (["person", "id", "date"], ["p_ym"]),
+    name: (list(spec.key_cols), list(spec.partition_by))
+    for name, spec in REFERENCE_ENTITIES.items()
 }
 
 
-def silver_schemas() -> dict[str, list[str]]:
-    """Canonical silver column sets (SURVEY.md §1)."""
-    return {
-        name: list(spec.rename.values())
-        + (["p_ym"] if spec.partition_from else [])
-        for name, spec in REFERENCE_ENTITIES.items()
-    }
+def silver_schemas() -> dict[str, StructType]:
+    """Silver table schemas (SURVEY.md §1), as a parquet read infers them."""
+    return {name: spec.silver_schema for name, spec in REFERENCE_ENTITIES.items()}
 
 
 def bronze_to_silver(
@@ -51,7 +43,7 @@ def bronze_to_silver(
 ) -> None:
     """EP1: ingest all five entities and CDC-merge into silver."""
     for name, spec in REFERENCE_ENTITIES.items():
-        raw = read_csv(spark, f"{bronze_dir}/{name}.csv", BRONZE_SCHEMAS[name])
+        raw = read_csv(spark, f"{bronze_dir}/{name}.csv", spec.bronze_schema)
         normalized = normalize_entity(raw, spec)
         keys, partitions = ENTITY_LAYOUT[name]
         merge_full_history(
@@ -60,19 +52,17 @@ def bronze_to_silver(
 
 
 def build_gold(
-    spark: SparkSession,
-    silver_dir: str,
-    process_ym: str | None = None,
-    null_safe: bool = False,
+    spark: SparkSession, silver_dir: str, process_ym: str | None = None
 ) -> dict[str, DataFrame]:
     """EP2: silver -> star schema.  ``process_ym`` scopes reads to one
-    partition month (reference P9); ``null_safe`` selects change-filter
-    semantics (SURVEY.md W3)."""
+    partition month (reference P9).  Silver is read with its known schema,
+    so building the plan runs no schema-inference job."""
 
     def load(name: str) -> DataFrame:
-        df = read_parquet(spark, f"{silver_dir}/{name}")
-        if process_ym and "p_ym" in df.columns:
-            df = df.where(F.col("p_ym") == process_ym)
+        spec = REFERENCE_ENTITIES[name]
+        df = spark.read.schema(spec.silver_schema).parquet(f"{silver_dir}/{name}")
+        if process_ym and spec.partition_from is not None:
+            df = df.where(F.col(spec.partition_from[1]) == process_ym)
         return df
 
     accounts = load("accounts")
@@ -94,7 +84,6 @@ def build_gold(
         tracked_cols=["status", "type"],
         order_col="date",
         sk_name="account_sk",
-        null_safe=null_safe,
     )
 
     # dim_person: full-outer aligned person timelines (J2) -> SCD2.
@@ -109,7 +98,6 @@ def build_gold(
         tracked_cols=["name", "id"],
         order_col="date",
         sk_name="person_sk",
-        null_safe=null_safe,
     )
 
     # C1 (gold_sql_to_postgres.py:115): dim_account feeds both the returned

@@ -628,7 +628,7 @@ def stream_scd2_to_dim(
         rebuilt = scd2(
             timeline, keys, tracked_cols, order_col, null_safe=null_safe
         ).withColumn("__bkt", F.pmod(md5_int(*keys), F.lit(n_buckets)))
-        write_partitioned_parquet(rebuilt, dim_path, ["__bkt"], mode="overwrite")
+        write_partitioned_parquet(rebuilt, dim_path, ["__bkt"])
 
     return (
         stream_df.writeStream.foreachBatch(sink)

@@ -53,10 +53,10 @@ def _with_recursion_limit(spark: SparkSession, limit: int, build) -> DataFrame:
 
     The checkpoint's RDD blocks are registered with the cache registry
     (VERDICT r06 #1 / ADVICE r06 #3: they previously persisted for the
-    session lifetime — ``cache_leaks: 3`` in BENCH_r06).  Same rdd-id
-    diff + ``track_releaser`` discipline as ``ops/graph.py``: the blocks
-    release at the caller's query boundary, after the result has been
-    materialized."""
+    session lifetime — ``cache_leaks: 3`` in BENCH_r06).  Same
+    ``checkpoint_eager`` + ``track_rdds`` discipline as ``ops/graph.py``:
+    the blocks release at the caller's query boundary, after the result
+    has been materialized."""
     from lakeforge import cache
 
     key = "spark.sql.cteRecursionLevelLimit"
@@ -66,14 +66,8 @@ def _with_recursion_limit(spark: SparkSession, limit: int, build) -> DataFrame:
         prior = None
     spark.conf.set(key, str(limit))
     try:
-        seen = cache.rdd_ids(spark)
-        out = build().localCheckpoint(eager=True)
-        new_ids = cache.rdd_ids(spark) - seen
-        cache.track_releaser(
-            lambda blocking=False: cache.unpersist_rdd_ids(
-                spark, new_ids, blocking
-            )
-        )
+        out, new_ids = cache.checkpoint_eager(build())
+        cache.track_rdds(spark, new_ids)
         return out
     finally:
         if prior is None:

@@ -12,7 +12,8 @@ import os
 import pytest
 
 from lakeforge.io.sources import read_parquet
-from lakeforge.pipelines.medallion import bronze_to_silver, build_gold
+from lakeforge.ops.normalize import REFERENCE_ENTITIES
+from lakeforge.pipelines.medallion import bronze_to_silver, build_gold, silver_schemas
 
 D = dt.date
 EOT = D(9999, 12, 31)
@@ -53,6 +54,19 @@ def test_silver_partitions(gold, spark):
     person = read_parquet(spark, f"{silver}/person")
     assert person.count() == 3  # exact duplicate (123,X) collapsed
     assert dict(person.dtypes)["acc_no"] == "string"
+
+
+def test_derived_schemas_match_fixtures_and_silver(gold, spark):
+    """The schemas derived from ``EntitySpec`` are the ones the data has:
+    each bronze schema is its fixture's CSV header, and each silver schema
+    equals what a parquet read of the silver table infers, field order and
+    types included — so ``build_gold`` may skip the inference."""
+    silver, _ = gold
+    for name, spec in REFERENCE_ENTITIES.items():
+        header = BRONZE[f"{name}.csv"].split("\n", 1)[0].split(",")
+        assert spec.bronze_schema.fieldNames() == header, name
+    for name, schema in silver_schemas().items():
+        assert schema == spark.read.parquet(f"{silver}/{name}").schema, name
 
 
 def test_dim_account_golden(gold):

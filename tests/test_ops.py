@@ -518,16 +518,17 @@ def test_count_min_estimate_bounds_and_grid_size(spark):
     assert exact == 50 and est >= exact
 
 
-def test_observed_write_profile_rides_the_write(spark, tmp_path):
+def test_observe_metrics_rides_the_write(spark, tmp_path):
     """Observation metrics must match a dedicated aggregate — computed
     during the single write action, not by a second scan."""
-    from lakeforge.ops.quality import observed_write_profile
+    from lakeforge.ops.quality import observe_metrics
 
     df = spark.range(0, 1000).selectExpr(
         "id", "CASE WHEN id % 10 = 0 THEN NULL ELSE id * 2 END AS v"
     )
-    observed, obs = observed_write_profile(
+    observed, obs = observe_metrics(
         df,
+        "write_profile",
         {
             "n_rows": F.count(F.lit(1)),
             "n_null_v": F.sum(F.when(F.col("v").isNull(), 1).otherwise(0)),

@@ -4,7 +4,13 @@ schema-ENFORCED; these tests pin what happens when reality disagrees)."""
 
 from __future__ import annotations
 
+import glob
+import shutil
+
+import pytest
 from pyspark.sql import functions as F
+
+from lakeforge.io.sources import read_parquet_if_exists
 
 
 def test_permissive_json_captures_corrupt_records(spark, tmp_path):
@@ -158,3 +164,29 @@ def test_base_parquet_sees_rewrite_inside_directory(spark, tmp_path):
     pq.write_table(pa.table({"k": [7, 8]}), d / "p=1" / "part-1.parquet")
     got = sorted(r.k for r in base_parquet(spark, str(d)).collect())
     assert got == [1, 2, 3, 7, 8]
+
+
+@pytest.mark.parametrize("state", ["missing", "empty", "staging_only", "written"])
+def test_read_parquet_if_exists(spark, tmp_path, state):
+    """The merge's first-load probe: a path with no data files reads as
+    None — missing, empty, or left holding only ``_SUCCESS`` and a
+    ``.spark-staging-*`` directory by a failed first load (so the load can
+    be replayed) — and a written table reads back its rows."""
+    path = tmp_path / "tbl"
+    src = str(tmp_path / "src")
+    spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string").write.parquet(src)
+    if state == "empty":
+        path.mkdir()
+    elif state == "staging_only":
+        staging = path / ".spark-staging-0"
+        staging.mkdir(parents=True)
+        (path / "_SUCCESS").write_text("")
+        for f in glob.glob(f"{src}/part-*.parquet"):
+            shutil.copy(f, staging)
+    elif state == "written":
+        shutil.copytree(src, path)
+    df = read_parquet_if_exists(spark, str(path))
+    if state == "written":
+        assert sorted(tuple(r) for r in df.collect()) == [(1, "a"), (2, "b")]
+    else:
+        assert df is None

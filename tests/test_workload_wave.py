@@ -42,6 +42,35 @@ def test_fifo_matched_equals_min_of_supply_and_demand(spark):
         assert got.get(r.l_partkey, 0) == expect, r.l_partkey
 
 
+@pytest.mark.parametrize("layout", ["zero_rows", "mostly_empty_partitions"])
+def test_signlsh_over_empty_inputs(spark, tmp_path, layout):
+    """The pandas UDFs (``band_keys_of``, ``dot_of``) stack each Arrow
+    batch's vectors; a table with no rows, or scan and shuffle partitions
+    that are mostly empty, must give the empty answer or the same pairs,
+    never a failed query."""
+    schema = "vec_id bigint, embedding array<float>, label int"
+    dup = [float(i % 7) - 3.0 for i in range(w._SLSH_DIM)]
+    other = [float((i * 5) % 11) - 5.0 for i in range(w._SLSH_DIM)]
+    rows = [(1, dup, 0), (2, dup, 0), (3, other, 1)]
+    path = str(tmp_path / "embeddings.parquet")
+    if layout == "zero_rows":
+        spark.createDataFrame([], schema).write.parquet(path)
+        expect = set()
+    else:
+        # Nine zero-row files beside the rows' files.
+        df = spark.createDataFrame(rows, schema)
+        empty = spark.createDataFrame([], schema)
+        for _ in range(9):
+            empty.write.mode("append").parquet(path)
+        for r in rows:
+            df.filter(F.col("vec_id") == r[0]).write.mode("append").parquet(path)
+        sizes = [len(p) for p in spark.read.parquet(path).rdd.glom().collect()]
+        assert sizes.count(0) > len(sizes) // 2, sizes
+        expect = {(1, 2)}
+    out = w.q_embedding_signlsh_neardup(spark, str(tmp_path))
+    assert {(r.a, r.b) for r in out.collect()} == expect
+
+
 def test_temporal_split_is_leak_free_and_complete(spark):
     rows = {r.split: r for r in w.q_orders_temporal_split(spark, SF_DIR).collect()}
     assert set(rows) == {"train", "val", "test"}
