@@ -18,6 +18,15 @@ The fix is a registry with query-boundary scope:
   result (bench.py between queries, tools/check_oracle.py per query,
   tests via fixture).
 
+The registry is shared by every thread of the process (``bronze_to_silver``
+runs its five entity merges concurrently), so a lock guards it: appends
+take it, and :func:`release_all` swaps the list out under it and releases
+outside it.  For the same reason :func:`checkpoint_eager` reads its RDD id
+from the checkpointed plan, never from a before/after diff of the
+session's persistent RDDs: such a diff also catches a lazily persisted
+input that first materializes inside the checkpoint, and any RDD another
+thread persists meanwhile, and the caller's release would drop those too.
+
 Correctness is unaffected by an early release of a *persisted* frame —
 lineage is intact, a re-materialization just recomputes.  Frames registered
 via :func:`track_rdds` (localCheckpoints, lineage truncated) must not be re-read
@@ -30,6 +39,7 @@ shuffle/storage split stable across a long job DAG.
 
 from __future__ import annotations
 
+import threading
 from typing import Callable
 
 from pyspark import StorageLevel
@@ -38,24 +48,28 @@ from pyspark.sql import DataFrame
 # Items are ("df", DataFrame) — released via DataFrame.unpersist — or
 # ("fn", callable(blocking)) for caches the SQL CacheManager can't see
 # (localCheckpoint blocks are RDD-level; DataFrame.unpersist is a no-op
-# on them, so they release by RDD id — see rdd_ids/unpersist_rdd_ids).
+# on them, so they release by RDD id — see unpersist_rdd_ids).
 _TRACKED: list[tuple[str, DataFrame | Callable[[bool], None]]] = []
+_LOCK = threading.Lock()
 
 
 def persist_tracked(
     df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK
 ) -> DataFrame:
     """Persist ``df`` and register it for the next :func:`release_all`."""
-    _TRACKED.append(("df", df.persist(level)))
+    df.persist(level)
+    with _LOCK:
+        _TRACKED.append(("df", df))
     return df
 
 
 def track_rdds(spark, ids: set[int]) -> None:
     """Register the cached blocks of RDD ids (e.g. a ``localCheckpoint``
     an operator returns) for release at the next :func:`release_all`."""
-    _TRACKED.append(
-        ("fn", lambda blocking: unpersist_rdd_ids(spark, ids, blocking))
-    )
+    with _LOCK:
+        _TRACKED.append(
+            ("fn", lambda blocking: unpersist_rdd_ids(spark, ids, blocking))
+        )
 
 
 def release_all(blocking: bool = False) -> int:
@@ -64,8 +78,10 @@ def release_all(blocking: bool = False) -> int:
     Call at a query boundary — after the current query's result has been
     fully materialized and before the next query runs.
     """
-    n = len(_TRACKED)
-    for kind, item in _TRACKED:
+    with _LOCK:
+        items = list(_TRACKED)
+        _TRACKED.clear()
+    for kind, item in items:
         try:
             if kind == "df":
                 item.unpersist(blocking)
@@ -73,15 +89,7 @@ def release_all(blocking: bool = False) -> int:
                 item(blocking)
         except Exception:  # session already stopped / frame gone
             pass
-    _TRACKED.clear()
-    return n
-
-
-def rdd_ids(spark) -> set[int]:
-    """Ids of RDDs with cached blocks right now (includes localCheckpoint
-    storage, which the SQL-level catalog/unpersist APIs can't address)."""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    return {int(k) for k in jmap.keySet().toArray()}
+    return len(items)
 
 
 def unpersist_rdd_ids(spark, ids: set[int], blocking: bool = False) -> None:
@@ -98,7 +106,7 @@ def unpersist_rdd_ids(spark, ids: set[int], blocking: bool = False) -> None:
 def checkpoint_eager(
     df: DataFrame, eager: bool = True
 ) -> tuple[DataFrame, set[int]]:
-    """``localCheckpoint`` returning ``(checkpointed_df, new_rdd_ids)``.
+    """``localCheckpoint`` returning ``(checkpointed_df, {rdd_id})``.
 
     The ids are the handle the caller releases the blocks by
     (``unpersist_rdd_ids`` or :func:`track_rdds`).  A TERMINAL checkpoint
@@ -107,11 +115,14 @@ def checkpoint_eager(
     outlive the query (VERDICT r06 #1: three such sites leaked for the
     session lifetime).  ``eager=False`` marks the RDD persistent at call
     time (so its id is already known) and lets the caller's next action
-    materialize the blocks: a checkpoint fused with a count is one job."""
-    spark = df.sparkSession
-    before = rdd_ids(spark)
+    materialize the blocks: a checkpoint fused with a count is one job.
+
+    The id is that of the RDD the checkpointed plan's ``LogicalRDD`` scans,
+    the one RDD ``localCheckpoint`` persists, for either ``eager`` value.
+    It names exactly this call's blocks, whatever other RDDs the
+    checkpoint's job materializes or other threads persist meanwhile."""
     out = df.localCheckpoint(eager=eager)
-    return out, rdd_ids(spark) - before
+    return out, {out._jdf.queryExecution().analyzed().rdd().id()}
 
 
 def n_cached_rdds(spark) -> int:

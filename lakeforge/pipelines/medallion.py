@@ -15,6 +15,9 @@ referential integrity checked fact->dim).
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -41,14 +44,36 @@ def silver_schemas() -> dict[str, StructType]:
 def bronze_to_silver(
     spark: SparkSession, bronze_dir: str, silver_dir: str
 ) -> None:
-    """EP1: ingest all five entities and CDC-merge into silver."""
-    for name, spec in REFERENCE_ENTITIES.items():
+    """EP1: ingest all five entities and CDC-merge into silver.
+
+    The entities are independent (each merge reads and writes only its own
+    silver path), so they run concurrently, one thread each: at this size
+    every merge is a chain of sub-second Spark jobs, and the threads overlap
+    their fixed per-job driver cost.  The workers inherit the caller's job
+    group, local properties and tags.
+
+    Each entity's merge is its own commit.  If one fails, the others still
+    run to the end; then the first failure in ``REFERENCE_ENTITIES`` order
+    is raised.  The entities that succeeded keep their merged silver, so
+    the fix is to re-run the same bronze: the failed entities are merged,
+    and for the others the merge adds no row that silver already holds."""
+
+    def ingest(name: str) -> None:
+        spec = REFERENCE_ENTITIES[name]
         raw = read_csv(spark, f"{bronze_dir}/{name}.csv", spec.bronze_schema)
         normalized = normalize_entity(raw, spec)
         keys, partitions = ENTITY_LAYOUT[name]
         merge_full_history(
             spark, normalized, f"{silver_dir}/{name}", keys, partitions
         )
+
+    with ThreadPoolExecutor(len(REFERENCE_ENTITIES)) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(ingest), name)
+            for name in REFERENCE_ENTITIES
+        ]
+    for future in futures:  # the pool's exit waited for all of them
+        future.result()
 
 
 def build_gold(

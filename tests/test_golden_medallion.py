@@ -10,8 +10,10 @@ import datetime as dt
 import os
 
 import pytest
+from pyspark.errors import AnalysisException
 
-from lakeforge.io.sources import read_parquet
+from lakeforge import cache
+from lakeforge.io.sources import read_parquet, read_parquet_if_exists
 from lakeforge.ops.normalize import REFERENCE_ENTITIES
 from lakeforge.pipelines.medallion import bronze_to_silver, build_gold, silver_schemas
 
@@ -160,6 +162,70 @@ def test_cdc_rerun_appends_history(spark, tmp_path):
         ("Active", D(2022, 2, 1), D(2022, 4, 30), False),
         ("Closed", D(2022, 5, 1), EOT, True),
     ])
+
+
+def _write_bronze(bronze, skip=()):
+    bronze.mkdir(exist_ok=True)
+    for fname, content in BRONZE.items():
+        if fname not in skip:
+            (bronze / fname).write_text(content)
+
+
+def _silver_rows(spark, silver, name):
+    df = read_parquet_if_exists(spark, f"{silver}/{name}")
+    if df is None:
+        return None
+    cols = silver_schemas()[name].fieldNames()
+    return sorted(tuple(r) for r in df.select(*cols).collect())
+
+
+def test_failed_entity_leaves_the_others_merged_and_replays(gold, spark, tmp_path):
+    """The entities ingest concurrently: one entity's failure (here the
+    first one's missing bronze file) does not stop the other four, and
+    re-running with the file restored gives the silver of a clean run."""
+    clean, _ = gold
+    first = next(iter(REFERENCE_ENTITIES))
+    assert first == "accounts"
+    bronze = tmp_path / "bronze"
+    _write_bronze(bronze, skip={f"{first}.csv"})
+    silver = str(tmp_path / "silver")
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        bronze_to_silver(spark, str(bronze), silver)
+    assert _silver_rows(spark, silver, first) is None
+    for name in REFERENCE_ENTITIES:
+        if name != first:
+            assert _silver_rows(spark, silver, name) == _silver_rows(spark, clean, name), name
+
+    _write_bronze(bronze)
+    bronze_to_silver(spark, str(bronze), silver)
+    for name in REFERENCE_ENTITIES:
+        assert _silver_rows(spark, silver, name) == _silver_rows(spark, clean, name), name
+
+
+def test_job_group_reaches_the_entity_workers(spark, tmp_path):
+    """The caller's job group is inherited by every entity worker, and each
+    concurrent incremental merge releases exactly its own checkpoint."""
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    bronze = tmp_path / "bronze"
+    _write_bronze(bronze)
+    silver = str(tmp_path / "silver")
+    ungrouped = set(st.getJobIdsForGroup())
+    sc.setJobGroup("b2s", "bronze_to_silver under a job group")
+    try:
+        bronze_to_silver(spark, str(bronze), silver)
+        cache.release_all(blocking=True)
+        n_cached = cache.n_cached_rdds(spark)
+        # An incremental batch: every entity takes the checkpointed path.
+        for fname, content in BRONZE.items():
+            (bronze / fname).write_text(content + content.splitlines()[1] + "\n")
+        bronze_to_silver(spark, str(bronze), silver)
+        assert cache.n_cached_rdds(spark) == n_cached
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(st.getJobIdsForGroup("b2s")) >= 2 * len(REFERENCE_ENTITIES)
+    assert set(st.getJobIdsForGroup()) - ungrouped == set()
 
 
 STAR_DDL_KEYS = {
