@@ -53,11 +53,10 @@ _TRACKED: list[tuple[str, DataFrame | Callable[[bool], None]]] = []
 _LOCK = threading.Lock()
 
 
-def persist_tracked(
-    df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK
-) -> DataFrame:
-    """Persist ``df`` and register it for the next :func:`release_all`."""
-    df.persist(level)
+def persist_tracked(df: DataFrame) -> DataFrame:
+    """Persist ``df`` (MEMORY_AND_DISK) and register it for the next
+    :func:`release_all`."""
+    df.persist(StorageLevel.MEMORY_AND_DISK)
     with _LOCK:
         _TRACKED.append(("df", df))
     return df

@@ -68,18 +68,17 @@ def postgres_ddl(
     df: DataFrame,
     table: str,
     primary_key: list[str] | None = None,
-    if_not_exists: bool = True,
 ) -> str:
-    """CREATE TABLE statement matching ``df``'s schema (nullability kept)."""
+    """CREATE TABLE IF NOT EXISTS statement matching ``df``'s schema
+    (nullability kept)."""
     lines = []
     for f in df.schema.fields:
         null = "" if f.nullable else " NOT NULL"
         lines.append(f"    {f.name} {pg_type(f.dataType)}{null}")
     if primary_key:
         lines.append(f"    PRIMARY KEY ({', '.join(primary_key)})")
-    ine = "IF NOT EXISTS " if if_not_exists else ""
     body = ",\n".join(lines)
-    return f"CREATE TABLE {ine}{table} (\n{body}\n);"
+    return f"CREATE TABLE IF NOT EXISTS {table} (\n{body}\n);"
 
 
 def star_schema_ddl(gold: dict[str, DataFrame], keys: dict[str, list[str]] | None = None) -> str:

@@ -90,10 +90,10 @@ def export_csv(df: DataFrame, path: str, single_file: bool = True) -> None:
     out.write.mode("overwrite").option("header", True).csv(path)
 
 
-def export_parquet(df: DataFrame, path: str, single_file: bool = False) -> None:
-    """Gold parquet export (reference S7 — README.md:190, script absent)."""
-    out = df.coalesce(1) if single_file else df
-    out.write.mode("overwrite").parquet(path)
+def export_parquet(df: DataFrame, path: str) -> None:
+    """Gold parquet export (reference S7 — README.md:190, script absent),
+    one file per partition of ``df``."""
+    df.write.mode("overwrite").parquet(path)
 
 
 def write_orc(

@@ -200,30 +200,22 @@ def read_json(
     spark: SparkSession,
     path: str,
     schema: StructType | str | None = None,
-    multiline: bool = False,
 ) -> DataFrame:
     """JSON-lines scan with (strongly recommended) enforced schema.
 
     Without an explicit schema Spark runs a full inference pass over the
     input — at 100 TB that is a second read of the dataset before the real
-    one.  multiline=True parses whole-file JSON arrays (no line splitting,
-    not splittable across tasks — keep files small if used).
+    one.
     """
     reader = spark.read
     if schema is not None:
         reader = reader.schema(schema)
-    if multiline:
-        reader = reader.option("multiLine", True)
     return reader.json(path)
 
 
-def read_orc(
-    spark: SparkSession, path: str, schema: StructType | str | None = None
-) -> DataFrame:
+def read_orc(spark: SparkSession, path: str) -> DataFrame:
     """ORC scan — same columnar pushdown/pruning properties as parquet
     (predicate pushdown into stripe/row-group statistics, column
-    projection), for lakes standardized on ORC instead."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.orc(path)
+    projection), for lakes standardized on ORC instead.  The schema
+    comes from the ORC footers, which carry it."""
+    return spark.read.orc(path)

@@ -133,24 +133,3 @@ def boilerplate_coverage(
             F.expr("(n_boiler * 1000) div n_grams")
         ),
     )
-
-
-def strip_boilerplate_docs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    n: int = 2,
-    min_df_permille: int = 50,
-    max_boiler_permille: int = 500,
-) -> DataFrame:
-    """Drop documents dominated by boilerplate (coverage above
-    ``max_boiler_permille``).  Keeps the original columns.
-
-    Anti-join on the DROPPED ids: survivors are the common case, so the
-    broadcast side is the small set (the docs being removed), never the
-    corpus-sized keep list."""
-    cov = boilerplate_coverage(df, text_col, id_col, n, min_df_permille)
-    dropped = cov.filter(F.col("boiler_permille") > max_boiler_permille).select(
-        F.col("doc_id").alias(id_col)
-    )
-    return df.join(F.broadcast(dropped), on=id_col, how="left_anti")

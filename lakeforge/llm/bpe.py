@@ -37,12 +37,11 @@ def bpe_train_merges(
     text_col: str,
     id_col: str,
     n_merges: int = 3,
-    joiner: str = "_",
 ) -> DataFrame:
-    """Learn ``n_merges`` BPE merges over whitespace tokens; returns one
-    row per round: (merge_round, merge_left, merge_right, pair_count,
-    corpus_tokens_after).  pair_count is the global adjacent-pair count
-    at selection time (overlaps included, the classic convention);
+    """Learn ``n_merges`` BPE merges over whitespace tokens (a merged
+    token is ``left_right``); returns one row per round: (merge_round,
+    merge_left, merge_right, pair_count, corpus_tokens_after).
+    pair_count is the global adjacent-pair count at selection time (overlaps included, the classic convention);
     corpus_tokens_after proves the greedy merge actually applied (each
     applied merge removes one token, and overlapping occurrences apply
     fewer merges than pair_count)."""
@@ -76,7 +75,7 @@ def bpe_train_merges(
         if not best:
             break
         a, b, cnt = best[0]["tok"], best[0]["nxt"], int(best[0]["cnt"])
-        merged_tok = f"{a}{joiner}{b}"
+        merged_tok = f"{a}_{b}"
 
         isp = F.coalesce(
             (F.col("tok") == a) & (F.col("nxt") == b), F.lit(False)

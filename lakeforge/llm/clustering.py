@@ -180,15 +180,14 @@ def kmeans_assignments(
     embeddings: DataFrame,
     k: int = 8,
     iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """Lloyd's k-means, ``iters`` full update rounds, then a final assign.
+    """Lloyd's k-means over the ``embedding`` column, ``iters`` full
+    update rounds, then a final assign.
 
-    Returns (id_col, cluster bigint, d2 bigint) — d2 in squared
+    Returns (vec_id, cluster bigint, d2 bigint) — d2 in squared
     micro-units, an exact integer.
     """
-    assign, _ = kmeans_fit(embeddings, k, iters, id_col, vec_col)
+    assign, _ = kmeans_fit(embeddings, k, iters)
     return assign
 
 

@@ -428,7 +428,6 @@ def passage_dedup(
     text_col: str,
     id_col: str,
     passage_words: int = 20,
-    min_docs: int = 2,
 ) -> DataFrame:
     """Cross-document repeated-PASSAGE detection: substring-level dedup
     (the "dedup at the passage level, not the document level" step of
@@ -437,8 +436,8 @@ def passage_dedup(
 
     Each document is cut into NON-OVERLAPPING ``passage_words``-token
     windows (aligned from token 0; final partial window included), each
-    window is hashed, and passages whose hash appears in >= ``min_docs``
-    distinct documents are reported.
+    window is hashed, and passages whose hash appears in >= 2 distinct
+    documents are reported.
 
     Returns (passage_hash, n_docs, n_occurrences, canonical_doc_id) —
     canonical = min doc id, the copy a remover would keep.
@@ -471,7 +470,7 @@ def passage_dedup(
             F.count(F.lit(1)).cast("bigint").alias("n_occurrences"),
             F.min("doc_id").alias("canonical_doc_id"),
         )
-        .filter(F.col("n_docs") >= min_docs)
+        .filter(F.col("n_docs") >= 2)
     )
 
 

@@ -23,8 +23,8 @@ Two tiers of decode (round-3 review #5 retired the old blanket stub):
 Scale notes:
 - Media bytes NEVER shuffle: featurize before any groupBy/join and carry
   only (id, features, metadata) forward.
-- ``repartition`` before mapInPandas controls batch memory: payload_bytes
-  x rows_per_batch must fit the Python worker
+- Callers ``repartition`` the media frame before these ops to control
+  batch memory: payload_bytes x rows_per_batch must fit the Python worker
   (``spark.sql.execution.arrow.maxRecordsPerBatch`` caps rows per batch).
 """
 
@@ -105,14 +105,14 @@ def encode_wav(
     n_samples: int,
     sample_rate: int = 16_000,
     n_channels: int = 1,
-    bits: int = 16,
     data_prefix: bytes = b"",
 ) -> bytes:
-    """Minimal valid PCM WAV: RIFF/WAVE + fmt + data chunk header.
+    """Minimal valid 16-bit PCM WAV: RIFF/WAVE + fmt + data chunk header.
 
     The data chunk declares the TRUE sample-payload size (n_samples x
     block_align); ``data_prefix`` optionally attaches leading samples.
     """
+    bits = 16
     block_align = n_channels * bits // 8
     byte_rate = sample_rate * block_align
     data_size = n_samples * block_align
@@ -238,7 +238,7 @@ MEDIA_STATS_SCHEMA = StructType(
 )
 
 
-def decode_media_stats(media: DataFrame, partitions: int | None = None) -> DataFrame:
+def decode_media_stats(media: DataFrame) -> DataFrame:
     """Distributed PAYLOAD decode (not just headers): parse every BMP's
     stride-padded pixel rows / every WAV's 16-bit PCM samples with the
     pure-numpy decoders above and emit per-item value stats
@@ -249,9 +249,6 @@ def decode_media_stats(media: DataFrame, partitions: int | None = None) -> DataF
     Same scale contract as every media op here: bytes are consumed inside
     the Arrow batch and never survive the operator; undecodable payloads
     yield fmt=NULL rows instead of failing the task."""
-    if partitions:
-        media = media.repartition(partitions)
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
@@ -307,18 +304,13 @@ def downsample_bmp(content: bytes, factor: int = 2) -> bytes:
     return encode_bmp(W, H, rows.tobytes())
 
 
-def downsample_media(
-    media: DataFrame, factor: int = 2, partitions: int | None = None
-) -> DataFrame:
+def downsample_media(media: DataFrame, factor: int = 2) -> DataFrame:
     """Distributed real image downsampling via mapInPandas: every BMP
     payload is decoded, mean-pooled, and re-encoded in the executor.
     Output payloads are ~factor^2 smaller — the op where full-size bytes
     exist for the last time (same contract as resize_images, but the
     pixel transform is real for the uncompressed format).  Undecodable
     or too-small payloads yield content=NULL rows."""
-    if partitions:
-        media = media.repartition(partitions)
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
@@ -346,15 +338,12 @@ WAV_ENERGY_SCHEMA = StructType(
 )
 
 
-def wav_energy(media: DataFrame, partitions: int | None = None) -> DataFrame:
+def wav_energy(media: DataFrame) -> DataFrame:
     """Distributed audio energy profile over REAL decoded PCM: per clip,
     the sample count, exact sum of squares (the integer core of RMS
     loudness — rms = sqrt(sq_sum / n)), and peak absolute amplitude.
     int64 accumulation: 16-bit samples square to < 2^31, so ~2^33 samples
     per clip before overflow — far beyond any real clip."""
-    if partitions:
-        media = media.repartition(partitions)
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
@@ -390,16 +379,13 @@ DECODED_SCHEMA = StructType(
 )
 
 
-def decode_media_headers(media: DataFrame, partitions: int | None = None) -> DataFrame:
+def decode_media_headers(media: DataFrame) -> DataFrame:
     """Distributed header decode via Arrow-batched mapInPandas: sniffs each
     payload's magic and parses BMP dims / WAV timing with the pure-struct
     decoders above.  Unknown formats yield fmt=NULL rows (no poison-pill
     task failures from one bad payload).  Bytes do not survive the op —
     only the typed metadata row comes out.
     """
-    if partitions:
-        media = media.repartition(partitions)
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
@@ -436,14 +422,11 @@ def _fake_features(content: bytes) -> np.ndarray:
     return hist / max(len(arr), 1)
 
 
-def extract_features(media: DataFrame, partitions: int | None = None) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Featurize media payloads via Arrow-batched mapInPandas.
 
     Drops the payload column on output — bytes never travel past this op.
     """
-    if partitions:
-        media = media.repartition(partitions)
-
     def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             feats = [_fake_features(c) for c in pdf["content"]]
@@ -493,9 +476,7 @@ AUDIO_CHUNK_SCHEMA = StructType(
 )
 
 
-def chunk_audio(
-    media: DataFrame, chunk_ms: int = 10_000, partitions: int | None = None
-) -> DataFrame:
+def chunk_audio(media: DataFrame, chunk_ms: int = 10_000) -> DataFrame:
     """Audio chunking plumbing via mapInPandas: split each clip into
     fixed-duration windows (the ASR/embedding pre-step).
 
@@ -507,9 +488,6 @@ def chunk_audio(
     each output payload is <= chunk_ms worth of bytes — the property that
     keeps per-row memory flat no matter how long the input clips are.
     """
-    if partitions:
-        media = media.repartition(partitions)
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out: dict[str, list] = {
@@ -550,9 +528,7 @@ RESIZED_SCHEMA = StructType(
 )
 
 
-def resize_images(
-    media: DataFrame, target_w: int, target_h: int, partitions: int | None = None
-) -> DataFrame:
+def resize_images(media: DataFrame, target_w: int, target_h: int) -> DataFrame:
     """Image resize plumbing via mapInPandas: metadata is recomputed for
     real; the pixel transform is the deterministic byte-subsample fake (a
     real cluster swaps PIL's ``resize`` into ``_fake_resize``).
@@ -561,9 +537,6 @@ def resize_images(
     Arrow batch at a time and the op is the LAST place bytes exist at full
     size — downstream sees the (smaller) resized payloads only.
     """
-    if partitions:
-        media = media.repartition(partitions)
-
     def _fake_resize(content, w0, h0):
         if content is None or not w0 or not h0 or w0 <= 0 or h0 <= 0:
             return None

@@ -47,17 +47,16 @@ def term_frequencies(docs: DataFrame, text_col: str = "text", id_col: str = "doc
 def tfidf_top_terms(
     docs: DataFrame,
     k: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
-    """Top-k most salient terms per document by tf·idf (idf = ln(N/df)).
+    """Top-k most salient terms per document by tf·idf (idf = ln(N/df))
+    over the ``text`` column of ``docs``, keyed by ``doc_id``.
 
     Output: (doc_id, term, tf, df, tfidf, rk); rk is 1-based, ties broken
     by term so the result is deterministic on both engines.
     """
     # tf feeds BOTH the df aggregate and the scoring join — persist so the
     # tokenize+explode+agg runs once (released at the query boundary).
-    tf = persist_tracked(term_frequencies(docs, text_col, id_col))
+    tf = persist_tracked(term_frequencies(docs, "text", "doc_id"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
     n = docs.agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
     scored = (
@@ -68,13 +67,13 @@ def tfidf_top_terms(
             F.round(F.col("tf") * F.log(F.col("n_docs") / F.col("df")), 4),
         )
     )
-    w = Window.partitionBy(id_col).orderBy(
+    w = Window.partitionBy("doc_id").orderBy(
         F.desc("tfidf"), F.asc("term")
     )
     return (
         scored.withColumn("rk", F.row_number().over(w).cast("bigint"))
         .filter(F.col("rk") <= k)
-        .select(id_col, "term", "tf", "df", "tfidf", "rk")
+        .select("doc_id", "term", "tf", "df", "tfidf", "rk")
     )
 
 
@@ -82,41 +81,41 @@ def bm25_topk(
     docs: DataFrame,
     query_terms: list[str],
     topk: int = 20,
-    k1: float = 1.5,
-    b: float = 0.75,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
-    """Top-k documents for a bag-of-terms query under BM25.
+    """Top-k documents (``doc_id``, ``bm25``) for a bag-of-terms query
+    under BM25 over the ``text`` column, with k1 = 1.5 and b = 0.75.
 
     idf(t) = ln(1 + (N - df + 0.5)/(df + 0.5)); only documents containing
     at least one query term are scored (inverted-index probe — the
     filter sits directly on the exploded token stream, so non-hit
     documents never reach a shuffle).
 
-    Default k1/b are exactly-representable binary fractions (1.5, 0.75 —
+    k1/b are exactly-representable binary fractions (1.5, 0.75 —
     so k1+1, 1-b, b are too): every constant in the scoring expression is
     then the same double on any engine, and the oracle's literals match
     bit-for-bit.
     """
     if not query_terms:
         raise ValueError("bm25_topk needs at least one query term")
+    k1, b = 1.5, 0.75
     base = docs.select(
-        F.col(id_col),
-        F.size(tokens_col(text_col)).cast("bigint").alias("dl"),
-        F.explode(tokens_col(text_col)).alias("term"),
+        F.col("doc_id"),
+        F.size(tokens_col("text")).cast("bigint").alias("dl"),
+        F.explode(tokens_col("text")).alias("term"),
     )
     hits = base.filter(F.col("term").isin([t.lower() for t in query_terms]))
     # Per (doc, query-term) tf with the doc length carried along; persisted
     # because the df aggregate and the scoring join both consume it.
     tfq = persist_tracked(
-        hits.groupBy(id_col, "term").agg(
+        hits.groupBy("doc_id", "term").agg(
             F.count(F.lit(1)).cast("bigint").alias("tf"),
             F.max("dl").alias("dl"),
         )
     )
     dfq = tfq.groupBy("term").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
-    stats = docs.select(F.size(tokens_col(text_col)).cast("bigint").alias("__dl")).agg(
+    stats = docs.select(
+        F.size(tokens_col("text")).cast("bigint").alias("__dl")
+    ).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.avg("__dl").alias("avgdl"),
     )
@@ -131,9 +130,9 @@ def bm25_topk(
     scored = (
         tfq.join(F.broadcast(dfq), "term")  # |query_terms| rows
         .crossJoin(F.broadcast(stats))  # 1-row scalar
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.round(F.sum(idf * tf_part), 4).alias("bm25"))
     )
     # TakeOrdered top-k (no global single-partition window); rounded-score
     # then doc-id ordering keeps the selected SET engine-portable.
-    return scored.orderBy(F.desc("bm25"), F.asc(id_col)).limit(topk)
+    return scored.orderBy(F.desc("bm25"), F.asc("doc_id")).limit(topk)

@@ -141,7 +141,6 @@ def sq8_topk(
     vec_col: str,
     id_col: str,
     k: int = 10,
-    max_queries: int = MAX_BROADCAST_QUERIES,
 ) -> DataFrame:
     """Approximate cosine top-k over INT8 scalar-quantized vectors — the
     memory-side ANN lever (4x smaller vectors than float32, 8x smaller
@@ -198,10 +197,10 @@ def sq8_topk(
     q = reconstruct(queries, "query_id")
     q = cache.persist_tracked(q)
     n_q = q.count()
-    if n_q > max_queries:
+    if n_q > MAX_BROADCAST_QUERIES:
         raise ValueError(
             f"sq8_topk broadcasts the query side: got {n_q} queries > "
-            f"max_queries={max_queries}."
+            f"MAX_BROADCAST_QUERIES={MAX_BROADCAST_QUERIES}."
         )
     c = reconstruct(corpus, "neighbor_id")
     joined = c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
@@ -463,7 +462,6 @@ def hard_negative_topk(
     id_col: str,
     label_col: str,
     k: int = 5,
-    max_queries: int = MAX_BROADCAST_QUERIES,
 ) -> DataFrame:
     """Hard-negative mining: per query, the top-k most-similar corpus
     vectors with a DIFFERENT label — contrastive-training pair generation.
@@ -479,10 +477,10 @@ def hard_negative_topk(
     broadcast build reads it back."""
     queries = cache.persist_tracked(queries)
     n_q = queries.count()
-    if n_q > max_queries:
+    if n_q > MAX_BROADCAST_QUERIES:
         raise ValueError(
             f"hard_negative_topk broadcasts the query side: got {n_q} "
-            f"queries > max_queries={max_queries}."
+            f"queries > MAX_BROADCAST_QUERIES={MAX_BROADCAST_QUERIES}."
         )
     q = queries.select(
         F.col(id_col).alias("query_id"),
@@ -517,7 +515,6 @@ def l2_topk(
     vec_col: str,
     id_col: str,
     k: int = 10,
-    max_queries: int = MAX_BROADCAST_QUERIES,
 ) -> DataFrame:
     """Exact squared-L2 top-k on micro-int vectors (the ground truth for
     the PQ evaluation; all-integer, rank deterministic).  Same
@@ -529,8 +526,8 @@ def l2_topk(
         micro_embedding(vec_col).alias("qvec"),
     )
     q = cache.persist_tracked(q)
-    if q.count() > max_queries:
-        raise ValueError(f"l2_topk broadcasts queries; > {max_queries}")
+    if q.count() > MAX_BROADCAST_QUERIES:
+        raise ValueError(f"l2_topk broadcasts queries; > {MAX_BROADCAST_QUERIES}")
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         micro_embedding(vec_col).alias("cvec"),
@@ -556,7 +553,6 @@ def l2_topk_prefixes(
     id_col: str,
     dims: tuple,
     k: int = 10,
-    max_queries: int = MAX_BROADCAST_QUERIES,
 ) -> DataFrame:
     """``l2_topk`` over PREFIX-truncated vectors at SEVERAL truncation
     dims from ONE broadcast join (r12 opt, guide §2.4): micro-unit
@@ -570,10 +566,10 @@ def l2_topk_prefixes(
     MEMORY CONTRACT (ADVICE r12): unlike ``l2_topk``, which streams the
     scored pairs straight into the window, this variant PERSISTS the full
     Q x N pair frame so every dim reuses one join — so it is for SMALL
-    query sets (the callers pass ~20).  At ``max_queries`` = the broadcast
-    guard limit the persisted frame would be 100k x |corpus| rows; pass an
-    explicitly smaller ``max_queries`` (or use per-dim ``l2_topk``) if the
-    query set grows beyond what storage memory can hold."""
+    query sets (the callers pass ~20).  At the broadcast guard limit
+    (``MAX_BROADCAST_QUERIES``) the persisted frame would be 100k x
+    |corpus| rows; use per-dim ``l2_topk`` if the query set grows beyond
+    what storage memory can hold."""
     from lakeforge.llm.clustering import _d2, micro_embedding
 
     if not dims or len(set(dims)) != len(dims):
@@ -586,8 +582,10 @@ def l2_topk_prefixes(
         micro_embedding(vec_col).alias("qvec"),
     )
     q = cache.persist_tracked(q)
-    if q.count() > max_queries:
-        raise ValueError(f"l2_topk_prefixes broadcasts queries; > {max_queries}")
+    if q.count() > MAX_BROADCAST_QUERIES:
+        raise ValueError(
+            f"l2_topk_prefixes broadcasts queries; > {MAX_BROADCAST_QUERIES}"
+        )
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         micro_embedding(vec_col).alias("cvec"),

@@ -56,14 +56,14 @@ def text_stats(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def lang_id(df: DataFrame, text_col: str, id_col: str, permille_threshold: int = 30) -> DataFrame:
+def lang_id(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """N-gram-free language-ID heuristic: English iff the stopword ratio
-    clears the threshold.  (A real model would be a Pandas-UDF fastText
+    reaches 30 per mille.  (A real model would be a Pandas-UDF fastText
     call; the Spark plumbing — project, score, threshold — is identical.)"""
     stats = text_stats(df, text_col, id_col)
     return stats.select(
         id_col,
-        F.when(F.col("stop_permille") >= permille_threshold, F.lit("en"))
+        F.when(F.col("stop_permille") >= 30, F.lit("en"))
         .otherwise(F.lit("unk"))
         .alias("lang_pred"),
     )
@@ -359,7 +359,6 @@ def quality_score(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    keep_threshold: int = 700,
 ) -> DataFrame:
     """Rule-based quality classifier: the cheap linear filter every
     pretraining pipeline runs before any model-based scoring (C4/Gopher
@@ -371,8 +370,8 @@ def quality_score(
     - ``len_band``  200 bonus when 30 <= n_tokens <= 500 (too short = no
       signal, too long at fixed quality = likely boilerplate/log dump).
 
-    score = 2*stop_pm + uniq_pm + len_band; label keep/drop at
-    ``keep_threshold``.  Weights are pinned constants — swap in learned
+    score = 2*stop_pm + uniq_pm + len_band; label keep at score >= 700,
+    else drop.  Weights and threshold are pinned constants — swap in learned
     ones without touching the plan.
 
     Scale: one Project over the scan (no shuffle, no UDF); the filter can
@@ -413,7 +412,7 @@ def quality_score(
         "stop_pm",
         "uniq_pm",
         score.alias("quality_score"),
-        F.when(score >= keep_threshold, F.lit("keep"))
+        F.when(score >= 700, F.lit("keep"))
         .otherwise(F.lit("drop"))
         .alias("label"),
     )

@@ -104,22 +104,17 @@ def psi_between(
     expected: DataFrame,
     actual: DataFrame,
     band_col: str,
-    count_col: str = "n",
 ) -> DataFrame:
     """Population Stability Index contributions between two banded count
-    frames: PSI = Σ (a_i − e_i)·ln(a_i/e_i) over shares.
+    frames (count column ``n``): PSI = Σ (a_i − e_i)·ln(a_i/e_i) over shares.
 
     Laplace-smoothed (+1 per cell after a full-outer band align) so bands
     present on only one side stay finite.  Both inputs are already
     aggregated (bands × counts — tiny), so this is pure column
     arithmetic; sum `psi_contrib` downstream for the scalar.
     """
-    e = expected.select(
-        band_col, F.col(count_col).cast("bigint").alias("__e_raw")
-    )
-    a = actual.select(
-        band_col, F.col(count_col).cast("bigint").alias("__a_raw")
-    )
+    e = expected.select(band_col, F.col("n").cast("bigint").alias("__e_raw"))
+    a = actual.select(band_col, F.col("n").cast("bigint").alias("__a_raw"))
     j = (
         e.join(a, band_col, "full_outer")
         .withColumn("__e_n", F.coalesce("__e_raw", F.lit(0)) + 1)
@@ -217,112 +212,3 @@ def blocked_prefix_sum(
         )
         drop += [f"__in{i}", f"__carry{i}"]
     return out.drop(*drop)
-
-
-def blocked_ntile(
-    df: DataFrame,
-    value_col: str,
-    tiebreak_col: str,
-    n_tiles: int,
-    value_block: Column,
-    tiebreak_block: Column,
-    out_col: str = "ntile",
-    n_total: "int | None" = None,
-    hist_bounded: bool = False,
-) -> DataFrame:
-    """``ntile(n) OVER (ORDER BY value_col ASC, tiebreak_col ASC)``
-    without the single-partition global sort (VERDICT r06 #2): rank =
-    strict-prefix count over the VALUE HISTOGRAM (blocked) + within-tie
-    rank by tiebreak (grouped-blocked, so a tie group holding 1e8 rows
-    still parallelizes), and the SQL-standard tile from (rank, n):
-    the first n mod k tiles get floor(n/k)+1 rows, the rest floor(n/k).
-    Exact — identical to the window function for any block widths.
-    Descending orders: pass the negated value.
-
-    ``value_col`` must be integral; ``tiebreak_col`` unique within each
-    value (together they form the total order).  ``value_block`` /
-    ``tiebreak_block`` follow blocked_prefix_sum's monotonicity contract
-    over their respective columns.
-
-    Cost shape: the per-row pass is ONE value-histogram aggregate plus
-    one hist equi-join back.  A row's tile is decided by its VALUE alone
-    unless its tie group straddles a tile boundary — and at most
-    n_tiles-1 groups can straddle — so the within-tie tiebreak ranking
-    (the grouped-blocked pass) runs over ONLY the straddling groups'
-    rows, never the full frame."""
-    kk = int(n_tiles)
-
-    # Integer div throughout (exact past 2^53, unlike double /).
-    def tile_expr(rank_sql: str) -> Column:
-        cut = f"((__n - __q * {kk}) * (__q + 1))"
-        return F.expr(
-            f"CASE WHEN ({rank_sql}) <= {cut}"
-            f" THEN (({rank_sql}) - 1) div (__q + 1) + 1"
-            f" ELSE (__n - __q * {kk})"
-            f"      + (({rank_sql}) - {cut} - 1) div greatest(__q, 1) + 1"
-            f" END"
-        )
-
-    # n is one bounded driver scalar; callers scoring several orderings
-    # over one persisted frame pass it in so the chained plan isn't
-    # re-executed per count.
-    if n_total is None:
-        n_row = df.agg(F.count(F.lit(1)).cast("bigint").alias("__n"))
-    else:
-        n_row = df.sparkSession.range(1).select(
-            F.lit(int(n_total)).cast("bigint").alias("__n")
-        )
-    hist = df.groupBy(value_col).agg(
-        F.count(F.lit(1)).cast("bigint").alias("__vn")
-    )
-    if hist_bounded:
-        # Caller certifies the DISTINCT-value count is bounded by a
-        # domain constant (a calendar span, a max-per-key count), not by
-        # data volume — then a plain unpartitioned window over the hist
-        # is the same soundness class as blocked_prefix_sum's internal
-        # block-summary window, at one stage instead of five.
-        w = Window.orderBy(value_col).rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        hist = hist.withColumn(
-            "__cumv", F.coalesce(F.sum("__vn").over(w), F.lit(0))
-        )
-    else:
-        hist = blocked_prefix_sum(
-            hist, value_col, "__vn", value_block, out_col="__cumv"
-        )
-    hist = (
-        hist
-        .crossJoin(F.broadcast(n_row))
-        .withColumn("__q", F.expr(f"__n div {kk}"))
-        # tile of the group's FIRST and LAST member: equal -> every
-        # member inherits it, no tiebreak needed
-        .withColumn("__tile_lo", tile_expr("__cumv + 1"))
-        .withColumn("__tile_hi", tile_expr("__cumv + __vn"))
-        .select(value_col, "__cumv", "__n", "__q", "__tile_lo", "__tile_hi")
-    )
-    from lakeforge.cache import persist_tracked
-
-    # hist_bounded certifies a domain-constant hist -> broadcast it (the
-    # post-aggregate size is unknown to Catalyst, which would plan SMJ).
-    joined = persist_tracked(
-        df.join(F.broadcast(hist) if hist_bounded else hist, value_col)
-    )
-    settled = joined.filter(
-        F.col("__tile_lo") == F.col("__tile_hi")
-    ).withColumn(out_col, F.col("__tile_lo").cast("bigint"))
-    straddle = joined.filter(F.col("__tile_lo") != F.col("__tile_hi"))
-    ranked = blocked_prefix_sum(
-        straddle.withColumn("__one", F.lit(1)),
-        tiebreak_col,
-        "__one",
-        tiebreak_block,
-        out_col="__cumt",
-        group_cols=[value_col],
-    ).drop("__one")
-    resolved = ranked.withColumn(
-        out_col, tile_expr("__cumv + __cumt + 1").cast("bigint")
-    ).drop("__cumt")
-    return settled.unionByName(resolved).drop(
-        "__cumv", "__vn", "__n", "__q", "__tile_lo", "__tile_hi"
-    )

@@ -157,30 +157,3 @@ def split_by_expectations(
     good = tagged.filter(F.size("__failed_rules") == 0).drop("__failed_rules")
     quarantined = tagged.filter(F.size("__failed_rules") > 0)
     return good, quarantined
-
-
-def schema_drift(old: "DataFrame", new: "DataFrame") -> "DataFrame":
-    """Schema contract diff between two frames: one row per drifted
-    column — 'added' / 'removed' / 'type_changed' (with both type
-    strings) — the check an ingest pipeline runs BEFORE writing, so a
-    producer-side schema change becomes a loud gate instead of a
-    corrupted table or a midnight merge failure.
-
-    Pure metadata (no data scan, no job): schemas come from the plan.
-    Pair with merge_upsert(evolve_schema=True) for drift you choose to
-    accept."""
-    spark = old.sparkSession
-    o = {f.name: f.dataType.simpleString() for f in old.schema.fields}
-    n = {f.name: f.dataType.simpleString() for f in new.schema.fields}
-    rows = []
-    for c in n:
-        if c not in o:
-            rows.append((c, "added", None, n[c]))
-        elif o[c] != n[c]:
-            rows.append((c, "type_changed", o[c], n[c]))
-    for c in o:
-        if c not in n:
-            rows.append((c, "removed", o[c], None))
-    return spark.createDataFrame(
-        rows, "column string, change string, old_type string, new_type string"
-    )

@@ -48,15 +48,13 @@ def _undirected_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
     )
 
 
-def connected_components(
-    edges: DataFrame, src: str, dst: str, max_iter: int = 25
-) -> DataFrame:
+def connected_components(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """(vertex, component) for every vertex appearing in ``edges``;
-    component id = min vertex id in the component."""
-    if max_iter < 1:
-        # >=1 iteration guarantees the returned frame is checkpointed
-        # (self-contained) before und's blocks are released below.
-        raise ValueError("max_iter must be >= 1")
+    component id = min vertex id in the component.  Stops after 25
+    iterations (min-propagation needs one per hop of diameter)."""
+    # >=1 iteration guarantees the returned frame is checkpointed
+    # (self-contained) before und's blocks are released below.
+    max_iter = 25
     und = _undirected_edges(edges, src, dst)
     from lakeforge import cache
 
@@ -113,9 +111,7 @@ def connected_components(
     return labels.select(F.col("v").alias("vertex"), F.col("lbl").alias("component"))
 
 
-def connected_components_jump(
-    edges: DataFrame, src: str, dst: str, max_iter: int = 20
-) -> DataFrame:
+def connected_components_jump(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """``connected_components`` with POINTER JUMPING: each iteration takes
     the min over neighbor labels AND then replaces the label with the
     label's own current label (path compression), so convergence needs
@@ -130,14 +126,13 @@ def connected_components_jump(
     hops, far past any fixed iteration budget.  With the jump step the
     same chain needs ~9 iterations.  Same cache discipline, convergence
     check, and output contract as ``connected_components`` — except that
-    exhausting ``max_iter`` without converging RAISES instead of
+    exhausting its 20 iterations without converging RAISES instead of
     silently returning split components (a split component is a wrong
     answer downstream aggregates cannot detect; with pointer jumping,
     20 iterations cover ~2^20-hop diameters, so hitting the cap means
     something is structurally wrong, not merely large).
     """
-    if max_iter < 1:
-        raise ValueError("max_iter must be >= 1")
+    max_iter = 20
     und = _undirected_edges(edges, src, dst)
     from lakeforge import cache
 
@@ -209,13 +204,12 @@ def connected_components_jump(
 
 def pagerank_nano(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     iters: int = 3,
     damping_permille: int = 850,
     broadcast_ranks: bool = False,
 ) -> DataFrame:
-    """PageRank in exact nano-unit integer arithmetic — (node, rank_nano).
+    """PageRank in exact nano-unit integer arithmetic — (node, rank_nano)
+    over the ``src`` -> ``dst`` columns of ``edges``.
 
     Rank mass is carried as bigint nano-units (1.0 == 1e9) and every step
     is integer math: contributions are ``rank div out_degree``, damping is
@@ -254,10 +248,10 @@ def pagerank_nano(
     """
     from lakeforge import cache
 
-    out_deg = edges.groupBy(src).agg(F.count(F.lit(1)).alias("deg"))
+    out_deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     ed = cache.persist_tracked(
-        edges.join(out_deg, src).select(
-            F.col(src).alias("e_src"), F.col(dst).alias("e_dst"), "deg"
+        edges.join(out_deg, "src").select(
+            F.col("src").alias("e_src"), F.col("dst").alias("e_dst"), "deg"
         )
     )
     nodes = ed.select(F.col("e_src").alias("node")).distinct()
@@ -290,7 +284,6 @@ def hits_ppm(
     hub: str = "hub",
     auth: str = "auth",
     rounds: int = 2,
-    scale: int = 1_000_000,
     broadcast_scores: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """HITS hubs & authorities (Kleinberg, JACM 1999) in exact integer
@@ -300,8 +293,8 @@ def hits_ppm(
     Each round is the mutual-reinforcement update on the bipartite edge
     list: ``auth(a) = Σ hub(h)`` over incident edges, renormalized to
     ppm of the round's max by floor division, then ``hub(h) = Σ auth(a)``
-    renormalized the same way.  Hubs start at ``scale`` (uniform), which
-    lets round 1's auth step collapse to ``scale * in-degree`` — one
+    renormalized the same way.  Hubs start at 1e6 (uniform), which
+    lets round 1's auth step collapse to ``1e6 * in-degree`` — one
     aggregate instead of a score join (applied below).  All integer ops +
     fixed round count ⇒ bit-identical on any engine / partitioning, so an
     unrolled-CTE SQL oracle can replay the rounds.
@@ -315,12 +308,14 @@ def hits_ppm(
       vector into the edge join (never re-shuffles the edge list), the
       right regime for dim-sized vertex sets; set False to shuffle-join
       when the vertex vector outgrows the broadcast threshold.
-    - Overflow headroom: scores are ≤ ``scale`` post-normalization, so the
-      pre-normalization sums are ≤ scale·max_degree and the renormalizing
-      product ≤ scale²·max_degree — fine in bigint up to ~9e18/1e12 ≈ 9e6
-      max degree at the default scale; drop ``scale`` for denser graphs.
+    - Overflow headroom: scores are ≤ 1e6 post-normalization, so the
+      pre-normalization sums are ≤ 1e6·max_degree and the renormalizing
+      product ≤ 1e12·max_degree — fine in bigint up to ~9e18/1e12 ≈ 9e6
+      max degree.
     """
     from lakeforge import cache
+
+    scale = 1_000_000
 
     ed = cache.persist_tracked(edges.select(hub, auth).distinct())
 
@@ -559,8 +554,6 @@ def sssp_hops(
 
 def kcore_nodes(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     k: int = 3,
     rounds: int = 6,
 ) -> DataFrame:
@@ -573,8 +566,9 @@ def kcore_nodes(
     two formulations check each other (same contract as bfs_depths).
     The final projection keeps only nodes whose residual degree is >= k.
 
-    ``edges`` must already be symmetric (both directions present), so
-    degree = out-degree and each round is ONE aggregate + two semi-joins.
+    ``edges`` (columns ``src``, ``dst``) must already be symmetric (both
+    directions present), so degree = out-degree and each round is ONE
+    aggregate + two semi-joins.
 
     Scale design: per round, work is O(current edges) — one map-side-
     combined degree aggregate (shuffle carries (node, partial count), at
@@ -588,7 +582,7 @@ def kcore_nodes(
     from lakeforge import cache
 
     spark = edges.sparkSession
-    cur = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    cur = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
     # The initial edge count is the materializing action for the lazy
     # checkpoint (one job; the count is the only consumer before the loop).
     cur, prev_ids = cache.checkpoint_eager(cur, eager=False)

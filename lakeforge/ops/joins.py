@@ -19,21 +19,18 @@ from pyspark.sql import functions as F
 
 
 def broadcast_left_join(
-    left: DataFrame, right: DataFrame, on: list[str], how: str = "left"
+    left: DataFrame, right: DataFrame, on: list[str]
 ) -> DataFrame:
-    """Reference J1: ``/*+ BROADCAST(d) */`` as an explicit hint.
+    """Reference J1: ``/*+ BROADCAST(d) */`` as an explicit hint on a left join.
 
     AQE would often convert anyway; the explicit hint removes the dependence
     on stats when we KNOW the right side is dim-sized.
     """
-    return left.join(F.broadcast(right), on=on, how=how)
+    return left.join(F.broadcast(right), on=on, how="left")
 
 
 def full_outer_coalesce(
-    left: DataFrame,
-    right: DataFrame,
-    on: list[str],
-    how: str = "full_outer",
+    left: DataFrame, right: DataFrame, on: list[str]
 ) -> DataFrame:
     """Reference J2: full-outer on the key columns with COALESCE key
     resolution (gold_sql_to_postgres.py:131-132).
@@ -41,7 +38,7 @@ def full_outer_coalesce(
     Spark's list-form ``on`` already emits a single coalesced key column for
     full-outer joins, which is exactly the reference's COALESCE(p1.k, p2.k).
     """
-    return left.join(right, on=on, how=how)
+    return left.join(right, on=on, how="full_outer")
 
 
 def resolve_interval_key(
@@ -51,14 +48,14 @@ def resolve_interval_key(
     at_col: str,
     start_col: str = "effective_start_date",
     end_col: str = "effective_end_date",
-    how: str = "left",
     broadcast_dim: bool = True,
 ) -> DataFrame:
     """Reference J3: as-of lookup of the dim version valid at ``fact.at_col``.
 
-    Returns fact columns + all non-key dim columns of the matching version.
-    SCD2 intervals are non-overlapping per key, so at most one dim row
-    matches — row count is preserved for how='left'.
+    A left join: returns fact columns + all non-key dim columns of the
+    matching version (NULL when none matches).  SCD2 intervals are
+    non-overlapping per key, so at most one dim row matches — the fact's
+    row count is preserved.
 
     broadcast_dim=True is right whenever the dimension fits in executor
     memory (the common case); set False to let AQE pick SMJ for huge dims.
@@ -72,7 +69,7 @@ def resolve_interval_key(
     cond = cond & F.col(f"f.{at_col}").between(
         F.col(f"d.{start_col}"), F.col(f"d.{end_col}")
     )
-    joined = fa.join(da, on=cond, how=how)
+    joined = fa.join(da, on=cond, how="left")
     dim_payload = [c for c in dim.columns if c not in set(key)]
     return joined.select(
         *[F.col(f"f.{c}") for c in fact.columns],
@@ -257,14 +254,13 @@ def bloom_prefiltered_semi_join(
     fact_key: str,
     keys_key: str,
     n_bits: int = 16384,
-    n_hashes: int = 3,
 ) -> DataFrame:
     """LEFT SEMI join with a hand-built Bloom prefilter — the manual
     version of the runtime row-level filter (Spark's internal
     bloom_filter_agg isn't SQL-exposed), for when the key set is too big
     to broadcast as an IN-list but its BITMAP is tiny.
 
-    Build side: each key sets ``n_hashes`` md5-derived bits; the bits are
+    Build side: each key sets 3 md5-derived bits; the bits are
     PACKED into ``n_bits/64`` bigint words (bit_or aggregate), densified
     into one array, and broadcast (2KB at 16k bits — constant, whatever
     the key count).  Probe side: membership is word-index + mask — O(1)
@@ -281,6 +277,7 @@ def bloom_prefiltered_semi_join(
     explicit and portable."""
     from lakeforge.functions.keys import md5_int
 
+    n_hashes = 3
     n_words = (n_bits + 63) // 64
 
     def positions(col):

@@ -45,17 +45,17 @@ def zorder_write(
     zcols: list[str],
     bits: int = 16,
     n_files: int = 8,
-    mode: str = "overwrite",
 ) -> None:
-    """Write ``df`` clustered on the z-curve of ``zcols``: range-partition
-    by z-key into ``n_files`` output files, sorted within each.  Filters on
-    any z-ordered column then skip files via parquet min/max stats."""
+    """Overwrite ``path`` with ``df`` clustered on the z-curve of
+    ``zcols``: range-partition by z-key into ``n_files`` output files,
+    sorted within each.  Filters on any z-ordered column then skip files
+    via parquet min/max stats."""
     keyed = df.withColumn("__z", zorder_key(list(zcols), bits))
     (
         keyed.repartitionByRange(n_files, "__z")
         .sortWithinPartitions("__z")
         .drop("__z")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )
 
@@ -157,7 +157,9 @@ def compact_partitions(
 # one operation that is atomic on POSIX and a single-object PUT on object
 # stores.  Readers resolve the pointer, then read an immutable prefix, so
 # a reader can NEVER observe a half-written table; a crashed writer leaves
-# only an orphaned (unreferenced) version prefix, cleaned by vacuum.
+# only an orphaned (unreferenced) version prefix.  Readers take
+# ``spark.read.parquet(versioned_path(root))``; pass a version number to
+# ``versioned_path`` to time-travel.
 # ---------------------------------------------------------------------------
 
 _POINTER = "_VERSION"
@@ -184,12 +186,6 @@ def versioned_path(table_root: str, version: int | None = None) -> str:
     return _os.path.join(table_root, f"v{v}")
 
 
-def read_versioned(spark, table_root: str):
-    """Read the current committed version (time travel: pass
-    ``versioned_path(root, n)`` to ``spark.read.parquet`` directly)."""
-    return spark.read.parquet(versioned_path(table_root))
-
-
 def _existing_versions(table_root: str) -> list[int]:
     import os as _os
     import re as _re
@@ -214,7 +210,7 @@ def commit_version(df, table_root: str, partition_by: list[str] | None = None) -
     just past the pointer: a writer that died after writing data but
     before the flip leaves an orphan prefix, and allocating ``cur + 1``
     would collide with it forever (mode errorifexists) — write-bricking
-    the table.  Orphans above the pointer are reclaimed by vacuum.
+    the table.
     """
     import os as _os
 
@@ -233,27 +229,6 @@ def commit_version(df, table_root: str, partition_by: list[str] | None = None) -
         fh.write(str(nxt))
     _os.replace(tmp, _os.path.join(table_root, _POINTER))  # the commit point
     return nxt
-
-
-def vacuum_versions(table_root: str, keep: int = 2) -> list[int]:
-    """Delete old and orphaned version prefixes; never the pointer's target.
-
-    Removes (a) committed versions older than the newest ``keep`` at or
-    below the pointer, and (b) orphan prefixes ABOVE the pointer — data
-    from writers that died before their pointer flip (never visible to
-    readers, but they hold disk and, before the allocation fix in
-    commit_version, blocked version reuse).  Returns removed versions."""
-    import os as _os
-    import shutil as _shutil
-
-    cur = current_version(table_root)
-    versions = _existing_versions(table_root)
-    committed = [v for v in versions if cur is not None and v <= cur]
-    orphans = [v for v in versions if cur is None or v > cur]
-    doomed = ([v for v in committed[:-keep] if v != cur] if keep > 0 else []) + orphans
-    for v in doomed:
-        _shutil.rmtree(_os.path.join(table_root, f"v{v}"))
-    return sorted(doomed)
 
 
 def compact_versioned(
@@ -297,11 +272,10 @@ def range_sorted_write(
     path: str,
     sort_cols: list[str],
     num_files: int | None = None,
-    mode: str = "overwrite",
 ) -> None:
-    """Write parquet globally range-clustered on ``sort_cols``:
-    ``repartitionByRange`` assigns disjoint key ranges to files and
-    ``sortWithinPartitions`` orders rows inside each — so every file's
+    """Overwrite ``path`` with parquet globally range-clustered on
+    ``sort_cols``: ``repartitionByRange`` assigns disjoint key ranges to
+    files and ``sortWithinPartitions`` orders rows inside each — so every file's
     parquet min/max footer stats for the leading sort column are
     (near-)disjoint, and a point or range predicate prunes to ~one file
     at planning/scan time (row-group skipping).  The single-dimension
@@ -316,7 +290,7 @@ def range_sorted_write(
         if num_files
         else df.repartitionByRange(*sort_cols)
     )
-    out.sortWithinPartitions(*sort_cols).write.mode(mode).parquet(path)
+    out.sortWithinPartitions(*sort_cols).write.mode("overwrite").parquet(path)
 
 
 # ---------------------------------------------------------------------------
@@ -393,29 +367,6 @@ def skipping_scan(spark, path: str, col: str, lo, hi):
     if not files:
         return spark.read.parquet(path).filter(F.lit(False))
     return spark.read.parquet(*files).filter(pred)
-
-
-def manifest_profile(spark, path: str):
-    """Metadata-only table profile: (n_files, n_rows, min_*, max_*) answered
-    ENTIRELY from the stats manifest — zero data files opened.  The
-    COUNT(*) / MIN / MAX class of query that table formats serve from
-    snapshot metadata; correctness holds because the manifest is rebuilt
-    (or incrementally extended, ``update_stats_manifest``) on every layout
-    commit, and min/max/count are mergeable across files by construction.
-    """
-    from pyspark.sql import functions as F
-
-    m = spark.read.parquet(f"{path}/{MANIFEST_DIR}")
-    stat_cols = sorted(
-        {c[4:] for c in m.columns if c.startswith("min_")}
-    )
-    aggs = [
-        F.count(F.lit(1)).cast("bigint").alias("n_files"),
-        F.sum("n_rows").cast("bigint").alias("n_rows"),
-    ]
-    for c in stat_cols:
-        aggs += [F.min(f"min_{c}").alias(f"min_{c}"), F.max(f"max_{c}").alias(f"max_{c}")]
-    return m.agg(*aggs)
 
 
 def update_stats_manifest(spark, path: str, stat_cols: list[str]) -> int:

@@ -6,8 +6,8 @@ at least ``k`` records share it (k-anonymity, Sweeney 2002) and the
 sensitive column takes at least ``l`` distinct values inside it
 (l-diversity, Machanavalli et al. 2007) — otherwise the group is
 SUPPRESSED.  Suppression is reported, not silent: the released frame
-carries per-group counts and the suppressed mass is returned as an
-aggregate row so downstream consumers can see what was withheld.
+carries per-group counts, including the suppressed groups' sizes, so
+downstream consumers can see what was withheld.
 
 Scale: one groupBy on the quasi-identifier columns (map-side combinable
 count + approx-exact distinct), one filter — no second scan of the fact
@@ -41,15 +41,6 @@ def kanon_release(
     return grouped.withColumn(
         "released",
         (F.col("n_rows") >= k) & (F.col("n_sensitive") >= l_div),
-    )
-
-
-def release_summary(release: DataFrame) -> DataFrame:
-    """Collapse a kanon_release frame to the audit headline: how many
-    groups / rows were published vs suppressed."""
-    return release.groupBy("released").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_groups"),
-        F.sum("n_rows").cast("bigint").alias("n_rows"),
     )
 
 

@@ -16,7 +16,10 @@ reruns.  These operators hash stable KEYS instead:
 
 The salt namespaces each use: different salts give independent samples
 from the same keys; a FIXED salt is what makes the split stable release
-to release.
+to release.  Where no caller varies it, the salt is fixed in the
+function: ``train_test_split_col`` uses 'split', ``epoch_shuffle_key``
+'epoch', ``capped_sample_per_group`` 'groupcap' and
+``exact_k_per_stratum`` 'exact_k'.
 """
 
 from __future__ import annotations
@@ -41,13 +44,11 @@ def deterministic_sample(
     return df.filter(sample_permille_col(key, salt) < permille)
 
 
-def train_test_split_col(
-    key: Column | str, test_permille: int, salt: str = "split"
-) -> Column:
+def train_test_split_col(key: Column | str, test_permille: int) -> Column:
     """'test' for ~test_permille/1000 of keys, else 'train' — as a column,
     so both halves come from one scan (filter twice, or groupBy the tag)."""
     return F.when(
-        sample_permille_col(key, salt) < test_permille, F.lit("test")
+        sample_permille_col(key, "split") < test_permille, F.lit("test")
     ).otherwise(F.lit("train"))
 
 
@@ -67,7 +68,7 @@ def stratified_sample(
     return df.filter(sample_permille_col(key, salt) < rate)
 
 
-def epoch_shuffle_key(key: Column | str, epoch: int, salt: str = "epoch") -> Column:
+def epoch_shuffle_key(key: Column | str, epoch: int) -> Column:
     """Deterministic per-epoch global shuffle order for training readers.
 
     Order by this column to get a reproducible pseudo-random permutation
@@ -78,7 +79,7 @@ def epoch_shuffle_key(key: Column | str, epoch: int, salt: str = "epoch") -> Col
     hash here (oracle-checkable in DuckDB).
     """
     k = F.col(key) if isinstance(key, str) else key
-    return md5_int(F.lit(salt), F.lit(str(epoch)), k)
+    return md5_int(F.lit("epoch"), F.lit(str(epoch)), k)
 
 
 def kfold_col(key: Column | str, k: int, salt: str = "kfold") -> Column:
@@ -127,8 +128,6 @@ def capped_sample_per_group(
     group_col: str,
     key: str,
     cap: int,
-    salt: str = "groupcap",
-    n_buckets: int = 16,
 ) -> DataFrame:
     """Deterministic per-group cap: keep at most ``cap`` rows per group,
     chosen by md5 order — the per-domain cap of web-corpus pipelines
@@ -137,13 +136,13 @@ def capped_sample_per_group(
 
     Two-level selection so a HOT group never funnels through one reducer:
 
-    1. rows are salted into ``n_buckets`` hash buckets; a window over
+    1. rows are salted into 16 hash buckets; a window over
        (group, bucket) keeps the ``cap`` smallest hashes per bucket —
        parallelism = groups x buckets, each task bounded;
-    2. a window over (group) re-ranks ONLY the <= n_buckets*cap
+    2. a window over (group) re-ranks ONLY the <= 16*cap
        level-1 survivors and keeps the global ``cap`` smallest.
 
-    Level 2 sees at most ``n_buckets * cap`` rows per group regardless of
+    Level 2 sees at most ``16 * cap`` rows per group regardless of
     group size — the same seam pattern as the two-level key-gap scan
     (workload_rel.q_orderkey_gaps).  Result is identical to a single
     global per-group rank: the overall top-``cap`` hashes are each top-
@@ -154,8 +153,8 @@ def capped_sample_per_group(
     for c in ("__h", "__r1", "__r2"):
         if c in df.columns:
             raise ValueError(f"capped_sample_per_group: column {c} is reserved")
-    h = md5_int(F.col(key), F.lit(salt))
-    bucket = F.pmod(h, F.lit(n_buckets))
+    h = md5_int(F.col(key), F.lit("groupcap"))
+    bucket = F.pmod(h, F.lit(16))
     ranked1 = df.withColumn("__h", h).withColumn(
         "__r1",
         F.row_number().over(
@@ -175,11 +174,10 @@ def exact_k_per_stratum(
     strata_cols: list[str],
     key_col: str,
     k: int,
-    salt: str = "exact_k",
 ) -> DataFrame:
     """EXACTLY min(k, |stratum|) rows per stratum — what proportional
     sampling can't promise (small strata can draw 0 rows; Bernoulli draws
-    vary run to run).  Selection order is the md5 hash of (salt, key):
+    vary run to run).  Selection order is the md5 hash of ('exact_k', key):
     uniform, deterministic, reproducible on any engine/partitioning —
     this is reservoir sampling's guarantee without its sequential state.
 
@@ -191,7 +189,7 @@ def exact_k_per_stratum(
     from lakeforge.functions.keys import md5_int
 
     w = Window.partitionBy(*strata_cols).orderBy(
-        md5_int(F.lit(salt), F.col(key_col)).asc(), F.col(key_col).asc()
+        md5_int(F.lit("exact_k"), F.col(key_col)).asc(), F.col(key_col).asc()
     )
     return (
         df.withColumn("__rn", F.row_number().over(w))

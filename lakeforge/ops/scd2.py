@@ -42,11 +42,12 @@ def scd2(
     order_col: str,
     sk_name: str = "sk",
     null_safe: bool = False,
-    start_name: str = "effective_start_date",
-    end_name: str = "effective_end_date",
-    current_name: str = "is_current",
 ) -> DataFrame:
     """Collapse a (key, date, attrs) timeline into SCD2 validity intervals.
+
+    Output columns: ``sk_name``, the keys, the tracked columns, then
+    ``effective_start_date`` (renamed from ``order_col``),
+    ``effective_end_date`` and ``is_current``.
 
     ``df`` must have at most one row per (key, order_col) — pre-dedup with
     ``dedup_keep_first`` / ``latest_per_key`` otherwise.
@@ -84,19 +85,21 @@ def scd2(
     next_start = F.lead(order_col).over(w2)
     out = changes.select(
         "*",
-        F.coalesce(F.date_sub(next_start, 1), F.lit(END_OF_TIME)).alias(end_name),
-        next_start.isNull().alias(current_name),
-    ).withColumnRenamed(order_col, start_name)
+        F.coalesce(F.date_sub(next_start, 1), F.lit(END_OF_TIME)).alias(
+            "effective_end_date"
+        ),
+        next_start.isNull().alias("is_current"),
+    ).withColumnRenamed(order_col, "effective_start_date")
 
     # P7 (fixed): deterministic content-hash SK over (key, start).
-    out = out.withColumn(sk_name, hash_sk(*key_cols, start_name))
+    out = out.withColumn(sk_name, hash_sk(*key_cols, "effective_start_date"))
     return out.select(
         sk_name,
         *key_cols,
         *tracked_cols,
-        start_name,
-        end_name,
-        current_name,
+        "effective_start_date",
+        "effective_end_date",
+        "is_current",
     )
 
 

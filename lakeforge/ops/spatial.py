@@ -39,16 +39,14 @@ from pyspark.sql import DataFrame, functions as F
 from lakeforge import cache
 
 
-def adaptive_cell_size(
-    area: int, n_build: int, tau: float = 2.0,
-    lo: int = 10_000, hi: int = 10_000_000,
-) -> int:
+def adaptive_cell_size(area: int, n_build: int, tau: float = 2.0) -> int:
     """Fine-cell edge length so the expected build occupancy per cell is
-    ~tau points: cell = sqrt(area * tau / n), clamped to [lo, hi]."""
+    ~tau points: cell = sqrt(area * tau / n), clamped to
+    [10_000, 10_000_000]."""
     if n_build <= 0:
-        return hi
+        return 10_000_000
     c = int(math.sqrt(area * tau / n_build))
-    return max(lo, min(hi, c))
+    return max(10_000, min(10_000_000, c))
 
 
 def nearest_in_box(
@@ -56,7 +54,6 @@ def nearest_in_box(
     build: DataFrame,
     cell: int,
     payload_cols: list[str],
-    max_rounds: int = 64,
     n_build: "int | None" = None,
     box_radius_cells: "int | None" = None,
     box_aligned: bool = False,
@@ -70,8 +67,10 @@ def nearest_in_box(
     payload column is the deterministic tie-break (min (d2, payload[0])).
 
     Returns ``id``, ``d2``, ``*payload_cols``.  Probes whose box holds no
-    build point are absent (inner-join semantics).
+    build point are absent (inner-join semantics).  Raises after 64 ring
+    rounds without resolving every probe.
     """
+    max_rounds = 64
     spark = probe.sparkSession
     if n_build is None:
         n_build = build.count()  # bounded driver scalar: sizes the hint

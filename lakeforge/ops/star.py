@@ -14,15 +14,15 @@ from pyspark.sql import functions as F
 from lakeforge.ops.joins import resolve_interval_key
 
 
-def build_dim_date(sources: list[tuple[DataFrame, str]], out_col: str = "dt") -> DataFrame:
+def build_dim_date(sources: list[tuple[DataFrame, str]]) -> DataFrame:
     """UNION ALL of date columns -> DISTINCT, NULLs dropped (reference
-    dim_date: gold_sql_to_postgres.py:67-79).
+    dim_date: gold_sql_to_postgres.py:67-79).  One column, ``dt``.
 
     ``sources``: (frame, date_column) pairs.  Each branch projects a single
     column before the union, so only one column ever shuffles.
     """
     branches = [
-        df.select(F.col(c).cast("date").alias(out_col)).filter(F.col(c).isNotNull())
+        df.select(F.col(c).cast("date").alias("dt")).filter(F.col(c).isNotNull())
         for df, c in sources
     ]
     out = branches[0]
@@ -42,11 +42,10 @@ def build_snapshot_fact(
     key: list[str],
     snapshot_col: str,
     sk_col: str,
-    start_col: str = "effective_start_date",
-    end_col: str = "effective_end_date",
 ) -> DataFrame:
     """Periodic-snapshot fact: distinct (snapshot_date, key) grain resolved
-    against the SCD2 dim's validity intervals (reference:
+    against the SCD2 dim's validity intervals (``effective_start_date`` /
+    ``effective_end_date``, as ``scd2`` names them; reference:
     gold_sql_to_postgres.py:179-195).
 
     The dim side is deliberately UNHINTED (broadcast_dim=False): an SCD2
@@ -60,6 +59,7 @@ def build_snapshot_fact(
         .filter(F.col(snapshot_col).isNotNull())
         .distinct()
     )
+    start_col, end_col = "effective_start_date", "effective_end_date"
     dim_slim = dim.select(sk_col, *key, start_col, end_col)
     return resolve_interval_key(
         grain, dim_slim, key, snapshot_col, start_col, end_col,

@@ -86,13 +86,12 @@ def with_ewma(
     partition_by: list[str],
     order_by: list[str],
     out_col: str = "ewma_cents",
-    max_rows: int = 8,
 ):
     """Exact-integer finite-memory EWMA (alpha = 1/2) per entity.
 
     The recursion s_t = (x_t + s_{t-1}) / 2 truncated to the trailing
-    ``max_rows`` points has closed-form weights 2^0 (oldest in frame) ..
-    2^{m-1} (current row) over the m <= max_rows rows present,
+    8 points has closed-form weights 2^0 (oldest in frame) ..
+    2^{m-1} (current row) over the m <= 8 rows present,
     denominator 2^m - 1.  With cent-integer inputs and shift-left
     weights the whole computation is BIGINT — identical on any engine,
     unlike a float recursion whose low bits depend on evaluation order.
@@ -102,7 +101,7 @@ def with_ewma(
     i -> vals[i] * (CAST(1 AS BIGINT) << (i-1)))) //
     ((CAST(1 AS BIGINT) << len(vals)) - 1)``.
 
-    Cost: one shuffle on ``partition_by``; O(max_rows) work per row with
+    Cost: one shuffle on ``partition_by``; O(8) work per row with
     frame-bounded state — the same aggregate-as-window discipline as the
     rolling exact median (workload_rel.q_rolling_median_spend).
     """
@@ -112,7 +111,7 @@ def with_ewma(
     w = (
         Window.partitionBy(*partition_by)
         .orderBy(*order_by)
-        .rowsBetween(-(max_rows - 1), 0)
+        .rowsBetween(-7, 0)
     )
     # collect_list over a framed window is frame-ordered: oldest first,
     # current row last.

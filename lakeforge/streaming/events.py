@@ -158,9 +158,9 @@ def enrich_with_profiles(events: DataFrame, profiles: DataFrame) -> DataFrame:
     return events.join(F.broadcast(profiles), "user_id", "left")
 
 
-def dedup_within_watermark(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def dedup_within_watermark(events: DataFrame) -> DataFrame:
     """At-least-once -> effectively-once: drop event_id duplicates whose
-    duplicates arrive within the watermark horizon.
+    duplicates arrive within the 2-hour watermark horizon.
 
     ``dropDuplicatesWithinWatermark`` keys state by event_id but, unlike
     plain streaming ``dropDuplicates``, EVICTS each key once the watermark
@@ -168,7 +168,7 @@ def dedup_within_watermark(events: DataFrame, watermark: str = "2 hours") -> Dat
     back to plain ``dropDuplicates`` (whole-input scope, same semantics
     when the input fits one horizon)."""
     if events.isStreaming:
-        return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
+        return events.withWatermark("ts", "2 hours").dropDuplicatesWithinWatermark(
             ["event_id"]
         )
     return events.dropDuplicates(["event_id"])
@@ -178,11 +178,11 @@ def attribute_purchases(
     views: DataFrame,
     purchases: DataFrame,
     max_gap: str = "30 minutes",
-    watermark: str = "2 hours",
     join_type: str = "inner",
 ) -> DataFrame:
     """Stream-stream interval join: each purchase attributed to every view
-    by the same user in the preceding ``max_gap``.
+    by the same user in the preceding ``max_gap``.  Streaming inputs get
+    a 2-hour watermark on ``ts``.
 
     The canonical two-stream join shape: equi-key (user_id) plus a time
     bound on the event-time columns.  With watermarks on BOTH inputs the
@@ -199,8 +199,12 @@ def attribute_purchases(
     max_gap (the row might still match), which is exactly the state
     eviction point; in batch immediately (whole input visible).
     """
-    v = views.withWatermark("ts", watermark) if views.isStreaming else views
-    p = purchases.withWatermark("ts", watermark) if purchases.isStreaming else purchases
+    v = views.withWatermark("ts", "2 hours") if views.isStreaming else views
+    p = (
+        purchases.withWatermark("ts", "2 hours")
+        if purchases.isStreaming
+        else purchases
+    )
     v = v.select(
         F.col("event_id").alias("view_id"),
         F.col("user_id"),
@@ -362,7 +366,6 @@ def stream_merge_to_silver(
     path: str,
     keys: list[str],
     checkpoint: str,
-    partition_cols: list[str] | None = None,
     order_by=None,
     query_name: str = "stream_merge",
     post_merge_hook=None,
@@ -370,7 +373,7 @@ def stream_merge_to_silver(
     """Streaming CDC ingest: every micro-batch runs the SAME
     ``merge_full_history`` the batch pipeline uses, via ``foreachBatch`` —
     streaming and batch silver are one code path, not two
-    implementations to keep in sync.
+    implementations to keep in sync.  The silver table is unpartitioned.
 
     Exactly-once composition: the checkpoint makes batch delivery
     at-least-once across restarts, and the key-based merge is idempotent
@@ -394,7 +397,6 @@ def stream_merge_to_silver(
             batch_df,
             path,
             keys=keys,
-            partition_cols=partition_cols,
             order_by=order_by,
         )
         if post_merge_hook is not None:
@@ -409,122 +411,7 @@ def stream_merge_to_silver(
     )
 
 
-def sessionize_tws(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
-    """Session windows via ``transformWithStateInPandas`` — the Spark 4
-    successor of ``applyInPandasWithState`` (same semantics as
-    :func:`sessionize_stateful`, new operator API).
-
-    What the new API buys at scale: typed state handles (value/list/map)
-    instead of one opaque tuple, explicit event-time TIMERS (register/
-    delete per key) instead of a single timeout slot, and state schema
-    evolution across restarts.  State per user is still O(1); the
-    registered timer at last_ts + gap is what evicts quiet users once the
-    watermark passes — identical emitted set to the old-API sessionizer,
-    so both share one oracle.
-
-    ENVIRONMENT NOTE (root cause diagnosed r6, pyspark 4.1.2): the
-    TransformWithStateInPySpark driver worker crashes during handle-state
-    setup with ``ImportError: cannot import name 'descriptor' from
-    'google.protobuf'`` — the TWS state-server protocol
-    (``pyspark/sql/streaming/proto/StateMessage_pb2``) hard-requires the
-    ``protobuf`` package, which is absent from this container and cannot
-    be installed here.  Not an API or code problem: the operator runs
-    wherever protobuf is present.  It is exercised by a skip-guarded test
-    (tests/test_streaming.py::test_tws_sessionizer_matches_old_api) whose
-    probe fast-paths on ``find_spec("google.protobuf")`` and names the
-    exact failure.  :func:`sessionize_stateful` (applyInPandasWithState,
-    protobuf-free protocol) is the fully-tested, oracle-checked path;
-    this function tracks the successor API for environments that run it.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        ExpiredTimerInfo,
-        StatefulProcessor,
-        StatefulProcessorHandle,
-        TimerValues,
-    )
-
-    gap_us = gap_seconds * 1_000_000
-
-    class SessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._state = handle.getValueState(
-                "sess", "start BIGINT, last BIGINT, n BIGINT, total DOUBLE"
-            )
-
-        def _emit(self, user_id, start, last, n, total):
-            out = pd.DataFrame(
-                [(user_id, start, last, n, total)],
-                columns=[
-                    "user_id",
-                    "session_start",
-                    "session_end",
-                    "n_events",
-                    "total_value",
-                ],
-            )
-            out["session_start"] = pd.to_datetime(out["session_start"], unit="us")
-            out["session_end"] = pd.to_datetime(out["session_end"], unit="us")
-            return out
-
-        def handleInputRows(self, key, rows, timerValues: TimerValues):
-            user_id = key[0]
-            if self._state.exists():
-                start, last, n, total = self._state.get()
-                self._handle.deleteTimer(last // 1000 + gap_seconds * 1000)
-            else:
-                start = last = n = 0
-                total = 0.0
-            pairs = []
-            for pdf in rows:
-                ts_us = (
-                    pdf["ts"].to_numpy().astype("datetime64[us]").astype("int64")
-                )
-                pairs.extend(zip(ts_us.tolist(), pdf["value"].tolist()))
-            pairs.sort()
-            for ts, val in pairs:
-                if n and ts - last > gap_us:
-                    yield self._emit(user_id, start, last, n, total)
-                    start, n, total = ts, 0, 0.0
-                elif not n:
-                    start = ts
-                last = ts
-                n += 1
-                total += val if val == val else 0.0  # NaN-safe
-            self._state.update((start, last, n, total))
-            self._handle.registerTimer(last // 1000 + gap_seconds * 1000)
-
-        def handleExpiredTimer(
-            self, key, timerValues: TimerValues, expiredTimerInfo: ExpiredTimerInfo
-        ):
-            if self._state.exists():
-                start, last, n, total = self._state.get()
-                if n:
-                    yield self._emit(key[0], start, last, n, total)
-                self._state.clear()
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.withWatermark("ts", f"{gap_seconds} seconds")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=SessionProcessor(),
-            outputStructType=SESSION_OUT_SCHEMA,
-            outputMode="append",
-            timeMode="eventTime",
-        )
-    )
-
-
-def windowed_rollup(
-    events: DataFrame,
-    fine_window: str = "1 hour",
-    coarse_window: str = "1 day",
-    watermark: str = "2 hours",
-) -> DataFrame:
+def windowed_rollup(events: DataFrame) -> DataFrame:
     """CHAINED windowed aggregation (Spark 3.4+ `window_time`): hourly
     partials roll up into daily totals inside ONE streaming query — the
     hierarchical-rollup pattern (minute->hour->day dashboards) that
@@ -536,21 +423,21 @@ def windowed_rollup(
     24 rows/day/type — not raw events, the same partial-aggregate
     discipline as the batch rollups (docs/SCALE.md).
 
-    Works identically on a batch frame (watermark no-op): the batch twin
-    IS the oracle check.
+    Streaming input gets a 2-hour watermark on ``ts``.  Works identically
+    on a batch frame (watermark no-op): the batch twin IS the oracle check.
     """
     src = events
     if events.isStreaming:
-        src = events.withWatermark("ts", watermark)
+        src = events.withWatermark("ts", "2 hours")
     hourly = src.groupBy(
-        F.window("ts", fine_window).alias("hw"), "event_type"
+        F.window("ts", "1 hour").alias("hw"), "event_type"
     ).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_events"),
         F.sum(F.col("value").cast("decimal(18,2)")).alias("hour_value"),
     )
     daily = (
         hourly.groupBy(
-            F.window(F.window_time("hw"), coarse_window).alias("dw"),
+            F.window(F.window_time("hw"), "1 day").alias("dw"),
             "event_type",
         )
         .agg(
@@ -565,167 +452,4 @@ def windowed_rollup(
         "n_events",
         "day_value",
         "n_hours_active",
-    )
-
-
-def stream_scd2_to_dim(
-    stream_df: DataFrame,
-    timeline_path: str,
-    dim_path: str,
-    keys: list[str],
-    tracked_cols: list[str],
-    order_col: str,
-    checkpoint: str,
-    n_buckets: int = 64,
-    null_safe: bool = True,
-    query_name: str = "stream_scd2",
-):
-    """Streaming SCD Type-2 maintenance: every micro-batch of CDC rows is
-    merged into a bucket-partitioned full-history timeline, then the SCD2
-    dimension is rebuilt ONLY for the key buckets the batch touched and
-    those partitions are dynamically overwritten — the streaming dimension
-    is the same ``ops/scd2.py::scd2`` code path the batch build uses,
-    never a second implementation drifting out of sync.
-
-    Incrementality contract: SCD2 intervals are a per-key window over the
-    FULL timeline (a new version can close yesterday's open interval), so
-    per-key history must be re-read on update.  Bucketing by
-    ``pmod(md5_int(keys), n_buckets)`` makes that re-read partition-pruned
-    and the rewrite partition-scoped: per batch the cost is
-    O(timeline rows in touched buckets), not O(dimension).  At 100 TB,
-    size ``n_buckets`` so a bucket's timeline fits an executor comfortably;
-    hot batches touching all buckets degrade gracefully to a full rebuild
-    (which IS the batch job).
-
-    Exactly-once composition, same as ``stream_merge_to_silver``: the
-    checkpoint gives at-least-once batch delivery, the timeline merge is
-    idempotent by (keys, order_col), and the bucket rebuild is a pure
-    function of the merged timeline — replaying a batch rewrites identical
-    partitions.  Returns the started StreamingQuery.
-    """
-    from lakeforge.functions.keys import md5_int
-    from lakeforge.io.sinks import write_partitioned_parquet
-    from lakeforge.ops.merge import merge_full_history
-    from lakeforge.ops.scd2 import scd2
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        b = batch_df.withColumn(
-            "__bkt", F.pmod(md5_int(*keys), F.lit(n_buckets))
-        )
-        merge_full_history(
-            spark, b, timeline_path,
-            keys=[*keys, order_col], partition_cols=["__bkt"],
-        )
-        touched = [r[0] for r in b.select("__bkt").distinct().collect()]
-        timeline = (
-            spark.read.parquet(timeline_path)
-            .filter(F.col("__bkt").isin(touched))  # partition-pruned read
-            .drop("__bkt")
-        )
-        rebuilt = scd2(
-            timeline, keys, tracked_cols, order_col, null_safe=null_safe
-        ).withColumn("__bkt", F.pmod(md5_int(*keys), F.lit(n_buckets)))
-        write_partitioned_parquet(rebuilt, dim_path, ["__bkt"])
-
-    return (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-# ---------------------------------------------------------------------------
-# Custom stateful operator #2: token-bucket rate limiter
-# (applyInPandasWithState).  Batch replay twin:
-# workload_wave.q_events_rate_limit_replay (same fold, mapInPandas), whose
-# DuckDB recursive-CTE oracle checks the recurrence — three formulations
-# of one state machine.
-# ---------------------------------------------------------------------------
-
-RATE_LIMIT_OUT_SCHEMA = (
-    "user_id bigint, n_admitted bigint, n_denied bigint,"
-    " final_tokens_micro bigint"
-)
-_RATE_LIMIT_STATE_SCHEMA = (
-    "tokens bigint, last_us bigint, adm bigint, den bigint, seen bigint"
-)
-
-
-def rate_limit_stateful(
-    events: DataFrame,
-    cap_micro: int = 3_000_000,
-    us_per_token: int = 60_000_000,
-) -> DataFrame:
-    """Token-bucket rate limiter as a stateful streaming operator: per
-    user, a bucket of ``cap_micro`` micro-tokens refills at one token per
-    ``us_per_token``; each event is admitted (spends one token) or
-    denied.  Emits the user's CUMULATIVE counters after each micro-batch
-    (update mode) — the last row per user is the stream's answer.
-
-    State per user is O(1) (5 scalars) -> total state bounded by
-    |active users|, the same viability property as the sessionizer.
-    Events must arrive per-user in event-time order ACROSS batches for
-    the replay to be exact (true for a time-ordered feed; the batch twin
-    sorts globally).  Works only on a streaming DataFrame."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    # ADVICE r07 #2: the integer refill rule tokens += dt_us // refill_div
-    # is exact only when us_per_token is a whole number of seconds; a
-    # fractional rate would silently refill at the wrong speed (and
-    # < 1s would divide by zero).  Reject instead of mis-computing.
-    if us_per_token < 1_000_000 or us_per_token % 1_000_000 != 0:
-        raise ValueError(
-            "us_per_token must be a positive multiple of 1_000_000 "
-            f"(got {us_per_token})"
-        )
-    refill_div = us_per_token // 1_000_000  # us per micro-token
-
-    def fn(key: tuple, pdfs, state: GroupState):
-        user_id = key[0]
-        if state.exists:
-            tokens, last_us, adm, den, seen = state.get
-        else:
-            tokens, last_us, adm, den, seen = cap_micro, -1, 0, 0, 0
-
-        rows = []
-        for pdf in pdfs:
-            ts_us = (
-                pdf["ts"].to_numpy().astype("datetime64[us]").astype("int64")
-            )
-            rows.extend(zip(ts_us.tolist(), pdf["event_id"].tolist()))
-        rows.sort()
-        for ts, _eid in rows:
-            if last_us >= 0:
-                tokens = min(cap_micro, tokens + (ts - last_us) // refill_div)
-            last_us = ts
-            if tokens >= 1_000_000:
-                tokens -= 1_000_000
-                adm += 1
-            else:
-                den += 1
-            seen += 1
-        state.update((tokens, last_us, adm, den, seen))
-        yield pd.DataFrame(
-            [(user_id, adm, den, tokens)],
-            columns=[
-                "user_id", "n_admitted", "n_denied", "final_tokens_micro"
-            ],
-        )
-
-    return (
-        events.select("user_id", "event_id", "ts")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=RATE_LIMIT_OUT_SCHEMA,
-            stateStructType=_RATE_LIMIT_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
     )

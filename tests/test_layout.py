@@ -125,8 +125,6 @@ def test_versioned_commit_flip_and_time_travel(spark, tmp_path):
     from lakeforge.ops.layout import (
         commit_version,
         current_version,
-        read_versioned,
-        vacuum_versions,
         versioned_path,
     )
 
@@ -137,14 +135,13 @@ def test_versioned_commit_flip_and_time_travel(spark, tmp_path):
     assert commit_version(df2, root) == 1
 
     assert current_version(root) == 1
-    assert read_versioned(spark, root).count() == 25
+    assert spark.read.parquet(versioned_path(root)).count() == 25
     # time travel to v0 through the resolved prefix
     assert spark.read.parquet(versioned_path(root, 0)).count() == 10
 
     df3 = spark.range(0, 3).withColumnRenamed("id", "k")
     commit_version(df3, root)
-    assert vacuum_versions(root, keep=2) == [0]
-    assert read_versioned(spark, root).count() == 3
+    assert spark.read.parquet(versioned_path(root)).count() == 3
     assert spark.read.parquet(versioned_path(root, 1)).count() == 25
 
 
@@ -152,7 +149,7 @@ def test_compact_versioned_reduces_files_and_preserves_rows(spark, tmp_path):
     from lakeforge.ops.layout import (
         commit_version,
         compact_versioned,
-        read_versioned,
+        versioned_path,
     )
 
     root = str(tmp_path / "vtab2")
@@ -162,20 +159,16 @@ def test_compact_versioned_reduces_files_and_preserves_rows(spark, tmp_path):
     assert stats["files_before"] == 16
     assert stats["files_after"] == 1
     assert stats["version"] == 1
-    assert read_versioned(spark, root).count() == 1000
+    assert spark.read.parquet(versioned_path(root)).count() == 1000
 
 
 def test_versioned_reader_unaffected_by_crashed_writer(spark, tmp_path):
     """An interrupted commit (data written, pointer never flipped) must be
-    invisible to readers, must NOT block future commits (version allocation
-    skips orphan prefixes), and vacuum reclaims the orphan."""
-    import os
-
+    invisible to readers and must NOT block future commits (version
+    allocation skips orphan prefixes)."""
     from lakeforge.ops.layout import (
         commit_version,
         current_version,
-        read_versioned,
-        vacuum_versions,
         versioned_path,
     )
 
@@ -183,19 +176,12 @@ def test_versioned_reader_unaffected_by_crashed_writer(spark, tmp_path):
     commit_version(spark.range(0, 7), root)
     # simulate a writer that died after writing data, before the flip
     spark.range(0, 999).write.parquet(versioned_path(root, 1))
-    assert read_versioned(spark, root).count() == 7
+    assert spark.read.parquet(versioned_path(root)).count() == 7
 
     # next commit allocates PAST the orphan instead of colliding with it
     v = commit_version(spark.range(0, 11), root)
     assert v == 2 and current_version(root) == 2
-    assert read_versioned(spark, root).count() == 11
-
-    # vacuum reclaims old versions (incl. the skipped orphan v1) AND
-    # uncommitted orphans above the pointer
-    spark.range(0, 5).write.parquet(versioned_path(root, 3))  # fresh orphan
-    assert vacuum_versions(root, keep=1) == [0, 1, 3]
-    assert read_versioned(spark, root).count() == 11
-    assert not os.path.exists(versioned_path(root, 3))
+    assert spark.read.parquet(versioned_path(root)).count() == 11
 
 
 def test_compact_partitions_routes_versioned_root_through_pointer(spark, tmp_path):
@@ -205,7 +191,7 @@ def test_compact_partitions_routes_versioned_root_through_pointer(spark, tmp_pat
         compact_partitions,
         commit_version,
         current_version,
-        read_versioned,
+        versioned_path,
     )
 
     root = str(tmp_path / "vtbl")
@@ -215,7 +201,7 @@ def test_compact_partitions_routes_versioned_root_through_pointer(spark, tmp_pat
     assert stats["version"] == v0 + 1
     assert current_version(root) == v0 + 1
     assert stats["files_after"] <= stats["files_before"]
-    assert read_versioned(spark, root).count() == 1000
+    assert spark.read.parquet(versioned_path(root)).count() == 1000
 
 
 def test_compact_partitions_rejects_object_store_scheme(spark):
@@ -328,29 +314,6 @@ def test_manifest_skipping_empty_band_and_null_stats_kept(spark, tmp_path):
     assert out.count() == 0  # row-level filter still applies within kept file
 
 
-def test_manifest_profile_is_metadata_only_and_exact(spark, tmp_path):
-    """manifest_profile answers count/min/max from the manifest alone and
-    must equal the data-scan profile."""
-    from pyspark.sql import functions as F
-
-    from lakeforge.ops.layout import (
-        manifest_profile, range_sorted_write, write_stats_manifest,
-    )
-
-    df = spark.range(0, 5_000).select(F.col("id").alias("k"))
-    path = str(tmp_path / "t")
-    range_sorted_write(df, path, ["k"], num_files=5)
-    write_stats_manifest(spark, path, ["k"])
-    p = manifest_profile(spark, path).collect()[0]
-    assert (p.n_files, p.n_rows, p.min_k, p.max_k) == (5, 5_000, 0, 4_999)
-    # the profile plan scans the manifest schema, never the data columns
-    # (the location string is elided in the plan text, but the ReadSchema
-    # proves which table the single scan reads)
-    plan = manifest_profile(spark, path)._jdf.queryExecution().executedPlan().toString()
-    assert "ReadSchema: struct<n_rows:bigint" in plan
-    assert "struct<k:bigint>" not in plan
-
-
 def test_update_stats_manifest_scans_only_the_append_delta(spark, tmp_path):
     """Appending files then update_stats_manifest: only new files are
     manifested (return value), stats stay exact, and mismatched stat
@@ -359,8 +322,7 @@ def test_update_stats_manifest_scans_only_the_append_delta(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from lakeforge.ops.layout import (
-        manifest_profile, prune_files, update_stats_manifest,
-        write_stats_manifest,
+        MANIFEST_DIR, prune_files, update_stats_manifest, write_stats_manifest,
     )
 
     path = str(tmp_path / "t")
@@ -373,7 +335,10 @@ def test_update_stats_manifest_scans_only_the_append_delta(spark, tmp_path):
         .write.mode("append").parquet(path)
     assert update_stats_manifest(spark, path, ["k"]) == 2
 
-    p = manifest_profile(spark, path).collect()[0]
+    p = spark.read.parquet(f"{path}/{MANIFEST_DIR}").agg(
+        F.count(F.lit(1)).alias("n_files"), F.sum("n_rows").alias("n_rows"),
+        F.min("min_k").alias("min_k"), F.max("max_k").alias("max_k"),
+    ).collect()[0]
     assert (p.n_files, p.n_rows, p.min_k, p.max_k) == (3, 300, 0, 299)
     files, total = prune_files(spark, path, "k", 0, 50)
     assert total == 3 and len(files) == 1  # appended files pruned by band

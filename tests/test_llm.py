@@ -458,19 +458,6 @@ def test_boilerplate_coverage_permille_and_short_doc(spark):
     assert len(cov) == 6           # every doc present, including gram-less
 
 
-def test_strip_boilerplate_drops_dominated_docs(spark):
-    from lakeforge.llm.boilerplate import strip_boilerplate_docs
-
-    kept = sorted(
-        r["doc_id"]
-        for r in strip_boilerplate_docs(
-            _boiler_corpus(spark), "text", "doc_id",
-            n=2, min_df_permille=500, max_boiler_permille=500,
-        ).collect()
-    )
-    assert kept == [1, 2, 3, 5, 6]  # doc 4 (1000 permille) dropped
-
-
 def test_boilerplate_broadcast_guard_trips(spark, monkeypatch):
     import pytest
 

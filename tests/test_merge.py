@@ -57,6 +57,59 @@ def test_merge_untouched_partition_files_not_rewritten(spark, tmp_path):
     assert set(os.listdir(f"{path}/p=p1")) == p1_files
 
 
+def _data_files(path):
+    """{relative path: (size, mtime_ns)} of every data file under ``path``."""
+    out = {}
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            if f.endswith(".parquet"):
+                st = os.stat(os.path.join(root, f))
+                out[os.path.relpath(os.path.join(root, f), path)] = (
+                    st.st_size, st.st_mtime_ns
+                )
+    return out
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_merge_empty_batch_rewrites_no_partition(spark, tmp_path):
+    """A batch with no rows touches no partition: every data file stays
+    as it was, and the merge runs no job beyond the silver probe and the
+    touched-partition collect (no checkpoint, no write)."""
+    path = str(tmp_path / "tbl")
+    keys = ["k", "v", "p"]
+    b1 = spark.createDataFrame([("a", "x", "p1"), ("b", "x", "p2")], keys)
+    merge_full_history(spark, b1, path, keys=keys, partition_cols=["p"])
+    before = _data_files(path)
+    assert len(before) == 2
+
+    empty = spark.createDataFrame([], "k string, v string, p string")
+    n_probe_and_collect = _jobs_in_group(
+        spark, "empty_ref",
+        lambda: (read_parquet_if_exists(spark, path),
+                 empty.select("p").distinct().collect()),
+    )
+    n_merge = _jobs_in_group(
+        spark, "empty_merge",
+        lambda: merge_full_history(
+            spark, empty, path, keys=keys, partition_cols=["p"]
+        ),
+    )
+    assert n_merge == n_probe_and_collect
+    assert _data_files(path) == before
+    rows = read_parquet_if_exists(spark, path).select(*keys).collect()
+    assert sorted(map(tuple, rows)) == [("a", "x", "p1"), ("b", "x", "p2")]
+
+
 def test_merge_deterministic_survivor(spark, tmp_path):
     path = str(tmp_path / "tbl")
     b1 = spark.createDataFrame([("a", 1, "old", "p1")], ["k", "seq", "v", "p"])

@@ -695,48 +695,6 @@ def test_grouped_blocked_prefix_sum_equals_partitioned_cumsum(
 
 
 @settings(**_SETTINGS)
-@given(
-    rows=st.lists(
-        st.tuples(
-            st.integers(min_value=-4, max_value=4),   # value (heavy ties)
-            st.integers(min_value=0, max_value=999),  # unique tiebreak
-        ),
-        min_size=1,
-        max_size=40,
-        unique_by=lambda r: r[1],
-    ),
-    k=st.sampled_from([2, 4, 7]),
-    hist_bounded=st.booleans(),
-)
-def test_blocked_ntile_equals_window_ntile(spark, rows, k, hist_bounded):
-    """blocked_ntile must reproduce ntile(k) OVER (ORDER BY v, tk) exactly
-    — including n < k (each row its own tile), tie groups that straddle
-    tile boundaries, and BOTH histogram-prefix paths (blocked and the
-    bounded-domain tiny-window shortcut)."""
-    from pyspark.sql import Window
-
-    from lakeforge.ops.analytics import blocked_ntile
-
-    df = spark.createDataFrame(rows, ["v", "tk"])
-    got = {
-        (r.v, r.tk): r.nt
-        for r in blocked_ntile(
-            df, "v", "tk", k,
-            F.expr("v div 3"), F.expr("tk div 17"), out_col="nt",
-            hist_bounded=hist_bounded,
-        ).collect()
-    }
-    w = Window.orderBy(F.col("v").asc(), F.col("tk").asc())
-    want = {
-        (r.v, r.tk): r.nt
-        for r in df.select(
-            "v", "tk", F.ntile(k).over(w).cast("bigint").alias("nt")
-        ).collect()
-    }
-    assert got == want
-
-
-@settings(**_SETTINGS)
 @given(rows=_SCORED)
 def test_pr_curve_matches_bruteforce_cuts(spark, rows):
     from lakeforge.ops.evaluation import pr_curve

@@ -194,193 +194,3 @@ def test_postgres_ddl_from_gold_schema(spark):
 
     full = star_schema_ddl({"dim_account": df, "bridge": df.select("acc_no")})
     assert full.count("CREATE TABLE") == 2
-
-
-def test_jsonl_custom_sink_round_trips_and_commits_atomically(spark, tmp_path):
-    """Custom Python DataSource write path: executors write temp files,
-    the driver's commit renames them — the output dir holds only final
-    part files + _SUCCESS, and spark.read.json round-trips the rows."""
-    import json
-    import os
-
-    from lakeforge.io import jsonl_sink
-
-    jsonl_sink.register(spark)
-    out = str(tmp_path / "jsonl_out")
-    df = spark.range(0, 100).selectExpr(
-        "id", "concat('name_', id) AS name",
-        "CAST(id * 1.5 AS DOUBLE) AS score",
-    ).repartition(4)
-    df.write.format("lakeforge_jsonl").option("path", out).mode("append").save()
-
-    names = sorted(os.listdir(out))
-    assert "_SUCCESS" in names
-    assert all(n == "_SUCCESS" or n.startswith("part-") for n in names)
-    meta = json.load(open(os.path.join(out, "_SUCCESS")))
-    assert meta["rows"] == 100 and meta["files"] == 4
-
-    back = spark.read.json(out)
-    got = sorted((r["id"], r["name"], r["score"]) for r in back.collect())
-    want = sorted((r["id"], r["name"], r["score"]) for r in df.collect())
-    assert got == want
-
-
-def test_jsonl_sink_abort_removes_task_temp_files(tmp_path):
-    """Writer protocol unit test (no Spark needed): write() leaves only
-    _tmp_ files; abort() removes them; commit() renames + _SUCCESS."""
-    import json
-    import os
-    from types import SimpleNamespace
-
-    from lakeforge.io.jsonl_sink import JsonlWriter
-
-    out = str(tmp_path / "o")
-    w = JsonlWriter({"path": out}, overwrite=False)
-
-    rows = [SimpleNamespace(asDict=lambda recursive=True, _i=i: {"id": _i})
-            for i in range(3)]
-    m1 = w.write(iter(rows))
-    assert os.path.basename(m1.tmp_path).startswith("_tmp_")
-    assert m1.n_rows == 3
-
-    # abort path: temp gone, nothing committed
-    w.abort([m1])
-    assert os.listdir(out) == []
-
-    m2 = w.write(iter(rows))
-    w.commit([m2])
-    names = sorted(os.listdir(out))
-    assert "_SUCCESS" in names
-    parts = [n for n in names if n.startswith("part-")]
-    assert len(parts) == 1
-    lines = open(os.path.join(out, parts[0])).read().splitlines()
-    assert [json.loads(ln)["id"] for ln in lines] == [0, 1, 2]
-
-
-def test_jsonl_sink_abort_skips_failed_task_none_messages(tmp_path):
-    """Per the DataSourceWriter contract, failed tasks report None in the
-    messages list — abort() must skip them and still clean the temp files
-    of the tasks that DID report (the exact path abort exists for)."""
-    import os
-    from types import SimpleNamespace
-
-    from lakeforge.io.jsonl_sink import JsonlWriter
-
-    out = str(tmp_path / "o")
-    w = JsonlWriter({"path": out}, overwrite=False)
-    rows = [SimpleNamespace(asDict=lambda recursive=True, _i=i: {"id": _i})
-            for i in range(2)]
-    m = w.write(iter(rows))
-    w.abort([None, m, None])  # two failed tasks + one reported
-    assert os.listdir(out) == []
-
-
-def test_jsonl_sink_exactly_once_under_speculative_retry(tmp_path):
-    """Two attempts of the SAME partition both write temp files (uuid
-    names, no collision); only the attempt whose commit message the
-    driver heard about is finalized — the losing attempt's rows never
-    appear in the committed dataset (exactly-once from at-least-once)."""
-    import json
-    import os
-    from types import SimpleNamespace
-
-    from lakeforge.io.jsonl_sink import JsonlWriter
-
-    def rows(attempt):
-        return [
-            SimpleNamespace(
-                asDict=lambda recursive=True, _i=i, _a=attempt:
-                    {"id": _i, "attempt": _a})
-            for i in range(3)
-        ]
-
-    out = str(tmp_path / "o")
-    w = JsonlWriter({"path": out}, overwrite=False)
-    m_lost = w.write(iter(rows("speculative")))   # attempt 0 (straggler)
-    m_won = w.write(iter(rows("winner")))         # attempt 1 (reported)
-    assert m_lost.tmp_path != m_won.tmp_path      # uuid temp names
-
-    w.commit([m_won])                             # driver heard only attempt 1
-    committed = [n for n in os.listdir(out) if n.startswith("part-")]
-    assert len(committed) == 1
-    got = [json.loads(ln) for ln in
-           open(os.path.join(out, committed[0])).read().splitlines()]
-    assert {r["attempt"] for r in got} == {"winner"}
-    # the straggler's temp file is still a _tmp_ orphan, never part-*
-    orphans = [n for n in os.listdir(out) if n.startswith("_tmp_")]
-    assert orphans == [os.path.basename(m_lost.tmp_path)]
-
-
-def test_jsonl_sink_overwrite_replaces_previous_dataset(spark, tmp_path):
-    """mode('overwrite') must drop the previously committed part files at
-    COMMIT time, so readers see exactly the new rows (not stale+new)."""
-    import json
-    import os
-
-    from lakeforge.io import jsonl_sink
-
-    jsonl_sink.register(spark)
-    out = str(tmp_path / "jsonl_ow")
-    spark.range(0, 50).repartition(2).write.format("lakeforge_jsonl") \
-        .option("path", out).mode("append").save()
-    spark.range(100, 110).repartition(2).write.format("lakeforge_jsonl") \
-        .option("path", out).mode("overwrite").save()
-
-    meta = json.load(open(os.path.join(out, "_SUCCESS")))
-    assert meta["rows"] == 10
-    got = sorted(r["id"] for r in spark.read.json(out).collect())
-    assert got == list(range(100, 110))
-
-
-def test_jsonl_manifest_commit_survives_disabled_renames(spark, tmp_path, monkeypatch):
-    """Object-store-safe protocol: with commit_protocol=manifest, DATA
-    files are never renamed — simulate a non-atomic FS by forbidding
-    os.replace on data files; the write still commits, and the
-    manifest-honoring reader sees exactly the committed rows while an
-    orphan (uncommitted speculative) file is invisible."""
-    import json
-    import os
-    from types import SimpleNamespace
-
-    from lakeforge.io import jsonl_sink
-    from lakeforge.io.jsonl_sink import JsonlWriter, read_jsonl_manifest
-
-    out = str(tmp_path / "manifest_out")
-    w = JsonlWriter({"path": out, "commit_protocol": "manifest"},
-                    overwrite=False)
-
-    real_replace = os.replace
-
-    def guarded_replace(src, dst):
-        # data files must never be renamed; only the tiny manifest may be
-        assert os.path.basename(dst) == jsonl_sink.MANIFEST, \
-            f"data-file rename attempted: {src} -> {dst}"
-        return real_replace(src, dst)
-
-    monkeypatch.setattr(os, "replace", guarded_replace)
-
-    def rows(tag, n):
-        return [SimpleNamespace(
-            asDict=lambda recursive=True, _i=i, _t=tag: {"id": _i, "tag": _t})
-            for i in range(n)]
-
-    m1 = w.write(iter(rows("a", 3)))
-    m2 = w.write(iter(rows("b", 2)))
-    m_orphan = w.write(iter(rows("lost-speculative", 4)))  # never reported
-    w.commit([m1, m2])
-
-    manifest = json.load(open(os.path.join(out, jsonl_sink.MANIFEST)))
-    assert manifest["rows"] == 5 and len(manifest["files"]) == 2
-    assert os.path.basename(m_orphan.tmp_path) not in manifest["files"]
-    assert os.path.exists(m_orphan.tmp_path)  # orphan on disk, unpublished
-
-    back = read_jsonl_manifest(spark, out)
-    assert sorted({r["tag"] for r in back.collect()}) == ["a", "b"]
-    assert back.count() == 5
-
-    # append commit merges into the manifest
-    m3 = w.write(iter(rows("c", 1)))
-    w.commit([m3])
-    manifest = json.load(open(os.path.join(out, jsonl_sink.MANIFEST)))
-    assert manifest["rows"] == 6 and len(manifest["files"]) == 3
-    assert read_jsonl_manifest(spark, out).count() == 6

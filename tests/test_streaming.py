@@ -322,106 +322,6 @@ def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
     assert s == b
 
 
-def _tws_env_works(spark) -> tuple[bool, str]:
-    """Probe the transformWithStateInPandas environment; returns
-    (works, reason-if-not).
-
-    ROOT CAUSE (diagnosed r6 on pyspark 4.1.2, per VERDICT r05 #6): the
-    TWS driver worker crashes during handle-state setup with
-    ``ImportError: cannot import name 'descriptor' from 'google.protobuf'``
-    (transform_with_state_driver_worker.py -> stateful_processor_api_client
-    -> proto/StateMessage_pb2) — the TWS state-server protocol hard-requires
-    the ``protobuf`` package, which is NOT installed in this container
-    (``import google`` fails) and cannot be pip-installed here.  Not a code
-    or API problem: the operator itself is correct and runs wherever
-    protobuf is present.  Fast-path the check so the skip costs no
-    streaming query."""
-    import importlib.util
-
-    import pyspark
-
-    try:
-        has_protobuf = importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:  # no 'google' namespace package at all
-        has_protobuf = False
-    if not has_protobuf:
-        return False, (
-            f"pyspark {pyspark.__version__}: transformWithStateInPandas "
-            "driver worker requires the 'protobuf' package "
-            "(StateMessage_pb2 state-server protocol) which is absent from "
-            "this container — probe: ImportError: cannot import name "
-            "'descriptor' from 'google.protobuf' in "
-            "transform_with_state_driver_worker.py"
-        )
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class _Count(StatefulProcessor):
-        def init(self, handle):
-            self._st = handle.getValueState("n", "n BIGINT")
-
-        def handleInputRows(self, key, rows, timerValues):
-            n = self._st.get()[0] if self._st.exists() else 0
-            for pdf in rows:
-                n += len(pdf)
-            self._st.update((n,))
-            yield pd.DataFrame({"k": [key[0]], "n": [n]})
-
-        def close(self):
-            pass
-
-    try:
-        sdf = (
-            spark.readStream.format("rate").option("rowsPerSecond", "5").load()
-            .selectExpr("value % 2 AS k", "value")
-        )
-        q = (
-            sdf.groupBy("k")
-            .transformWithStateInPandas(_Count(), "k BIGINT, n BIGINT", "update", "none")
-            .writeStream.format("memory").queryName("tws_env_probe")
-            .outputMode("update").trigger(availableNow=True).start()
-        )
-        q.awaitTermination(30)
-        q.stop()
-        return True, ""
-    except Exception as e:
-        import pyspark
-
-        return False, (
-            f"pyspark {pyspark.__version__}: TWS probe query failed: "
-            f"{type(e).__name__}: {str(e)[:200]}"
-        )
-
-
-def test_tws_sessionizer_matches_old_api(spark, tmp_path):
-    """transformWithStateInPandas sessionizer emits the same set as the
-    applyInPandasWithState one (shared semantics, shared oracle)."""
-    import pytest
-
-    from lakeforge.streaming.events import (
-        read_events_stream,
-        run_available_now,
-        sessionize_stateful,
-        sessionize_tws,
-    )
-
-    works, reason = _tws_env_works(spark)
-    if not works:
-        pytest.skip(reason)
-    import shutil
-
-    stage = str(tmp_path / "ev")
-    (tmp_path / "ev").mkdir()
-    shutil.copy("/root/testdata/sf0.001/events.parquet", f"{stage}/p.parquet")
-    old = run_available_now(
-        sessionize_stateful(read_events_stream(spark, stage)), "tws_old", "append"
-    )
-    new = run_available_now(
-        sessionize_tws(read_events_stream(spark, stage)), "tws_new", "append"
-    )
-    assert sorted(map(tuple, old.collect())) == sorted(map(tuple, new.collect()))
-
-
 @pytest.mark.skipif(not os.path.exists(SF_DIR), reason="driver testdata absent")
 def test_stream_stream_full_outer_join(spark, tmp_path):
     """FULL OUTER stream-stream interval join: matched pairs must equal
@@ -579,18 +479,17 @@ def test_docgen_stream_source_equals_batch(spark, tmp_path):
 
 
 def test_custom_source_to_custom_sink_pipeline(spark, tmp_path):
-    """End-to-end custom-connector pipeline: Python DataSource stream ->
-    quality classifier -> foreachBatch -> Python JSONL sink.  The landed
-    rows must equal the batch run of the same pipeline (unified
-    semantics across both custom connectors)."""
+    """End-to-end custom-source pipeline: Python DataSource stream ->
+    quality classifier -> foreachBatch -> JSON sink.  The landed rows
+    must equal the batch run of the same pipeline (unified semantics
+    across the stream and batch reads of the custom source)."""
     import json
     import os
 
-    from lakeforge.io import docgen_source, jsonl_sink
+    from lakeforge.io import docgen_source
     from lakeforge.llm.text import quality_score
 
     docgen_source.register(spark)
-    jsonl_sink.register(spark)
     opts = {"rows": "200", "seed": "3", "batchRows": "80"}
     out = str(tmp_path / "kept")
 
@@ -600,9 +499,7 @@ def test_custom_source_to_custom_sink_pipeline(spark, tmp_path):
             scored.filter("label = 'keep'").select("doc_id"), "doc_id"
         )
         if kept.take(1):
-            kept.write.format("lakeforge_jsonl").option("path", out).mode(
-                "append"
-            ).save()
+            kept.write.mode("append").json(out)
 
     stream = spark.readStream.format("lakeforge_docgen").options(**opts).load()
     q = (
@@ -622,7 +519,7 @@ def test_custom_source_to_custom_sink_pipeline(spark, tmp_path):
         files = [f for f in os.listdir(out)] if os.path.exists(out) else []
         got = set()
         for f in files:
-            if f.startswith("part-") or f.startswith("_tmp_"):
+            if f.startswith("part-"):
                 with open(os.path.join(out, f)) as fh:
                     for line in fh:
                         got.add(json.loads(line)["doc_id"])
@@ -1087,97 +984,6 @@ def test_stream_psi_drift_monitor_per_batch(spark, tmp_path):
     assert psi[1] > psi[0] + 0.05
 
 
-def test_stream_scd2_matches_batch_rebuild(spark, tmp_path):
-    """Streaming SCD2 (stream_scd2_to_dim): CDC files arriving across two
-    availableNow passes must leave the dimension IDENTICAL to a one-shot
-    batch scd2() over the full timeline — including a later version that
-    closes an interval left open by the first pass."""
-    from pyspark.sql import functions as F
-
-    from lakeforge.ops.scd2 import scd2
-    from lakeforge.streaming.events import stream_scd2_to_dim
-
-    src = tmp_path / "cdc"
-    src.mkdir()
-    schema = "acc string, status string, change_date date"
-    batch1 = [("A", "open", "2024-01-01"), ("A", "open", "2024-02-01"),
-              ("B", "open", "2024-01-15")]
-    batch2 = [("A", "frozen", "2024-03-01"),  # closes A's open interval
-              ("C", "open", "2024-02-10")]
-
-    def write_file(rows, name):
-        spark.createDataFrame(rows, "acc string, status string, change_date string") \
-            .withColumn("change_date", F.col("change_date").cast("date")) \
-            .coalesce(1).write.mode("overwrite").parquet(str(src / name))
-
-    def run(name):
-        q = stream_scd2_to_dim(
-            spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-                 .parquet(f"{src}/*"),
-            timeline_path=str(tmp_path / "timeline"),
-            dim_path=str(tmp_path / "dim"),
-            keys=["acc"], tracked_cols=["status"], order_col="change_date",
-            checkpoint=str(tmp_path / "ckpt"),
-            n_buckets=8, query_name=name,
-        )
-        q.awaitTermination()
-
-    write_file(batch1, "b1")
-    run("scd2_s1")
-    dim1 = spark.read.parquet(str(tmp_path / "dim"))
-    # A's duplicate status row collapsed; its single interval still open
-    a1 = dim1.filter("acc = 'A'").collect()
-    assert len(a1) == 1 and a1[0].is_current
-
-    write_file(batch2, "b2")
-    run("scd2_s2")
-    dim2 = spark.read.parquet(str(tmp_path / "dim")).drop("__bkt")
-
-    full = spark.createDataFrame(
-        batch1 + batch2, "acc string, status string, change_date string"
-    ).withColumn("change_date", F.col("change_date").cast("date"))
-    expected = scd2(full.dropDuplicates(["acc", "change_date"]),
-                    ["acc"], ["status"], "change_date", null_safe=True)
-    assert sorted(map(tuple, dim2.collect())) == sorted(map(tuple, expected.collect()))
-    # A now has a closed first interval and a current 'frozen' one
-    a2 = {r.status: r.is_current for r in dim2.filter("acc='A'").collect()}
-    assert a2 == {"open": False, "frozen": True}
-
-
-def test_stream_scd2_replay_is_idempotent(spark, tmp_path):
-    """Redelivering the same CDC file under a fresh checkpoint must not
-    change the dimension (idempotent timeline merge + pure bucket rebuild)."""
-    from pyspark.sql import functions as F
-
-    from lakeforge.streaming.events import stream_scd2_to_dim
-
-    src = tmp_path / "cdc"
-    src.mkdir()
-    spark.createDataFrame(
-        [("A", "open", "2024-01-01"), ("B", "hold", "2024-01-02")],
-        "acc string, status string, change_date string",
-    ).withColumn("change_date", F.col("change_date").cast("date")) \
-        .coalesce(1).write.parquet(str(src / "b1"))
-
-    def run(name):
-        q = stream_scd2_to_dim(
-            spark.readStream.schema("acc string, status string, change_date date")
-                 .parquet(f"{src}/*"),
-            timeline_path=str(tmp_path / "timeline"),
-            dim_path=str(tmp_path / "dim"),
-            keys=["acc"], tracked_cols=["status"], order_col="change_date",
-            checkpoint=str(tmp_path / f"ckpt_{name}"),  # fresh -> redelivery
-            n_buckets=4, query_name=name,
-        )
-        q.awaitTermination()
-
-    run("scd2_r1")
-    first = sorted(map(tuple, spark.read.parquet(str(tmp_path / "dim")).collect()))
-    run("scd2_r2")
-    second = sorted(map(tuple, spark.read.parquet(str(tmp_path / "dim")).collect()))
-    assert first == second
-
-
 def test_stream_auc_monitor_per_batch(spark, tmp_path):
     """Streaming model-quality monitoring: foreachBatch runs the reusable
     exact-AUC core (ops/evaluation.roc_auc) on each micro-batch of
@@ -1308,65 +1114,3 @@ def test_streaming_cms_counters_merge_to_batch_equivalent(spark, tmp_path):
         for r in counters_of(read_events(spark, SF_DIR)).collect()
     }
     assert got == want
-
-
-@pytest.mark.skipif(not os.path.exists(SF_DIR), reason="driver testdata absent")
-def test_stream_rate_limiter_matches_batch_replay(spark, tmp_path):
-    """Token-bucket limiter: two incremental file batches (split by TIME,
-    so cross-batch per-user state carry is exercised) must end at exactly
-    the batch replay's per-user counters (workload_wave fold, whose
-    recursive-CTE oracle checks the recurrence)."""
-    from pyspark.sql import functions as F
-
-    from lakeforge.streaming.events import (
-        rate_limit_stateful,
-        read_events_stream,
-    )
-    from lakeforge.workload_wave import q_events_rate_limit_replay
-
-    ev = read_events(spark, SF_DIR)
-    cut = ev.agg(
-        F.expr(
-            "timestamp_micros(CAST(percentile_cont(0.5)"
-            " WITHIN GROUP (ORDER BY unix_micros(ts)) AS BIGINT))"
-        )
-    ).collect()[0][0]
-    stream_dir = tmp_path / "ev_in"
-    stream_dir.mkdir()
-    ev.filter(F.col("ts") <= F.lit(cut)).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(str(stream_dir / "b0"))
-    out_rows = {}
-    ckpt = str(tmp_path / "ckpt")
-
-    def drain():
-        stream = read_events_stream(spark, str(stream_dir) + "/*")
-
-        def sink(batch_df, _bid):
-            for r in batch_df.collect():
-                out_rows[r.user_id] = (
-                    r.n_admitted, r.n_denied, r.final_tokens_micro
-                )
-
-        q = (
-            rate_limit_stateful(stream)
-            .writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    drain()
-    ev.filter(F.col("ts") > F.lit(cut)).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(str(stream_dir / "b1"))
-    drain()
-
-    want = {
-        r.user_id: (r.n_admitted, r.n_denied, r.final_tokens_micro)
-        for r in q_events_rate_limit_replay(spark, SF_DIR).collect()
-    }
-    assert out_rows == want
-    assert len(want) > 0

@@ -204,18 +204,3 @@ def test_ngram_novelty_short_docs_do_not_crash(spark, tmp_path):
     assert rows[4].n_grams == 1 and rows[4].n_novel == 1
     assert rows[5].n_grams == 2 and rows[5].n_novel == 1
     assert rows[5].novelty_permille == 500
-
-
-def test_rate_limiter_rejects_fractional_second_refill(spark):
-    """ADVICE r07 #2: a us_per_token that is not a whole number of
-    seconds would silently refill at the wrong rate (or divide by
-    zero); the stateful operator must reject it up front."""
-    from lakeforge.streaming.events import rate_limit_stateful
-
-    df = spark.readStream.format("rate").load().selectExpr(
-        "value AS user_id", "CAST(value AS STRING) AS event_id", "timestamp AS ts"
-    )
-    with pytest.raises(ValueError, match="multiple of 1_000_000"):
-        rate_limit_stateful(df, us_per_token=1_500_000)
-    with pytest.raises(ValueError, match="multiple of 1_000_000"):
-        rate_limit_stateful(df, us_per_token=500_000)
