@@ -46,7 +46,10 @@ per VERDICT r10 #2):
   stdout gets ONE COMPACT JSON line — totals, the slowest-40 per-query
   timings, and a trend summary — sized to survive the driver's pipe;
   the COMPLETE per-query medians + full delta map are written to
-  ``BENCH_LOCAL_r{N}.json`` in the repo root (committed per round).
+  ``BENCH_LOCAL_r{N}.json`` in the repo root (committed per round).  A
+  subset run, or a run at another SF than the committed round file's,
+  writes it to the git-ignored ``BENCH_SUBSET.json`` instead, so a quick
+  probe never replaces the round's trend baseline (``_detail_file``).
 """
 
 from __future__ import annotations
@@ -127,6 +130,25 @@ def _prior_bench(cur_round: int, sf: float | None) -> tuple[str | None, dict[str
             if q:
                 return name, q
     return None, {}
+
+
+def _detail_file(round_file: str, sf: float | None, subset: bool,
+                 committed: dict | None) -> str:
+    """Where a run's per-query detail goes: ``round_file`` (the committed
+    ``BENCH_LOCAL_r{N}.json``), unless the run covers a query subset, or
+    ``committed`` — that file's parsed contents, None when it is absent —
+    was measured at another SF.  Those runs go to ``BENCH_SUBSET.json``."""
+    if subset or (committed is not None and committed.get("sf") != sf):
+        return "BENCH_SUBSET.json"
+    return round_file
+
+
+def _read_json(path: str) -> dict | None:
+    try:
+        with open(path) as f:
+            return json.load(f)
+    except (OSError, ValueError):
+        return None
 
 
 def _pass_order(names: list[str], pass_no: int) -> list[str]:
@@ -365,12 +387,13 @@ def main() -> None:
         "top_regressions": {n: deltas[n] for n in by_delta[-3:] if deltas[n] > 0},
         "top_improvements": {n: deltas[n] for n in by_delta[:3] if deltas[n] < 0},
     }
-    # Subset runs (SPARK_GRAFT_BENCH_QUERIES, fast iteration) must not
-    # clobber the committed full-registry artifact.
-    detail_file = (
-        "BENCH_SUBSET.json" if only else f"BENCH_LOCAL_r{cur_round:02d}.json"
-    )
+    # Subset runs (SPARK_GRAFT_BENCH_QUERIES, fast iteration) and runs at
+    # another SF must not clobber the committed full-registry artifact.
     here = os.path.dirname(os.path.abspath(__file__))
+    round_file = f"BENCH_LOCAL_r{cur_round:02d}.json"
+    detail_file = _detail_file(
+        round_file, sf, bool(only), _read_json(os.path.join(here, round_file))
+    )
     # Printed per-query map: the slowest N, UNIONED with every name the
     # previous round's DRIVER artifact printed (r13 fix, VERDICT r12 #2):
     # the driver diffs printed maps round-over-round, so a query that

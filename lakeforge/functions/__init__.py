@@ -1,5 +1,5 @@
 from lakeforge.functions.dates import DEFAULT_DATE_FORMATS, month_key, parse_date_multi
-from lakeforge.functions.keys import hash_sk, md5_int, row_number_sk
+from lakeforge.functions.keys import hash_sk, md5_int
 
 __all__ = [
     "DEFAULT_DATE_FORMATS",
@@ -7,5 +7,4 @@ __all__ = [
     "month_key",
     "hash_sk",
     "md5_int",
-    "row_number_sk",
 ]

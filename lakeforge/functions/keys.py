@@ -18,14 +18,11 @@ rebuilds, and any cross-run comparison.
 - 60-bit space => collision probability ~n^2/2^61 (≈2e-5 at 1e8 distinct
   keys); for strict uniqueness at larger scales compose with a second salt
   column or use the full 128-bit digest as two bigints.
-
-``row_number_sk`` is kept for small dimensions where dense sequential ids
-are required (reference-compat mode), with the scale caveat documented.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, Window
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # ASCII unit separator — never appears in the data; prevents ("ab","c") and
@@ -74,13 +71,3 @@ def duckdb_md5_int_sql(expr_parts: list[str]) -> str:
         f"COALESCE(CAST({p} AS VARCHAR), chr(30))" for p in expr_parts
     )
     return f"CAST(('0x' || substr(md5({concat}), 1, 15)) AS UBIGINT)::BIGINT"
-
-
-def row_number_sk(order_by: list[Column | str]) -> Column:
-    """Sequential SK via a GLOBAL window — single-partition shuffle.
-
-    Only for dimension-sized frames (the whole frame funnels through one
-    task).  Facts and 100 TB inputs must use ``hash_sk``.
-    """
-    cols = [F.col(c) if isinstance(c, str) else c for c in order_by]
-    return F.row_number().over(Window.orderBy(*cols))

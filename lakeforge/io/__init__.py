@@ -3,7 +3,6 @@ from lakeforge.io.sinks import (
     write_partitioned_parquet,
     write_jdbc,
     export_csv,
-    export_parquet,
 )
 
 __all__ = [
@@ -13,5 +12,4 @@ __all__ = [
     "write_partitioned_parquet",
     "write_jdbc",
     "export_csv",
-    "export_parquet",
 ]

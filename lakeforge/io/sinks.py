@@ -6,10 +6,11 @@ Scale notes:
   each Hive partition gets one writer task (no small-file explosion: without
   it, every task writes a sliver into every partition — tasks x partitions
   files).
-- Dynamic partition overwrite (session default, session.py) means an
-  incremental merge rewrites only the partitions present in the frame — the
-  behavior the reference README claims (README.md:213) but its code does not
-  do (it overwrites whole tables, bronze_to_silver.py:100,108).
+- Dynamic partition overwrite (pinned per writer) means an incremental
+  merge rewrites only the partitions present in the frame — the behavior the
+  reference README claims (README.md:213) but its code does not do (it
+  overwrites whole tables, bronze_to_silver.py:100,108).
+- The gold parquet export (S7) is ``write_partitioned_parquet(df, path)``.
 - JDBC writes parallelize across ``num_partitions`` connections with batched
   inserts (reference S5 knobs preserved).
 """
@@ -34,11 +35,15 @@ def write_partitioned_parquet(
         df.repartition(*partition_cols)
         .write.mode("overwrite")
         .option("compression", "snappy")
-        # Dynamic overwrite is pinned PER-WRITER (not session config): the
-        # partition-scoped merge is only correct under it, and a caller may
-        # hand us a SparkSession that wasn't built by ``get_spark`` — with
-        # the session-level default static, an overwrite would silently
-        # truncate every untouched partition.
+        # Dynamic overwrite is pinned PER-WRITER (not session config), and
+        # ``merge_full_history`` depends on it twice.  It rewrites only the
+        # partitions present in ``df``: under static overwrite, the pruned
+        # merge would truncate every untouched partition.  And it stages
+        # the new partitions and swaps them in at job commit, so ``df`` may
+        # read the very partitions it replaces (the merge does, with no
+        # materialized copy), and a failed job leaves them as they were.
+        # A caller may hand us a SparkSession not built by ``get_spark``,
+        # whose session default is static.
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(*partition_cols)
         .parquet(path)
@@ -88,12 +93,6 @@ def export_csv(df: DataFrame, path: str, single_file: bool = True) -> None:
     """
     out = df.coalesce(1) if single_file else df
     out.write.mode("overwrite").option("header", True).csv(path)
-
-
-def export_parquet(df: DataFrame, path: str) -> None:
-    """Gold parquet export (reference S7 — README.md:190, script absent),
-    one file per partition of ``df``."""
-    df.write.mode("overwrite").parquet(path)
 
 
 def write_orc(

@@ -1,7 +1,3 @@
-from lakeforge.pipelines.medallion import (
-    bronze_to_silver,
-    build_gold,
-    silver_schemas,
-)
+from lakeforge.pipelines.medallion import bronze_to_silver, build_gold
 
-__all__ = ["bronze_to_silver", "build_gold", "silver_schemas"]
+__all__ = ["bronze_to_silver", "build_gold"]

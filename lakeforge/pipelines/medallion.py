@@ -20,7 +20,6 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from lakeforge.io.sources import read_csv
 from lakeforge.ops.joins import broadcast_left_join, full_outer_coalesce
@@ -34,11 +33,6 @@ ENTITY_LAYOUT: dict[str, tuple[list[str], list[str]]] = {
     name: (list(spec.key_cols), list(spec.partition_by))
     for name, spec in REFERENCE_ENTITIES.items()
 }
-
-
-def silver_schemas() -> dict[str, StructType]:
-    """Silver table schemas (SURVEY.md §1), as a parquet read infers them."""
-    return {name: spec.silver_schema for name, spec in REFERENCE_ENTITIES.items()}
 
 
 def bronze_to_silver(

@@ -361,56 +361,6 @@ def sessionize_stateful(
     )
 
 
-def stream_merge_to_silver(
-    stream_df: DataFrame,
-    path: str,
-    keys: list[str],
-    checkpoint: str,
-    order_by=None,
-    query_name: str = "stream_merge",
-    post_merge_hook=None,
-):
-    """Streaming CDC ingest: every micro-batch runs the SAME
-    ``merge_full_history`` the batch pipeline uses, via ``foreachBatch`` —
-    streaming and batch silver are one code path, not two
-    implementations to keep in sync.  The silver table is unpartitioned.
-
-    Exactly-once composition: the checkpoint makes batch delivery
-    at-least-once across restarts, and the key-based merge is idempotent
-    (replaying a batch re-collapses to the same survivors) — together,
-    effectively-once silver.  Returns the started StreamingQuery; callers
-    ``awaitTermination`` (tests use trigger availableNow upstream).
-
-    ``post_merge_hook(batch_df, batch_id)`` runs driver-side AFTER each
-    batch's merge lands but BEFORE the checkpoint commits the batch —
-    the audit/metrics point, and (because a hook failure aborts the
-    query with the merge already applied) the exact window fault-injection
-    tests use to prove restart replay does not double-merge.
-    """
-    from lakeforge.ops.merge import merge_full_history
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        merge_full_history(
-            batch_df.sparkSession,
-            batch_df,
-            path,
-            keys=keys,
-            order_by=order_by,
-        )
-        if post_merge_hook is not None:
-            post_merge_hook(batch_df, batch_id)
-
-    return (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def windowed_rollup(events: DataFrame) -> DataFrame:
     """CHAINED windowed aggregation (Spark 3.4+ `window_time`): hourly
     partials roll up into daily totals inside ONE streaming query — the

@@ -45,3 +45,15 @@ def test_pass_orders_spread_positions():
     assert not stuck
     # deterministic: same pass number -> same order
     assert bench._pass_order(names, 2) == orders[2]
+
+
+def test_detail_file_keeps_the_committed_round_file_at_its_sf():
+    """A run at another SF than the committed round file's, or over a
+    query subset, writes the git-ignored subset file; a run at the same
+    SF, or the round's first run, writes the round file."""
+    r = "BENCH_LOCAL_r14.json"
+    assert bench._detail_file(r, 0.001, False, {"sf": 0.1}) == "BENCH_SUBSET.json"
+    assert bench._detail_file(r, 0.1, False, {"sf": 0.1}) == r
+    assert bench._detail_file(r, 0.001, False, None) == r
+    assert bench._detail_file(r, 0.1, True, {"sf": 0.1}) == "BENCH_SUBSET.json"
+    assert bench._detail_file(r, 0.1, True, None) == "BENCH_SUBSET.json"

@@ -15,7 +15,7 @@ from pyspark.errors import AnalysisException
 from lakeforge import cache
 from lakeforge.io.sources import read_parquet, read_parquet_if_exists
 from lakeforge.ops.normalize import REFERENCE_ENTITIES
-from lakeforge.pipelines.medallion import bronze_to_silver, build_gold, silver_schemas
+from lakeforge.pipelines.medallion import bronze_to_silver, build_gold
 
 D = dt.date
 EOT = D(9999, 12, 31)
@@ -67,8 +67,8 @@ def test_derived_schemas_match_fixtures_and_silver(gold, spark):
     for name, spec in REFERENCE_ENTITIES.items():
         header = BRONZE[f"{name}.csv"].split("\n", 1)[0].split(",")
         assert spec.bronze_schema.fieldNames() == header, name
-    for name, schema in silver_schemas().items():
-        assert schema == spark.read.parquet(f"{silver}/{name}").schema, name
+    for name, spec in REFERENCE_ENTITIES.items():
+        assert spec.silver_schema == spark.read.parquet(f"{silver}/{name}").schema, name
 
 
 def test_dim_account_golden(gold):
@@ -175,7 +175,7 @@ def _silver_rows(spark, silver, name):
     df = read_parquet_if_exists(spark, f"{silver}/{name}")
     if df is None:
         return None
-    cols = silver_schemas()[name].fieldNames()
+    cols = REFERENCE_ENTITIES[name].silver_schema.fieldNames()
     return sorted(tuple(r) for r in df.select(*cols).collect())
 
 
@@ -203,8 +203,8 @@ def test_failed_entity_leaves_the_others_merged_and_replays(gold, spark, tmp_pat
 
 
 def test_job_group_reaches_the_entity_workers(spark, tmp_path):
-    """The caller's job group is inherited by every entity worker, and each
-    concurrent incremental merge releases exactly its own checkpoint."""
+    """The caller's job group is inherited by every entity worker, and the
+    concurrent incremental merges leave no cached RDD behind."""
     sc = spark.sparkContext
     st = sc.statusTracker()
     bronze = tmp_path / "bronze"
@@ -216,7 +216,8 @@ def test_job_group_reaches_the_entity_workers(spark, tmp_path):
         bronze_to_silver(spark, str(bronze), silver)
         cache.release_all(blocking=True)
         n_cached = cache.n_cached_rdds(spark)
-        # An incremental batch: every entity takes the checkpointed path.
+        # An incremental batch: every entity reads back and rewrites the
+        # partitions it touches, and caches nothing doing so.
         for fname, content in BRONZE.items():
             (bronze / fname).write_text(content + content.splitlines()[1] + "\n")
         bronze_to_silver(spark, str(bronze), silver)

@@ -2,6 +2,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import functions as F
 
 from lakeforge.io.sources import read_parquet_if_exists
@@ -110,17 +112,46 @@ def test_merge_empty_batch_rewrites_no_partition(spark, tmp_path):
     assert sorted(map(tuple, rows)) == [("a", "x", "p1"), ("b", "x", "p2")]
 
 
-def test_merge_deterministic_survivor(spark, tmp_path):
+def test_merge_failed_write_leaves_silver_and_replay_converges(spark, tmp_path):
+    """The merge's write reads the partitions it replaces.  A batch whose
+    write job fails mid-way leaves every silver data file as it was (the
+    dynamic overwrite swaps the new partitions in only at job commit), and
+    replaying the batch gives the silver of a clean merge."""
+    keys = ["k", "v", "p"]
+    base = spark.createDataFrame(
+        [("a", "x", "p1"), ("b", "x", "p2"), ("c", "x", "p3")], keys
+    )
+    batch = spark.createDataFrame(
+        [("boom", "y", "p1"), ("d", "y", "p2"), ("e", "y", "p4")], keys
+    )
+    # The touched-partition collect reads only `p`, so the error fires
+    # inside the write job.
+    failing = batch.withColumn(
+        "v",
+        F.when(F.col("k") == "boom", F.raise_error(F.lit("injected")))
+        .otherwise(F.col("v")),
+    )
+
     path = str(tmp_path / "tbl")
-    b1 = spark.createDataFrame([("a", 1, "old", "p1")], ["k", "seq", "v", "p"])
-    merge_full_history(spark, b1, path, keys=["k"], partition_cols=["p"],
-                       order_by=[F.col("seq").desc()])
-    b2 = spark.createDataFrame([("a", 2, "new", "p1")], ["k", "seq", "v", "p"])
-    merge_full_history(spark, b2, path, keys=["k"], partition_cols=["p"],
-                       order_by=[F.col("seq").desc()])
-    df = read_parquet_if_exists(spark, path)
-    rows = df.collect()
-    assert len(rows) == 1 and rows[0]["v"] == "new"
+    merge_full_history(spark, base, path, keys, ["p"])
+    before = _data_files(path)
+    with pytest.raises(SparkRuntimeException, match="injected"):
+        merge_full_history(spark, failing, path, keys, ["p"])
+    assert _data_files(path) == before
+
+    merge_full_history(spark, batch, path, keys, ["p"])
+    clean = str(tmp_path / "clean")
+    merge_full_history(spark, base, clean, keys, ["p"])
+    merge_full_history(spark, batch, clean, keys, ["p"])
+    assert _rows_of(spark, path, keys) == _rows_of(spark, clean, keys)
+    assert len(_rows_of(spark, path, keys)) == 6
+
+    with pytest.raises(ValueError, match="partition_cols"):
+        merge_full_history(spark, batch, str(tmp_path / "flat"), keys, [])
+
+
+def _rows_of(spark, path, cols):
+    return sorted(map(tuple, spark.read.parquet(path).select(*cols).collect()))
 
 
 def test_probe_missing_path(spark, tmp_path):
@@ -158,64 +189,6 @@ def test_merge_safe_under_static_overwrite_session(spark, tmp_path):
     assert got == {(1, "a", "202201"), (2, "b", "202202"), (3, "c", "202202")}
 
 
-def test_merge_upsert_batch_wins_and_schema_evolves(spark, tmp_path):
-    import pyspark.sql.functions as F
-
-    from lakeforge.ops.merge import merge_upsert
-
-    path = str(tmp_path / "scd1")
-    base = spark.createDataFrame(
-        [(1, "old", "202201"), (2, "keep", "202201"), (3, "x", "202202")],
-        ["k", "v", "p_ym"],
-    )
-    merge_upsert(spark, base, path, keys=["k"], partition_cols=["p_ym"])
-
-    # batch updates k=1, inserts k=9, adds a new column; touches 202201 only
-    batch = spark.createDataFrame(
-        [(1, "new", "202201", "extra1"), (9, "ins", "202201", "extra9")],
-        ["k", "v", "p_ym", "note"],
-    )
-    merge_upsert(
-        spark, batch, path, keys=["k"], partition_cols=["p_ym"], evolve_schema=True
-    )
-
-    got = {r["k"]: (r["v"], r["note"]) for r in spark.read.parquet(path).collect()}
-    assert got[1] == ("new", "extra1")   # matched -> updated
-    assert got[9] == ("ins", "extra9")   # not matched -> inserted
-    assert got[2] == ("keep", None)      # untouched key, null-filled new col
-    assert got[3][0] == "x"              # untouched partition survives
-
-
-def test_merge_upsert_order_by_picks_latest_within_batch(spark, tmp_path):
-    import pyspark.sql.functions as F
-
-    from lakeforge.ops.merge import merge_upsert
-
-    path = str(tmp_path / "scd1b")
-    batch = spark.createDataFrame(
-        [(1, 1, "v1"), (1, 3, "v3"), (1, 2, "v2")], ["k", "version", "v"]
-    )
-    merge_upsert(spark, batch, path, keys=["k"], order_by=[F.col("version").desc()])
-    rows = spark.read.parquet(path).collect()
-    assert len(rows) == 1 and rows[0]["v"] == "v3"
-
-
-def test_merge_upsert_deterministic_on_in_batch_duplicates(spark, tmp_path):
-    """Two same-key rows in one batch with no order_by: the content-hash
-    tiebreak must pick the same survivor under any partitioning."""
-    from lakeforge.ops.merge import merge_upsert
-
-    rows = [(1, f"v{i}") for i in range(6)]
-
-    def run(parts, sub):
-        path = str(tmp_path / f"dupe{sub}")
-        batch = spark.createDataFrame(rows, ["k", "v"]).repartition(parts)
-        merge_upsert(spark, batch, path, keys=["k"])
-        return spark.read.parquet(path).collect()[0]["v"]
-
-    assert run(1, "a") == run(8, "b") == run(3, "c")
-
-
 def test_merge_null_partition_value_preserves_prior_rows(spark, tmp_path):
     """A batch row with a NULL partition value must MERGE with the existing
     NULL partition (__HIVE_DEFAULT_PARTITION__), not silently replace it.
@@ -240,35 +213,6 @@ def test_merge_null_partition_value_preserves_prior_rows(spark, tmp_path):
             ("c", "2022-01-03", "v1", None),
         ]
     )
-
-
-def test_merge_upsert_evolved_tiebreak_covers_existing_only_columns(spark, tmp_path):
-    """Two existing same-key rows differing ONLY in a column absent from the
-    evolving batch must resolve to one deterministic survivor (round-2
-    ADVICE: the tiebreak hashed only new_df's columns, leaving them tied)."""
-    from lakeforge.ops.merge import merge_upsert
-
-    path = str(tmp_path / "evolve_tb")
-    existing = spark.createDataFrame(
-        [("k1", "x", "extraA"), ("k1", "x", "extraB")], ["k", "v", "extra"]
-    )
-    # Seed the table directly so BOTH same-key rows exist on disk.
-    existing.write.mode("overwrite").parquet(path)
-    batch = spark.createDataFrame([("k2", "y")], ["k", "v"])  # no 'extra' col
-    merge_upsert(spark, batch, path, keys=["k"], evolve_schema=True)
-    df = read_parquet_if_exists(spark, path)
-    rows = sorted(tuple(r) for r in df.select("k", "v", "extra").collect())
-    # k1 resolved deterministically: xxhash64('extraA'...) vs 'extraB' —
-    # the winner is fixed by the hash, not by partitioning.
-    k1 = [r for r in rows if r[0] == "k1"]
-    assert len(k1) == 1
-    expected_extra = k1[0][2]
-    # Re-run the same merge from the same seed: survivor must be identical.
-    existing.write.mode("overwrite").parquet(path)
-    merge_upsert(spark, batch, path, keys=["k"], evolve_schema=True)
-    df2 = read_parquet_if_exists(spark, path)
-    k1b = [tuple(r) for r in df2.select("k", "v", "extra").collect() if r[0] == "k1"]
-    assert len(k1b) == 1 and k1b[0][2] == expected_extra
 
 
 def test_merge_on_read_latest_wins_and_deletes(spark):

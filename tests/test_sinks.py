@@ -6,7 +6,6 @@ from pyspark.sql import functions as F
 
 from lakeforge.io.sinks import (
     export_csv,
-    export_parquet,
     write_partitioned_parquet,
 )
 from lakeforge.io.sources import read_parquet_if_exists
@@ -60,10 +59,10 @@ def test_export_csv_single_file_with_header(spark, tmp_path):
     assert sorted(lines[1:]) == ["1,x", "2,y"]
 
 
-def test_export_parquet_roundtrip(spark, tmp_path):
+def test_unpartitioned_write_roundtrip(spark, tmp_path):
     df = spark.createDataFrame([(1, 2.5)], ["id", "val"])
     out = str(tmp_path / "pq")
-    export_parquet(df, out)
+    write_partitioned_parquet(df, out)
     assert spark.read.parquet(out).collect() == df.collect()
 
 

@@ -253,40 +253,6 @@ def test_stream_checkpoint_exactly_once_across_restarts(spark, tmp_path):
 
 
 @pytest.mark.skipif(not os.path.exists(SF_DIR), reason="driver testdata absent")
-def test_stream_merge_foreachbatch_idempotent_silver(spark, tmp_path):
-    """foreachBatch + merge_full_history: two batches containing the SAME
-    file must leave silver identical to one batch (idempotent key-merge on
-    at-least-once delivery = effectively-once silver)."""
-    from pyspark.sql import functions as F
-
-    from lakeforge.streaming.events import stream_merge_to_silver
-
-    src = tmp_path / "in"
-    silver = str(tmp_path / "silver")
-    src.mkdir()
-    shutil.copy(f"{SF_DIR}/events.parquet", src / "a.parquet")
-
-    def run(name):
-        q = stream_merge_to_silver(
-            read_events_stream(spark, str(src)),
-            silver,
-            keys=["event_id"],
-            checkpoint=str(tmp_path / f"ckpt_{name}"),
-            order_by=[F.col("ts").desc()],
-            query_name=name,
-        )
-        q.awaitTermination()
-
-    run("m1")
-    n1 = spark.read.parquet(silver).count()
-
-    # Fresh checkpoint -> the same file is redelivered and re-merged.
-    run("m2")
-    n2 = spark.read.parquet(silver).count()
-    assert n1 == n2 == read_events(spark, SF_DIR).select("event_id").distinct().count()
-
-
-@pytest.mark.skipif(not os.path.exists(SF_DIR), reason="driver testdata absent")
 def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
     """attribute_purchases over TWO readStream inputs (a genuine
     stream-stream interval join with watermarks on both sides) emits the
@@ -631,72 +597,6 @@ def test_docgen_stream_restart_resumes_exactly_once(spark, tmp_path):
     ids = [r["doc_id"] for r in final.collect()]
     assert len(ids) == 400 and len(set(ids)) == 400
     assert set(ids) == set(range(400))
-
-
-@pytest.mark.skipif(not os.path.exists(SF_DIR), reason="driver testdata absent")
-def test_stream_merge_restart_mid_merge_not_double_merged(spark, tmp_path):
-    """Kill the CDC stream AFTER a batch's merge has landed but BEFORE the
-    checkpoint commits it (the worst-case crash window), then restart: the
-    replayed batch re-merges, and silver must be byte-identical to a crash-
-    free run — batch-id replay + key-idempotent merge = effectively-once."""
-    from pyspark.sql import functions as F
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    from lakeforge.streaming.events import stream_merge_to_silver
-
-    src = tmp_path / "in"
-    silver = str(tmp_path / "silver")
-    ckpt = str(tmp_path / "ckpt")
-    src.mkdir()
-    shutil.copy(f"{SF_DIR}/events.parquet", src / "a.parquet")
-
-    def run(hook=None):
-        q = stream_merge_to_silver(
-            read_events_stream(spark, str(src)),
-            silver,
-            keys=["event_id"],
-            checkpoint=ckpt,
-            order_by=[F.col("ts").desc()],
-            query_name="restart_mid_merge",
-            post_merge_hook=hook,
-        )
-        q.awaitTermination()
-
-    run()  # batch 0 commits cleanly
-    base = read_events(spark, SF_DIR)
-    n_keys = base.select("event_id").distinct().count()
-    assert spark.read.parquet(silver).count() == n_keys
-
-    # batch 1 input: same keys, updated payload (value + 1000, later ts)
-    import glob as _glob
-
-    upd = base.withColumn("value", F.col("value") + 1000).withColumn(
-        "ts", F.col("ts") + F.expr("INTERVAL 1 HOUR")
-    )
-    tmp_out = str(tmp_path / "upd_out")
-    upd.coalesce(1).write.mode("overwrite").parquet(tmp_out)
-    part = _glob.glob(os.path.join(tmp_out, "part-*.parquet"))[0]
-    shutil.copy(part, src / "b.parquet")  # file source wants a file
-
-    crashed = {"n": 0}
-
-    def bomb(batch_df, batch_id):
-        crashed["n"] += 1
-        raise RuntimeError("injected crash after merge, before ckpt commit")
-
-    with pytest.raises(StreamingQueryException):
-        run(hook=bomb)  # merge applied, checkpoint NOT committed
-    assert crashed["n"] == 1
-    n_after_crash = spark.read.parquet(silver).count()
-
-    run()  # restart: same batch replayed, re-merged idempotently
-
-    final = spark.read.parquet(silver)
-    assert final.count() == n_keys == n_after_crash  # no double-merge
-    # survivors are the UPDATED rows (latest ts wins), each exactly once
-    assert final.filter(F.col("value") < 1000).count() == 0
-    dupes = final.groupBy("event_id").count().filter("count > 1").count()
-    assert dupes == 0
 
 
 @pytest.mark.skipif(not os.path.exists(SF_DIR), reason="driver testdata absent")
