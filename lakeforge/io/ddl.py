@@ -7,15 +7,19 @@ the DDL can never drift from the schema Spark actually writes over JDBC
 (io/sinks.py::write_jdbc with ``truncate=true`` keeps this DDL intact on
 reload).
 
-Verification without a Postgres server (sandbox has none):
+Verification, three ways:
 
+- against a live PostgreSQL server (tested with 15):
+  tests/test_postgres_live.py boots a throwaway server through
+  ``perfbench/pg.py``, executes the emitted DDL verbatim, loads every gold
+  table with write_jdbc and checks that overwrite TRUNCATEs, keeping the
+  DDL's primary keys; it skips when the PostgreSQL binaries are absent;
 - the emitted DDL executes under DuckDB's Postgres-compatible DDL parser
   and every gold table's real rows load under it
   (tests/test_golden_medallion.py::test_star_schema_ddl_roundtrips_in_duckdb,
   with the exact 01_ddl.sql text pinned golden);
-- the live JDBC round-trip runs against embedded Derby
-  (tests/test_sinks.py), a different dialect.  Deltas to mind when
-  pointing write_jdbc at real Postgres:
+- a JDBC round-trip runs against embedded Derby (tests/test_sinks.py), a
+  different dialect.  Deltas between Derby and Postgres:
 
   * **String type**: Spark's PostgresDialect writes StringType as TEXT
     (this generator matches); Derby has no TEXT, so the Derby tests
@@ -25,7 +29,7 @@ Verification without a Postgres server (sandbox has none):
   * **truncate=true**: Postgres supports ``TRUNCATE TABLE`` so overwrite
     keeps this DDL (indexes, PKs) intact; Derby lacks it — Spark falls
     back to DROP+CREATE there, which is why the Derby tests can't attest
-    DDL preservation and the DuckDB pin above exists.
+    DDL preservation and the live Postgres test does.
   * **Upper/lower case**: unquoted identifiers fold to lower-case in
     Postgres, upper in Derby; the generator emits lower-case names so
     Postgres folding is a no-op.

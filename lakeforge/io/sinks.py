@@ -58,14 +58,14 @@ def write_jdbc(
     password: str,
     driver: str = "org.postgresql.Driver",
     num_partitions: int = 16,
-    batchsize: int = 20000,
     mode: str = "overwrite",
     truncate: bool = True,
 ) -> None:
     """Bulk JDBC sink (reference S5: gold_sql_to_postgres.py:31-44).
 
     ``repartition(num_partitions)`` => that many parallel executor-side
-    connections; ``truncate=true`` keeps target DDL on overwrite.
+    connections, each inserting in batches of 20000 rows (the reference's
+    ``batchsize``); ``truncate=true`` keeps target DDL on overwrite.
     """
     (
         df.repartition(num_partitions)
@@ -75,7 +75,7 @@ def write_jdbc(
         .option("user", user)
         .option("password", password)
         .option("driver", driver)
-        .option("batchsize", batchsize)
+        .option("batchsize", 20000)
         .option("truncate", truncate)
         .option("numPartitions", num_partitions)
         .option("stringtype", "unspecified")
@@ -84,30 +84,16 @@ def write_jdbc(
     )
 
 
-def export_csv(df: DataFrame, path: str, single_file: bool = True) -> None:
+def export_csv(df: DataFrame, path: str) -> None:
     """Gold CSV export (reference S6 — declared at README.md:190-191, script
     absent; golden outputs at exports/gold_csv/ prove the capability).
 
-    ``single_file`` coalesces to one writer — fine for dim-sized exports,
-    never for fact-scale data (leave False to keep parallelism).
+    Coalesces to one writer, so the export is one headed CSV file — fine
+    for dim-sized exports, never for fact-scale data.
     """
-    out = df.coalesce(1) if single_file else df
-    out.write.mode("overwrite").option("header", True).csv(path)
+    df.coalesce(1).write.mode("overwrite").option("header", True).csv(path)
 
 
-def write_orc(
-    df: DataFrame, path: str, partition_by: list[str] | None = None
-) -> None:
-    """ORC sink with optional hive partitioning (zlib default codec).
-
-    Same single-writer-per-partition discipline as the parquet sink: when
-    partitioning, repartition by the partition columns first so each hive
-    directory gets one file instead of tasks-x-partitions fragments.
-    """
-    writer = df
-    if partition_by:
-        writer = df.repartition(*partition_by)
-    w = writer.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.orc(path)
+def write_orc(df: DataFrame, path: str) -> None:
+    """ORC sink (zlib default codec): overwrites ``path``."""
+    df.write.mode("overwrite").orc(path)

@@ -308,9 +308,9 @@ def downsample_media(media: DataFrame, factor: int = 2) -> DataFrame:
     """Distributed real image downsampling via mapInPandas: every BMP
     payload is decoded, mean-pooled, and re-encoded in the executor.
     Output payloads are ~factor^2 smaller — the op where full-size bytes
-    exist for the last time (same contract as resize_images, but the
-    pixel transform is real for the uncompressed format).  Undecodable
-    or too-small payloads yield content=NULL rows."""
+    exist for the last time: payloads stream through one Arrow batch at a
+    time, and downstream sees only the smaller ones.  Undecodable or
+    too-small payloads yield content=NULL rows."""
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
@@ -526,40 +526,3 @@ RESIZED_SCHEMA = StructType(
         StructField("content", BinaryType(), True),
     ]
 )
-
-
-def resize_images(media: DataFrame, target_w: int, target_h: int) -> DataFrame:
-    """Image resize plumbing via mapInPandas: metadata is recomputed for
-    real; the pixel transform is the deterministic byte-subsample fake (a
-    real cluster swaps PIL's ``resize`` into ``_fake_resize``).
-
-    Same scale contract as extract_features: payloads stream through one
-    Arrow batch at a time and the op is the LAST place bytes exist at full
-    size — downstream sees the (smaller) resized payloads only.
-    """
-    def _fake_resize(content, w0, h0):
-        if content is None or not w0 or not h0 or w0 <= 0 or h0 <= 0:
-            return None
-        # Keep a deterministic byte subsample proportional to the pixel
-        # ratio — preserves "output smaller than input" without a codec.
-        ratio = min(1.0, (target_w * target_h) / float(w0 * h0))
-        n = max(1, int(len(content) * ratio))
-        return bytes(content[:n])
-
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": [target_w if c is not None else None for c in pdf["content"]],
-                    "height": [target_h if c is not None else None for c in pdf["content"]],
-                    "content": [
-                        _fake_resize(c, w, h)
-                        for c, w, h in zip(pdf["content"], pdf["width"], pdf["height"])
-                    ],
-                }
-            )
-
-    return media.filter(F.col("kind") == "image").mapInPandas(
-        run, schema=RESIZED_SCHEMA
-    )

@@ -143,7 +143,6 @@ def blocked_prefix_sum(
     sum_col: "str | list[str]",
     block_expr: Column,
     out_col: "str | list[str]" = "prefix_sum",
-    group_cols: "list[str] | None" = None,
 ) -> DataFrame:
     """EXCLUSIVE running sum(s) of ``sum_col`` over the global
     ``order_col`` order, decomposed two-level so no single-partition
@@ -158,24 +157,17 @@ def blocked_prefix_sum(
     values must be unique (histogram keys) — then the result is
     identical to a global cumulative window, at any block width.
 
-    ``group_cols`` scopes the prefix to each group (PARTITION BY
-    semantics) while STILL blocking the within-group order: the carry
-    window runs per (group) over that group's touched blocks (bounded by
-    range/width), so even a group holding 1e8 rows — e.g. one heavily
-    tied ORDER BY value — never funnels through one partition.  The
-    (group, block) summary has at most one row per touched cell, <= the
-    input row count; the carry join is a key equi-join (broadcast when
-    ungrouped, shuffle-by-key when grouped)."""
+    The block summary has one row per touched block, and the carry joins
+    back broadcast on the block key."""
     from lakeforge.cache import persist_tracked
 
-    g = list(group_cols or [])
     sum_cols = [sum_col] if isinstance(sum_col, str) else list(sum_col)
     out_cols = [out_col] if isinstance(out_col, str) else list(out_col)
     assert len(sum_cols) == len(out_cols)
 
     blocked = persist_tracked(df.withColumn("__bk", block_expr))
     w_in = (
-        Window.partitionBy(*g, "__bk")
+        Window.partitionBy("__bk")
         .orderBy(order_col)
         .rowsBetween(Window.unboundedPreceding, -1)
     )
@@ -184,16 +176,11 @@ def blocked_prefix_sum(
         within = within.withColumn(
             f"__in{i}", F.coalesce(F.sum(c).over(w_in), F.lit(0))
         )
-    blk = blocked.groupBy(*g, "__bk").agg(
+    blk = blocked.groupBy("__bk").agg(
         *[F.sum(c).alias(f"__bt{i}") for i, c in enumerate(sum_cols)]
     )
-    w_blk = (
-        Window.partitionBy(*g)
-        .orderBy("__bk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
+    w_blk = Window.orderBy("__bk").rowsBetween(Window.unboundedPreceding, -1)
     carry = blk.select(
-        *g,
         "__bk",
         *[
             F.coalesce(F.sum(f"__bt{i}").over(w_blk), F.lit(0)).alias(
@@ -202,9 +189,7 @@ def blocked_prefix_sum(
             for i in range(len(sum_cols))
         ],
     )
-    out = within.join(
-        carry if g else F.broadcast(carry), [*g, "__bk"]
-    )
+    out = within.join(F.broadcast(carry), ["__bk"])
     drop = ["__bk"]
     for i, oc in enumerate(out_cols):
         out = out.withColumn(

@@ -84,12 +84,11 @@ def asof_join(
     left_ts: str,
     right_ts: str,
     right_payload: list[str],
-    strict: bool = False,
 ) -> DataFrame:
     """Backward as-of join: for each left row, attach the payload of the
-    latest right row with the same key and ``right_ts <= left_ts``
-    (``<`` when strict=True).  Equivalent of DuckDB/pandas ASOF JOIN —
-    an operator Spark lacks natively.
+    latest right row with the same key and ``right_ts <= left_ts``.
+    Equivalent of DuckDB/pandas ASOF JOIN — an operator Spark lacks
+    natively.
 
     Scalable union+window formulation: instead of an interval join (which
     would explode or need per-key sorting on the driver), tag both inputs,
@@ -100,7 +99,7 @@ def asof_join(
 
     Ties (right_ts == left_ts): the right row sorts before the left row
     (tag 0 < 1), so an exact-timestamp match IS visible — same as ASOF's
-    ``>=`` convention.  strict=True sorts the left row first instead.
+    ``>=`` convention.
     Right rows must be unique per (key, ts) for deterministic payloads —
     pre-aggregate if not.
     """
@@ -120,20 +119,15 @@ def asof_join(
         if c not in rt.columns:
             rt = rt.withColumn(c, F.lit(None).cast(dict(left.dtypes)[c]))
     unioned = lt.select(rt.columns).unionByName(rt.select(rt.columns))
-    order = [F.col("__ts"), F.col("__tag").desc() if strict else F.col("__tag")]
     w = (
         Window.partitionBy(*on)
-        .orderBy(*order)
+        .orderBy("__ts", "__tag")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     filled = unioned.select(
         "*",
         *[F.last(c, ignorenulls=True).over(w).alias(f"__f_{c}") for c in right_payload],
     )
-    if strict:
-        # The left row sorted before same-ts right rows, so last() already
-        # excludes exact-ts matches.
-        pass
     return (
         filled.filter(F.col("__tag") == 1)
         .select(
@@ -150,8 +144,6 @@ def range_bucket_join(
     lo_col: str,
     hi_col: str,
     bucket_width: int,
-    how: str = "inner",
-    probe_key: str | None = None,
 ) -> DataFrame:
     """Interval-lookup join — match each probe row to every range row with
     ``lo_col <= value_col <= hi_col`` — planned as an EQUI-join.
@@ -170,15 +162,10 @@ def range_bucket_join(
     ceil(S/W)+1 times.  Pick W near the TYPICAL range span so most ranges
     land in 1-2 buckets; probe rows never replicate.  Overlapping ranges
     are supported (probe rows multi-match, one row per matching range).
-    Inner and left joins only — 'left' keeps probe rows with no matching
-    range (null range payload) and needs ``probe_key`` (a unique probe
-    key) so the no-match rows can be recovered with an anti-join instead
-    of a fragile all-columns comparison.
+    Inner join: a probe row with no matching range is dropped.
     """
     if bucket_width <= 0:
         raise ValueError("range_bucket_join: bucket_width must be positive")
-    if how not in ("inner", "left"):
-        raise ValueError("range_bucket_join supports inner/left joins only")
     rng = ranges.withColumn(
         "__bk",
         F.explode(
@@ -191,20 +178,11 @@ def range_bucket_join(
     pr = probe.withColumn(
         "__bk", F.expr(f"CAST(floor({value_col} / {bucket_width}) AS BIGINT)")
     )
-    matched = (
+    return (
         pr.join(rng, on="__bk", how="inner")
         .filter(F.col(value_col).between(F.col(lo_col), F.col(hi_col)))
         .drop("__bk")
     )
-    if how == "inner":
-        return matched
-    if not probe_key:
-        raise ValueError("range_bucket_join: how='left' requires probe_key")
-    unmatched = probe.join(
-        matched.select(probe_key).distinct(), on=probe_key, how="left_anti"
-    )
-    null_payload = [F.lit(None).cast(t).alias(c) for c, t in ranges.dtypes]
-    return matched.unionByName(unmatched.select("*", *null_payload))
 
 
 def salted_join(
@@ -212,40 +190,35 @@ def salted_join(
     small: DataFrame,
     on: list[str],
     salt: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
     """Skew-resistant equi-join: salt the large side's key with a random
     shard in [0, salt) and replicate the small side ``salt`` times, so one
     hot key spreads over ``salt`` reducers instead of melting a single task.
 
-    Result is identical to ``large.join(small, on, how)`` — salting is an
+    Result is identical to ``large.join(small, on)`` — salting is an
     execution strategy, not a semantic change.  AQE's skewJoin handles
     moderate skew automatically; explicit salting is for the pathological
     single-key case (a null-heavy FK, one whale customer) where even a
-    split task's probe side is one value.  Supports inner/left joins
-    (the salted key never loses large-side rows).
+    split task's probe side is one value.
 
     Shard assignment is ``floor(rand(seed) * salt)`` — ONE cheap PRNG draw
     per row.  rand() is per-partition seeded, so the shard a given row gets
     is partitioning-dependent; that is harmless HERE because the join
     result is shard-invariant: the small side carries every shard value in
-    [0, salt), so a large row joins (or left-joins null) identically no
-    matter which shard it drew.  (Round-2 used xxhash64 over every
+    [0, salt), so a large row joins identically no matter which shard it
+    drew.  (Round-2 used xxhash64 over every
     large-side column for a "deterministic" shard — determinism the result
     never needed, at the cost of hashing the whole row: the one >2x bench
     regression of that round.  Shard determinism only matters for ops whose
     OUTPUT depends on the draw, e.g. sampling — see ops/sampling.py.)
     """
-    if how not in ("inner", "left"):
-        raise ValueError("salted_join supports inner/left joins only")
     lg = large.withColumn(
         "__salt", F.floor(F.rand(42) * F.lit(salt)).cast("int")
     )
     sm = small.withColumn(
         "__salt", F.explode(F.array(*[F.lit(i) for i in range(salt)]))
     )
-    out = lg.join(sm, on=[*on, "__salt"], how=how)
-    return out.drop("__salt")
+    return lg.join(sm, on=[*on, "__salt"]).drop("__salt")
 
 
 def bloom_prefiltered_semi_join(

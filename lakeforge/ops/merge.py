@@ -161,9 +161,8 @@ def merge_on_read_view(
     Scale: ONE shuffle on the key columns over base+deltas; at real
     scale the delta log is small relative to base, so AQE's skew handling
     plus the fact that ranks-per-key are tiny keeps the window cheap.
-    Compaction (ops/layout.py::compact_partitions) periodically folds the
-    log into the base, resetting read amplification — the standard MOR
-    lifecycle."""
+    Read amplification grows with the delta log until a compaction folds
+    the log into the base; this module has no compaction step."""
     from pyspark.sql import Window
 
     deleted_col = "_deleted"

@@ -44,9 +44,7 @@ def kanon_release(
     )
 
 
-def pseudonymize(
-    df: DataFrame, cols: list[str], salt: str, keep_format: bool = False
-) -> DataFrame:
+def pseudonymize(df: DataFrame, cols: list[str], salt: str) -> DataFrame:
     """Deterministic keyed pseudonymization of identifier columns: each
     value is replaced by the 60-bit md5 integer of (salt, value) — the
     same value maps to the same token EVERYWHERE, so joins and
@@ -57,17 +55,11 @@ def pseudonymize(
     chr(31) joiner, chr(30) NULL sentinel), zero shuffles, and exactly
     reproducible in any engine with md5() — which is what lets the
     oracle verify a privacy transform at all.  NULLs stay NULL (absence
-    is not an identifier).  With ``keep_format`` the token is rendered
-    as a zero-padded 18-digit string instead of an integer, preserving
-    string-typed schemas."""
+    is not an identifier)."""
     from lakeforge.functions.keys import md5_int
 
     out = df
     for c in cols:
         tok = md5_int(F.lit(salt), F.col(c))
-        if keep_format:
-            tok = F.lpad(tok.cast("string"), 18, "0")
-        out = out.withColumn(
-            c, F.when(F.col(c).isNotNull(), tok)
-        )
+        out = out.withColumn(c, F.when(F.col(c).isNotNull(), tok))
     return out

@@ -1,16 +1,16 @@
 """Time-series resampling: per-key daily grid + forward fill.
 
 An LLM-data / feature-pipeline staple Spark has no built-in for (pandas has
-``resample``).  Two implementations with identical semantics:
+``resample``).  ``resample_daily_ffill`` builds each key's daily grid with
+sequence()+explode, a left join attaches observations, and
+``last(ignorenulls)`` over a running window forward-fills.  Everything is
+JVM-side; the one shuffle is by key (grid explode is map-side).  This is
+the 100 TB path.
 
-- ``how="native"`` (default): sequence()+explode builds each key's daily
-  grid, a left join attaches observations, and ``last(ignorenulls)`` over a
-  running window forward-fills.  Everything is JVM-side; the one shuffle is
-  by key (grid explode is map-side).  This is the 100 TB path.
-- ``how="pandas"``: applyInPandas grouped-map — the escape hatch pattern
-  for logic SQL genuinely can't express (kept equivalent here precisely so
-  tests can prove the two paths agree; use it as the template for ops that
-  have no native formulation).
+``_resample_pandas`` is the same semantics as an applyInPandas grouped map
+— the escape-hatch pattern for logic SQL genuinely can't express.  It is a
+reference implementation that tests compare the native path against, and
+the template for ops that have no native formulation.
 
 Contract: at most one row per (key, date) — pre-aggregate first.
 """
@@ -22,20 +22,6 @@ from pyspark.sql import functions as F
 
 
 def resample_daily_ffill(
-    df: DataFrame,
-    key_cols: list[str],
-    date_col: str,
-    value_cols: list[str],
-    how: str = "native",
-) -> DataFrame:
-    if how == "native":
-        return _resample_native(df, key_cols, date_col, value_cols)
-    if how == "pandas":
-        return _resample_pandas(df, key_cols, date_col, value_cols)
-    raise ValueError(f"unknown how={how!r}")
-
-
-def _resample_native(
     df: DataFrame, key_cols: list[str], date_col: str, value_cols: list[str]
 ) -> DataFrame:
     bounds = df.groupBy(*key_cols).agg(

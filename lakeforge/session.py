@@ -35,19 +35,18 @@ DEFAULT_DRIVER_MEMORY = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
 def get_spark(
     app_name: str = "lakeforge",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's tuned defaults.
 
-    In local mode ``shuffle_partitions`` defaults to the core count — on a
-    real cluster pass ~2-3x total executor cores (AQE coalesces the excess).
+    ``spark.sql.shuffle.partitions`` defaults to the core count — on a
+    real cluster set ~2-3x total executor cores through ``extra_conf``
+    (AQE coalesces the excess).  ``extra_conf`` is applied last, so it
+    overrides any default here.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
-    if shuffle_partitions is None:
-        shuffle_partitions = DEFAULT_SHUFFLE_PARTITIONS
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -58,7 +57,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # Determinism pins (SURVEY.md §1, §7):
         .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")

@@ -78,20 +78,16 @@ def read_events_stream(
     return df.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def windowed_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
+def windowed_counts(events: DataFrame, window: str = "1 hour") -> DataFrame:
     """Tumbling-window counts/sums per event_type.
 
-    Works identically on a stream (stateful, watermark-bounded) and a batch
-    frame (watermark is a no-op there) — one definition, two execution
-    modes.
+    Works identically on a stream (stateful, bounded by a 2-hour
+    watermark) and a batch frame (no watermark) — one definition, two
+    execution modes.
     """
     src = events
     if events.isStreaming:
-        src = events.withWatermark("ts", watermark)
+        src = events.withWatermark("ts", "2 hours")
     return (
         src.groupBy(F.window("ts", window).alias("w"), "event_type")
         .agg(

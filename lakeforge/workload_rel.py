@@ -1027,9 +1027,9 @@ register("geo_mean_price_udaf", q_geo_mean_price_udaf, SQL_GEO_MEAN_PRICE)
 
 
 # ---------------------------------------------------------------------------
-# Z-order (Morton) keys: the clustering key behind ops/layout.py's
-# multi-dimensional file-skipping writes — pure integer bit math, so the
-# oracle reproduces it exactly.
+# Z-order (Morton) keys: ops/layout.py's clustering key for
+# multi-dimensional file skipping — pure integer bit math, so the oracle
+# reproduces it exactly.
 # ---------------------------------------------------------------------------
 
 _Z_BITS = 10

@@ -10,7 +10,7 @@ from lakeforge.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    extra = {"spark.ui.enabled": "false"}
+    extra = {"spark.ui.enabled": "false", "spark.sql.shuffle.partitions": "4"}
     # The PostgreSQL JDBC driver must be on the JVM classpath at session
     # start for the live-Postgres round-trip tests; harmless when unused.
     from lakeforge.io.jdbc_driver import find_postgres_jar
@@ -18,11 +18,6 @@ def spark():
     jar = find_postgres_jar()
     if jar:
         extra["spark.jars"] = jar
-    s = get_spark(
-        "lakeforge-tests",
-        master="local[4]",
-        shuffle_partitions=4,
-        extra_conf=extra,
-    )
+    s = get_spark("lakeforge-tests", master="local[4]", extra_conf=extra)
     yield s
     s.stop()

@@ -224,25 +224,6 @@ def test_sample_frames(spark):
     assert 4 not in by_id  # images don't produce frames
 
 
-def test_resize_images_shrinks_payload_and_sets_dims(spark):
-    from lakeforge.llm.multimodal import MEDIA_SCHEMA, resize_images
-
-    rows = [
-        (1, "image", bytes(range(256)) * 4, "image/png", 32, 32, None),
-        (2, "image", None, "image/png", 16, 16, None),
-        (3, "video", b"\x00" * 100, "video/mp4", None, None, 5000),
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    out = {r["media_id"]: r for r in resize_images(media, 8, 8).collect()}
-
-    assert set(out) == {1, 2}  # video filtered out
-    r1 = out[1]
-    assert (r1["width"], r1["height"]) == (8, 8)
-    # 32x32 -> 8x8 is a 1/16 pixel ratio: payload shrinks accordingly
-    assert len(r1["content"]) == 1024 // 16
-    assert out[2]["content"] is None and out[2]["width"] is None
-
-
 def test_python_udtf_lateral_join_surface(spark):
     """Python UDTF (Spark 4 API): table-function surface for row-exploding
     Python logic.  Kept as an API demonstration — hot-path segmentation

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import datetime as dt
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -655,46 +655,6 @@ def test_blocked_prefix_sum_equals_global_cumsum(spark, rows, width):
 
 
 @settings(**_SETTINGS)
-@given(
-    rows=st.lists(
-        st.tuples(
-            st.integers(min_value=-5, max_value=5),   # value (heavy ties)
-            st.integers(min_value=0, max_value=999),  # tiebreak
-            st.integers(min_value=1, max_value=9),    # payload
-        ),
-        min_size=1,
-        max_size=30,
-        unique_by=lambda r: r[1],
-    ),
-    width=st.sampled_from([1, 4, 1000]),
-)
-def test_grouped_blocked_prefix_sum_equals_partitioned_cumsum(
-    spark, rows, width
-):
-    """group_cols mode must equal a PARTITION BY group ORDER BY tiebreak
-    exclusive cumsum at any block width — including negative group values
-    (div truncates toward zero; still monotone)."""
-    from lakeforge.ops.analytics import blocked_prefix_sum
-
-    df = spark.createDataFrame(rows, ["g", "tk", "cnt"])
-    out = blocked_prefix_sum(
-        df,
-        "tk",
-        "cnt",
-        F.expr(f"tk div {width}"),
-        group_cols=["g"],
-    ).collect()
-    expect = {}
-    acc: dict[int, int] = {}
-    for g, tk, c in sorted(rows, key=lambda r: (r[0], r[1])):
-        expect[(g, tk)] = acc.get(g, 0)
-        acc[g] = acc.get(g, 0) + c
-    assert len(out) == len(rows)
-    for r in out:
-        assert r.prefix_sum == expect[(r.g, r.tk)], (r.g, r.tk, width)
-
-
-@settings(**_SETTINGS)
 @given(rows=_SCORED)
 def test_pr_curve_matches_bruteforce_cuts(spark, rows):
     from lakeforge.ops.evaluation import pr_curve
@@ -979,3 +939,58 @@ def test_simhash_collapse_equals_naive_pair_histogram(spark, docs):
 
     cache.release_all()
     assert got == naive
+
+
+# (k, v, p) silver rows: a small domain so batches redeliver rows and
+# revisit partitions; p includes NULL (the __HIVE_DEFAULT_PARTITION__).
+_MERGE_ROW = st.tuples(
+    st.sampled_from(["a", "b", "c"]),
+    st.sampled_from(["x", "y"]),
+    st.sampled_from([None, "p1", "p2", "p3"]),
+)
+_MERGE_SCHEMA = "k string, v string, p string"
+
+
+@settings(**_SETTINGS)
+@given(
+    batches=st.lists(
+        st.lists(_MERGE_ROW, max_size=4), min_size=1, max_size=4
+    )
+)
+@example(
+    batches=[
+        [("a", "x", "p1"), ("b", "x", None)],
+        [],  # empty batch
+        [("a", "x", "p1"), ("c", "y", None), ("c", "y", "p2")],  # redelivered
+    ]
+)
+def test_merge_batching_does_not_change_silver(spark, batches):
+    """Silver after merging the batches one by one equals the set union of
+    every batch row (the keys cover every column) and equals one merge of
+    the concatenated batches: the split into batches (empty, redelivered,
+    NULL-partitioned, new or seen partitions) does not change the answer."""
+    import tempfile
+
+    from lakeforge.io.sources import read_parquet_if_exists
+    from lakeforge.ops.merge import merge_full_history
+
+    keys = ["k", "v", "p"]
+
+    def merged(root, parts):
+        path = f"{root}/silver"
+        for rows in parts:
+            merge_full_history(
+                spark, spark.createDataFrame(rows, _MERGE_SCHEMA), path,
+                keys=keys, partition_cols=["p"],
+            )
+        silver = read_parquet_if_exists(spark, path)
+        return (
+            [] if silver is None
+            else sorted(map(tuple, silver.select(*keys).collect()), key=repr)
+        )
+
+    with tempfile.TemporaryDirectory() as a, tempfile.TemporaryDirectory() as b:
+        batched = merged(a, batches)
+        at_once = merged(b, [[r for rows in batches for r in rows]])
+    assert batched == sorted({r for rows in batches for r in rows}, key=repr)
+    assert batched == at_once

@@ -51,7 +51,7 @@ def test_dynamic_partition_overwrite_rewrites_only_touched(spark, tmp_path):
 def test_export_csv_single_file_with_header(spark, tmp_path):
     df = spark.createDataFrame([(1, "x"), (2, "y")], ["id", "name"])
     out = str(tmp_path / "csv")
-    export_csv(df, out, single_file=True)
+    export_csv(df, out)
     files = glob.glob(f"{out}/part-*.csv")
     assert len(files) == 1
     lines = open(files[0]).read().strip().splitlines()
@@ -83,7 +83,7 @@ def test_write_jdbc_roundtrip_embedded_derby(spark, tmp_path):
     )
     write_jdbc(
         df, url=url, table="dim_test", user="", password="",
-        driver=driver, num_partitions=2, batchsize=100,
+        driver=driver, num_partitions=2,
         mode="overwrite", truncate=False,
     )
     back = (
@@ -108,23 +108,21 @@ def test_write_jdbc_roundtrip_embedded_derby(spark, tmp_path):
     )
 
 
-def test_orc_roundtrip_partitioned(spark, tmp_path):
+def test_orc_roundtrip(spark, tmp_path):
     from lakeforge.io.sinks import write_orc
     from lakeforge.io.sources import read_orc
 
-    df = spark.createDataFrame(
-        [(1, "a", "2022-01"), (2, "b", "2022-01"), (3, "c", "2022-02")],
-        ["id", "v", "p_ym"],
-    )
+    rows = [(1, "a", "2022-01"), (2, "b", "2022-01"), (3, "c", "2022-02")]
+    df = spark.createDataFrame(rows, ["id", "v", "p_ym"])
     path = str(tmp_path / "orc_tbl")
-    write_orc(df, path, partition_by=["p_ym"])
-    # one file per hive partition (single-writer discipline)
-    for ym in ("2022-01", "2022-02"):
-        files = glob.glob(f"{path}/p_ym={ym}/*.orc")
-        assert len(files) == 1, files
+    write_orc(df, path)
+    assert glob.glob(f"{path}/*.orc")
     back = read_orc(spark, path)
-    got = sorted((r["id"], r["v"], r["p_ym"]) for r in back.collect())
-    assert got == [(1, "a", "2022-01"), (2, "b", "2022-01"), (3, "c", "2022-02")]
+    assert sorted((r["id"], r["v"], r["p_ym"]) for r in back.collect()) == rows
+
+    # Overwrite replaces the table.
+    write_orc(df.limit(1), path)
+    assert read_orc(spark, path).count() == 1
 
 
 def test_csv_permissive_corrupt_record_capture(spark, tmp_path):

@@ -30,7 +30,7 @@ def test_stream_equals_batch(spark, tmp_path):
     stream = read_events_stream(spark, str(stream_dir))
     assert stream.isStreaming
     streamed = run_available_now(
-        windowed_counts(stream, window="1 hour", watermark="2 hours"),
+        windowed_counts(stream, window="1 hour"),
         "events_hourly_test",
     )
     batch = windowed_counts(read_events(spark, SF_DIR), window="1 hour")
